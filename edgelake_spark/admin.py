@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from edgelake_spark.dialect.parser import split_top_level
 from edgelake_spark.ingest.infer import infer_schema
 from edgelake_spark.ingest.partitions import PARTITION_COL
+from edgelake_spark.localframe import local_frame
 
 _SQL_TYPE_RE = re.compile(
     r"\b(serial|timestamp|varchar|char\s*\(\d+\)|int|integer|bigint|float|double|"
@@ -135,7 +136,7 @@ def info_table_columns(spark: SparkSession, table: str) -> DataFrame:
     """`info table <t> columns` — column name/type listing."""
     df = spark.table(table)
     rows = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    return spark.createDataFrame(rows, "column_name string, column_type string")
+    return local_frame(spark, rows, "column_name string, column_type string")
 
 
 def suggest_create(table_name: str, rows: list[dict], with_system_columns: bool = True) -> str:
@@ -200,8 +201,8 @@ def get_data_nodes(
                 bool(body.get("main", True)),
             )
             rows.append(row)
-    df = spark.createDataFrame(
-        rows or [],
+    df = local_frame(
+        spark, rows or [],
         "company string, dbms string, table string, cluster_id string, "
         "node_name string, member_id string, external_ip_port string, "
         "local_ip_port string, main boolean",

@@ -29,6 +29,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from edgelake_spark.engine import EdgeLakeEngine
 from edgelake_spark.ingest.infer import rows_to_dataframe
+from edgelake_spark.localframe import local_frame
 
 
 class EdgeLakeRestServer:
@@ -39,7 +40,6 @@ class EdgeLakeRestServer:
         self.auth_token = auth_token
         self.basic_auth = basic_auth
         engine.rest_server = self  # surfaced by `get processes`
-        self.ingested: dict[str, int] = {}
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -154,17 +154,12 @@ class EdgeLakeRestServer:
                     return
                 try:
                     rows = payload if isinstance(payload, list) else [payload]
-                    df = rows_to_dataframe(outer.engine.spark, rows)
-                    name = f"{dbms}.{table}" if dbms else table
-                    view = f"__ingest_{table}"
-                    if outer.engine.spark.catalog.tableExists(view):
-                        df = outer.engine.spark.table(view).unionByName(
-                            df, allowMissingColumns=True
-                        )
-                    df.createOrReplaceTempView(view)
-                    outer.engine.views[name] = view
-                    outer.engine.views[table] = view
-                    outer.ingested[name] = outer.ingested.get(name, 0) + len(rows)
+                    spark = outer.engine.spark
+                    name = outer.engine.ingest(
+                        table, len(rows),
+                        lambda first: rows_to_dataframe(spark, rows, first_row_id=first),
+                        dbms=dbms,
+                    )
                     self._reply(200, {"ingested": len(rows), "table": name})
                 except Exception as exc:
                     self._reply(400, {"error": str(exc)[:500]})
@@ -196,20 +191,13 @@ class EdgeLakeRestServer:
         tm = cfg["topic"]
         payload = json.loads(raw or b"[]")
         msgs = payload if isinstance(payload, list) else [payload]
-        raw_df = self.engine.spark.createDataFrame(
-            [(json.dumps(m),) for m in msgs], "value string"
+        spark = self.engine.spark
+        raw_df = local_frame(spark, [(json.dumps(m),) for m in msgs], "value string")
+        name = self.engine.ingest(
+            tm.table, len(msgs),
+            lambda _first: apply_mapping_policy(spark, raw_df, tm.to_mapping_policy()),
+            dbms=tm.dbms,
         )
-        mapped = apply_mapping_policy(self.engine.spark, raw_df, tm.to_mapping_policy())
-        name = f"{tm.dbms}.{tm.table}" if tm.dbms else tm.table
-        view = f"__ingest_{tm.table}"
-        if self.engine.spark.catalog.tableExists(view):
-            mapped = self.engine.spark.table(view).unionByName(
-                mapped, allowMissingColumns=True
-            )
-        mapped.createOrReplaceTempView(view)
-        self.engine.views[name] = view
-        self.engine.views[tm.table] = view
-        self.ingested[name] = self.ingested.get(name, 0) + len(msgs)
         return {"ingested": len(msgs), "table": name, "topic": topic}
 
     def start(self) -> "EdgeLakeRestServer":

@@ -12,6 +12,7 @@ local[32] to a 1000-executor cluster.
 from __future__ import annotations
 
 import itertools
+import threading
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +24,7 @@ from edgelake_spark import catalog
 from edgelake_spark.dialect.casting import TZ_NAMES, apply_castings
 from edgelake_spark.dialect.options import SqlCommand, parse_sql_command
 from edgelake_spark.dialect.rewriter import rewrite_select
+from edgelake_spark.localframe import local_frame
 from edgelake_spark.output import format_result
 
 _view_counter = itertools.count()
@@ -65,6 +67,10 @@ class EdgeLakeEngine:
         }
         #: qualified name → Spark view name, for `create view` mappings
         self.views: dict[str, str] = {}
+        #: ingest view → rows appended to it (the next row_id - 1); see
+        #: ingest(), whose lock guards it and the view's union chain
+        self.ingested_rows: dict[str, int] = {}
+        self._ingest_lock = threading.Lock()
         #: table name → partitioned dataset path (attach_partitioned)
         self.partitioned_paths: dict[str, str] = {}
         #: topic name → parsed `run kafka consumer` config
@@ -88,7 +94,7 @@ class EdgeLakeEngine:
         #: (reference bucket_dbms.py:110 store_file / :220 retrieve_files)
         self.blob_views: dict[tuple[str, str], str] = {}
         #: (dbms, table) → {blob_hash: row tuple} — driver-side source of
-        #: truth for the blobs store; the temp view is ONE createDataFrame
+        #: truth for the blobs store; the temp view is ONE local_frame
         #: over these rows (no per-store union lineage, O(1) dup checks)
         self.blob_rows: dict[tuple[str, str], dict[str, tuple]] = {}
         #: sched_id → TaskScheduler (reference task_scheduler.py's
@@ -138,6 +144,41 @@ class EdgeLakeEngine:
             return self.views[name]
         short = catalog.view_name(name)
         return self.views.get(short, short)
+
+    def ingest(self, table: str, n_rows: int, build, dbms: str = "",
+               create: bool = True) -> str:
+        """Append one batch of ``n_rows`` rows to ``table``'s ingest view
+        ``__ingest_<table>`` and register ``table`` and ``dbms.table`` as
+        its aliases; returns the qualified name. The one landing path of
+        REST PUT and topic publish, the ``stream`` command and the
+        operator's files.
+
+        ``build(first_row_id)`` returns the batch's DataFrame. It runs
+        under the ingest lock, so concurrent appends neither lose a batch
+        nor share row ids: ``first_row_id`` is the count of rows already
+        appended to the view + 1 (the reference's ``row_id SERIAL``).
+        ``create = False`` refuses a table that has no ingest view yet."""
+        view = f"__ingest_{table}"
+        name = f"{dbms}.{table}" if dbms else table
+        with self._ingest_lock:
+            exists = self.spark.catalog.tableExists(view)
+            if not exists and not create:
+                raise ValueError(f"table {name} does not exist (create_table = false)")
+            # a dropped view restarts the count; a view another engine on
+            # this session made is counted once
+            before = 0
+            if exists:
+                before = self.ingested_rows.get(view)
+                if before is None:
+                    before = self.spark.table(view).count()
+            df = build(before + 1)
+            if exists:
+                df = self.spark.table(view).unionByName(df, allowMissingColumns=True)
+            df.createOrReplaceTempView(view)
+            self.ingested_rows[view] = before + n_rows
+            self.views[name] = view
+            self.views[table] = view
+        return name
 
     def _purge_doomed_views(self, doomed) -> list[str]:
         """Drop the given temp views and EVERY remaining alias that
@@ -205,7 +246,8 @@ class EdgeLakeEngine:
                     }
                 )
         if not out:
-            kind = "memory" if "Scan ExistingRDD" in plan else "local"
+            in_memory = "Scan ExistingRDD" in plan or "LocalTableScan" in plan
+            kind = "memory" if in_memory else "local"
             out.append({"location": kind, "table": "", "filters": ""})
         return out
 
@@ -373,8 +415,8 @@ class EdgeLakeEngine:
                 from edgelake_spark.admin import rows_count_estimate
 
                 rows = rows_count_estimate(self.sf_dir, tables)
-                return self.spark.createDataFrame(
-                    rows or [], "table_name string, n_rows long"
+                return local_frame(
+                    self.spark, rows or [], "table_name string, n_rows long"
                 )
             from edgelake_spark.admin import rows_count
 
@@ -399,8 +441,8 @@ class EdgeLakeEngine:
             exists = self.spark.catalog.tableExists(
                 self._resolve(f"{m.group(1)}.{m.group(2)}")
             )
-            return self.spark.createDataFrame(
-                [(m.group(2), exists)], "table_name string, table_exists boolean"
+            return local_frame(
+                self.spark, [(m.group(2), exists)], "table_name string, table_exists boolean"
             )
         m = _re.match(
             r"backup\s+table\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
@@ -428,7 +470,8 @@ class EdgeLakeEngine:
                     fh.write(line + "\n")
                     n += 1
             self.event_log.add("File", f"backup table {opts['table']}")
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(opts["table"], out, n)], "table_name string, dest string, n_rows bigint"
             )
         m = _re.match(r"get\s+table\s+versions(\s+where\s+(.*))?$", text, _re.IGNORECASE)
@@ -451,8 +494,8 @@ class EdgeLakeEngine:
                         (kind, name, man["version"], man["op"],
                          man["timestamp"], len(man["files"]))
                     )
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_frame(
+                self.spark, rows or [],
                 "store string, table_name string, version int, op string, "
                 "committed_at string, n_files int",
             )
@@ -479,8 +522,8 @@ class EdgeLakeEngine:
                 )
                 for bucket in buckets:
                     rows.append((name, bucket))
-            return self.spark.createDataFrame(
-                rows or [], "table_name string, partition string"
+            return local_frame(
+                self.spark, rows or [], "table_name string, partition string"
             )
         m = _re.match(
             r"set\s+streaming\s+conditions?\s+where\s+(.*?)\s+(if\s+.*)$",
@@ -496,8 +539,8 @@ class EdgeLakeEngine:
             key = f"{opts.get('dbms', '')}.{opts.get('table', '*')}"
             cond = StreamingCondition.parse(rule, limit=int(opts.get("limit", 0)))
             self.streaming_conditions.setdefault(key, []).append(cond)
-            return self.spark.createDataFrame(
-                [(key, len(self.streaming_conditions[key]) - 1, rule.strip())],
+            return local_frame(
+                self.spark, [(key, len(self.streaming_conditions[key]) - 1, rule.strip())],
                 "table_key string, condition_id int, rule string",
             )
         m = _re.match(
@@ -514,8 +557,8 @@ class EdgeLakeEngine:
                     continue
                 for i, c in enumerate(conds):
                     rows.append((key, i, c.column, c.op, c.value, c.action, c.limit))
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_frame(
+                self.spark, rows or [],
                 "table_key string, condition_id int, column string, op string, "
                 "value string, action string, limit int",
             )
@@ -538,7 +581,7 @@ class EdgeLakeEngine:
                     removed = len(conds) - len(self.streaming_conditions[key])
                 else:
                     removed = len(self.streaming_conditions.pop(key))
-            return self.spark.createDataFrame([(removed,)], "removed int")
+            return local_frame(self.spark, [(removed,)], "removed int")
         m = _re.match(r"data\s+monitor\s+where\s+(.*)$", text, _re.IGNORECASE)
         if m:
             # reference data_monitor.py:16-20 `data monitor where dbms=..
@@ -563,8 +606,8 @@ class EdgeLakeEngine:
                 intervals=int(opts.get("intervals", 10)),
                 interval_seconds=secs,
             )
-            return self.spark.createDataFrame(
-                [(key, int(opts.get("intervals", 10)), secs)],
+            return local_frame(
+                self.spark, [(key, int(opts.get("intervals", 10)), secs)],
                 "table_key string, intervals int, interval_seconds int",
             )
         m = _re.match(r"get\s+data\s+monitor(\s+where\s+(.*))?$", text, _re.IGNORECASE)
@@ -581,8 +624,8 @@ class EdgeLakeEngine:
                     rows.append(
                         (key, s["interval"], s["count"], s["min"], s["max"], s["sum"])
                     )
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_frame(
+                self.spark, rows or [],
                 "table_key string, interval int, count bigint, min double, max double, sum double",
             )
         if _re.fullmatch(r"get\s+status", text, _re.IGNORECASE):
@@ -591,8 +634,8 @@ class EdgeLakeEngine:
             # the Spark app coordinates as extra columns
             sc = self.spark.sparkContext
             name = self.params.get("node_name", "edgelake-spark")
-            return self.spark.createDataFrame(
-                [(f"{name} running", sc.appName, sc.master, sc.defaultParallelism)],
+            return local_frame(
+                self.spark, [(f"{name} running", sc.appName, sc.master, sc.defaultParallelism)],
                 "status string, app string, master string, parallelism int",
             )
         m = _re.match(r"query\s+destination(\s+(\S+))?$", text, _re.IGNORECASE)
@@ -633,8 +676,8 @@ class EdgeLakeEngine:
                             e["statement"],
                         )
                     )
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_frame(
+                self.spark, rows or [],
                 "job_id bigint, destination string, dbms string, "
                 "table_name string, scan_filters string, statement string",
             )
@@ -650,19 +693,20 @@ class EdgeLakeEngine:
                     (e["job_id"], e["statement"], e["rewritten_sql"], e["pass_through"])
                     for e in self.query_log
                 ]
-                return self.spark.createDataFrame(
-                    rows or [],
+                return local_frame(
+                    self.spark, rows or [],
                     "job_id bigint, statement string, rewritten_sql string, pass_through boolean",
                 )
             if not self.query_log:
-                return self.spark.createDataFrame([], "job_id bigint, plan string")
+                return local_frame(self.spark, [], "job_id bigint, plan string")
             if sel and sel.strip().isdigit():
                 entry = next(
                     (e for e in self.query_log if e["job_id"] == int(sel)), self.query_log[-1]
                 )
             else:  # non-numeric / "last" selectors fall back to latest
                 entry = self.query_log[-1]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(entry["job_id"], self._entry_plan(entry))], "job_id bigint, plan string"
             )
         m = _re.match(
@@ -674,8 +718,8 @@ class EdgeLakeEngine:
             rows = admin.test_table_schema(
                 self.spark, self.policy_store, m.group(2), m.group(1), self._resolve
             )
-            return self.spark.createDataFrame(
-                rows, "dbms string, table_name string, result string"
+            return local_frame(
+                self.spark, rows, "dbms string, table_name string, result string"
             )
         if _re.fullmatch(r"get\s+streaming", text, _re.IGNORECASE):
             # reference streaming_data.py:713 show_info — flush
@@ -702,8 +746,8 @@ class EdgeLakeEngine:
                 p = q.lastProgress
                 n = p["numInputRows"] if p else 0
                 rows.append(("stream", q.name or q.id, f"active input_rows={n}"))
-            return self.spark.createDataFrame(
-                rows, "scope string, item string, value string"
+            return local_frame(
+                self.spark, rows, "scope string, item string, value string"
             )
         if _re.fullmatch(r"test\s+node", text, _re.IGNORECASE):
             # reference test_node: validate the node's own services; here
@@ -718,7 +762,7 @@ class EdgeLakeEngine:
             checks.append(
                 ("sql", "Passed" if self.spark.sql("SELECT 1").collect()[0][0] == 1 else "Failed")
             )
-            return self.spark.createDataFrame(checks, "service string, result string")
+            return local_frame(self.spark, checks, "service string, result string")
         m = _re.match(r"blockchain\s+(insert|get|load|save)\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
             return self._blockchain_cmd(m.group(1).lower(), m.group(2).strip())
@@ -778,8 +822,8 @@ class EdgeLakeEngine:
             cfg["conditions"] = self.streaming_conditions.get(tkey, [])
             cfg["monitor"] = self.monitors.get(tkey)
             self.broker_consumers[cfg["topic"].name] = cfg
-            return self.spark.createDataFrame(
-                [(cfg["topic"].name, f"{cfg['ip']}:{cfg['port']}", cfg["reset"])],
+            return local_frame(
+                self.spark, [(cfg["topic"].name, f"{cfg['ip']}:{cfg['port']}", cfg["reset"])],
                 "topic string, bootstrap string, reset string",
             )
         m = _re.match(
@@ -807,8 +851,8 @@ class EdgeLakeEngine:
                 # table dies with FileNotFoundException
                 self.spark.catalog.refreshByPath(path)
             self.attach_partitioned(table, path)
-            return self.spark.createDataFrame(
-                [(b,) for b in dropped] or [], "dropped_partition string"
+            return local_frame(
+                self.spark, [(b,) for b in dropped] or [], "dropped_partition string"
             )
         m = _re.match(r"run\s+message\s+broker(\s+where\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
@@ -836,8 +880,8 @@ class EdgeLakeEngine:
             self.message_brokers = getattr(self, "message_brokers", [])
             self.message_brokers.append(broker)
             self.event_log.add("Event", f"Message broker declared ({proto})")
-            return self.spark.createDataFrame(
-                [(proto, broker.host, broker.port)],
+            return local_frame(
+                self.spark, [(proto, broker.host, broker.port)],
                 "protocol string, ip string, port int",
             )
         m = _re.match(r"run\s+rest\s+server(\s+where\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
@@ -862,7 +906,8 @@ class EdgeLakeEngine:
                 basic_auth=basic,
             ).start()
             self.event_log.add("Event", "REST server declared")
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(server.host, server.port, basic is not None or bool(opts.get("token")))],
                 "ip string, port int, auth boolean",
             )
@@ -894,7 +939,8 @@ class EdgeLakeEngine:
                 compress_json=flag("compress_json", True),
             )
             self.event_log.add("Event", "Operator declared")
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(opts["watch_dir"], self.operator.create_table, self.operator.update_tsd_info)],
                 "watch_dir string, create_table boolean, update_tsd_info boolean",
             )
@@ -902,8 +948,8 @@ class EdgeLakeEngine:
         if m:
             if getattr(self, "operator", None) is None:
                 raise ValueError("no operator is running")
-            return self.spark.createDataFrame(
-                [self.operator.status()],
+            return local_frame(
+                self.spark, [self.operator.status()],
                 "files_processed bigint, files_errored bigint, rows_ingested bigint, last_error string",
             )
         m = _re.match(r"delete\s+archive\s+where\s+days\s*=\s*(\d+)\s*$", text, _re.IGNORECASE)
@@ -923,8 +969,8 @@ class EdgeLakeEngine:
             for holder in (getattr(self, "archiver", None), getattr(self, "operator", None)):
                 if holder is not None:
                     deleted += delete_archive_before(holder.archive_dir, cutoff)
-            return self.spark.createDataFrame(
-                [(d,) for d in sorted(set(deleted))] or [], "deleted_day string"
+            return local_frame(
+                self.spark, [(d,) for d in sorted(set(deleted))] or [], "deleted_day string"
             )
         m = _re.match(r"flush\s+buffers\s*$", text, _re.IGNORECASE)
         if m:
@@ -947,7 +993,7 @@ class EdgeLakeEngine:
                         continue       # broken watch dir must not block
 
             self.event_log.add("Event", "Buffers flushed")
-            return self.spark.createDataFrame([(drained,)], "flushed int")
+            return local_frame(self.spark, [(drained,)], "flushed int")
         m = _re.match(
             r"connect\s+dbms\s+(\S+)\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
         )
@@ -976,8 +1022,8 @@ class EdgeLakeEngine:
                         attached.append(t)
             self.connected_dbms[name] = [f"{name}.{t}" for t in attached]
             self.event_log.add("Event", f"DBMS {name} connected")
-            return self.spark.createDataFrame(
-                [(name, opts.get("type", "parquet"), len(attached))],
+            return local_frame(
+                self.spark, [(name, opts.get("type", "parquet"), len(attached))],
                 "dbms string, type string, n_tables int",
             )
         m = _re.match(r"(?:disconnect|drop)\s+dbms\s+(\S+)\s*$", text, _re.IGNORECASE)
@@ -1024,8 +1070,8 @@ class EdgeLakeEngine:
             # purge the doomed temp views and every remaining alias
             # (bare short names included) that still points at them
             self._purge_doomed_views(doomed_views)
-            return self.spark.createDataFrame(
-                [(name, len(dropped))], "dbms string, n_tables int"
+            return local_frame(
+                self.spark, [(name, len(dropped))], "dbms string, n_tables int"
             )
         m = _re.match(
             r"(replace|prepare)\s+policy\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
@@ -1042,8 +1088,8 @@ class EdgeLakeEngine:
             if verb == "prepare":
                 stamped = stamp_policy(_json.loads(rest))
                 body = next(iter(stamped.values()))
-                return self.spark.createDataFrame(
-                    [(_json.dumps(stamped), body.get("id", ""))],
+                return local_frame(
+                    self.spark, [(_json.dumps(stamped), body.get("id", ""))],
                     "policy string, policy_id string",
                 )
             rm = _re.match(r"where\s+id\s*=\s*(\S+)\s+with\s+(.*)$", rest, _re.IGNORECASE | _re.DOTALL)
@@ -1052,8 +1098,8 @@ class EdgeLakeEngine:
             old_id = rm.group(1).strip("'\"")
             n_removed = self.policy_store.remove_by_id(old_id)
             self.policy_store.add(_json.loads(rm.group(2)))
-            return self.spark.createDataFrame(
-                [(old_id, n_removed)],
+            return local_frame(
+                self.spark, [(old_id, n_removed)],
                 "replaced_id string, n_policies int",
             )
         m = _re.match(
@@ -1075,8 +1121,8 @@ class EdgeLakeEngine:
                 _os.makedirs(p, exist_ok=True)
                 self.params[f"{n}_dir"] = p  # !watch_dir etc. resolve
                 made.append(p)
-            return self.spark.createDataFrame(
-                [(n, p) for n, p in zip(names, made)], "name string, path string"
+            return local_frame(
+                self.spark, [(n, p) for n, p in zip(names, made)], "name string, path string"
             )
         m = _re.match(
             r"drop\s+table\s+(\S+)(?:\s+where\s+dbms\s*=\s*(\S+))?\s*$", text, _re.IGNORECASE
@@ -1098,8 +1144,8 @@ class EdgeLakeEngine:
                 _shutil.rmtree(tx.path, ignore_errors=True)
             removed += self._purge_doomed_views({f"__dml_{key}", f"__ingest_{key}"})
             self.event_log.add("Event", f"Table {table} dropped")
-            return self.spark.createDataFrame(
-                [(table, bool(removed or tx))], "table_name string, dropped boolean"
+            return local_frame(
+                self.spark, [(table, bool(removed or tx))], "table_name string, dropped boolean"
             )
         m = _re.match(
             r"(?:drop|delete)\s+policy\s+where\s+id\s*=\s*(\S+)\s*$", text, _re.IGNORECASE
@@ -1108,7 +1154,7 @@ class EdgeLakeEngine:
             # reference drop policy / blockchain delete policy
             pid = m.group(1).strip("'\"")
             n = self.policy_store.remove_by_id(pid)
-            return self.spark.createDataFrame([(pid, n)], "policy_id string, n_dropped int")
+            return local_frame(self.spark, [(pid, n)], "policy_id string, n_dropped int")
         m = _re.match(r"run\s+blobs\s+archiver\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
             # reference alarchiver.data_archiver flags (member_cmd:
@@ -1144,16 +1190,16 @@ class EdgeLakeEngine:
                 reuse_blobs=flag("reuse_blobs", False),
             )
             self.event_log.add("Event", "Blobs archiver declared")
-            return self.spark.createDataFrame(
-                [(self.archiver.status(),)], "archiver string"
+            return local_frame(
+                self.spark, [(self.archiver.status(),)], "archiver string"
             )
         m = _re.match(r"get\s+archived\s+files(\s+([\d-]+))?\s*$", text, _re.IGNORECASE)
         if m:
             if getattr(self, "archiver", None) is None:
                 raise ValueError("no blobs archiver is running")
             rows = self.archiver.archived_files(m.group(2))
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_frame(
+                self.spark, rows or [],
                 "archive_date string, file_name string, n_bytes bigint, compressed boolean",
             )
         m = _re.match(r"file\s+store\s+where\s+(.*)$", text, _re.IGNORECASE)
@@ -1175,8 +1221,8 @@ class EdgeLakeEngine:
                 if flt.get("table") and table != flt["table"]:
                     continue
                 rows.append((dbms, table, len(self.blob_rows.get((dbms, table), ()))))
-            return self.spark.createDataFrame(
-                rows or [], "dbms string, table_name string, n_files bigint"
+            return local_frame(
+                self.spark, rows or [], "dbms string, table_name string, n_files bigint"
             )
         m = _re.match(r"set\s+([A-Za-z_]\w*)\s*=\s*(.*)$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
@@ -1193,14 +1239,14 @@ class EdgeLakeEngine:
             else:
                 self.params.pop(key, None)
                 action = "removed"
-            return self.spark.createDataFrame(
-                [(key, value, action)], "key string, value string, action string"
+            return local_frame(
+                self.spark, [(key, value, action)], "key string, value string, action string"
             )
         if _re.fullmatch(r"get\s+dictionary(\s+where\s+.*)?", text, _re.IGNORECASE):
             # reference member_cmd.py:17191 `get dictionary`
             rows = sorted(self.params.items())
-            return self.spark.createDataFrame(
-                rows or [], "key string, value string"
+            return local_frame(
+                self.spark, rows or [], "key string, value string"
             )
         m = _re.match(r"echo\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
@@ -1211,7 +1257,7 @@ class EdgeLakeEngine:
             if len(msg) >= 2 and msg[0] == msg[-1] and msg[0] in "\"'":
                 msg = msg[1:-1]
             self.event_log.add("Event", msg)
-            return self.spark.createDataFrame([(msg,)], "echo string")
+            return local_frame(self.spark, [(msg,)], "echo string")
         m = _re.match(r"print\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
             # reference _print (member_cmd.py `print` command): console
@@ -1220,7 +1266,7 @@ class EdgeLakeEngine:
             msg = m.group(1).strip()
             if len(msg) >= 2 and msg[0] == msg[-1] and msg[0] in "\"'":
                 msg = msg[1:-1]
-            return self.spark.createDataFrame([(msg,)], "print string")
+            return local_frame(self.spark, [(msg,)], "print string")
         m = _re.match(
             r"monitor\s+(\w+)\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
         )
@@ -1254,8 +1300,8 @@ class EdgeLakeEngine:
                 **info,
                 "Update time": stamp,
             }
-            return self.spark.createDataFrame(
-                [(topic, node, len(info))], "topic string, node string, n_keys int"
+            return local_frame(
+                self.spark, [(topic, node, len(info))], "topic string, node string, n_keys int"
             )
         m = _re.match(r"get\s+monitored(?:\s+(\w+))?$", text, _re.IGNORECASE)
         if m:
@@ -1263,8 +1309,8 @@ class EdgeLakeEngine:
 
             store = getattr(self, "monitor_status", {})
             if not m.group(1):
-                return self.spark.createDataFrame(
-                    [(t,) for t in sorted(store)] or [], "topic string"
+                return local_frame(
+                    self.spark, [(t,) for t in sorted(store)] or [], "topic string"
                 )
             topic = m.group(1).lower()
             if topic not in store:
@@ -1273,7 +1319,7 @@ class EdgeLakeEngine:
                 (node, _json.dumps(info, separators=(",", ":")))
                 for node, info in sorted(store[topic].items())
             ]
-            return self.spark.createDataFrame(rows, "node string, info string")
+            return local_frame(self.spark, rows, "node string, info string")
         m = _re.match(
             r"stream\s+(\{.*\}|\[.*\])\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
         )
@@ -1295,17 +1341,13 @@ class EdgeLakeEngine:
             rows = payload if isinstance(payload, list) else [payload]
             from edgelake_spark.ingest.infer import rows_to_dataframe
 
-            df = rows_to_dataframe(self.spark, rows)
-            table = opts["table"]
-            name = f"{opts['dbms']}.{table}" if opts.get("dbms") else table
-            view = f"__ingest_{table}"
-            if self.spark.catalog.tableExists(view):
-                df = self.spark.table(view).unionByName(df, allowMissingColumns=True)
-            df.createOrReplaceTempView(view)
-            self.views[name] = view
-            self.views[table] = view
-            return self.spark.createDataFrame(
-                [(len(rows), name)], "ingested int, table string"
+            name = self.ingest(
+                opts["table"], len(rows),
+                lambda first: rows_to_dataframe(self.spark, rows, first_row_id=first),
+                dbms=opts.get("dbms", ""),
+            )
+            return local_frame(
+                self.spark, [(len(rows), name)], "ingested int, table string"
             )
         m = _re.match(r"from\s+(\{.*\})\s+(bring\b.*)$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
@@ -1321,7 +1363,7 @@ class EdgeLakeEngine:
             result = self.policy_store.run_bring([obj], m.group(2), "*")
             if isinstance(result, list):
                 result = "".join(str(v) for v in result)
-            return self.spark.createDataFrame([(str(result),)], "from string")
+            return local_frame(self.spark, [(str(result),)], "from string")
         m = _re.match(r"time\s+file\s+(\w+)(?:\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
             return self._time_file(m.group(1).lower(), (m.group(2) or "").strip())
@@ -1333,8 +1375,8 @@ class EdgeLakeEngine:
             rows = [
                 (c, u) for c, u in _COMMAND_HELP if not prefix or c.startswith(prefix)
             ]
-            return self.spark.createDataFrame(
-                rows or [], "command string, usage string"
+            return local_frame(
+                self.spark, rows or [], "command string, usage string"
             )
         m = _re.match(
             r"generate\s+insert\s+from\s+json\s+where\s+(.*)$",
@@ -1363,8 +1405,8 @@ class EdgeLakeEngine:
                             continue
                         self.params[str(k)] = str(v)
                         applied.append((str(k), str(v)))
-                    return self.spark.createDataFrame(
-                        applied or [], "key string, value string"
+                    return local_frame(
+                        self.spark, applied or [], "key string, value string"
                     )
             raise ValueError(f"config from policy: no policy with id {pid}")
         m = _re.match(r"json\s+(.*?)(\s+test)?\s*$", text, _re.IGNORECASE | _re.DOTALL)
@@ -1381,10 +1423,10 @@ class EdgeLakeEngine:
                 normalized = _json.dumps(_json.loads(payload), separators=(",", ":"))
             except ValueError:
                 if is_test:
-                    return self.spark.createDataFrame([("false",)], "json string")
+                    return local_frame(self.spark, [("false",)], "json string")
                 raise ValueError(f"json: not a valid JSON structure: {payload[:80]!r}")
-            return self.spark.createDataFrame(
-                [("true" if is_test else normalized,)], "json string"
+            return local_frame(
+                self.spark, [("true" if is_test else normalized,)], "json string"
             )
         m = _re.match(r"python\s+(.+)$", text, _re.IGNORECASE | _re.DOTALL)
         if m:
@@ -1406,7 +1448,7 @@ class EdgeLakeEngine:
                 value = eval(expr, safe, {})  # noqa: S307 — sandboxed above
             except Exception as exc:
                 raise ValueError(f"python: {exc}")
-            return self.spark.createDataFrame([(str(value),)], "python string")
+            return local_frame(self.spark, [(str(value),)], "python string")
         m = _re.match(r"incr\s+(\S+)(?:\s+(-?\d+))?\s*$", text, _re.IGNORECASE)
         if m:
             # reference _incr (member_cmd.py:12305): treat the operand as
@@ -1419,8 +1461,8 @@ class EdgeLakeEngine:
                 raise ValueError(
                     f"incr: operand is not an integer: {m.group(1)!r}"
                 )
-            return self.spark.createDataFrame(
-                [(base + int(m.group(2) or 1),)], "incr bigint"
+            return local_frame(
+                self.spark, [(base + int(m.group(2) or 1),)], "incr bigint"
             )
         m = _re.match(r"get\s+status\s+where\s+(.*)$", text, _re.IGNORECASE)
         if m:
@@ -1453,8 +1495,8 @@ class EdgeLakeEngine:
             # oldest-first, optional keyword filter over Type and Text
             keys = (m.group(3) or "").split() or None
             rows = self.event_log.show(m.group(1).lower(), keys)
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_frame(
+                self.spark, rows or [],
                 "id long, count long, thread string, time string, "
                 "type string, text string",
             )
@@ -1464,8 +1506,8 @@ class EdgeLakeEngine:
         if m:
             # reference reset_events (process_log.py:201)
             n = self.event_log.reset(m.group(1).lower())
-            return self.spark.createDataFrame(
-                [(m.group(1).lower(), n)], "log string, entries_cleared long"
+            return local_frame(
+                self.spark, [(m.group(1).lower(), n)], "log string, entries_cleared long"
             )
         if _re.fullmatch(r"get\s+processes(\s+where\s+.*)?", text, _re.IGNORECASE):
             # reference get_processes_stat (member_cmd.py:8521): the
@@ -1516,8 +1558,8 @@ class EdgeLakeEngine:
                 ("Blobs Archiver", "Running" if arch else "Not declared",
                  arch.status() if arch else "")
             )
-            return self.spark.createDataFrame(
-                rows, "process string, status string, details string"
+            return local_frame(
+                self.spark, rows, "process string, status string, details string"
             )
         # --- scheduler / script family (reference member_cmd.py:11961
         # `run scheduler`, :11996 `schedule`, :12070 task ops, :16011
@@ -1528,8 +1570,8 @@ class EdgeLakeEngine:
             already = sched.running
             if not already and self.scheduler_wake_seconds > 0:
                 sched.start(self.scheduler_wake_seconds)
-            return self.spark.createDataFrame(
-                [(sched.sched_id, "already running" if already else "started")],
+            return local_frame(
+                self.spark, [(sched.sched_id, "already running" if already else "started")],
                 "scheduler_id int, status string",
             )
         m = _re.match(r"exit\s+scheduler(\s+(\d+))?$", text, _re.IGNORECASE)
@@ -1538,8 +1580,8 @@ class EdgeLakeEngine:
             sched = self.schedulers.get(sched_id)
             if sched:
                 sched.stop()
-            return self.spark.createDataFrame(
-                [(sched_id, "stopped" if sched else "not running")],
+            return local_frame(
+                self.spark, [(sched_id, "stopped" if sched else "not running")],
                 "scheduler_id int, status string",
             )
         m = _re.match(r"get\s+scheduler(\s+(\d+))?$", text, _re.IGNORECASE)
@@ -1552,8 +1594,8 @@ class EdgeLakeEngine:
                 if which is not None and sid != which:
                     continue
                 rows.extend(sched.snapshot())
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_frame(
+                self.spark, rows or [],
                 "scheduler_id int, task_id int, mode string, name string, "
                 "run_counter bigint, run_status string, start_time string, "
                 "repeat_seconds bigint, task string",
@@ -1578,8 +1620,8 @@ class EdgeLakeEngine:
                 name=nm.group(1).strip('"') if nm else None,
                 start=st.group(1).strip('"') if st else None,
             )
-            return self.spark.createDataFrame(
-                [(sched.sched_id, task.task_id, task.name or "", task.repeat_seconds)],
+            return local_frame(
+                self.spark, [(sched.sched_id, task.task_id, task.name or "", task.repeat_seconds)],
                 "scheduler_id int, task_id int, name string, repeat_seconds bigint",
             )
         m = _re.match(
@@ -1602,8 +1644,8 @@ class EdgeLakeEngine:
                 task_id=int(im.group(1)) if im else None,
                 start=st.group(1).strip('"') if st else None,
             )
-            return self.spark.createDataFrame(
-                [(sched.sched_id, task.task_id, task.name or "", task.mode)],
+            return local_frame(
+                self.spark, [(sched.sched_id, task.task_id, task.name or "", task.mode)],
                 "scheduler_id int, task_id int, name string, mode string",
             )
         m = _re.match(r"event\s+(\S+)(?:\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
@@ -1632,8 +1674,8 @@ class EdgeLakeEngine:
             rows = [
                 (ln, cmd, type(r).__name__) for ln, cmd, r in result.executed
             ]
-            return self.spark.createDataFrame(
-                rows or [], "line int, command string, result_type string"
+            return local_frame(
+                self.spark, rows or [], "line int, command string, result_type string"
             )
         return None
 
@@ -1724,8 +1766,8 @@ class EdgeLakeEngine:
             # reference: duplicate key is an error unless
             # ignore_duplicate (multiple rows may point at one blob)
             if opts.get("ignore", "").lower() in ("true", "1"):
-                return self.spark.createDataFrame(
-                    [(dbms, table, row[0], row[4], False)],
+                return local_frame(
+                    self.spark, [(dbms, table, row[0], row[4], False)],
                     "dbms string, table_name string, blob_hash string, n_bytes bigint, stored boolean",
                 )
             raise ValueError(f"duplicate blob hash {row[0]} in {dbms}.{table}")
@@ -1736,7 +1778,7 @@ class EdgeLakeEngine:
             # dup-check hash key — never the content bytes
             rows[row[0]] = None
             tx = self._tx_table("blobs", f"{dbms}.{table}")
-            tx.append(self.spark.createDataFrame([row], schema=multimodal.BLOB_SCHEMA))
+            tx.append(local_frame(self.spark, [row], schema=multimodal.BLOB_SCHEMA))
             # every append adds a scan-union branch to the snapshot
             # read; fold the small stages once the chain is deep
             # (size-gated compact_small — the Delta OPTIMIZE analogue,
@@ -1747,13 +1789,13 @@ class EdgeLakeEngine:
             tx.read(self.spark).createOrReplaceTempView(view)
         else:
             rows[row[0]] = row
-            df = self.spark.createDataFrame(
-                list(rows.values()), schema=multimodal.BLOB_SCHEMA
+            df = local_frame(
+                self.spark, list(rows.values()), schema=multimodal.BLOB_SCHEMA
             )
             df.createOrReplaceTempView(view)
         self.blob_views[(dbms, table)] = view
-        return self.spark.createDataFrame(
-            [(dbms, table, row[0], row[4], True)],
+        return local_frame(
+            self.spark, [(dbms, table, row[0], row[4], True)],
             "dbms string, table_name string, blob_hash string, n_bytes bigint, stored boolean",
         )
 
@@ -1831,7 +1873,8 @@ class EdgeLakeEngine:
             with open(path, "wb") as f:
                 f.write(bytes(r.content))
             out.append((r.blob_hash, r.source_name, r.n_bytes, path))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             out or [], "blob_hash string, source_name string, n_bytes bigint, dest string"
         )
 
@@ -1873,7 +1916,7 @@ class EdgeLakeEngine:
                 )
                 for e in entries
             ]
-            return self.spark.createDataFrame(rows or [], self._TSD_SCHEMA)
+            return local_frame(self.spark, rows or [], self._TSD_SCHEMA)
 
         if verb == "rename":
             m = _re.match(r"(\S+)\s+to\s+(.*)$", rest, _re.DOTALL)
@@ -1894,7 +1937,7 @@ class EdgeLakeEngine:
                 instructions=opts.get("instructions", "0"),
                 now=self.now,
             )
-            return self.spark.createDataFrame([(new_path,)], "file string")
+            return local_frame(self.spark, [(new_path,)], "file string")
         if verb in ("new", "add"):
             parts = _shlex.split(rest)
             if not parts:
@@ -1917,17 +1960,17 @@ class EdgeLakeEngine:
                 parts[1] if len(parts) > 1 else None,
                 parts[2] if len(parts) > 2 else None,
             )
-            return self.spark.createDataFrame([(n,)], "updated int")
+            return local_frame(self.spark, [(n,)], "updated int")
         if verb == "delete":
             m = _re.match(r"(\d+)\s+from\s+(\S+)$", rest)
             if not m:
                 raise ValueError("time file delete [row id] from [tsd table]")
             n = self.tsd_store.delete(int(m.group(1)), m.group(2))
-            return self.spark.createDataFrame([(n,)], "deleted int")
+            return local_frame(self.spark, [(n,)], "deleted int")
         if verb == "drop":
             what = rest.strip() or "all"
             n = self.tsd_store.drop(what)
-            return self.spark.createDataFrame([(n,)], "dropped int")
+            return local_frame(self.spark, [(n,)], "dropped int")
         if verb == "get":
             entries = self.tsd_store.entries
             m = _re.match(r"where\s+(.*)$", rest, _re.DOTALL)
@@ -1995,8 +2038,8 @@ class EdgeLakeEngine:
             _os.makedirs(opts["sql_dir"], exist_ok=True)
             with open(path, "w") as fh:
                 fh.write("\n".join(stmts) + "\n")
-        return self.spark.createDataFrame(
-            [(s,) for s in stmts], "insert_statement string"
+        return local_frame(
+            self.spark, [(s,) for s in stmts], "insert_statement string"
         )
 
     #: per-type defaults for `create policy … with defaults` (reference
@@ -2037,8 +2080,8 @@ class EdgeLakeEngine:
         if defaults:
             self.policy_store.add(policy)
             policy = self.policy_store.policies[-1]  # id/date-stamped form
-        return self.spark.createDataFrame(
-            [(_json.dumps(policy, separators=(",", ":")),)], "policy string"
+        return local_frame(
+            self.spark, [(_json.dumps(policy, separators=(",", ":")),)], "policy string"
         )
 
     def _blockchain_cmd(self, verb: str, rest: str):
@@ -2052,15 +2095,15 @@ class EdgeLakeEngine:
             m = _re.search(r"policy\s*=\s*(\{.*\})\s*$", rest, _re.DOTALL)
             payload = m.group(1) if m else rest
             self.policy_store.add(_json.loads(payload))
-            return self.spark.createDataFrame([(len(self.policy_store.policies),)], "policies int")
+            return local_frame(self.spark, [(len(self.policy_store.policies),)], "policies int")
         if verb == "load":
             from edgelake_spark.policies import PolicyStore
 
             self.policy_store = PolicyStore.load(rest)
-            return self.spark.createDataFrame([(len(self.policy_store.policies),)], "policies int")
+            return local_frame(self.spark, [(len(self.policy_store.policies),)], "policies int")
         if verb == "save":
             n = self.policy_store.save(rest)
-            return self.spark.createDataFrame([(n,)], "policies int")
+            return local_frame(self.spark, [(n,)], "policies int")
         # get: blockchain get <type> [where k = v and ...] [bring ...]
         m = _re.match(r"(\S+)(?:\s+where\s+(.*?))?(?:\s+(bring\b.*))?$", rest, _re.DOTALL)
         ptype, where_s, bring = m.group(1), m.group(2), m.group(3)
@@ -2076,12 +2119,12 @@ class EdgeLakeEngine:
                 # list-valued bring variants (list / ip_port / sorted
                 # projections) render one value per row, matching the
                 # reference's line-per-value output
-                return self.spark.createDataFrame(
-                    [(v,) for v in result] or [], "result string"
+                return local_frame(
+                    self.spark, [(v,) for v in result] or [], "result string"
                 )
-            return self.spark.createDataFrame([(str(result),)], "result string")
-        return self.spark.createDataFrame(
-            [( _json.dumps(p, separators=(",", ":")),) for p in result] or [],
+            return local_frame(self.spark, [(str(result),)], "result string")
+        return local_frame(
+            self.spark, [( _json.dumps(p, separators=(",", ":")),) for p in result] or [],
             "policy string",
         )
 

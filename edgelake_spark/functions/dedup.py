@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from edgelake_spark.functions.text import duck_tokens, spark_tokens
 from edgelake_spark.checkpoint import materialize as _materialize
+from edgelake_spark.localframe import local_frame
 
 NUM_HASHES = 16
 BANDS = 4
@@ -442,7 +443,7 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
         # component id = min doc_id in the component (find() roots are
         # already minima because unions always point max → min)
         rows = sorted(comp.items())
-        return spark.createDataFrame(rows, "doc_id long, component_id long")
+        return local_frame(spark, rows, "doc_id long, component_id long")
 
     # bidirectional edge set (no distinct — id1<id2 halves cannot overlap)
     edges = pairs.union(

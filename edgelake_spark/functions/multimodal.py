@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from edgelake_spark.localframe import local_frame
+
 BLOB_SCHEMA = T.StructType(
     [
         T.StructField("blob_hash", T.StringType(), False),  # content key
@@ -49,7 +51,7 @@ def store_blobs(spark: SparkSession, rows: list[tuple[bytes, str, str]]) -> Data
         (hashlib.sha256(content).hexdigest(), media_type, name, content, len(content))
         for content, media_type, name in rows
     ]
-    return spark.createDataFrame(data, schema=BLOB_SCHEMA)
+    return local_frame(spark, data, schema=BLOB_SCHEMA)
 
 
 def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:

@@ -9,10 +9,14 @@ get_column_type_by_value; widening :123-165 resolve_data_type) and maps
 the result onto Spark types (SURVEY.md §1.2 table).
 
 System columns (suggest_create_table.py:255): row_id, insert_timestamp,
-tsd_name, tsd_id. ``row_id SERIAL`` becomes
-monotonically_increasing_id() — unique and ascending per partition,
-which is the scalable contract (a global dense sequence would serialize
-ingest through one task at 100 TB).
+tsd_name, tsd_id. They are values of the batch, fixed on the driver when
+it is built: ``row_id SERIAL`` is the table's count of rows ingested
+before this batch + 1..n (the caller passes ``first_row_id``; the engine
+keeps the count per table), and ``insert_timestamp`` is the batch's
+ingest time (UTC), the same for every row and for every later read.
+
+The batch becomes a JVM-local DataFrame (``localframe.local_frame``):
+reads of freshly ingested rows never start Python workers.
 """
 
 from __future__ import annotations
@@ -21,8 +25,9 @@ import re
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from edgelake_spark.localframe import local_frame
 
 _UUID_RE = re.compile(
     r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
@@ -176,6 +181,17 @@ def _coerce(value, el_type: str):
         return None
 
 
+#: system columns appended to every ingested row (reference
+#: suggest_create_table.py:255)
+SYSTEM_FIELDS = [
+    T.StructField("row_id", T.LongType(), False),
+    T.StructField("insert_timestamp", T.TimestampType(), False),
+    T.StructField("tsd_name", T.StringType(), False),
+    T.StructField("tsd_id", T.IntegerType(), False),
+]
+_SYSTEM_NAMES = {f.name for f in SYSTEM_FIELDS}
+
+
 def rows_to_dataframe(
     spark: SparkSession,
     rows: list[dict],
@@ -183,21 +199,19 @@ def rows_to_dataframe(
     tsd_name: str = "t01",
     tsd_id: int = 0,
     schema: dict[str, str] | None = None,
+    first_row_id: int = 1,
 ) -> DataFrame:
-    """JSON rows → typed DataFrame with EdgeLake system columns."""
+    """JSON rows → typed DataFrame with EdgeLake system columns; row i
+    (from 0) gets ``row_id = first_row_id + i``."""
     el_schema = schema or infer_schema(rows)
-    struct = T.StructType(
-        [T.StructField(c, edgelake_to_spark_type(t), True) for c, t in el_schema.items()]
-    )
-    data = [
-        tuple(_coerce(row.get(c), el_schema[c]) for c in el_schema) for row in rows
-    ]
-    df = spark.createDataFrame(data, schema=struct)
     if add_system_columns:
-        df = (
-            df.withColumn("row_id", F.monotonically_increasing_id())
-            .withColumn("insert_timestamp", F.current_timestamp())
-            .withColumn("tsd_name", F.lit(tsd_name))
-            .withColumn("tsd_id", F.lit(tsd_id))
-        )
-    return df
+        # a user column named like a system column is replaced by it
+        el_schema = {c: t for c, t in el_schema.items() if c not in _SYSTEM_NAMES}
+    fields = [T.StructField(c, edgelake_to_spark_type(t), True) for c, t in el_schema.items()]
+    data = [[_coerce(row.get(c), el_schema[c]) for c in el_schema] for row in rows]
+    if add_system_columns:
+        fields += SYSTEM_FIELDS
+        stamp = datetime.now(timezone.utc)
+        for n, values in enumerate(data):
+            values += (first_row_id + n, stamp, tsd_name, tsd_id)
+    return local_frame(spark, data, T.StructType(fields))

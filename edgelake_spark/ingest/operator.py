@@ -43,7 +43,6 @@ class OperatorNode:
     files_errored: int = 0
     rows_ingested: int = 0
     last_error: str = ""
-    per_table: dict = field(default_factory=dict)
     #: files whose rows are LIVE but which could not be moved out of the
     #: watch dir (archive AND err-move AND unlink all failed, e.g. the
     #: watch dir went read-only): later ticks must skip them or every
@@ -102,21 +101,15 @@ class OperatorNode:
             tsd_name, tsd_id = entry.table, entry.row_id
         else:
             tsd_name, tsd_id = "t01", 0
-        df = rows_to_dataframe(eng.spark, rows, tsd_name=tsd_name, tsd_id=tsd_id)
-
         # land in the same ingest view REST PUT uses, so the query
         # layer resolves `dbms.table` to the accumulated rows
-        qualified = f"{dbms}.{table}"
-        view = f"__ingest_{table}"
-        if not self.create_table and not eng.spark.catalog.tableExists(view):
-            raise ValueError(f"table {qualified} does not exist (create_table = false)")
-        if eng.spark.catalog.tableExists(view):
-            df = eng.spark.table(view).unionByName(df, allowMissingColumns=True)
-        df.createOrReplaceTempView(view)
-        eng.views[qualified] = view
-        eng.views[table] = view
-        stat = self.per_table.setdefault(qualified, 0)
-        self.per_table[qualified] = stat + len(rows)
+        eng.ingest(
+            table, len(rows),
+            lambda first: rows_to_dataframe(
+                eng.spark, rows, tsd_name=tsd_name, tsd_id=tsd_id, first_row_id=first
+            ),
+            dbms=dbms, create=self.create_table,
+        )
 
         # rows are live from here on: an archive failure must NOT route
         # the file to the err dir (replaying an err file would ingest

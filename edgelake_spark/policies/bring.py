@@ -98,6 +98,8 @@ class PolicyStore:
         """The ledger as a Spark DataFrame (policy_type, policy_id,
         policy_date, policy) — registerable as a `policies` view so SQL
         and bring queries share one source of truth."""
+        from edgelake_spark.localframe import local_frame
+
         rows = []
         for p in self.policies:
             ptype = next(iter(p)) if len(p) == 1 else "*"
@@ -110,7 +112,8 @@ class PolicyStore:
                     json.dumps(p, separators=(",", ":")),
                 )
             )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows or [], "policy_type string, policy_id string, policy_date string, policy string"
         )
 

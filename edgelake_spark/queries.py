@@ -25,6 +25,7 @@ from edgelake_spark.engine import EdgeLakeEngine
 from edgelake_spark.functions import dedup as dd
 from edgelake_spark.functions import similarity as sim
 from edgelake_spark.functions import text as tx
+from edgelake_spark.localframe import local_frame
 from edgelake_spark.checkpoint import materialize as _materialize
 
 FIXED_NOW = datetime(2024, 2, 1)
@@ -994,12 +995,12 @@ def _ivf_index_views(spark, sf_dir, n) -> tuple[str, str]:
                 spark, vectors, iters=1, stride=sim.CENTROID_STRIDE
             )
             rows = [(r["centroid_id"], r["centroid"]) for r in cents.collect()]
-            spark.createDataFrame(
-                rows, "centroid_id bigint, centroid array<double>"
+            local_frame(
+                spark, rows, "centroid_id bigint, centroid array<double>"
             ).write.mode("overwrite").parquet(cpath)
         _IVF_CENTROIDS[key] = rows
-    spark.createDataFrame(
-        rows, "centroid_id bigint, centroid array<double>"
+    local_frame(
+        spark, rows, "centroid_id bigint, centroid array<double>"
     ).selectExpr(
         "centroid_id AS cid",
         "centroid AS demb",
@@ -3520,8 +3521,8 @@ def _run_rows_count_estimate(spark, sf_dir):
     rows = ad.rows_count_estimate(
         sf_dir, ["customer", "events", "lineitem", "orders"]
     )
-    return spark.createDataFrame(
-        sorted(rows), "table_name string, n_rows bigint"
+    return local_frame(
+        spark, sorted(rows), "table_name string, n_rows bigint"
     )
 
 
@@ -7960,8 +7961,8 @@ def _run_bpe_train(spark, sf_dir, n_merges: int = 10):
         f"FROM documents_rep) t GROUP BY word"
     ).collect()
     merges = tx.bpe_train_merges([(r["word"], r["freq"]) for r in wv], n_merges)
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "rank bigint, left_sym string, right_sym string, "
         "merged string, pair_freq bigint",
     ).orderBy("rank")
@@ -8223,8 +8224,8 @@ def _run_incremental_agg(spark, sf_dir):
              r["min_value"], r["max_value"])
             for r in dst.read(spark).collect()
         ]
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "event_type string, n bigint, sum_value double, "
         "min_value double, max_value double",
     ).orderBy("event_type")
@@ -8376,12 +8377,12 @@ def _run_pca_project(spark, sf_dir):
             ).transform(_materialize).createOrReplaceTempView("__pca_cov")
             model = spark.sql(sim.pca_power_sql("spark", "", cov_table="__pca_cov"))
             rows = [(r["dim"], r["mu"], r["pc1_loading"]) for r in model.collect()]
-            spark.createDataFrame(
-                rows, "dim bigint, mu double, pc1_loading double"
+            local_frame(
+                spark, rows, "dim bigint, mu double, pc1_loading double"
             ).write.mode("overwrite").parquet(mpath)
         _PCA_MODEL[key] = rows
-    spark.createDataFrame(
-        rows, "dim bigint, mu double, pc1_loading double"
+    local_frame(
+        spark, rows, "dim bigint, mu double, pc1_loading double"
     ).createOrReplaceTempView("__pca_model")
     long_src = (
         "SELECT vec_id, pos AS i, CAST(v AS DOUBLE) AS v "
