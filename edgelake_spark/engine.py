@@ -12,8 +12,10 @@ local[32] to a 1000-executor cluster.
 from __future__ import annotations
 
 import itertools
+import re
 import threading
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,11 +26,89 @@ from edgelake_spark import catalog
 from edgelake_spark.dialect.casting import TZ_NAMES, apply_castings
 from edgelake_spark.dialect.options import SqlCommand, parse_sql_command
 from edgelake_spark.dialect.rewriter import rewrite_select
+from edgelake_spark.eventlog import LOG_SIZES, EventLog
 from edgelake_spark.localframe import local_frame
 from edgelake_spark.output import format_result
+from edgelake_spark.script import _strip_quotes
 
 _view_counter = itertools.count()
 _job_counter = itertools.count()
+
+#: the command table (reference command tree: member_cmd.py:21051-21090):
+#: lowercased prefix words → (usage, handler). @_command fills it from
+#: EdgeLakeEngine's methods; `run` dispatches and `help` lists from it.
+_COMMANDS: dict[tuple[str, ...], tuple[str, object]] = {}
+#: longest prefix, in words (`generate insert from json`)
+_MAX_PREFIX = 4
+
+
+def _command(*prefixes: str, usage: str, verbs: tuple[str, ...] = ()):
+    """Register the decorated method under each prefix; aliases share
+    the handler. With ``verbs``, prefixes and usage are templates: one
+    command per verb, whose handler is called with ``verb=`` that verb."""
+
+    def register(fn):
+        for prefix in prefixes:
+            for verb in verbs or (None,):
+                name, text, handler = prefix, usage, fn
+                if verb is not None:
+                    name, text = prefix.format(verb), usage.format(verb)
+                    handler = partial(fn, verb=verb)
+                key = tuple(name.lower().split())
+                if key in _COMMANDS or len(key) > _MAX_PREFIX:
+                    raise ValueError(f"cannot register command {name!r}")
+                _COMMANDS[key] = (text, handler)
+        return fn
+
+    return register
+
+
+def _lookup(command: str):
+    """``(prefix, handler, rest)`` for the longest registered prefix of
+    ``command`` (at most four dictionary lookups), or None. ``rest`` is
+    the text after the prefix, in its original case."""
+    words = command.split(None, _MAX_PREFIX)
+    lowered = [w.lower() for w in words[:_MAX_PREFIX]]
+    for n in range(len(lowered), 0, -1):
+        entry = _COMMANDS.get(tuple(lowered[:n]))
+        if entry is not None:
+            rest = command.split(None, n)[n:]
+            return " ".join(lowered[:n]), entry[1], rest[0].strip() if rest else ""
+    return None
+
+
+def _args(pattern: str, rest: str) -> re.Match | None:
+    """Match a handler's whole argument text (any case, any lines)."""
+    return re.fullmatch(pattern, rest, re.IGNORECASE | re.DOTALL)
+
+
+_KV_RE = re.compile(r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)")
+
+
+def _where(text: str, *required: str) -> dict[str, str]:
+    """The ``k = v and k2 = "v 2"`` pairs of a where clause: keys
+    lowercased, values quoted or bare, quotes stripped. Raises when a
+    ``required`` key is missing."""
+    opts = {k.lower(): _strip_quotes(v) for k, v in _KV_RE.findall(text)}
+    for key in required:
+        if key not in opts:
+            raise ValueError(f"missing {key} = ...")
+    return opts
+
+
+def _flag(opts: dict, key: str, default: bool) -> bool:
+    return opts.get(key, str(default)).lower() in ("true", "1")
+
+
+def _dbms_table_match(flt: dict, dbms: str, table: str) -> bool:
+    """True when (dbms, table) passes a where clause's dbms/table filters."""
+    return all(not flt.get(k) or flt[k] == v for k, v in (("dbms", dbms), ("table", table)))
+
+
+def _meta_filters(text: str) -> dict:
+    """company/dbms/table equality filters of the metadata commands."""
+    flt = _where(text)
+    return {k: flt[k] for k in ("company", "dbms", "table") if k in flt}
 
 
 class EdgeLakeEngine:
@@ -118,9 +198,16 @@ class EdgeLakeEngine:
         self.query_log: list[dict] = []
         #: node event/error rings (reference generic/process_log.py):
         #: `get event log` / `get error log`, keyword filter, dedup fold
-        from edgelake_spark.eventlog import EventLog
-
         self.event_log = EventLog()
+        #: services a command starts: `run operator`, `run blobs
+        #: archiver`, `run message broker`
+        self.operator = None
+        self.archiver = None
+        self.message_brokers: list = []
+        #: dbms name → the `dbms.table` names `connect dbms` attached
+        self.connected_dbms: dict[str, list[str]] = {}
+        #: topic → node → status struct pushed by `monitor <topic>`
+        self.monitor_status: dict[str, dict] = {}
         #: transactional table layer (txlog.TxTable): DML and the
         #: log-backed blob store commit versioned parquet snapshots
         #: here. An EXPLICIT work_dir makes the node durable — a new
@@ -216,26 +303,24 @@ class EdgeLakeEngine:
         (checkpointed intermediates, in-memory relations) are reported
         as a single ``memory`` destination so a query never vanishes
         from the report."""
-        import re as _re
-
         out: list[dict] = []
         # formatted explain prints per-node detail blocks; Location
         # lines carry "<FileIndexCls> [path1, path2, ...]" (paths may be
         # elided with "..." beyond the first few)
-        blocks = _re.split(r"\n\s*\n", plan)
+        blocks = re.split(r"\n\s*\n", plan)
         for block in blocks:
-            for loc in _re.finditer(r"Location:\s*\S+\s*\[([^\]]*)\]", block):
+            for loc in re.finditer(r"Location:\s*\S+\s*\[([^\]]*)\]", block):
                 first_path = loc.group(1).split(",")[0].strip()
                 if not first_path:
                     continue
                 table = first_path.rstrip("/").rsplit("/", 1)[-1]
-                table = _re.sub(r"\.(parquet|csv|json|orc)$", "", table)
+                table = re.sub(r"\.(parquet|csv|json|orc)$", "", table)
                 filters = []
                 for key in ("PartitionFilters", "PushedFilters"):
                     # capture to end-of-line: predicates like
                     # In(value, [1,2,3]) nest brackets, so a
                     # first-']' match would truncate them
-                    fm = _re.search(rf"{key}:\s*(\[.*?)\s*$", block, _re.MULTILINE)
+                    fm = re.search(rf"{key}:\s*(\[.*?)\s*$", block, re.MULTILINE)
                     if fm and fm.group(1) != "[]":
                         filters.append(f"{key}={fm.group(1)}")
                 out.append(
@@ -255,8 +340,8 @@ class EdgeLakeEngine:
 
     def run(self, command: str):
         """Execute an EdgeLake command: ``sql <dbms> [options]
-        "SELECT ..."`` or an admin command (`create view`,
-        `get rows count`, `info table ... columns`).
+        "SELECT ..."``, a bare statement, or any command in the command
+        table (`help` lists them).
 
         Returns a DataFrame for format=dataframe (default), else a
         rendered string (json / json:list / table).
@@ -264,33 +349,32 @@ class EdgeLakeEngine:
         # the canonical CLI prefix: `run client () <command>` routes the
         # command to query nodes (reference member_cmd.py:21027-21037);
         # single-engine here, so strip and run locally
-        import re as _re
-
-        command = _re.sub(r"^\s*run\s+client\s*\([^)]*\)\s*", "", command)
+        command = re.sub(r"^\s*run\s+client\s*\([^)]*\)\s*", "", command)
         # node-dictionary substitution (reference params.py
         # get_value_if_available): known `!name` keys resolve anywhere
         # in the command; unknown keys pass through untouched. `!=`
         # never matches (the char after `!` must start an identifier).
-        command = _re.sub(
+        command = re.sub(
             r"!([A-Za-z_]\w*)",
             lambda m: self.params.get(m.group(1), m.group(0)),
             command,
         )
         try:
-            admin_result = self._try_admin(command)
-        except Exception as exc:
-            # reference logs command failures to the error ring
-            # (process_log.add is called from error paths node-wide)
-            self.event_log.add("Error", f"{type(exc).__name__}: {exc}")
-            raise
-        if admin_result is not None:
-            return admin_result
-        try:
+            found = _lookup(command)
+            if found is not None:
+                _, handler, rest = found
+                result = handler(self, rest)
+                if result is not None:
+                    return result
             cmd = parse_sql_command(command)
             self._last_pass_through = False
             df = self._execute(cmd)
         except Exception as exc:
-            self.event_log.add("Error", f"{type(exc).__name__}: {exc}")
+            # reference logs command failures to the error ring
+            # (process_log.add is called from error paths node-wide)
+            self.event_log.add(
+                "Error", f"{type(exc).__name__}: {exc} (command: {command.strip()})"
+            )
             raise
         if cmd.options.get("table"):
             # repeatable query → named result (reference
@@ -377,1386 +461,1087 @@ class EdgeLakeEngine:
         cmd = SqlCommand(dbms=options.pop("dbms", ""), options=options, statement=statement)
         return self._execute(cmd)
 
-    # ------------------------------------------------------------ admin
+    # ---------------------------------------------------------- commands
+    # One method per command, registered by @_command in `help` order.
+    # A handler gets the text after its prefix and parses only its own
+    # arguments; it returns None for arguments it does not take, which
+    # sends the command on to the sql path as an unmatched one.
 
-    def _try_admin(self, command: str):
-        """Dispatch admin commands; None if `command` is a sql command.
-        (Reference command tree: member_cmd.py:21051-21090, 16740.)"""
-        import re as _re
+    @_command("sql", usage='sql <dbms> [format = ..][dest = ..][timezone = ..][extend = (..)][include = (..)][table = ..] "SELECT ..."')
+    def _sql(self, rest):
+        return None  # `run` parses and executes the sql path itself
 
+    @_command("create view", usage="create view <dbms.view> (<column> <type> [as <source>], ..)")
+    def _create_view(self, rest):
         from edgelake_spark import admin
 
-        text = command.strip()
-        m = _re.match(r"create\s+view\s+(\S+)\s*\((.*)\)\s*$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            qualified, spec = m.group(1), m.group(2)
-            source = catalog.view_name(qualified)
-            columns = admin.parse_view_columns(spec)
-            view_name = f"__el_view_{len(self.views)}"
-            self.spark.sql(admin.create_view_sql(columns, source)).createOrReplaceTempView(
-                view_name
-            )
-            self.views[qualified] = view_name
-            return self.spark.table(view_name)
-        m = _re.match(r"get\s+rows\s+count(\s+where\s+(.*))?$", text, _re.IGNORECASE)
-        if m:
-            tables = None
-            estimate = False
-            if m.group(2):
-                tm = _re.search(r"table\s*=\s*(\S+)", m.group(2))
-                if tm:
-                    tables = [self._resolve(tm.group(1))]
-                estimate = bool(
-                    _re.search(r"estimate\s*=\s*true", m.group(2), _re.IGNORECASE)
-                )
-            if tables is None:
-                tables = [t for t in catalog.TESTDATA_TABLES if self.spark.catalog.tableExists(t)]
-            if estimate and self.sf_dir:
-                from edgelake_spark.admin import rows_count_estimate
+        m = _args(r"(\S+)\s*\((.*)\)", rest)
+        if not m:
+            return None
+        qualified, spec = m.group(1), m.group(2)
+        source = catalog.view_name(qualified)
+        columns = admin.parse_view_columns(spec)
+        view_name = f"__el_view_{len(self.views)}"
+        self.spark.sql(admin.create_view_sql(columns, source)).createOrReplaceTempView(
+            view_name
+        )
+        self.views[qualified] = view_name
+        return self.spark.table(view_name)
 
-                rows = rows_count_estimate(self.sf_dir, tables)
+    @_command("get rows count", usage="get rows count [where table = .. and estimate = true]")
+    def _get_rows_count(self, rest):
+        from edgelake_spark.admin import rows_count, rows_count_estimate
+
+        opts = _where(rest)
+        if "table" in opts:
+            tables = [self._resolve(opts["table"])]
+        else:
+            tables = [t for t in catalog.TESTDATA_TABLES if self.spark.catalog.tableExists(t)]
+        if opts.get("estimate", "").lower() == "true" and self.sf_dir:
+            rows = rows_count_estimate(self.sf_dir, tables)
+            return local_frame(self.spark, rows or [], "table_name string, n_rows long")
+        return rows_count(self.spark, tables)
+
+    @_command("info table", "info view", usage="info table|view <dbms> <table> columns|exists")
+    def _info_table(self, rest):
+        from edgelake_spark.admin import info_table_columns
+
+        m = _args(r"(\S+)\s+(\S+)\s+(columns|exists)", rest)
+        if not m:
+            return None
+        # `info view` (member_cmd.py:20984) shares the resolver: `create
+        # view` mappings live in self.views like tables — try the
+        # dbms-qualified name first (create view registers `vdb.events`,
+        # not the bare short name)
+        resolved = self._resolve(f"{m.group(1)}.{m.group(2)}")
+        if m.group(3).lower() == "columns":
+            return info_table_columns(self.spark, resolved)
+        # exists iff a query on <dbms>.<table> would resolve — the
+        # engine's table namespace is dbms-agnostic for registered
+        # tables (sql <any-dbms> "... from events" works), so the
+        # short-name fallback is deliberate, not a qualifier leak
+        exists = self.spark.catalog.tableExists(resolved)
+        return local_frame(
+            self.spark, [(m.group(2), exists)], "table_name string, table_exists boolean"
+        )
+
+    @_command("backup table", usage="backup table where [dbms = .. and] table = .. and dest = <dir>")
+    def _backup_table(self, rest):
+        # reference member_cmd.py:21135 backup table: write the table's
+        # data to `dest` as JSON (one file; the reference writes per
+        # partition — one logical snapshot here)
+        import os
+
+        opts = _where(rest, "table", "dest")
+        resolved = self._resolve(
+            f"{opts['dbms']}.{opts['table']}" if opts.get("dbms") else opts["table"]
+        )
+        df = self.spark.table(resolved)
+        os.makedirs(opts["dest"], exist_ok=True)
+        out = os.path.join(opts["dest"], f"{opts['table']}.backup.json")
+        # toJSON streams executor-side partitions; the driver writes
+        # line by line (operator-facing export, like file retrieve)
+        n = 0
+        with open(out, "w") as fh:
+            for line in df.toJSON().toLocalIterator():
+                fh.write(line + "\n")
+                n += 1
+        self.event_log.add("File", f"backup table {opts['table']}")
+        return local_frame(
+            self.spark,
+            [(opts["table"], out, n)], "table_name string, dest string, n_rows bigint"
+        )
+
+    @_command("get table versions", usage="get table versions [where table = ..]  (commit-log history)")
+    def _get_table_versions(self, rest):
+        # commit-log history of log-backed tables (txlog.py): one row
+        # per committed version (Delta `DESCRIBE HISTORY` shape)
+        want = _where(rest).get("table")
+        rows = []
+        for key, tx in sorted(self.tx_tables.items()):
+            kind, _, name = key.partition("/")
+            # blob-store keys are "dbms.table"; match the short table
+            # name as well as the full key
+            if want and catalog.view_name(want) not in (name, name.rsplit(".", 1)[-1]):
+                continue
+            for man in tx.history():
+                rows.append(
+                    (kind, name, man["version"], man["op"],
+                     man["timestamp"], len(man["files"]))
+                )
+        return local_frame(
+            self.spark, rows or [],
+            "store string, table_name string, version int, op string, "
+            "committed_at string, n_files int",
+        )
+
+    @_command("get partitions", usage="get partitions [where table = ..]")
+    def _get_partitions(self, rest):
+        from edgelake_spark.admin import get_partitions
+        from edgelake_spark.ingest.partitions import tx_partitions
+        from edgelake_spark.txlog import TxTable
+
+        table = _where(rest).get("table")
+        rows = []
+        for name, path in sorted(self.partitioned_paths.items()):
+            if table and catalog.view_name(name) != catalog.view_name(table):
+                continue
+            buckets = (
+                tx_partitions(TxTable(path))
+                if TxTable.exists(path)
+                else get_partitions(path)
+            )
+            for bucket in buckets:
+                rows.append((name, bucket))
+        return local_frame(
+            self.spark, rows or [], "table_name string, partition string"
+        )
+
+    @_command("drop partition", usage="drop partition where table = <table> and date < <YYYY-MM[-DD]>")
+    def _drop_partition(self, rest):
+        from edgelake_spark.ingest.partitions import (
+            drop_partitions_before,
+            drop_partitions_before_tx,
+        )
+        from edgelake_spark.txlog import TxTable
+
+        m = _args(r"where\s+table\s*=\s*(\S+)\s+and\s+date\s*<\s*'?([\w-]+)'?", rest)
+        if not m:
+            return None
+        table, cutoff = m.group(1), m.group(2)
+        path = self.partitioned_paths[table]
+        if TxTable.exists(path):
+            # log-backed dataset: the drop is a manifest edit (no
+            # file deletes); prior versions still read the buckets
+            dropped = drop_partitions_before_tx(TxTable(path), cutoff)
+        else:
+            dropped = drop_partitions_before(self.spark, path, cutoff)
+            # the temp view's cached file index still lists the
+            # deleted files — refresh or the next query on the
+            # table dies with FileNotFoundException
+            self.spark.catalog.refreshByPath(path)
+        self.attach_partitioned(table, path)
+        return local_frame(
+            self.spark, [(b,) for b in dropped] or [], "dropped_partition string"
+        )
+
+    @_command("drop table", usage="drop table <table> [where dbms = ..]")
+    def _drop_table(self, rest):
+        # reference drop table: remove the operator-local table. Drops
+        # the view mappings and the table's commit log (the raw sf_dir
+        # parquet is immutable input, never deleted).
+        import shutil
+
+        m = _args(r"(\S+)(.*)", rest)
+        if not m:
+            return None
+        table, dbms = m.group(1), _where(m.group(2)).get("dbms")
+        key = catalog.view_name(table)
+        removed = []
+        for alias in [table, key] + ([f"{dbms}.{table}"] if dbms else []):
+            if self.views.pop(alias, None) is not None:
+                removed.append(alias)
+        tx = self.tx_tables.pop(f"dml/{key}", None)
+        if tx is not None:
+            shutil.rmtree(tx.path, ignore_errors=True)
+        removed += self._purge_doomed_views({f"__dml_{key}", f"__ingest_{key}"})
+        self.event_log.add("Event", f"Table {table} dropped")
+        return local_frame(
+            self.spark, [(table, bool(removed or tx))], "table_name string, dropped boolean"
+        )
+
+    @_command("test table", usage="test table <table>|* where dbms = <dbms>")
+    def _test_table(self, rest):
+        # reference member_cmd.py:14816 test_table — ledger schema vs
+        # live schema consistency check
+        from edgelake_spark import admin
+
+        m = _args(r"(\S+)\s+where\s+dbms\s*=\s*(\S+)", rest)
+        if not m:
+            return None
+        rows = admin.test_table_schema(
+            self.spark, self.policy_store, m.group(2), m.group(1), self._resolve
+        )
+        return local_frame(
+            self.spark, rows, "dbms string, table_name string, result string"
+        )
+
+    @_command("test node", usage="test node")
+    def _test_node(self, rest):
+        # reference test_node: validate the node's own services; here
+        # the checks are catalog reachability and ledger integrity
+        if rest:
+            return None
+        checks = []
+        try:
+            n = len(self.spark.catalog.listTables())
+            checks.append(("catalog", f"Passed ({n} tables)"))
+        except Exception as exc:
+            checks.append(("catalog", f"Failed: {exc}"))
+        checks.append(("ledger", f"Passed ({len(self.policy_store.policies)} policies)"))
+        checks.append(
+            ("sql", "Passed" if self.spark.sql("SELECT 1").collect()[0][0] == 1 else "Failed")
+        )
+        return local_frame(self.spark, checks, "service string, result string")
+
+    @_command("connect dbms", usage="connect dbms <name> where type = .. [and path = <parquet dir>]")
+    def _connect_dbms(self, rest):
+        # reference member_cmd.py:20899 `connect dbms <name> where type =
+        # sqlite/psql/..`: declare a logical dbms. Here every engine type
+        # maps to the parquet layer; `path = <dir>` attaches the
+        # directory's parquet files as <name>.<table>
+        import os
+
+        m = _args(r"(\S+)\s+where\s+(.*)", rest)
+        if not m:
+            return None
+        name, opts = m.group(1), _where(m.group(2))
+        attached = []
+        path = opts.get("path")
+        if path:
+            for f in sorted(os.listdir(path)):
+                if f.endswith(".parquet"):
+                    t = f[: -len(".parquet")]
+                    view = f"__dbms_{name}_{t}"
+                    catalog.load_parquet(
+                        self.spark, os.path.join(path, f)
+                    ).createOrReplaceTempView(view)
+                    self.views[f"{name}.{t}"] = view
+                    attached.append(t)
+        self.connected_dbms[name] = [f"{name}.{t}" for t in attached]
+        self.event_log.add("Event", f"DBMS {name} connected")
+        return local_frame(
+            self.spark, [(name, opts.get("type", "parquet"), len(attached))],
+            "dbms string, type string, n_tables int",
+        )
+
+    @_command("{} dbms", verbs=("disconnect", "drop"),
+              usage="{} dbms <name>  (drop also forgets the managed state and DML commit logs)")
+    def _disconnect_dbms(self, rest, verb):
+        # disconnect keeps the storage; drop additionally forgets any
+        # managed/DML state of the dbms's tables (the raw parquet inputs
+        # are immutable and never deleted)
+        import shutil
+
+        if not _args(r"\S+", rest):
+            return None
+        name = rest
+        dropped = self.connected_dbms.pop(name, [])
+        doomed_views: set[str] = set()
+        for qualified in dropped:
+            target = self.views.pop(qualified, None)
+            # the attach-time temp views are per-dbms; drop them so
+            # repeated connect/disconnect cycles don't leak one cached
+            # view per table for the session lifetime
+            if target and target.startswith(f"__dbms_{name}_"):
+                doomed_views.add(target)
+        if verb == "drop":
+            for qualified in [k for k in self.views if k.startswith(f"{name}.")]:
+                target = self.views.pop(qualified)
+                if target.startswith("__"):  # engine-managed only —
+                    # a `create view` alias may target a base table
+                    doomed_views.add(target)
+                # managed/DML state of this dbms's tables: the commit
+                # log is keyed by short name (`dml/<t>`); find it
+                # through the qualified alias target
+                short = qualified.split(".", 1)[1]
+                tx = self.tx_tables.pop(f"dml/{catalog.view_name(short)}", None)
+                if tx is not None:
+                    shutil.rmtree(tx.path, ignore_errors=True)
+            for key in [k for k in self.tx_tables if k.startswith(f"blobs/{name}.")]:
+                tx = self.tx_tables.pop(key)
+                shutil.rmtree(tx.path, ignore_errors=True)
+            # the blob registry and its temp views must go with the
+            # logs, or `file retrieve` would scan the rmtree'd path and
+            # re-stores would hit stale duplicate-hash checks
+            for bkey in [k for k in self.blob_views if k[0] == name]:
+                doomed_views.add(self.blob_views.pop(bkey))
+                self.blob_rows.pop(bkey, None)
+            self.event_log.add("Event", f"DBMS {name} dropped")
+        # purge the doomed temp views and every remaining alias (bare
+        # short names included) that still points at them
+        self._purge_doomed_views(doomed_views)
+        return local_frame(
+            self.spark, [(name, len(dropped))], "dbms string, n_tables int"
+        )
+
+    # -- policies (the node's ledger)
+
+    @_command("blockchain insert", usage="blockchain insert [where policy =] {..}")
+    def _blockchain_insert(self, rest):
+        import json
+
+        m = re.search(r"policy\s*=\s*(\{.*\})\s*$", rest, re.DOTALL)
+        self.policy_store.add(json.loads(m.group(1) if m else rest))
+        return local_frame(self.spark, [(len(self.policy_store.policies),)], "policies int")
+
+    @_command("blockchain get", usage="blockchain get <type> [where k = v and ..] [bring[.variant] [paths]]")
+    def _blockchain_get(self, rest):
+        # reference member_cmd.py:1614 blockchain_get
+        import json
+
+        m = _args(r"(\S+)(?:\s+where\s+(.*?))?(?:\s+(bring\b.*))?", rest)
+        if not m:
+            return None
+        ptype, where, bring = m.group(1), m.group(2), m.group(3)
+        result = self.policy_store.blockchain_get(
+            ptype, _where(where) if where else None, bring
+        )
+        if bring:
+            if isinstance(result, list) and all(isinstance(v, str) for v in result):
+                # list-valued bring variants (list / ip_port / sorted
+                # projections) render one value per row, matching the
+                # reference's line-per-value output
                 return local_frame(
-                    self.spark, rows or [], "table_name string, n_rows long"
+                    self.spark, [(v,) for v in result] or [], "result string"
                 )
-            from edgelake_spark.admin import rows_count
-
-            return rows_count(self.spark, tables)
-        m = _re.match(r"info\s+(?:table|view)\s+(\S+)\s+(\S+)\s+columns$", text, _re.IGNORECASE)
-        if m:
-            # `info view` (member_cmd.py:20984) shares the resolver:
-            # `create view` mappings live in self.views like tables —
-            # try the dbms-qualified name first (create view registers
-            # `vdb.events`, not the bare short name)
-            from edgelake_spark.admin import info_table_columns
-
-            return info_table_columns(
-                self.spark, self._resolve(f"{m.group(1)}.{m.group(2)}")
-            )
-        m = _re.match(r"info\s+(?:table|view)\s+(\S+)\s+(\S+)\s+exists$", text, _re.IGNORECASE)
-        if m:
-            # exists iff a query on <dbms>.<table> would resolve — the
-            # engine's table namespace is dbms-agnostic for registered
-            # tables (sql <any-dbms> "... from events" works), so the
-            # short-name fallback is deliberate, not a qualifier leak
-            exists = self.spark.catalog.tableExists(
-                self._resolve(f"{m.group(1)}.{m.group(2)}")
-            )
-            return local_frame(
-                self.spark, [(m.group(2), exists)], "table_name string, table_exists boolean"
-            )
-        m = _re.match(
-            r"backup\s+table\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
+            return local_frame(self.spark, [(str(result),)], "result string")
+        return local_frame(
+            self.spark, [(json.dumps(p, separators=(",", ":")),) for p in result] or [],
+            "policy string",
         )
-        if m:
-            # reference member_cmd.py:21135 backup table: write the
-            # table's data to `dest` as JSON (one file; the reference
-            # writes per partition — one logical snapshot here)
-            import os as _os
 
-            opts = {k.lower(): v for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", m.group(1))}
-            if "table" not in opts or "dest" not in opts:
-                raise ValueError("backup table needs table = ... and dest = ...")
-            resolved = self._resolve(
-                f"{opts['dbms']}.{opts['table']}" if opts.get("dbms") else opts["table"]
-            )
-            df = self.spark.table(resolved)
-            _os.makedirs(opts["dest"], exist_ok=True)
-            out = _os.path.join(opts["dest"], f"{opts['table']}.backup.json")
-            # toJSON streams executor-side partitions; the driver writes
-            # line by line (operator-facing export, like file retrieve)
-            n = 0
-            with open(out, "w") as fh:
-                for line in df.toJSON().toLocalIterator():
-                    fh.write(line + "\n")
-                    n += 1
-            self.event_log.add("File", f"backup table {opts['table']}")
-            return local_frame(
-                self.spark,
-                [(opts["table"], out, n)], "table_name string, dest string, n_rows bigint"
-            )
-        m = _re.match(r"get\s+table\s+versions(\s+where\s+(.*))?$", text, _re.IGNORECASE)
-        if m:
-            # commit-log history of log-backed tables (txlog.py): one
-            # row per committed version (Delta `DESCRIBE HISTORY` shape)
-            flt = self._meta_filters(m.group(2))
-            rows = []
-            for key, tx in sorted(self.tx_tables.items()):
-                kind, _, name = key.partition("/")
-                if flt.get("table"):
-                    # blob-store keys are "dbms.table"; match the short
-                    # table name as well as the full key
-                    want = flt["table"]
-                    short = name.rsplit(".", 1)[-1]
-                    if catalog.view_name(want) not in (name, short):
+    @_command("blockchain load", usage="blockchain load <path>")
+    def _blockchain_load(self, rest):
+        # durable file ledger semantics via PolicyStore.save/load
+        from edgelake_spark.policies import PolicyStore
+
+        self.policy_store = PolicyStore.load(rest)
+        return local_frame(self.spark, [(len(self.policy_store.policies),)], "policies int")
+
+    @_command("blockchain save", usage="blockchain save <path>")
+    def _blockchain_save(self, rest):
+        n = self.policy_store.save(rest)
+        return local_frame(self.spark, [(n,)], "policies int")
+
+    #: per-type defaults for `create policy … with defaults` (reference
+    #: members/policies.py:212 default_values_: ip/internal_ip resolve
+    #: through the node dictionary, ports are the reference's fixed
+    #: per-role defaults)
+    _POLICY_DEFAULTS = {
+        "master": (("port", 32048), ("rest_port", 32049)),
+        "operator": (("port", 32148), ("rest_port", 32149)),
+        "query": (("port", 32348), ("rest_port", 32349)),
+        "publisher": (("port", 32248), ("rest_port", 32249)),
+    }
+
+    @_command("create policy", usage="create policy <type> [with defaults] [where k = v and ..]")
+    def _create_policy(self, rest):
+        """`create policy <type> [with defaults] where k = v and …`
+        (reference member_cmd.py:12231 create_policy): builds
+        ``{type: {k: v}}``; `with defaults` fills the per-role
+        ip/port defaults AND inserts into the ledger (id/date stamped
+        by PolicyStore.add); without defaults the policy is only
+        rendered, so the assignment form `x = create policy …` stores
+        the JSON in the node dictionary."""
+        import json
+
+        m = _args(r"(\w+)(\s+with\s+defaults)?(?:\s+where\s+(.*))?", rest)
+        if not m:
+            return None
+        ptype, defaults = m.group(1).lower(), bool(m.group(2))
+        inner: dict = _where(m.group(3) or "")
+        if defaults:
+            for key, src in (("ip", "external_ip"), ("internal_ip", "ip")):
+                if key not in inner and self.params.get(src):
+                    inner[key] = str(self.params[src]).lower()
+            for key, value in self._POLICY_DEFAULTS.get(ptype, ()):
+                inner.setdefault(key, value)
+        policy = {ptype: inner}
+        if defaults:
+            self.policy_store.add(policy)
+            policy = self.policy_store.policies[-1]  # id/date-stamped form
+        return local_frame(
+            self.spark, [(json.dumps(policy, separators=(",", ":")),)], "policy string"
+        )
+
+    @_command("prepare policy", usage="prepare policy <json>  (stamp id/date without insert)")
+    def _prepare_policy(self, rest):
+        # reference prepares a policy for a later blockchain insert
+        import json
+
+        from edgelake_spark.policies.bring import stamp_policy
+
+        stamped = stamp_policy(json.loads(rest))
+        body = next(iter(stamped.values()))
+        return local_frame(
+            self.spark, [(json.dumps(stamped), body.get("id", ""))],
+            "policy string, policy_id string",
+        )
+
+    @_command("replace policy", usage="replace policy where id = <id> with <json>")
+    def _replace_policy(self, rest):
+        # drop the old policy, insert the new one
+        import json
+
+        m = _args(r"where\s+(.*?)\s+with\s+(.*)", rest)
+        if not m:
+            raise ValueError("replace policy where id = <id> with <json>")
+        old_id = _where(m.group(1), "id")["id"]
+        n_removed = self.policy_store.remove_by_id(old_id)
+        self.policy_store.add(json.loads(m.group(2)))
+        return local_frame(
+            self.spark, [(old_id, n_removed)],
+            "replaced_id string, n_policies int",
+        )
+
+    @_command("drop policy", "delete policy", usage="drop|delete policy where id = <id>")
+    def _drop_policy(self, rest):
+        # reference drop policy / blockchain delete policy
+        pid = _where(rest, "id")["id"]
+        n = self.policy_store.remove_by_id(pid)
+        return local_frame(self.spark, [(pid, n)], "policy_id string, n_dropped int")
+
+    @_command("config from policy", usage="config from policy where id = <policy id>")
+    def _config_from_policy(self, rest):
+        # reference config_from_policy: apply a config policy's
+        # key-values to the node settings (here: the dictionary, which
+        # every later command resolves through `!name`)
+        pid = _where(rest, "id")["id"]
+        for p in self.policy_store.policies:
+            ptype = next(iter(p)) if len(p) == 1 else None
+            body = p.get(ptype, {}) if ptype else {}
+            if str(body.get("id", "")) == pid:
+                applied = []
+                for k, v in body.items():
+                    if k in ("id", "date"):
                         continue
-                for man in tx.history():
-                    rows.append(
-                        (kind, name, man["version"], man["op"],
-                         man["timestamp"], len(man["files"]))
-                    )
-            return local_frame(
-                self.spark, rows or [],
-                "store string, table_name string, version int, op string, "
-                "committed_at string, n_files int",
-            )
-        m = _re.match(r"get\s+partitions(\s+where\s+(.*))?$", text, _re.IGNORECASE)
-        if m:
-            from edgelake_spark.admin import get_partitions
-
-            table = None
-            if m.group(2):
-                tm = _re.search(r"table\s*=\s*(\S+)", m.group(2))
-                if tm:
-                    table = tm.group(1)
-            from edgelake_spark.ingest.partitions import tx_partitions
-            from edgelake_spark.txlog import TxTable
-
-            rows = []
-            for name, path in sorted(self.partitioned_paths.items()):
-                if table and catalog.view_name(name) != catalog.view_name(table):
-                    continue
-                buckets = (
-                    tx_partitions(TxTable(path))
-                    if TxTable.exists(path)
-                    else get_partitions(path)
+                    self.params[str(k)] = str(v)
+                    applied.append((str(k), str(v)))
+                return local_frame(
+                    self.spark, applied or [], "key string, value string"
                 )
-                for bucket in buckets:
-                    rows.append((name, bucket))
-            return local_frame(
-                self.spark, rows or [], "table_name string, partition string"
-            )
-        m = _re.match(
-            r"set\s+streaming\s+conditions?\s+where\s+(.*?)\s+(if\s+.*)$",
-            text,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            # reference member_cmd.py:18886 set streaming condition
-            from edgelake_spark.streaming.conditions import StreamingCondition
+        raise ValueError(f"config from policy: no policy with id {pid}")
 
-            head, rule = m.group(1), m.group(2)
-            opts = dict(_re.findall(r"\b(dbms|table|limit)\s*=\s*(\S+)", head, _re.IGNORECASE))
-            key = f"{opts.get('dbms', '')}.{opts.get('table', '*')}"
-            cond = StreamingCondition.parse(rule, limit=int(opts.get("limit", 0)))
-            self.streaming_conditions.setdefault(key, []).append(cond)
-            return local_frame(
-                self.spark, [(key, len(self.streaming_conditions[key]) - 1, rule.strip())],
-                "table_key string, condition_id int, rule string",
-            )
-        m = _re.match(
-            r"get\s+streaming\s+conditions(\s+where\s+(.*))?$", text, _re.IGNORECASE
-        )
-        if m:
-            filt = dict(_re.findall(r"\b(dbms|table)\s*=\s*(\S+)", m.group(2) or "", _re.IGNORECASE))
-            rows = []
-            for key, conds in sorted(self.streaming_conditions.items()):
-                dbms, _, table = key.partition(".")
-                if filt.get("dbms") and filt["dbms"] != dbms:
-                    continue
-                if filt.get("table") and filt["table"] != table:
-                    continue
-                for i, c in enumerate(conds):
-                    rows.append((key, i, c.column, c.op, c.value, c.action, c.limit))
-            return local_frame(
-                self.spark, rows or [],
-                "table_key string, condition_id int, column string, op string, "
-                "value string, action string, limit int",
-            )
-        m = _re.match(
-            r"reset\s+streaming\s+conditions?\s+where\s+(.*)$", text, _re.IGNORECASE
-        )
-        if m:
-            # reference member_cmd.py:18743 reset streaming condition
-            opts = m.group(1)
-            ids = [int(v) for v in _re.findall(r"\bid\s*=\s*(\d+)", opts)]
-            kv = dict(_re.findall(r"\b(dbms|table)\s*=\s*(\S+)", opts, _re.IGNORECASE))
-            key = f"{kv.get('dbms', '')}.{kv.get('table', '*')}"
-            removed = 0
-            if key in self.streaming_conditions:
-                if ids:
-                    conds = self.streaming_conditions[key]
-                    self.streaming_conditions[key] = [
-                        c for i, c in enumerate(conds) if i not in ids
-                    ]
-                    removed = len(conds) - len(self.streaming_conditions[key])
-                else:
-                    removed = len(self.streaming_conditions.pop(key))
-            return local_frame(self.spark, [(removed,)], "removed int")
-        m = _re.match(r"data\s+monitor\s+where\s+(.*)$", text, _re.IGNORECASE)
-        if m:
-            # reference data_monitor.py:16-20 `data monitor where dbms=..
-            # and intervals=N and time=K unit and value_column=v`
-            from edgelake_spark.streaming.monitor import DataMonitor
+    @_command("get data nodes", usage="get data nodes [where company = .. and dbms = .. and table = ..]")
+    def _get_data_nodes(self, rest):
+        from edgelake_spark.admin import get_data_nodes
 
-            opts = dict(
-                _re.findall(
-                    r"\b(dbms|table|intervals|time|value_column)\s*=\s*"
-                    r"(\S+(?:\s+(?!and\b)\w+)?)",
-                    m.group(1),
-                    _re.IGNORECASE,
-                )
-            )
-            tm = _re.match(r"(\d+)(?:\s+(\w+))?", opts.get("time", "1 minute"))
-            secs = int(tm.group(1)) * {"second": 1, "minute": 60, "hour": 3600}.get(
-                (tm.group(2) or "minute").rstrip("s"), 60
-            )
-            key = f"{opts.get('dbms', '')}.{opts.get('table', '*')}"
-            self.monitors[key] = DataMonitor(
-                value_column=opts.get("value_column", "value"),
-                intervals=int(opts.get("intervals", 10)),
-                interval_seconds=secs,
-            )
-            return local_frame(
-                self.spark, [(key, int(opts.get("intervals", 10)), secs)],
-                "table_key string, intervals int, interval_seconds int",
-            )
-        m = _re.match(r"get\s+data\s+monitor(\s+where\s+(.*))?$", text, _re.IGNORECASE)
-        if m:
-            filt = dict(_re.findall(r"\b(dbms|table)\s*=\s*(\S+)", m.group(2) or "", _re.IGNORECASE))
-            rows = []
-            for key, mon in sorted(self.monitors.items()):
-                dbms, _, table = key.partition(".")
-                if filt.get("dbms") and filt["dbms"] != dbms:
-                    continue
-                if filt.get("table") and filt["table"] != table:
-                    continue
-                for s in mon.snapshot():
-                    rows.append(
-                        (key, s["interval"], s["count"], s["min"], s["max"], s["sum"])
-                    )
-            return local_frame(
-                self.spark, rows or [],
-                "table_key string, interval int, count bigint, min double, max double, sum double",
-            )
-        if _re.fullmatch(r"get\s+status", text, _re.IGNORECASE):
+        return get_data_nodes(self.spark, self.policy_store, **_meta_filters(rest))
+
+    @_command("get virtual tables", usage="get virtual tables [info] [where company = .. and dbms = .. and table = ..]")
+    def _get_virtual_tables(self, rest):
+        from edgelake_spark.admin import get_virtual_tables
+
+        return get_virtual_tables(
+            self.spark,
+            self.policy_store,
+            with_info=rest.lower().startswith("info"),
+            **_meta_filters(rest),
+        )
+
+    # -- node status and queries
+
+    @_command("get status", usage="get status [where format = json and include = <key> ..]")
+    def _get_status(self, rest):
+        name = self.params.get("node_name", "edgelake-spark")
+        if not rest:
             # reference `get status` liveness probe (member_cmd.py:15830
             # reply "<node name> running") — single-engine answer keeps
             # the Spark app coordinates as extra columns
             sc = self.spark.sparkContext
-            name = self.params.get("node_name", "edgelake-spark")
             return local_frame(
                 self.spark, [(f"{name} running", sc.appName, sc.master, sc.defaultParallelism)],
                 "status string, app string, master string, parallelism int",
             )
-        m = _re.match(r"query\s+destination(\s+(\S+))?$", text, _re.IGNORECASE)
-        if m:
-            # reference `query destination [all/ID]` (member_cmd.py:13191
-            # get_query_dest): per job, the (Job, Destination, DBMS,
-            # Table, Command) rows naming which nodes served the query.
-            # Single-engine Spark has no peer nodes; the faithful answer
-            # is which STORAGE each job actually read — the file-scan
-            # locations from the captured physical plan, with the
-            # scan-time pruning predicates (partition + pushed filters)
-            # that decided how much of the table was touched.
-            sel = (m.group(2) or "").strip().lower()
-            if self.query_log:
-                if sel == "all":
-                    entries = list(self.query_log)
-                elif sel.isdigit():
-                    # an unknown job id yields an EMPTY result — falling
-                    # back to the latest entry would silently report a
-                    # different job's destinations
-                    entries = [
-                        e for e in self.query_log if e["job_id"] == int(sel)
-                    ]
-                else:
-                    entries = [self.query_log[-1]]
-            else:
-                entries = []
-            rows = []
-            for e in entries:
-                for dest in self._plan_destinations(self._entry_plan(e)):
-                    rows.append(
-                        (
-                            e["job_id"],
-                            dest["location"],
-                            e.get("dbms") or "",
-                            dest["table"],
-                            dest["filters"],
-                            e["statement"],
-                        )
-                    )
-            return local_frame(
-                self.spark, rows or [],
-                "job_id bigint, destination string, dbms string, "
-                "table_name string, scan_filters string, statement string",
+        # reference member_cmd.py:15855 get_status where-form: `format =
+        # json` returns the status struct with `include =` dictionary
+        # pulls. The reference writes `include = !key`; here the
+        # engine's global `!name` substitution runs before dispatch, so
+        # the bare-key form `include = key` is canonical (a `!key` for
+        # an UNDEFINED key also works)
+        import json
+
+        if _where(rest).get("format", "json") != "json":
+            raise ValueError("Wrong format in 'get status' command (use 'json')")
+        reply = {"assigned_name": name, "status": "running"}
+        for key in re.findall(r"include\s*=\s*!?(\w+)", rest):
+            reply[key] = self.params.get(key, "")
+        return json.dumps(reply)
+
+    @_command("get processes", usage="get processes")
+    def _get_processes(self, rest):
+        # reference get_processes_stat (member_cmd.py:8521): the node's
+        # service table with Running / Not declared status. Single-engine
+        # equivalents where they exist; networking services stay "Not
+        # declared" with the README rationale
+        sc = self.spark.sparkContext
+        rows = [
+            ("Query Pool", "Running", f"SQL engine on {sc.master} ({sc.defaultParallelism} cores)"),
+            ("TCP", "Not declared", "single-engine build: no peer networking (README non-goals)"),
+            (
+                "REST",
+                "Running" if self.rest_server else "Not declared",
+                f"http://{self.rest_server.host}:{self.rest_server.port}" if self.rest_server else "start via edgelake_spark.api.rest",
+            ),
+            ("Blockchain Sync", "Not declared", f"local policy ledger ({len(self.policy_store.policies)} policies)"),
+        ]
+        for sid, sched in sorted(self.schedulers.items()):
+            n_tasks = len([t for t in sched.tasks if t.mode != "Removed"])
+            rows.append(
+                (f"Scheduler {sid}", "Running" if sched.running else "Declared", f"{n_tasks} task(s)")
             )
-        m = _re.match(r"query\s+(status|explain)(\s+(\S+))?$", text, _re.IGNORECASE)
-        if m:
-            # reference `query status/explain` (member_cmd.py:21665,
-            # _query_status :7332): show the source statement, the
-            # rewritten local SQL, and (explain) the physical plan
-            which = m.group(1).lower()
-            sel = m.group(3)
-            if which == "status":
-                rows = [
-                    (e["job_id"], e["statement"], e["rewritten_sql"], e["pass_through"])
-                    for e in self.query_log
+        if not self.schedulers:
+            rows.append(("Scheduler", "Not declared", "run scheduler"))
+        mqtt = [t for t, c in self.broker_consumers.items() if c.get("transport") == "mqtt"]
+        kafka = [t for t, c in self.broker_consumers.items() if c.get("transport") != "mqtt"]
+        rows.append(("MQTT", "Running" if mqtt else "Not declared", ", ".join(sorted(mqtt))))
+        rows.append(("Kafka Consumer", "Running" if kafka else "Not declared", ", ".join(sorted(kafka))))
+        rows.append(
+            ("Streamer", "Running" if self.stream_ingests else "Not declared",
+             f"{len(self.stream_ingests)} ingest pipeline(s)" if self.stream_ingests else "")
+        )
+        rows.append(
+            ("Data Monitor", "Running" if self.monitors else "Not declared",
+             ", ".join(sorted(self.monitors)) if self.monitors else "")
+        )
+        rows.append(
+            ("Blobs Store", "Running" if self.blob_views else "Not declared",
+             f"{len(self.blob_views)} table(s)" if self.blob_views else "")
+        )
+        op = self.operator
+        rows.append(
+            ("Operator", "Running" if op else "Not declared",
+             f"{op.files_processed} file(s), {op.rows_ingested} row(s)" if op else "")
+        )
+        arch = self.archiver
+        rows.append(
+            ("Blobs Archiver", "Running" if arch else "Not declared",
+             arch.status() if arch else "")
+        )
+        return local_frame(
+            self.spark, rows, "process string, status string, details string"
+        )
+
+    @_command("query status", usage="query status")
+    def _query_status(self, rest):
+        # reference `query status/explain` (member_cmd.py:21665,
+        # _query_status :7332): the source statement and the rewritten
+        # local SQL of every logged job
+        rows = [
+            (e["job_id"], e["statement"], e["rewritten_sql"], e["pass_through"])
+            for e in self.query_log
+        ]
+        return local_frame(
+            self.spark, rows or [],
+            "job_id bigint, statement string, rewritten_sql string, pass_through boolean",
+        )
+
+    @_command("query explain", usage="query explain [<job id>|last]")
+    def _query_explain(self, rest):
+        # the physical plan of one job: an unknown job id yields an
+        # EMPTY result, like `query destination`; any other selector
+        # means the latest job
+        if rest.isdigit():
+            entries = [e for e in self.query_log if e["job_id"] == int(rest)]
+        else:
+            entries = self.query_log[-1:]
+        return local_frame(
+            self.spark, [(e["job_id"], self._entry_plan(e)) for e in entries],
+            "job_id bigint, plan string",
+        )
+
+    @_command("query destination", usage="query destination [all|<job id>]  (storage each job read + scan pruning)")
+    def _query_destination(self, rest):
+        # reference `query destination [all/ID]` (member_cmd.py:13191
+        # get_query_dest): per job, the (Job, Destination, DBMS, Table,
+        # Command) rows naming which nodes served the query.
+        # Single-engine Spark has no peer nodes; the faithful answer is
+        # which STORAGE each job actually read — the file-scan locations
+        # from the captured physical plan, with the scan-time pruning
+        # predicates (partition + pushed filters) that decided how much
+        # of the table was touched.
+        sel = rest.lower()
+        if sel == "all":
+            entries = list(self.query_log)
+        elif sel.isdigit():
+            # an unknown job id yields an EMPTY result — falling back to
+            # the latest entry would silently report a different job's
+            # destinations
+            entries = [e for e in self.query_log if e["job_id"] == int(sel)]
+        else:
+            entries = self.query_log[-1:]
+        rows = []
+        for e in entries:
+            for dest in self._plan_destinations(self._entry_plan(e)):
+                rows.append(
+                    (
+                        e["job_id"],
+                        dest["location"],
+                        e.get("dbms") or "",
+                        dest["table"],
+                        dest["filters"],
+                        e["statement"],
+                    )
+                )
+        return local_frame(
+            self.spark, rows or [],
+            "job_id bigint, destination string, dbms string, "
+            "table_name string, scan_filters string, statement string",
+        )
+
+    @_command("get {} log", verbs=tuple(LOG_SIZES), usage="get {} log [where <keyword> ..]")
+    def _get_log(self, rest, verb):
+        # reference show_events (process_log.py:137): ring contents
+        # oldest-first, optional keyword filter over Type and Text
+        m = _args(r"(?:where\s+(.*))?", rest)
+        if not m:
+            return None
+        rows = self.event_log.show(verb, (m.group(1) or "").split() or None)
+        return local_frame(
+            self.spark, rows or [],
+            "id long, count long, thread string, time string, "
+            "type string, text string",
+        )
+
+    @_command("reset {} log", verbs=tuple(LOG_SIZES), usage="reset {} log")
+    def _reset_log(self, rest, verb):
+        # reference reset_events (process_log.py:201)
+        if rest:
+            return None
+        n = self.event_log.reset(verb)
+        return local_frame(
+            self.spark, [(verb, n)], "log string, entries_cleared long"
+        )
+
+    # -- streaming, brokers and monitors
+
+    @_command("get streaming", usage="get streaming")
+    def _get_streaming(self, rest):
+        # reference streaming_data.py:713 show_info — flush thresholds +
+        # per-stream counters; live micro-batch stats come from Spark's
+        # own streaming progress
+        from edgelake_spark.streaming.ingest import (
+            DEFAULT_MAX_TIME_SEC,
+            DEFAULT_MAX_VOLUME_BYTES,
+        )
+
+        if rest:
+            return None
+        rows = [
+            ("config", "threshold_time_sec", str(DEFAULT_MAX_TIME_SEC)),
+            ("config", "threshold_volume_bytes", str(DEFAULT_MAX_VOLUME_BYTES)),
+        ]
+        for ing in self.stream_ingests:
+            rows.append(
+                ("ingest", ing.target_dir, f"flushed_rows={ing.rows_flushed}")
+            )
+        for topic, cfg in sorted(self.broker_consumers.items()):
+            rows.append(
+                ("consumer", topic, f"{cfg['topic'].dbms}.{cfg['topic'].table}")
+            )
+        for q in self.spark.streams.active:
+            p = q.lastProgress
+            n = p["numInputRows"] if p else 0
+            rows.append(("stream", q.name or q.id, f"active input_rows={n}"))
+        return local_frame(
+            self.spark, rows, "scope string, item string, value string"
+        )
+
+    @_command("set streaming condition", "set streaming conditions",
+              usage="set streaming condition where dbms = .. and table = .. [and limit = N] if [column] <op> <value> then <action>")
+    def _set_streaming_condition(self, rest):
+        # reference member_cmd.py:18886 set streaming condition
+        from edgelake_spark.streaming.conditions import StreamingCondition
+
+        m = _args(r"where\s+(.*?)\s+(if\s+.*)", rest)
+        if not m:
+            return None
+        opts, rule = _where(m.group(1)), m.group(2)
+        key = f"{opts.get('dbms', '')}.{opts.get('table', '*')}"
+        cond = StreamingCondition.parse(rule, limit=int(opts.get("limit", 0)))
+        self.streaming_conditions.setdefault(key, []).append(cond)
+        return local_frame(
+            self.spark, [(key, len(self.streaming_conditions[key]) - 1, rule.strip())],
+            "table_key string, condition_id int, rule string",
+        )
+
+    @_command("get streaming conditions", usage="get streaming conditions [where dbms = .. and table = ..]")
+    def _get_streaming_conditions(self, rest):
+        flt = _where(rest)
+        rows = []
+        for key, conds in sorted(self.streaming_conditions.items()):
+            dbms, _, table = key.partition(".")
+            if _dbms_table_match(flt, dbms, table):
+                for i, c in enumerate(conds):
+                    rows.append((key, i, c.column, c.op, c.value, c.action, c.limit))
+        return local_frame(
+            self.spark, rows or [],
+            "table_key string, condition_id int, column string, op string, "
+            "value string, action string, limit int",
+        )
+
+    @_command("reset streaming condition", "reset streaming conditions",
+              usage="reset streaming condition where dbms = .. and table = .. [and id = N ..]")
+    def _reset_streaming_condition(self, rest):
+        # reference member_cmd.py:18743 reset streaming condition
+        opts = _where(rest)
+        ids = [int(v) for v in re.findall(r"\bid\s*=\s*(\d+)", rest, re.IGNORECASE)]
+        key = f"{opts.get('dbms', '')}.{opts.get('table', '*')}"
+        removed = 0
+        if key in self.streaming_conditions:
+            if ids:
+                conds = self.streaming_conditions[key]
+                self.streaming_conditions[key] = [
+                    c for i, c in enumerate(conds) if i not in ids
                 ]
-                return local_frame(
-                    self.spark, rows or [],
-                    "job_id bigint, statement string, rewritten_sql string, pass_through boolean",
-                )
-            if not self.query_log:
-                return local_frame(self.spark, [], "job_id bigint, plan string")
-            if sel and sel.strip().isdigit():
-                entry = next(
-                    (e for e in self.query_log if e["job_id"] == int(sel)), self.query_log[-1]
-                )
-            else:  # non-numeric / "last" selectors fall back to latest
-                entry = self.query_log[-1]
-            return local_frame(
-                self.spark,
-                [(entry["job_id"], self._entry_plan(entry))], "job_id bigint, plan string"
-            )
-        m = _re.match(
-            r"test\s+table\s+(\S+)\s+where\s+dbms\s*=\s*(\S+)\s*$", text, _re.IGNORECASE
-        )
-        if m:
-            # reference member_cmd.py:14816 test_table — ledger schema
-            # vs live schema consistency check
-            rows = admin.test_table_schema(
-                self.spark, self.policy_store, m.group(2), m.group(1), self._resolve
-            )
-            return local_frame(
-                self.spark, rows, "dbms string, table_name string, result string"
-            )
-        if _re.fullmatch(r"get\s+streaming", text, _re.IGNORECASE):
-            # reference streaming_data.py:713 show_info — flush
-            # thresholds + per-stream counters; live micro-batch stats
-            # come from Spark's own streaming progress
-            from edgelake_spark.streaming.ingest import (
-                DEFAULT_MAX_TIME_SEC,
-                DEFAULT_MAX_VOLUME_BYTES,
-            )
-
-            rows = [
-                ("config", "threshold_time_sec", str(DEFAULT_MAX_TIME_SEC)),
-                ("config", "threshold_volume_bytes", str(DEFAULT_MAX_VOLUME_BYTES)),
-            ]
-            for ing in self.stream_ingests:
-                rows.append(
-                    ("ingest", ing.target_dir, f"flushed_rows={ing.rows_flushed}")
-                )
-            for topic, cfg in sorted(self.broker_consumers.items()):
-                rows.append(
-                    ("consumer", topic, f"{cfg['topic'].dbms}.{cfg['topic'].table}")
-                )
-            for q in self.spark.streams.active:
-                p = q.lastProgress
-                n = p["numInputRows"] if p else 0
-                rows.append(("stream", q.name or q.id, f"active input_rows={n}"))
-            return local_frame(
-                self.spark, rows, "scope string, item string, value string"
-            )
-        if _re.fullmatch(r"test\s+node", text, _re.IGNORECASE):
-            # reference test_node: validate the node's own services; here
-            # the checks are catalog reachability and ledger integrity
-            checks = []
-            try:
-                n = len(self.spark.catalog.listTables())
-                checks.append(("catalog", f"Passed ({n} tables)"))
-            except Exception as exc:
-                checks.append(("catalog", f"Failed: {exc}"))
-            checks.append(("ledger", f"Passed ({len(self.policy_store.policies)} policies)"))
-            checks.append(
-                ("sql", "Passed" if self.spark.sql("SELECT 1").collect()[0][0] == 1 else "Failed")
-            )
-            return local_frame(self.spark, checks, "service string, result string")
-        m = _re.match(r"blockchain\s+(insert|get|load|save)\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            return self._blockchain_cmd(m.group(1).lower(), m.group(2).strip())
-        m = _re.match(
-            r"create\s+policy\s+(\w+)(\s+with\s+defaults)?(?:\s+where\s+(.*))?$",
-            text,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._create_policy(
-                m.group(1).lower(), bool(m.group(2)), m.group(3)
-            )
-        m = _re.match(
-            r"get\s+data\s+nodes(\s+where\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL
-        )
-        if m:
-            from edgelake_spark.admin import get_data_nodes
-
-            return get_data_nodes(self.spark, self.policy_store, **self._meta_filters(m.group(2)))
-        m = _re.match(
-            r"get\s+virtual\s+tables(\s+info)?(\s+where\s+(.*))?$",
-            text,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            from edgelake_spark.admin import get_virtual_tables
-
-            return get_virtual_tables(
-                self.spark,
-                self.policy_store,
-                with_info=bool(m.group(1)),
-                **self._meta_filters(m.group(3)),
-            )
-        m = _re.match(
-            r"run\s+(kafka\s+consumer|mqtt\s+client|msg\s+client)\s+where\s+(.*)$",
-            text,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            # registers the consumer config; BrokerConsumer.start runs
-            # the stream. `run msg client` (member_cmd.py:21408 — the
-            # reference's current name), its older `run mqtt client`
-            # spelling (mqtt_client.py:2128) and `run kafka consumer`
-            # (member_cmd.py:21481) share the same topic→bring mapping
-            # semantics, so one parser serves all three; the transport
-            # kind is kept so BrokerConsumer picks the MQTT socket
-            # subscriber (streaming/mqtt.py) vs the Kafka source.
-            from edgelake_spark.streaming.broker import parse_kafka_consumer_command
-
-            cfg = parse_kafka_consumer_command(text)
-            cfg["transport"] = (
-                "kafka" if m.group(1).lower().startswith("kafka") else "mqtt"
-            )
-            # attach any conditions/monitor registered for the target
-            # table, so the consumer topology picks them up at start
-            tkey = f"{cfg['topic'].dbms}.{cfg['topic'].table}"
-            cfg["conditions"] = self.streaming_conditions.get(tkey, [])
-            cfg["monitor"] = self.monitors.get(tkey)
-            self.broker_consumers[cfg["topic"].name] = cfg
-            return local_frame(
-                self.spark, [(cfg["topic"].name, f"{cfg['ip']}:{cfg['port']}", cfg["reset"])],
-                "topic string, bootstrap string, reset string",
-            )
-        m = _re.match(
-            r"drop\s+partition\s+where\s+table\s*=\s*(\S+)\s+and\s+date\s*<\s*'?([\w-]+)'?$",
-            text,
-            _re.IGNORECASE,
-        )
-        if m:
-            from edgelake_spark.ingest.partitions import (
-                drop_partitions_before,
-                drop_partitions_before_tx,
-            )
-            from edgelake_spark.txlog import TxTable
-
-            table, cutoff = m.group(1), m.group(2)
-            path = self.partitioned_paths[table]
-            if TxTable.exists(path):
-                # log-backed dataset: the drop is a manifest edit (no
-                # file deletes); prior versions still read the buckets
-                dropped = drop_partitions_before_tx(TxTable(path), cutoff)
+                removed = len(conds) - len(self.streaming_conditions[key])
             else:
-                dropped = drop_partitions_before(self.spark, path, cutoff)
-                # the temp view's cached file index still lists the
-                # deleted files — refresh or the next query on the
-                # table dies with FileNotFoundException
-                self.spark.catalog.refreshByPath(path)
-            self.attach_partitioned(table, path)
-            return local_frame(
-                self.spark, [(b,) for b in dropped] or [], "dropped_partition string"
+                removed = len(self.streaming_conditions.pop(key))
+        return local_frame(self.spark, [(removed,)], "removed int")
+
+    @_command("data monitor", usage="data monitor where dbms = .. and table = .. [and intervals = N]"
+              " [and time = N second|minute|hour] [and value_column = ..]")
+    def _data_monitor(self, rest):
+        # reference data_monitor.py:16-20 `data monitor where dbms=..
+        # and intervals=N and time=K unit and value_column=v`
+        from edgelake_spark.streaming.monitor import DataMonitor
+
+        opts = dict(
+            re.findall(
+                r"\b(dbms|table|intervals|time|value_column)\s*=\s*"
+                r"(\S+(?:\s+(?!and\b)\w+)?)",
+                rest,
+                re.IGNORECASE,
             )
-        m = _re.match(r"run\s+message\s+broker(\s+where\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference member_cmd.py:21457 `run message broker where
-            # internal_ip/internal_port`: the node's local broker that
-            # MQTT devices publish into (tcpip/message_server.py). Here
-            # it starts the real-framing broker doubles — MQTT 3.1.1 and
-            # Kafka wire protocol — so `run kafka consumer` /
-            # `run mqtt client` round-trip over genuine sockets.
-            opts = {
-                k.lower(): v
-                for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", m.group(2) or "")
-            }
-            host = opts.get("internal_ip", opts.get("ip", "127.0.0.1"))
-            port = int(opts.get("internal_port", opts.get("port", 0)))
-            proto = opts.get("protocol", "mqtt").lower()
-            if proto == "kafka":
-                from edgelake_spark.streaming.kafka import KafkaBroker
-
-                broker = KafkaBroker(host, port).start()
-            else:
-                from edgelake_spark.streaming.mqtt import MqttBroker
-
-                broker = MqttBroker(host, port).start()
-            self.message_brokers = getattr(self, "message_brokers", [])
-            self.message_brokers.append(broker)
-            self.event_log.add("Event", f"Message broker declared ({proto})")
-            return local_frame(
-                self.spark, [(proto, broker.host, broker.port)],
-                "protocol string, ip string, port int",
-            )
-        m = _re.match(r"run\s+rest\s+server(\s+where\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference member_cmd.py:21323 `run rest server where
-            # internal_ip = .. and internal_port = .. [user/password]`;
-            # SSL termination is a deployment-proxy concern here
-            from edgelake_spark.api.rest import EdgeLakeRestServer
-
-            opts = {
-                k.lower(): v
-                for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", m.group(2) or "")
-            }
-            basic = None
-            if "user" in opts or "password" in opts:
-                basic = (opts.get("user", ""), opts.get("password", ""))
-            server = EdgeLakeRestServer(
-                self,
-                host=opts.get("internal_ip", opts.get("ip", "127.0.0.1")),
-                port=int(opts.get("internal_port", opts.get("port", 0))),
-                auth_token=opts.get("token"),
-                basic_auth=basic,
-            ).start()
-            self.event_log.add("Event", "REST server declared")
-            return local_frame(
-                self.spark,
-                [(server.host, server.port, basic is not None or bool(opts.get("token")))],
-                "ip string, port int, auth boolean",
-            )
-        m = _re.match(r"run\s+operator\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference member_cmd.py:21740 / members/aloperator.py:
-            # watch-dir → table ingest loop; tick-driven here
-            import os as _os
-
-            from edgelake_spark.ingest.operator import OperatorNode
-
-            opts = {k.lower(): v for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", m.group(1))}
-
-            def flag(key: str, default: bool) -> bool:
-                return opts.get(key, str(default)).lower() in ("true", "1")
-
-            if "watch_dir" not in opts:
-                raise ValueError("run operator needs watch_dir = ...")
-            self.operator = OperatorNode(
-                engine=self,
-                watch_dir=opts["watch_dir"],
-                err_dir=opts.get("err_dir", _os.path.join(opts["watch_dir"], "..", "err")),
-                archive_dir=opts.get(
-                    "archive_dir", _os.path.join(opts["watch_dir"], "..", "archive")
-                ),
-                create_table=flag("create_table", True),
-                update_tsd_info=flag("update_tsd_info", True),
-                archive_json=flag("archive_json", True),
-                compress_json=flag("compress_json", True),
-            )
-            self.event_log.add("Event", "Operator declared")
-            return local_frame(
-                self.spark,
-                [(opts["watch_dir"], self.operator.create_table, self.operator.update_tsd_info)],
-                "watch_dir string, create_table boolean, update_tsd_info boolean",
-            )
-        m = _re.match(r"get\s+operator\s*$", text, _re.IGNORECASE)
-        if m:
-            if getattr(self, "operator", None) is None:
-                raise ValueError("no operator is running")
-            return local_frame(
-                self.spark, [self.operator.status()],
-                "files_processed bigint, files_errored bigint, rows_ingested bigint, last_error string",
-            )
-        m = _re.match(r"delete\s+archive\s+where\s+days\s*=\s*(\d+)\s*$", text, _re.IGNORECASE)
-        if m:
-            # reference member_cmd.py:17312: drop archive day dirs older
-            # than N days (applies to both archivers' trees)
-            from datetime import timedelta
-
-            from edgelake_spark.ingest.operator import delete_archive_before
-
-            cutoff_dt = (self.now or __import__("datetime").datetime.utcnow()) - timedelta(
-                days=int(m.group(1))
-            )
-            key = cutoff_dt.strftime("%y%m%d")
-            cutoff = (key[0:2], key[2:4], key[4:6])
-            deleted = []
-            for holder in (getattr(self, "archiver", None), getattr(self, "operator", None)):
-                if holder is not None:
-                    deleted += delete_archive_before(holder.archive_dir, cutoff)
-            return local_frame(
-                self.spark, [(d,) for d in sorted(set(deleted))] or [], "deleted_day string"
-            )
-        m = _re.match(r"flush\s+buffers\s*$", text, _re.IGNORECASE)
-        if m:
-            # reference flush_memory_buffs: force buffered streaming
-            # data to disk ignoring thresholds → drain every active
-            # Structured Streaming query + one operator/archiver tick
-            drained = 0
-            for q in self.spark.streams.active:
-                try:
-                    q.processAllAvailable()
-                    drained += 1
-                except Exception:  # a dying query must not block a flush
-                    continue
-            for holder in (getattr(self, "operator", None), getattr(self, "archiver", None)):
-                if holder is not None:
-                    try:
-                        holder.process_once()
-                        drained += 1
-                    except Exception:  # same policy as the queries: a
-                        continue       # broken watch dir must not block
-
-            self.event_log.add("Event", "Buffers flushed")
-            return local_frame(self.spark, [(drained,)], "flushed int")
-        m = _re.match(
-            r"connect\s+dbms\s+(\S+)\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
         )
-        if m:
-            # reference member_cmd.py:20899 `connect dbms <name> where
-            # type = sqlite/psql/..`: declare a logical dbms. Here every
-            # engine type maps to the parquet layer; `path = <dir>`
-            # attaches the directory's parquet files as <name>.<table>
-            import os as _os
-
-            name = m.group(1)
-            opts = {k.lower(): v for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", m.group(2))}
-            if not hasattr(self, "connected_dbms"):
-                self.connected_dbms: dict[str, list[str]] = {}
-            attached = []
-            path = opts.get("path")
-            if path:
-                for f in sorted(_os.listdir(path)):
-                    if f.endswith(".parquet"):
-                        t = f[: -len(".parquet")]
-                        view = f"__dbms_{name}_{t}"
-                        catalog.load_parquet(
-                            self.spark, _os.path.join(path, f)
-                        ).createOrReplaceTempView(view)
-                        self.views[f"{name}.{t}"] = view
-                        attached.append(t)
-            self.connected_dbms[name] = [f"{name}.{t}" for t in attached]
-            self.event_log.add("Event", f"DBMS {name} connected")
-            return local_frame(
-                self.spark, [(name, opts.get("type", "parquet"), len(attached))],
-                "dbms string, type string, n_tables int",
-            )
-        m = _re.match(r"(?:disconnect|drop)\s+dbms\s+(\S+)\s*$", text, _re.IGNORECASE)
-        if m:
-            # disconnect keeps the storage; drop additionally forgets
-            # any managed/DML state of the dbms's tables (the raw
-            # parquet inputs are immutable and never deleted)
-            import shutil as _shutil
-
-            drop = text.lower().startswith("drop")
-            name = m.group(1)
-            dropped = getattr(self, "connected_dbms", {}).pop(name, [])
-            doomed_views: set[str] = set()
-            for qualified in dropped:
-                target = self.views.pop(qualified, None)
-                # the attach-time temp views are per-dbms; drop them so
-                # repeated connect/disconnect cycles don't leak one
-                # cached view per table for the session lifetime
-                if target and target.startswith(f"__dbms_{name}_"):
-                    doomed_views.add(target)
-            if drop:
-                for qualified in [k for k in self.views if k.startswith(f"{name}.")]:
-                    target = self.views.pop(qualified)
-                    if target.startswith("__"):  # engine-managed only —
-                        # a `create view` alias may target a base table
-                        doomed_views.add(target)
-                    # managed/DML state of this dbms's tables: the
-                    # commit log is keyed by short name (`dml/<t>`);
-                    # find it through the qualified alias target
-                    short = qualified.split(".", 1)[1]
-                    tx = self.tx_tables.pop(f"dml/{catalog.view_name(short)}", None)
-                    if tx is not None:
-                        _shutil.rmtree(tx.path, ignore_errors=True)
-                for key in [k for k in self.tx_tables if k.startswith(f"blobs/{name}.")]:
-                    tx = self.tx_tables.pop(key)
-                    _shutil.rmtree(tx.path, ignore_errors=True)
-                # the blob registry and its temp views must go with the
-                # logs, or `file retrieve` would scan the rmtree'd path
-                # and re-stores would hit stale duplicate-hash checks
-                for bkey in [k for k in self.blob_views if k[0] == name]:
-                    doomed_views.add(self.blob_views.pop(bkey))
-                    self.blob_rows.pop(bkey, None)
-                self.event_log.add("Event", f"DBMS {name} dropped")
-            # purge the doomed temp views and every remaining alias
-            # (bare short names included) that still points at them
-            self._purge_doomed_views(doomed_views)
-            return local_frame(
-                self.spark, [(name, len(dropped))], "dbms string, n_tables int"
-            )
-        m = _re.match(
-            r"(replace|prepare)\s+policy\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
+        tm = re.match(r"(\d+)(?:\s+(\w+))?", opts.get("time", "1 minute"))
+        secs = int(tm.group(1)) * {"second": 1, "minute": 60, "hour": 3600}.get(
+            (tm.group(2) or "minute").rstrip("s"), 60
         )
-        if m:
-            # prepare policy: stamp id/date WITHOUT inserting (reference
-            # prepares a policy for a later blockchain insert); replace
-            # policy where id = X with <json>: drop old, insert new
-            import json as _json
-
-            from edgelake_spark.policies.bring import stamp_policy
-
-            verb, rest = m.group(1).lower(), m.group(2).strip()
-            if verb == "prepare":
-                stamped = stamp_policy(_json.loads(rest))
-                body = next(iter(stamped.values()))
-                return local_frame(
-                    self.spark, [(_json.dumps(stamped), body.get("id", ""))],
-                    "policy string, policy_id string",
-                )
-            rm = _re.match(r"where\s+id\s*=\s*(\S+)\s+with\s+(.*)$", rest, _re.IGNORECASE | _re.DOTALL)
-            if not rm:
-                raise ValueError("replace policy where id = <id> with <json>")
-            old_id = rm.group(1).strip("'\"")
-            n_removed = self.policy_store.remove_by_id(old_id)
-            self.policy_store.add(_json.loads(rm.group(2)))
-            return local_frame(
-                self.spark, [(old_id, n_removed)],
-                "replaced_id string, n_policies int",
-            )
-        m = _re.match(
-            r"create\s+work\s+directories(\s+where\s+root\s*=\s*(\S+))?\s*$",
-            text,
-            _re.IGNORECASE,
+        key = f"{opts.get('dbms', '')}.{opts.get('table', '*')}"
+        self.monitors[key] = DataMonitor(
+            value_column=opts.get("value_column", "value"),
+            intervals=int(opts.get("intervals", 10)),
+            interval_seconds=secs,
         )
-        if m:
-            # reference utils_io._create_anylog_dirs: the operator node's
-            # standard directory tree; root defaults to the engine work
-            # dir so a durable node gets its dirs beside the commit logs
-            import os as _os
-
-            root = m.group(2) or self._work_dir()
-            names = ("watch", "bwatch", "blobs", "archive", "err", "data", "scripts")
-            made = []
-            for n in names:
-                p = _os.path.join(root, n)
-                _os.makedirs(p, exist_ok=True)
-                self.params[f"{n}_dir"] = p  # !watch_dir etc. resolve
-                made.append(p)
-            return local_frame(
-                self.spark, [(n, p) for n, p in zip(names, made)], "name string, path string"
-            )
-        m = _re.match(
-            r"drop\s+table\s+(\S+)(?:\s+where\s+dbms\s*=\s*(\S+))?\s*$", text, _re.IGNORECASE
+        return local_frame(
+            self.spark, [(key, int(opts.get("intervals", 10)), secs)],
+            "table_key string, intervals int, interval_seconds int",
         )
-        if m:
-            # reference drop table: remove the operator-local table.
-            # Drops the view mappings and the table's commit log (the
-            # raw sf_dir parquet is immutable input, never deleted).
-            import shutil as _shutil
 
-            table, dbms = m.group(1), m.group(2)
-            key = catalog.view_name(table)
-            removed = []
-            for alias in [table, key] + ([f"{dbms}.{table}"] if dbms else []):
-                if self.views.pop(alias, None) is not None:
-                    removed.append(alias)
-            tx = self.tx_tables.pop(f"dml/{key}", None)
-            if tx is not None:
-                _shutil.rmtree(tx.path, ignore_errors=True)
-            removed += self._purge_doomed_views({f"__dml_{key}", f"__ingest_{key}"})
-            self.event_log.add("Event", f"Table {table} dropped")
-            return local_frame(
-                self.spark, [(table, bool(removed or tx))], "table_name string, dropped boolean"
-            )
-        m = _re.match(
-            r"(?:drop|delete)\s+policy\s+where\s+id\s*=\s*(\S+)\s*$", text, _re.IGNORECASE
-        )
-        if m:
-            # reference drop policy / blockchain delete policy
-            pid = m.group(1).strip("'\"")
-            n = self.policy_store.remove_by_id(pid)
-            return local_frame(self.spark, [(pid, n)], "policy_id string, n_dropped int")
-        m = _re.match(r"run\s+blobs\s+archiver\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference alarchiver.data_archiver flags (member_cmd:
-            # `run blobs archiver where dbms = true and folder = true and
-            # compress = false and reuse_blobs = true`); tick-driven here
-            # (archiver.process_once()) like the task scheduler
-            import os as _os
-
-            from edgelake_spark.ingest.archiver import BlobArchiver
-
-            opts = {k.lower(): v for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", m.group(1))}
-
-            def flag(key: str, default: bool) -> bool:
-                return opts.get(key, str(default)).lower() in ("true", "1")
-
-            for req in ("bwatch_dir", "blobs_dir", "archive_dir"):
-                if req not in opts:
-                    raise ValueError(f"run blobs archiver needs {req} = ...")
-            self.archiver = BlobArchiver(
-                engine=self,
-                bwatch_dir=opts["bwatch_dir"],
-                blobs_dir=opts["blobs_dir"],
-                archive_dir=opts["archive_dir"],
-                watch_dir=opts.get(
-                    "watch_dir", _os.path.join(opts["archive_dir"], "..", "watch")
-                ),
-                err_dir=opts.get(
-                    "err_dir", _os.path.join(opts["archive_dir"], "..", "err")
-                ),
-                update_dbms=flag("dbms", True),
-                archive_folder=flag("folder", True),
-                compress=flag("compress", True),
-                reuse_blobs=flag("reuse_blobs", False),
-            )
-            self.event_log.add("Event", "Blobs archiver declared")
-            return local_frame(
-                self.spark, [(self.archiver.status(),)], "archiver string"
-            )
-        m = _re.match(r"get\s+archived\s+files(\s+([\d-]+))?\s*$", text, _re.IGNORECASE)
-        if m:
-            if getattr(self, "archiver", None) is None:
-                raise ValueError("no blobs archiver is running")
-            rows = self.archiver.archived_files(m.group(2))
-            return local_frame(
-                self.spark, rows or [],
-                "archive_date string, file_name string, n_bytes bigint, compressed boolean",
-            )
-        m = _re.match(r"file\s+store\s+where\s+(.*)$", text, _re.IGNORECASE)
-        if m:
-            self.event_log.add("File", f"file store where {m.group(1)}")
-            return self._file_store(m.group(1))
-        m = _re.match(r"file\s+retrieve\s+where\s+(.*)$", text, _re.IGNORECASE)
-        if m:
-            self.event_log.add("File", f"file retrieve where {m.group(1)}")
-            return self._file_retrieve(m.group(1))
-        m = _re.match(r"get\s+files\s+count(\s+where\s+(.*))?$", text, _re.IGNORECASE)
-        if m:
-            self._load_all_blobs()
-            flt = self._meta_filters(m.group(2))
-            rows = []
-            for (dbms, table), view in sorted(self.blob_views.items()):
-                if flt.get("dbms") and dbms != flt["dbms"]:
-                    continue
-                if flt.get("table") and table != flt["table"]:
-                    continue
-                rows.append((dbms, table, len(self.blob_rows.get((dbms, table), ()))))
-            return local_frame(
-                self.spark, rows or [], "dbms string, table_name string, n_files bigint"
-            )
-        m = _re.match(r"set\s+([A-Za-z_]\w*)\s*=\s*(.*)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # node dictionary write (reference params.add_param,
-            # params.py:231): empty value removes the key. `set
-            # streaming condition ...` never reaches here (no `=` after
-            # the first word) and is handled above.
-            key, value = m.group(1), m.group(2).strip()
-            if len(value) >= 2 and value[0] == value[-1] and value[0] in "\"'":
-                value = value[1:-1]
-            if value:
-                self.params[key] = value
-                action = "set"
-            else:
-                self.params.pop(key, None)
-                action = "removed"
-            return local_frame(
-                self.spark, [(key, value, action)], "key string, value string, action string"
-            )
-        if _re.fullmatch(r"get\s+dictionary(\s+where\s+.*)?", text, _re.IGNORECASE):
-            # reference member_cmd.py:17191 `get dictionary`
-            rows = sorted(self.params.items())
-            return local_frame(
-                self.spark, rows or [], "key string, value string"
-            )
-        m = _re.match(r"echo\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference _echo (member_cmd.py:7484): write a message to
-            # the node console/echo queue — the scheduler examples use
-            # `task echo "..."`; here the message is the result row
-            msg = m.group(1).strip()
-            if len(msg) >= 2 and msg[0] == msg[-1] and msg[0] in "\"'":
-                msg = msg[1:-1]
-            self.event_log.add("Event", msg)
-            return local_frame(self.spark, [(msg,)], "echo string")
-        m = _re.match(r"print\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference _print (member_cmd.py `print` command): console
-            # output with `!name` dictionary substitution — the global
-            # substitution above already resolved known keys
-            msg = m.group(1).strip()
-            if len(msg) >= 2 and msg[0] == msg[-1] and msg[0] in "\"'":
-                msg = msg[1:-1]
-            return local_frame(self.spark, [(msg,)], "print string")
-        m = _re.match(
-            r"monitor\s+(\w+)\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
-        )
-        if m:
-            # reference monitor.monitor_info (`monitor <topic> where
-            # ip = .. and name = .. and info = {json}`): nodes push
-            # status structs per topic; `get monitored [topic]` reads
-            # them back with the update time
-            import json as _json
-            from datetime import datetime as _dt
-
-            topic = m.group(1).lower()
-            rest = m.group(2)
-            im = _re.search(r"info\s*=\s*(\{.*\})\s*$", rest, _re.DOTALL)
-            if not im:
-                raise ValueError("monitor: info = {json} is required")
-            info = _json.loads(im.group(1))
-            opts = {
-                k.lower(): v.strip("'\"")
-                for k, v in _re.findall(
-                    r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)", rest[: im.start()]
-                )
-            }
-            node = opts.get("name") or opts.get("ip") or "local"
-            if opts.get("name") and opts.get("ip"):
-                node = f"{opts['name']}@{opts['ip']}"
-            if not hasattr(self, "monitor_status"):
-                self.monitor_status = {}
-            stamp = (self.now or _dt.now()).strftime("%Y-%m-%d %H:%M:%S")
-            self.monitor_status.setdefault(topic, {})[node] = {
-                **info,
-                "Update time": stamp,
-            }
-            return local_frame(
-                self.spark, [(topic, node, len(info))], "topic string, node string, n_keys int"
-            )
-        m = _re.match(r"get\s+monitored(?:\s+(\w+))?$", text, _re.IGNORECASE)
-        if m:
-            import json as _json
-
-            store = getattr(self, "monitor_status", {})
-            if not m.group(1):
-                return local_frame(
-                    self.spark, [(t,) for t in sorted(store)] or [], "topic string"
-                )
-            topic = m.group(1).lower()
-            if topic not in store:
-                raise ValueError(f"get monitored: topic not monitored: {topic}")
-            rows = [
-                (node, _json.dumps(info, separators=(",", ":")))
-                for node, info in sorted(store[topic].items())
-            ]
-            return local_frame(self.spark, rows, "node string, info string")
-        m = _re.match(
-            r"stream\s+(\{.*\}|\[.*\])\s+where\s+(.*)$", text, _re.IGNORECASE | _re.DOTALL
-        )
-        if m:
-            # reference stream_data (`stream [json] where dbms = .. and
-            # table = ..`): push rows into the table's ingest buffer —
-            # the command-line door into the same path REST PUT uses
-            # (rows type-inferred, unioned into the __ingest_<table>
-            # view the query layer resolves)
-            import json as _json
-
-            opts = {
-                k.lower(): v.strip("'\"")
-                for k, v in _re.findall(r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)", m.group(2))
-            }
-            if "table" not in opts:
-                raise ValueError("stream: table = is required")
-            payload = _json.loads(m.group(1))
-            rows = payload if isinstance(payload, list) else [payload]
-            from edgelake_spark.ingest.infer import rows_to_dataframe
-
-            name = self.ingest(
-                opts["table"], len(rows),
-                lambda first: rows_to_dataframe(self.spark, rows, first_row_id=first),
-                dbms=opts.get("dbms", ""),
-            )
-            return local_frame(
-                self.spark, [(len(rows), name)], "ingested int, table string"
-            )
-        m = _re.match(r"from\s+(\{.*\})\s+(bring\b.*)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference _execute_from (`from [json] bring [paths] …`):
-            # the bring language over an arbitrary JSON object — the
-            # scripts' standard way to pull fields out of a policy
-            # variable (`ip_port = from !selected_operator bring
-            # ['operator']['ip'] ":" ['operator']['port']`). Reuses the
-            # ledger's bring evaluator on a one-object list.
-            import json as _json
-
-            obj = _json.loads(m.group(1))
-            result = self.policy_store.run_bring([obj], m.group(2), "*")
-            if isinstance(result, list):
-                result = "".join(str(v) for v in result)
-            return local_frame(self.spark, [(str(result),)], "from string")
-        m = _re.match(r"time\s+file\s+(\w+)(?:\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            return self._time_file(m.group(1).lower(), (m.group(2) or "").strip())
-        m = _re.match(r"help(?:\s+(.*))?$", text, _re.IGNORECASE)
-        if m:
-            # reference _print_help (`help [prefix]`): command inventory
-            # with usage strings, filtered by prefix
-            prefix = (m.group(1) or "").strip().lower()
-            rows = [
-                (c, u) for c, u in _COMMAND_HELP if not prefix or c.startswith(prefix)
-            ]
-            return local_frame(
-                self.spark, rows or [], "command string, usage string"
-            )
-        m = _re.match(
-            r"generate\s+insert\s+from\s+json\s+where\s+(.*)$",
-            text,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._generate_insert(m.group(1))
-        m = _re.match(
-            r"config\s+from\s+policy\s+where\s+id\s*=\s*(\S+)\s*$",
-            text,
-            _re.IGNORECASE,
-        )
-        if m:
-            # reference config_from_policy: apply a config policy's
-            # key-values to the node settings (here: the dictionary,
-            # which every later command resolves through `!name`)
-            pid = m.group(1).strip("'\"")
-            for p in self.policy_store.policies:
-                ptype = next(iter(p)) if len(p) == 1 else None
-                body = p.get(ptype, {}) if ptype else {}
-                if str(body.get("id", "")) == pid:
-                    applied = []
-                    for k, v in body.items():
-                        if k in ("id", "date"):
-                            continue
-                        self.params[str(k)] = str(v)
-                        applied.append((str(k), str(v)))
-                    return local_frame(
-                        self.spark, applied or [], "key string, value string"
+    @_command("get data monitor", usage="get data monitor [where dbms = .. and table = ..]")
+    def _get_data_monitor(self, rest):
+        flt = _where(rest)
+        rows = []
+        for key, mon in sorted(self.monitors.items()):
+            dbms, _, table = key.partition(".")
+            if _dbms_table_match(flt, dbms, table):
+                for s in mon.snapshot():
+                    rows.append(
+                        (key, s["interval"], s["count"], s["min"], s["max"], s["sum"])
                     )
-            raise ValueError(f"config from policy: no policy with id {pid}")
-        m = _re.match(r"json\s+(.*?)(\s+test)?\s*$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference _to_json (`json [obj] [test]`): validate a JSON
-            # structure (dictionary `!name`s already substituted by the
-            # global pass). `test` returns true/false; the plain form
-            # returns the normalized JSON string (assignment form
-            # `cluster = json !my_policy` stores it).
-            import json as _json
-
-            payload, is_test = m.group(1).strip(), bool(m.group(2))
-            try:
-                normalized = _json.dumps(_json.loads(payload), separators=(",", ":"))
-            except ValueError:
-                if is_test:
-                    return local_frame(self.spark, [("false",)], "json string")
-                raise ValueError(f"json: not a valid JSON structure: {payload[:80]!r}")
-            return local_frame(
-                self.spark, [("true" if is_test else normalized,)], "json string"
-            )
-        m = _re.match(r"python\s+(.+)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference _python: evaluate a Python expression over
-            # dictionary values (`new_dir = python !watch_dir.rsplit(…)`)
-            # — here SANDBOXED to pure expressions: no builtins, no
-            # dunder access, str/int/float/len/min/max/abs/round only
-            # (the reference eval()s arbitrary code; an analytics engine
-            # should not)
-            expr = m.group(1).strip()
-            if "__" in expr or "import" in expr:
-                raise ValueError("python: only pure expressions are allowed")
-            safe = {
-                "__builtins__": {},
-                "str": str, "int": int, "float": float, "len": len,
-                "min": min, "max": max, "abs": abs, "round": round,
-            }
-            try:
-                value = eval(expr, safe, {})  # noqa: S307 — sandboxed above
-            except Exception as exc:
-                raise ValueError(f"python: {exc}")
-            return local_frame(self.spark, [(str(value),)], "python string")
-        m = _re.match(r"incr\s+(\S+)(?:\s+(-?\d+))?\s*$", text, _re.IGNORECASE)
-        if m:
-            # reference _incr (member_cmd.py:12305): treat the operand as
-            # an integer, add the value (default 1). Scripts use the
-            # assignment form `x = incr !x 2`; `!x` resolves before this
-            # handler, so the operand arrives as a numeric string.
-            try:
-                base = int(m.group(1))
-            except ValueError:
-                raise ValueError(
-                    f"incr: operand is not an integer: {m.group(1)!r}"
-                )
-            return local_frame(
-                self.spark, [(base + int(m.group(2) or 1),)], "incr bigint"
-            )
-        m = _re.match(r"get\s+status\s+where\s+(.*)$", text, _re.IGNORECASE)
-        if m:
-            # reference member_cmd.py:15855 get_status where-form:
-            # `format = json` returns the status struct with `include =`
-            # dictionary pulls. The reference writes `include = !key`;
-            # here the engine's global `!name` substitution runs before
-            # dispatch, so the bare-key form `include = key` is
-            # canonical (a `!key` for an UNDEFINED key also works)
-            name = self.params.get("node_name", "edgelake-spark")
-            opts = m.group(1)
-            fm = _re.search(r"format\s*=\s*(\S+)", opts)
-            if fm and fm.group(1) != "json":
-                raise ValueError(
-                    "Wrong format in 'get status' command (use 'json')"
-                )
-            reply = {"assigned_name": name, "status": "running"}
-            for key in _re.findall(r"include\s*=\s*!?(\w+)", opts):
-                reply[key] = self.params.get(key, "")
-            import json as _json
-
-            return _json.dumps(reply)
-        m = _re.match(
-            r"get\s+(event|error|file|query|streaming)\s+log(\s+where\s+(.*))?$",
-            text,
-            _re.IGNORECASE,
+        return local_frame(
+            self.spark, rows or [],
+            "table_key string, interval int, count bigint, min double, max double, sum double",
         )
-        if m:
-            # reference show_events (process_log.py:137): ring contents
-            # oldest-first, optional keyword filter over Type and Text
-            keys = (m.group(3) or "").split() or None
-            rows = self.event_log.show(m.group(1).lower(), keys)
-            return local_frame(
-                self.spark, rows or [],
-                "id long, count long, thread string, time string, "
-                "type string, text string",
-            )
-        m = _re.match(
-            r"reset\s+(event|error|file|query|streaming)\s+log$", text, _re.IGNORECASE
+
+    @_command("run {}", verbs=("kafka consumer", "mqtt client", "msg client"),
+              usage="run {} where ip|broker = .. [and port = .. and reset = ..] and topic ="
+              ' (name = .. and dbms = .. and table = .. and column.<name>.<type> = "bring [..]" ..)')
+    def _run_consumer(self, rest, verb):
+        # registers the consumer config; BrokerConsumer.start runs the
+        # stream. `run msg client` (member_cmd.py:21408 — the
+        # reference's current name), its older `run mqtt client`
+        # spelling (mqtt_client.py:2128) and `run kafka consumer`
+        # (member_cmd.py:21481) share the same topic→bring mapping
+        # semantics, so one parser serves all three; the transport kind
+        # is kept so BrokerConsumer picks the MQTT socket subscriber
+        # (streaming/mqtt.py) vs the Kafka source.
+        from edgelake_spark.streaming.broker import parse_kafka_consumer_command
+
+        cfg = parse_kafka_consumer_command(rest)
+        cfg["transport"] = "kafka" if verb.startswith("kafka") else "mqtt"
+        # attach any conditions/monitor registered for the target table,
+        # so the consumer topology picks them up at start
+        tkey = f"{cfg['topic'].dbms}.{cfg['topic'].table}"
+        cfg["conditions"] = self.streaming_conditions.get(tkey, [])
+        cfg["monitor"] = self.monitors.get(tkey)
+        self.broker_consumers[cfg["topic"].name] = cfg
+        return local_frame(
+            self.spark, [(cfg["topic"].name, f"{cfg['ip']}:{cfg['port']}", cfg["reset"])],
+            "topic string, bootstrap string, reset string",
         )
-        if m:
-            # reference reset_events (process_log.py:201)
-            n = self.event_log.reset(m.group(1).lower())
-            return local_frame(
-                self.spark, [(m.group(1).lower(), n)], "log string, entries_cleared long"
-            )
-        if _re.fullmatch(r"get\s+processes(\s+where\s+.*)?", text, _re.IGNORECASE):
-            # reference get_processes_stat (member_cmd.py:8521): the
-            # node's service table with Running / Not declared status.
-            # Single-engine equivalents where they exist; networking
-            # services stay "Not declared" with the README rationale
-            sc = self.spark.sparkContext
-            rows = [
-                ("Query Pool", "Running", f"SQL engine on {sc.master} ({sc.defaultParallelism} cores)"),
-                ("TCP", "Not declared", "single-engine build: no peer networking (README non-goals)"),
-                (
-                    "REST",
-                    "Running" if self.rest_server else "Not declared",
-                    f"http://{self.rest_server.host}:{self.rest_server.port}" if self.rest_server else "start via edgelake_spark.api.rest",
-                ),
-                ("Blockchain Sync", "Not declared", f"local policy ledger ({len(self.policy_store.policies)} policies)"),
-            ]
-            for sid, sched in sorted(self.schedulers.items()):
-                n_tasks = len([t for t in sched.tasks if t.mode != "Removed"])
-                rows.append(
-                    (f"Scheduler {sid}", "Running" if sched.running else "Declared", f"{n_tasks} task(s)")
-                )
-            if not self.schedulers:
-                rows.append(("Scheduler", "Not declared", "run scheduler"))
-            mqtt = [t for t, c in self.broker_consumers.items() if c.get("transport") == "mqtt"]
-            kafka = [t for t, c in self.broker_consumers.items() if c.get("transport") != "mqtt"]
-            rows.append(("MQTT", "Running" if mqtt else "Not declared", ", ".join(sorted(mqtt))))
-            rows.append(("Kafka Consumer", "Running" if kafka else "Not declared", ", ".join(sorted(kafka))))
-            rows.append(
-                ("Streamer", "Running" if self.stream_ingests else "Not declared",
-                 f"{len(self.stream_ingests)} ingest pipeline(s)" if self.stream_ingests else "")
-            )
-            rows.append(
-                ("Data Monitor", "Running" if self.monitors else "Not declared",
-                 ", ".join(sorted(self.monitors)) if self.monitors else "")
-            )
-            rows.append(
-                ("Blobs Store", "Running" if self.blob_views else "Not declared",
-                 f"{len(self.blob_views)} table(s)" if self.blob_views else "")
-            )
-            op = getattr(self, "operator", None)
-            rows.append(
-                ("Operator", "Running" if op else "Not declared",
-                 f"{op.files_processed} file(s), {op.rows_ingested} row(s)" if op else "")
-            )
-            arch = getattr(self, "archiver", None)
-            rows.append(
-                ("Blobs Archiver", "Running" if arch else "Not declared",
-                 arch.status() if arch else "")
-            )
-            return local_frame(
-                self.spark, rows, "process string, status string, details string"
-            )
-        # --- scheduler / script family (reference member_cmd.py:11961
-        # `run scheduler`, :11996 `schedule`, :12070 task ops, :16011
-        # `get scheduler`, :13318 `process <file>`) ---
-        m = _re.match(r"run\s+scheduler(\s+(\d+))?$", text, _re.IGNORECASE)
-        if m:
-            sched = self._get_scheduler(int(m.group(2)) if m.group(2) else 1)
-            already = sched.running
-            if not already and self.scheduler_wake_seconds > 0:
-                sched.start(self.scheduler_wake_seconds)
-            return local_frame(
-                self.spark, [(sched.sched_id, "already running" if already else "started")],
-                "scheduler_id int, status string",
-            )
-        m = _re.match(r"exit\s+scheduler(\s+(\d+))?$", text, _re.IGNORECASE)
-        if m:
-            sched_id = int(m.group(2)) if m.group(2) else 1
-            sched = self.schedulers.get(sched_id)
-            if sched:
-                sched.stop()
-            return local_frame(
-                self.spark, [(sched_id, "stopped" if sched else "not running")],
-                "scheduler_id int, status string",
-            )
-        m = _re.match(r"get\s+scheduler(\s+(\d+))?$", text, _re.IGNORECASE)
-        if m:
-            from edgelake_spark.scheduler import TaskScheduler  # noqa: F401
 
-            which = int(m.group(2)) if m.group(2) else None
-            rows = []
-            for sid, sched in sorted(self.schedulers.items()):
-                if which is not None and sid != which:
-                    continue
-                rows.extend(sched.snapshot())
-            return local_frame(
-                self.spark, rows or [],
-                "scheduler_id int, task_id int, mode string, name string, "
-                "run_counter bigint, run_status string, start_time string, "
-                "repeat_seconds bigint, task string",
-            )
-        m = _re.match(r"schedule\s+(.*?)\s+task\s+(.+)$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            from edgelake_spark.scheduler import parse_interval_seconds
+    @_command("run message broker", usage="run message broker [where internal_ip = .. and internal_port = .. and protocol = mqtt|kafka]")
+    def _run_message_broker(self, rest):
+        # reference member_cmd.py:21457 `run message broker where
+        # internal_ip/internal_port`: the node's local broker that MQTT
+        # devices publish into (tcpip/message_server.py). Here it starts
+        # the real-framing broker doubles — MQTT 3.1.1 and Kafka wire
+        # protocol — so `run kafka consumer` / `run mqtt client`
+        # round-trip over genuine sockets.
+        opts = _where(rest)
+        host = opts.get("internal_ip", opts.get("ip", "127.0.0.1"))
+        port = int(opts.get("internal_port", opts.get("port", 0)))
+        proto = opts.get("protocol", "mqtt").lower()
+        if proto == "kafka":
+            from edgelake_spark.streaming.kafka import KafkaBroker
 
-            conds, task_cmd = m.group(1), m.group(2).strip()
-            tm = _re.search(
-                r"\btime\s*=\s*(\d+\s*[a-zA-Z]*)", conds, _re.IGNORECASE
-            )
-            if not tm:
-                raise ValueError("schedule: missing time = <interval>")
-            nm = _re.search(r"\bname\s*=\s*(\"[^\"]*\"|\S+)", conds, _re.IGNORECASE)
-            sm = _re.search(r"\bscheduler\s*=\s*(\d+)", conds, _re.IGNORECASE)
-            st = _re.search(r"\bstart\s*=\s*(\"[^\"]*\"|\S+)", conds, _re.IGNORECASE)
-            sched = self._get_scheduler(int(sm.group(1)) if sm else 1)
-            task = sched.add_task(
-                task_cmd,
-                parse_interval_seconds(tm.group(1)),
-                name=nm.group(1).strip('"') if nm else None,
-                start=st.group(1).strip('"') if st else None,
-            )
-            return local_frame(
-                self.spark, [(sched.sched_id, task.task_id, task.name or "", task.repeat_seconds)],
-                "scheduler_id int, task_id int, name string, repeat_seconds bigint",
-            )
-        m = _re.match(
-            r"task\s+(stop|resume|remove|init|run)\s+where\s+(.*)$",
-            text,
-            _re.IGNORECASE | _re.DOTALL,
+            broker = KafkaBroker(host, port).start()
+        else:
+            from edgelake_spark.streaming.mqtt import MqttBroker
+
+            broker = MqttBroker(host, port).start()
+        self.message_brokers.append(broker)
+        self.event_log.add("Event", f"Message broker declared ({proto})")
+        return local_frame(
+            self.spark, [(proto, broker.host, broker.port)],
+            "protocol string, ip string, port int",
         )
-        if m:
-            op, conds = m.group(1).lower(), m.group(2)
-            sm = _re.search(r"\bscheduler\s*=\s*(\d+)", conds, _re.IGNORECASE)
-            nm = _re.search(r"\bname\s*=\s*(\"[^\"]*\"|\S+)", conds, _re.IGNORECASE)
-            im = _re.search(r"\bid\s*=\s*(\d+)", conds, _re.IGNORECASE)
-            st = _re.search(r"\bstart\s*=\s*(\"[^\"]*\"|\S+)", conds, _re.IGNORECASE)
-            if bool(nm) == bool(im):
-                raise ValueError("task: provide exactly one of name= or id=")
-            sched = self._get_scheduler(int(sm.group(1)) if sm else 1)
-            task = sched.change_mode(
-                op,
-                name=nm.group(1).strip('"') if nm else None,
-                task_id=int(im.group(1)) if im else None,
-                start=st.group(1).strip('"') if st else None,
-            )
-            return local_frame(
-                self.spark, [(sched.sched_id, task.task_id, task.name or "", task.mode)],
-                "scheduler_id int, task_id int, name string, mode string",
-            )
-        m = _re.match(r"event\s+(\S+)(?:\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            # reference _event_trigger: an event name resolves through
-            # the node dictionary to a script file, which runs with the
-            # event's arguments as positional values
-            import shlex as _shlex
 
-            script = self.params.get(m.group(1))
-            if not script:
-                raise ValueError(f"Missing script for event: {m.group(1)}")
-            return self.run(
-                "process " + script + (" " + " ".join(_shlex.split(m.group(2))) if m.group(2) else "")
-            )
-        m = _re.match(r"process\s+(\S+)(\s+(.*))?$", text, _re.IGNORECASE)
-        if m and (m.group(1).startswith(("/", "./", "~")) or "." in m.group(1)):
-            from edgelake_spark.script import run_script_file
+    @_command("run rest server", usage="run rest server [where internal_ip = .. and internal_port = .. and user = .. and password = .. and token = ..]")
+    def _run_rest_server(self, rest):
+        # reference member_cmd.py:21323 `run rest server where
+        # internal_ip = .. and internal_port = .. [user/password]`; SSL
+        # termination is a deployment-proxy concern here
+        from edgelake_spark.api.rest import EdgeLakeRestServer
 
-            values = m.group(3).split() if m.group(3) else None
-            result = run_script_file(
-                self.run, m.group(1), values=values, variables=self.params
-            )
-            if result.error:
-                raise RuntimeError(f"script failed: {result.error}")
-            rows = [
-                (ln, cmd, type(r).__name__) for ln, cmd, r in result.executed
-            ]
-            return local_frame(
-                self.spark, rows or [], "line int, command string, result_type string"
-            )
-        return None
+        opts = _where(rest)
+        basic = None
+        if "user" in opts or "password" in opts:
+            basic = (opts.get("user", ""), opts.get("password", ""))
+        server = EdgeLakeRestServer(
+            self,
+            host=opts.get("internal_ip", opts.get("ip", "127.0.0.1")),
+            port=int(opts.get("internal_port", opts.get("port", 0))),
+            auth_token=opts.get("token"),
+            basic_auth=basic,
+        ).start()
+        self.event_log.add("Event", "REST server declared")
+        return local_frame(
+            self.spark,
+            [(server.host, server.port, basic is not None or bool(opts.get("token")))],
+            "ip string, port int, auth boolean",
+        )
 
-    def _get_scheduler(self, sched_id: int):
-        """Lazily create the task scheduler for an id (reference
-        task_scheduler.set_scheduler)."""
-        from edgelake_spark.scheduler import TaskScheduler
+    @_command("stream", usage="stream <json row or array> where dbms = .. and table = ..")
+    def _stream(self, rest):
+        # reference stream_data (`stream [json] where dbms = .. and table
+        # = ..`): push rows into the table's ingest buffer — the
+        # command-line door into the same path REST PUT uses (rows
+        # type-inferred, unioned into the __ingest_<table> view the
+        # query layer resolves)
+        import json
 
-        if sched_id not in self.schedulers:
-            self.schedulers[sched_id] = TaskScheduler(
-                sched_id, runner=self.run, clock=(lambda: self.now) if self.now else None
-            )
-        return self.schedulers[sched_id]
+        from edgelake_spark.ingest.infer import rows_to_dataframe
 
-    # ------------------------------------------------------------ blobs
+        m = _args(r"(\{.*\}|\[.*\])\s+where\s+(.*)", rest)
+        if not m:
+            return None
+        opts = _where(m.group(2), "table")
+        payload = json.loads(m.group(1))
+        rows = payload if isinstance(payload, list) else [payload]
+        name = self.ingest(
+            opts["table"], len(rows),
+            lambda first: rows_to_dataframe(self.spark, rows, first_row_id=first),
+            dbms=opts.get("dbms", ""),
+        )
+        return local_frame(
+            self.spark, [(len(rows), name)], "ingested int, table string"
+        )
 
-    def _blob_view(self, dbms: str, table: str) -> str:
-        return f"__blobs_{dbms}_{table}".replace(".", "_")
-
-    def _load_blobs(self, dbms: str, table: str) -> None:
-        """Durable engines (explicit work_dir): lazily re-attach a blob
-        table committed by a previous engine on the same work_dir. The
-        view reads the committed parquet executor-side; only the hash
-        set (the dup-check index) is collected."""
-        if not self._durable or (dbms, table) in self.blob_views:
-            return
-        tx = self._tx_table("blobs", f"{dbms}.{table}")
-        if not tx.latest_version():
-            return
-        view = self._blob_view(dbms, table)
-        tx.read(self.spark).createOrReplaceTempView(view)
-        self.blob_views[(dbms, table)] = view
-        self.blob_rows[(dbms, table)] = {
-            r.blob_hash: None
-            for r in tx.read(self.spark).select("blob_hash").collect()
-        }
-
-    def _load_dml_tables(self) -> None:
-        """Durable restart: re-register every committed DML table's
-        managed view so queries, time travel, and `get table versions`
-        see the committed state, not the raw storage table."""
-        import os as _os
-
-        root = _os.path.join(self._work_dir(), "dml")
-        if not _os.path.isdir(root):
-            return
-        for name in sorted(_os.listdir(root)):
-            tx = self._tx_table("dml", name)
-            if not tx.latest_version():
+    @_command("flush buffers", usage="flush buffers")
+    def _flush_buffers(self, rest):
+        # reference flush_memory_buffs: force buffered streaming data to
+        # disk ignoring thresholds → drain every active Structured
+        # Streaming query + one operator/archiver tick
+        if rest:
+            return None
+        drained = 0
+        for q in self.spark.streams.active:
+            try:
+                q.processAllAvailable()
+                drained += 1
+            except Exception:  # a dying query must not block a flush
                 continue
-            managed = f"__dml_{name}"
-            tx.read(self.spark).createOrReplaceTempView(managed)
-            self.views[name] = managed
+        for holder in (self.operator, self.archiver):
+            if holder is not None:
+                try:
+                    holder.process_once()
+                    drained += 1
+                except Exception:  # same policy as the queries: a
+                    continue       # broken watch dir must not block
+        self.event_log.add("Event", "Buffers flushed")
+        return local_frame(self.spark, [(drained,)], "flushed int")
 
-    def _load_all_blobs(self) -> None:
-        """Attach every blob table present under the durable work dir
-        (for `get files count` on a freshly restarted node)."""
-        import os as _os
+    @_command("monitor", usage="monitor <topic> where ip = .. and name = .. and info = {json}")
+    def _monitor(self, rest):
+        # reference monitor.monitor_info (`monitor <topic> where ip = ..
+        # and name = .. and info = {json}`): nodes push status structs
+        # per topic; `get monitored [topic]` reads them back with the
+        # update time
+        import json
 
-        if not self._durable:
-            return
-        root = _os.path.join(self._work_dir(), "blobs")
-        if not _os.path.isdir(root):
-            return
-        for entry in sorted(_os.listdir(root)):
-            dbms, _, table = entry.rpartition(".")
-            self._load_blobs(dbms, table)
+        m = _args(r"(\w+)\s+where\s+(.*?)\binfo\s*=\s*(\{.*\})", rest)
+        if not m:
+            raise ValueError("monitor: info = {json} is required")
+        topic, opts, info = m.group(1).lower(), _where(m.group(2)), json.loads(m.group(3))
+        node = opts.get("name") or opts.get("ip") or "local"
+        if opts.get("name") and opts.get("ip"):
+            node = f"{opts['name']}@{opts['ip']}"
+        stamp = (self.now or datetime.now()).strftime("%Y-%m-%d %H:%M:%S")
+        self.monitor_status.setdefault(topic, {})[node] = {
+            **info,
+            "Update time": stamp,
+        }
+        return local_frame(
+            self.spark, [(topic, node, len(info))], "topic string, node string, n_keys int"
+        )
 
-    def _file_store(self, where: str):
+    @_command("get monitored", usage="get monitored [<topic>]")
+    def _get_monitored(self, rest):
+        import json
+
+        if not rest:
+            return local_frame(
+                self.spark, [(t,) for t in sorted(self.monitor_status)] or [], "topic string"
+            )
+        topic = rest.lower()
+        if topic not in self.monitor_status:
+            raise ValueError(f"get monitored: topic not monitored: {topic}")
+        rows = [
+            (node, json.dumps(info, separators=(",", ":")))
+            for node, info in sorted(self.monitor_status[topic].items())
+        ]
+        return local_frame(self.spark, rows, "node string, info string")
+
+    # -- operator, archiver and blobs
+
+    @_command("run operator", usage="run operator where watch_dir = .. [and err_dir = .. and archive_dir = ..]"
+              " [and create_table|update_tsd_info|archive_json|compress_json = true|false]")
+    def _run_operator(self, rest):
+        # reference member_cmd.py:21740 / members/aloperator.py:
+        # watch-dir → table ingest loop; tick-driven here
+        import os
+
+        from edgelake_spark.ingest.operator import OperatorNode
+
+        opts = _where(rest, "watch_dir")
+        self.operator = OperatorNode(
+            engine=self,
+            watch_dir=opts["watch_dir"],
+            err_dir=opts.get("err_dir", os.path.join(opts["watch_dir"], "..", "err")),
+            archive_dir=opts.get(
+                "archive_dir", os.path.join(opts["watch_dir"], "..", "archive")
+            ),
+            create_table=_flag(opts, "create_table", True),
+            update_tsd_info=_flag(opts, "update_tsd_info", True),
+            archive_json=_flag(opts, "archive_json", True),
+            compress_json=_flag(opts, "compress_json", True),
+        )
+        self.event_log.add("Event", "Operator declared")
+        return local_frame(
+            self.spark,
+            [(opts["watch_dir"], self.operator.create_table, self.operator.update_tsd_info)],
+            "watch_dir string, create_table boolean, update_tsd_info boolean",
+        )
+
+    @_command("get operator", usage="get operator")
+    def _get_operator(self, rest):
+        if rest:
+            return None
+        if self.operator is None:
+            raise ValueError("no operator is running")
+        return local_frame(
+            self.spark, [self.operator.status()],
+            "files_processed bigint, files_errored bigint, rows_ingested bigint, last_error string",
+        )
+
+    @_command("run blobs archiver", usage="run blobs archiver where bwatch_dir = .. and blobs_dir = .."
+              " and archive_dir = .. [and dbms|folder|compress|reuse_blobs = true|false]")
+    def _run_blobs_archiver(self, rest):
+        # reference alarchiver.data_archiver flags (member_cmd: `run
+        # blobs archiver where dbms = true and folder = true and
+        # compress = false and reuse_blobs = true`); tick-driven here
+        # (archiver.process_once()) like the task scheduler
+        import os
+
+        from edgelake_spark.ingest.archiver import BlobArchiver
+
+        opts = _where(rest, "bwatch_dir", "blobs_dir", "archive_dir")
+        self.archiver = BlobArchiver(
+            engine=self,
+            bwatch_dir=opts["bwatch_dir"],
+            blobs_dir=opts["blobs_dir"],
+            archive_dir=opts["archive_dir"],
+            watch_dir=opts.get(
+                "watch_dir", os.path.join(opts["archive_dir"], "..", "watch")
+            ),
+            err_dir=opts.get(
+                "err_dir", os.path.join(opts["archive_dir"], "..", "err")
+            ),
+            update_dbms=_flag(opts, "dbms", True),
+            archive_folder=_flag(opts, "folder", True),
+            compress=_flag(opts, "compress", True),
+            reuse_blobs=_flag(opts, "reuse_blobs", False),
+        )
+        self.event_log.add("Event", "Blobs archiver declared")
+        return local_frame(
+            self.spark, [(self.archiver.status(),)], "archiver string"
+        )
+
+    @_command("get archived files", usage="get archived files [YYYY-MM-DD]")
+    def _get_archived_files(self, rest):
+        if not _args(r"[\d-]*", rest):
+            return None
+        if self.archiver is None:
+            raise ValueError("no blobs archiver is running")
+        rows = self.archiver.archived_files(rest or None)
+        return local_frame(
+            self.spark, rows or [],
+            "archive_date string, file_name string, n_bytes bigint, compressed boolean",
+        )
+
+    @_command("delete archive", usage="delete archive where days = N")
+    def _delete_archive(self, rest):
+        # reference member_cmd.py:17312: drop archive day dirs older
+        # than N days (applies to both archivers' trees)
+        from datetime import timedelta
+
+        from edgelake_spark.ingest.operator import delete_archive_before
+
+        days = int(_where(rest, "days")["days"])
+        key = ((self.now or datetime.utcnow()) - timedelta(days=days)).strftime("%y%m%d")
+        cutoff = (key[0:2], key[2:4], key[4:6])
+        deleted = []
+        for holder in (self.archiver, self.operator):
+            if holder is not None:
+                deleted += delete_archive_before(holder.archive_dir, cutoff)
+        return local_frame(
+            self.spark, [(d,) for d in sorted(set(deleted))] or [], "deleted_day string"
+        )
+
+    @_command("create work directories", usage="create work directories [where root = <dir>]")
+    def _create_work_directories(self, rest):
+        # reference utils_io._create_anylog_dirs: the operator node's
+        # standard directory tree; root defaults to the engine work dir
+        # so a durable node gets its dirs beside the commit logs
+        import os
+
+        root = _where(rest).get("root") or self._work_dir()
+        names = ("watch", "bwatch", "blobs", "archive", "err", "data", "scripts")
+        made = []
+        for n in names:
+            p = os.path.join(root, n)
+            os.makedirs(p, exist_ok=True)
+            self.params[f"{n}_dir"] = p  # !watch_dir etc. resolve
+            made.append(p)
+        return local_frame(
+            self.spark, [(n, p) for n, p in zip(names, made)], "name string, path string"
+        )
+
+    @_command("file store", usage="file store where [dbms = .. and] table = .. and file = .. [and hash = .. and ignore = true]")
+    def _file_store(self, rest):
         """`file store where dbms = X and table = Y [and hash = H] and
         file = PATH` — insert a file into the blobs store keyed by
         content hash (reference member_cmd.py:19225-19234 file_store,
         bucket_dbms.py:110 store_file; duplicate-hash handling
         bucket_dbms.py:205-214)."""
-        import re as _re
-
         from edgelake_spark.functions import multimodal
 
-        opts = {k.lower(): v for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", where)}
-        if "table" not in opts or "file" not in opts:
-            raise ValueError("file store needs table = ... and file = ...")
+        self.event_log.add("File", f"file store {rest}")
+        opts = _where(rest, "table", "file")
         dbms, table = opts.get("dbms", ""), opts["table"]
         self._load_blobs(dbms, table)
         row = multimodal.file_to_blob_row(opts["file"], opts.get("hash"))
@@ -1765,7 +1550,7 @@ class EdgeLakeEngine:
         if row[0] in rows:
             # reference: duplicate key is an error unless
             # ignore_duplicate (multiple rows may point at one blob)
-            if opts.get("ignore", "").lower() in ("true", "1"):
+            if _flag(opts, "ignore", False):
                 return local_frame(
                     self.spark, [(dbms, table, row[0], row[4], False)],
                     "dbms string, table_name string, blob_hash string, n_bytes bigint, stored boolean",
@@ -1799,16 +1584,18 @@ class EdgeLakeEngine:
             "dbms string, table_name string, blob_hash string, n_bytes bigint, stored boolean",
         )
 
-    def _file_retrieve(self, where: str):
+    @_command("file retrieve", usage="file retrieve where [dbms = .. and] table = .."
+              " [and hash = .. and name = .. and version = .. and limit = N] [and dest = ..]")
+    def _file_retrieve(self, rest):
         """`file retrieve where dbms = X and table = Y and hash = H and
         dest = PATH` (also `name = <source name>`, `limit = n`) — write
         matching blob content to dest (reference member_cmd.py:19377,
         bucket_dbms.py:220 retrieve_files: hash/name are unique keys →
         one file; otherwise dest is a directory)."""
         import os
-        import re as _re
 
-        opts = {k.lower(): v for k, v in _re.findall(r"(\w+)\s*=\s*(\S+)", where)}
+        self.event_log.add("File", f"file retrieve {rest}")
+        opts = _where(rest)
         dbms, table = opts.get("dbms", ""), opts.get("table", "")
         self._load_blobs(dbms, table)
         view = self.blob_views.get((dbms, table))
@@ -1878,15 +1665,22 @@ class EdgeLakeEngine:
             out or [], "blob_hash string, source_name string, n_bytes bigint, dest string"
         )
 
-    @staticmethod
-    def _meta_filters(where: str | None) -> dict:
-        """company/dbms/table equality filters of the metadata commands."""
-        import re as _re
+    @_command("get files count", usage="get files count [where dbms = .. and table = ..]")
+    def _get_files_count(self, rest):
+        self._load_all_blobs()
+        flt = _where(rest)
+        rows = [
+            (dbms, table, len(self.blob_rows.get((dbms, table), ())))
+            for dbms, table in sorted(self.blob_views)
+            if _dbms_table_match(flt, dbms, table)
+        ]
+        return local_frame(
+            self.spark, rows or [], "dbms string, table_name string, n_files bigint"
+        )
 
-        out = {}
-        for k, v in _re.findall(r"\b(company|dbms|table)\s*=\s*(\S+)", where or ""):
-            out[k] = v
-        return out
+    # -- time file: TSD provenance (see edgelake_spark/tsd.py; reference
+    # member_cmd.py:18540). The entries are what the tsd_name/tsd_id
+    # system columns on ingested rows point back to.
 
     _TSD_SCHEMA = (
         "tsd_table string, row_id int, dbms string, table_name string, "
@@ -1894,127 +1688,114 @@ class EdgeLakeEngine:
         "file_name string, status1 string, status2 string"
     )
 
-    def _time_file(self, verb: str, rest: str):
-        """`time file rename/new/add/update/get/delete/drop` — TSD
-        provenance (see edgelake_spark/tsd.py; reference
-        member_cmd.py:18540). The entries are what the tsd_name/tsd_id
-        system columns on ingested rows point back to."""
-        import os as _os
-        import re as _re
-        import shlex as _shlex
-
-        from edgelake_spark import tsd as _tsd
-
-        self.tsd()
-
-        def rows_df(entries):
-            rows = [
-                (
-                    e.table, e.row_id, e.dbms, e.table_name, e.source,
-                    e.hash, e.instructions, e.file_time, e.file_name,
-                    e.status1, e.status2,
-                )
-                for e in entries
-            ]
-            return local_frame(self.spark, rows or [], self._TSD_SCHEMA)
-
-        if verb == "rename":
-            m = _re.match(r"(\S+)\s+to\s+(.*)$", rest, _re.DOTALL)
-            if not m:
-                raise ValueError("time file rename <path> to dbms = .. and table = ..")
-            opts = {
-                k.lower(): v.strip("'\"")
-                for k, v in _re.findall(r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)", m.group(2))
-            }
-            if "dbms" not in opts or "table" not in opts:
-                raise ValueError("time file rename: dbms = and table = are required")
-            new_path = _tsd.rename_to_convention(
-                m.group(1),
-                opts["dbms"],
-                opts["table"],
-                source=opts.get("source", "0"),
-                hash_value=opts.get("hash"),
-                instructions=opts.get("instructions", "0"),
-                now=self.now,
+    def _tsd_frame(self, entries):
+        rows = [
+            (
+                e.table, e.row_id, e.dbms, e.table_name, e.source,
+                e.hash, e.instructions, e.file_time, e.file_name,
+                e.status1, e.status2,
             )
-            return local_frame(self.spark, [(new_path,)], "file string")
-        if verb in ("new", "add"):
-            parts = _shlex.split(rest)
-            if not parts:
-                raise ValueError(f"time file {verb} [file name] [status1] [status2]")
-            fname = parts[0]
-            if verb == "add" and not _os.path.exists(fname):
-                raise ValueError(f"time file add: file does not exist: {fname}")
-            entry = self.tsd_store.register(
-                fname,
-                status1=parts[1] if len(parts) > 1 else "",
-                status2=parts[2] if len(parts) > 2 else "",
-            )
-            return rows_df([entry])
-        if verb == "update":
-            parts = _shlex.split(rest)
-            if not parts:
-                raise ValueError("time file update [hash] [status1] [status2]")
-            n = self.tsd_store.update(
-                parts[0],
-                parts[1] if len(parts) > 1 else None,
-                parts[2] if len(parts) > 2 else None,
-            )
-            return local_frame(self.spark, [(n,)], "updated int")
-        if verb == "delete":
-            m = _re.match(r"(\d+)\s+from\s+(\S+)$", rest)
-            if not m:
-                raise ValueError("time file delete [row id] from [tsd table]")
-            n = self.tsd_store.delete(int(m.group(1)), m.group(2))
-            return local_frame(self.spark, [(n,)], "deleted int")
-        if verb == "drop":
-            what = rest.strip() or "all"
-            n = self.tsd_store.drop(what)
-            return local_frame(self.spark, [(n,)], "dropped int")
-        if verb == "get":
-            entries = self.tsd_store.entries
-            m = _re.match(r"where\s+(.*)$", rest, _re.DOTALL)
-            if m:
-                flt = {
-                    k.lower(): v.strip("'\"")
-                    for k, v in _re.findall(r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)", m.group(1))
-                }
-                entries = [
-                    e
-                    for e in entries
-                    if all(
-                        str(getattr(e, {"table": "table_name"}.get(k, k), "")) == v
-                        for k, v in flt.items()
-                    )
-                ]
-            return rows_df(entries)
-        raise ValueError(f"time file: unknown method {verb!r}")
+            for e in entries
+        ]
+        return local_frame(self.spark, rows or [], self._TSD_SCHEMA)
 
-    def _generate_insert(self, where: str):
+    @_command("time file rename", usage="time file rename <path> to dbms = .. and table = .. [and source = .. and hash = .. and instructions = ..]")
+    def _time_file_rename(self, rest):
+        from edgelake_spark import tsd
+
+        m = _args(r"(\S+)\s+to\s+(.*)", rest)
+        if not m:
+            raise ValueError("time file rename <path> to dbms = .. and table = ..")
+        opts = _where(m.group(2), "dbms", "table")
+        new_path = tsd.rename_to_convention(
+            m.group(1),
+            opts["dbms"],
+            opts["table"],
+            source=opts.get("source", "0"),
+            hash_value=opts.get("hash"),
+            instructions=opts.get("instructions", "0"),
+            now=self.now,
+        )
+        return local_frame(self.spark, [(new_path,)], "file string")
+
+    @_command("time file {}", verbs=("new", "add"), usage="time file {} <file name> [status1] [status2]")
+    def _time_file_new(self, rest, verb):
+        # `add` registers a file that must exist; `new` only its name
+        import os
+        import shlex
+
+        parts = shlex.split(rest)
+        if not parts:
+            raise ValueError(f"time file {verb} [file name] [status1] [status2]")
+        fname = parts[0]
+        if verb == "add" and not os.path.exists(fname):
+            raise ValueError(f"time file add: file does not exist: {fname}")
+        entry = self.tsd().register(
+            fname,
+            status1=parts[1] if len(parts) > 1 else "",
+            status2=parts[2] if len(parts) > 2 else "",
+        )
+        return self._tsd_frame([entry])
+
+    @_command("time file update", usage="time file update <hash> [status1] [status2]")
+    def _time_file_update(self, rest):
+        import shlex
+
+        parts = shlex.split(rest)
+        if not parts:
+            raise ValueError("time file update [hash] [status1] [status2]")
+        n = self.tsd().update(
+            parts[0],
+            parts[1] if len(parts) > 1 else None,
+            parts[2] if len(parts) > 2 else None,
+        )
+        return local_frame(self.spark, [(n,)], "updated int")
+
+    @_command("time file get", usage="time file get [where k = v and ..]")
+    def _time_file_get(self, rest):
+        flt = _where(rest)
+        entries = [
+            e
+            for e in self.tsd().entries
+            if all(
+                str(getattr(e, {"table": "table_name"}.get(k, k), "")) == v
+                for k, v in flt.items()
+            )
+        ]
+        return self._tsd_frame(entries)
+
+    @_command("time file delete", usage="time file delete <row id> from <tsd table>")
+    def _time_file_delete(self, rest):
+        m = _args(r"(\d+)\s+from\s+(\S+)", rest)
+        if not m:
+            raise ValueError("time file delete [row id] from [tsd table]")
+        n = self.tsd().delete(int(m.group(1)), m.group(2))
+        return local_frame(self.spark, [(n,)], "deleted int")
+
+    @_command("time file drop", usage="time file drop [<tsd table>|all]")
+    def _time_file_drop(self, rest):
+        n = self.tsd().drop(rest or "all")
+        return local_frame(self.spark, [(n,)], "dropped int")
+
+    @_command("generate insert from json", usage="generate insert from json where dbms_name = .. and table_name = .. and json_file = .. [and sql_dir = ..]")
+    def _generate_insert(self, rest):
         """`generate insert from json where dbms_name = .. and
         table_name = .. and json_file = .. [and sql_dir = ..]`
         (reference member_cmd.py _map_json_to_insert /
         json_to_sql/map_json_to_insert.py): each JSON-lines row becomes
         an INSERT statement, typed by the same inference lattice as
-        `suggest create`; `sql_dir` also writes the .sql file the
+        `admin.suggest_create`; `sql_dir` also writes the .sql file the
         reference drops for its SQL loader."""
-        import json as _json
-        import os as _os
-        import re as _re
+        import json
+        import os
 
-        opts = {
-            k.lower(): v.strip("'\"")
-            for k, v in _re.findall(r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)", where)
-        }
-        for req in ("dbms_name", "table_name", "json_file"):
-            if req not in opts:
-                raise ValueError(f"generate insert from json: missing {req} =")
-        with open(opts["json_file"]) as fh:
-            rows = [_json.loads(ln) for ln in fh if ln.strip()]
-        if not rows:
-            raise ValueError("generate insert from json: empty json file")
         from edgelake_spark.ingest.infer import infer_schema
 
+        opts = _where(rest, "dbms_name", "table_name", "json_file")
+        with open(opts["json_file"]) as fh:
+            rows = [json.loads(ln) for ln in fh if ln.strip()]
+        if not rows:
+            raise ValueError("generate insert from json: empty json file")
         schema = infer_schema(rows)
         target = f"{opts['dbms_name']}.{opts['table_name']}"
         stmts = []
@@ -2033,100 +1814,330 @@ class EdgeLakeEngine:
                 f"INSERT INTO {target} ({', '.join(cols)}) VALUES ({', '.join(vals)});"
             )
         if opts.get("sql_dir"):
-            base = _os.path.splitext(_os.path.basename(opts["json_file"]))[0]
-            path = _os.path.join(opts["sql_dir"], base + ".sql")
-            _os.makedirs(opts["sql_dir"], exist_ok=True)
+            base = os.path.splitext(os.path.basename(opts["json_file"]))[0]
+            path = os.path.join(opts["sql_dir"], base + ".sql")
+            os.makedirs(opts["sql_dir"], exist_ok=True)
             with open(path, "w") as fh:
                 fh.write("\n".join(stmts) + "\n")
         return local_frame(
             self.spark, [(s,) for s in stmts], "insert_statement string"
         )
 
-    #: per-type defaults for `create policy … with defaults` (reference
-    #: members/policies.py:212 default_values_: ip/internal_ip resolve
-    #: through the node dictionary, ports are the reference's fixed
-    #: per-role defaults)
-    _POLICY_DEFAULTS = {
-        "master": (("port", 32048), ("rest_port", 32049)),
-        "operator": (("port", 32148), ("rest_port", 32149)),
-        "query": (("port", 32348), ("rest_port", 32349)),
-        "publisher": (("port", 32248), ("rest_port", 32249)),
-    }
+    # -- node dictionary and script values
 
-    def _create_policy(self, ptype: str, defaults: bool, where: str | None):
-        """`create policy <type> [with defaults] where k = v and …`
-        (reference member_cmd.py:12231 create_policy): builds
-        ``{type: {k: v}}``; `with defaults` fills the per-role
-        ip/port defaults AND inserts into the ledger (id/date stamped
-        by PolicyStore.add); without defaults the policy is only
-        rendered, so the assignment form `x = create policy …` stores
-        the JSON in the node dictionary."""
-        import json as _json
-        import re as _re
-
-        inner: dict = {}
-        if where:
-            for k, v in _re.findall(
-                r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)", where
-            ):
-                inner[k] = v.strip("'\"")
-        if defaults:
-            for key, src in (("ip", "external_ip"), ("internal_ip", "ip")):
-                if key not in inner and self.params.get(src):
-                    inner[key] = str(self.params[src]).lower()
-            for key, value in self._POLICY_DEFAULTS.get(ptype, ()):
-                inner.setdefault(key, value)
-        policy = {ptype: inner}
-        if defaults:
-            self.policy_store.add(policy)
-            policy = self.policy_store.policies[-1]  # id/date-stamped form
+    @_command("set", usage="set <name> = <value>  (empty value removes the key)")
+    def _set(self, rest):
+        # node dictionary write (reference params.add_param,
+        # params.py:231): empty value removes the key
+        m = _args(r"([A-Za-z_]\w*)\s*=\s*(.*)", rest)
+        if not m:
+            return None
+        key, value = m.group(1), _strip_quotes(m.group(2))
+        if value:
+            self.params[key] = value
+            action = "set"
+        else:
+            self.params.pop(key, None)
+            action = "removed"
         return local_frame(
-            self.spark, [(_json.dumps(policy, separators=(",", ":")),)], "policy string"
+            self.spark, [(key, value, action)], "key string, value string, action string"
         )
 
-    def _blockchain_cmd(self, verb: str, rest: str):
-        """`blockchain insert/get/load/save` over the node's ledger
-        (reference member_cmd.py:1614 blockchain_get; durable file
-        ledger semantics via PolicyStore.save/load)."""
-        import json as _json
-        import re as _re
-
-        if verb == "insert":
-            m = _re.search(r"policy\s*=\s*(\{.*\})\s*$", rest, _re.DOTALL)
-            payload = m.group(1) if m else rest
-            self.policy_store.add(_json.loads(payload))
-            return local_frame(self.spark, [(len(self.policy_store.policies),)], "policies int")
-        if verb == "load":
-            from edgelake_spark.policies import PolicyStore
-
-            self.policy_store = PolicyStore.load(rest)
-            return local_frame(self.spark, [(len(self.policy_store.policies),)], "policies int")
-        if verb == "save":
-            n = self.policy_store.save(rest)
-            return local_frame(self.spark, [(n,)], "policies int")
-        # get: blockchain get <type> [where k = v and ...] [bring ...]
-        m = _re.match(r"(\S+)(?:\s+where\s+(.*?))?(?:\s+(bring\b.*))?$", rest, _re.DOTALL)
-        ptype, where_s, bring = m.group(1), m.group(2), m.group(3)
-        where = None
-        if where_s:
-            where = {
-                k: v.strip("'\"")
-                for k, v in _re.findall(r"(\w+)\s*=\s*(\"[^\"]*\"|'[^']*'|\S+)", where_s)
-            }
-        result = self.policy_store.blockchain_get(ptype, where, bring)
-        if bring:
-            if isinstance(result, list) and all(isinstance(v, str) for v in result):
-                # list-valued bring variants (list / ip_port / sorted
-                # projections) render one value per row, matching the
-                # reference's line-per-value output
-                return local_frame(
-                    self.spark, [(v,) for v in result] or [], "result string"
-                )
-            return local_frame(self.spark, [(str(result),)], "result string")
+    @_command("get dictionary", usage="get dictionary")
+    def _get_dictionary(self, rest):
+        # reference member_cmd.py:17191 `get dictionary`
         return local_frame(
-            self.spark, [( _json.dumps(p, separators=(",", ":")),) for p in result] or [],
-            "policy string",
+            self.spark, sorted(self.params.items()) or [], "key string, value string"
         )
+
+    @_command("echo", usage="echo <message>")
+    def _echo(self, rest):
+        # reference _echo (member_cmd.py:7484): write a message to the
+        # node console/echo queue — the scheduler examples use `task echo
+        # "..."`; here the message is the result row
+        msg = _strip_quotes(rest)
+        self.event_log.add("Event", msg)
+        return local_frame(self.spark, [(msg,)], "echo string")
+
+    @_command("print", usage="print <text with !name substitution>")
+    def _print(self, rest):
+        # reference _print (member_cmd.py `print` command): console
+        # output with `!name` dictionary substitution — `run` already
+        # resolved known keys
+        return local_frame(self.spark, [(_strip_quotes(rest),)], "print string")
+
+    @_command("incr", usage="incr <int operand> [value]  (assignment form: x = incr !x 2)")
+    def _incr(self, rest):
+        # reference _incr (member_cmd.py:12305): treat the operand as an
+        # integer, add the value (default 1). Scripts use the assignment
+        # form `x = incr !x 2`; `!x` resolves before this handler, so
+        # the operand arrives as a numeric string.
+        m = _args(r"(\S+)(?:\s+(-?\d+))?", rest)
+        if not m:
+            return None
+        try:
+            base = int(m.group(1))
+        except ValueError:
+            raise ValueError(f"incr: operand is not an integer: {m.group(1)!r}")
+        return local_frame(
+            self.spark, [(base + int(m.group(2) or 1),)], "incr bigint"
+        )
+
+    @_command("json", usage="json <object> [test]")
+    def _json(self, rest):
+        # reference _to_json (`json [obj] [test]`): validate a JSON
+        # structure (dictionary `!name`s already substituted). `test`
+        # returns true/false; the plain form returns the normalized JSON
+        # string (assignment form `cluster = json !my_policy` stores it).
+        import json
+
+        m = _args(r"(.*?)(\s+test)?", rest)
+        payload, is_test = m.group(1).strip(), bool(m.group(2))
+        try:
+            normalized = json.dumps(json.loads(payload), separators=(",", ":"))
+        except ValueError:
+            if is_test:
+                return local_frame(self.spark, [("false",)], "json string")
+            raise ValueError(f"json: not a valid JSON structure: {payload[:80]!r}")
+        return local_frame(
+            self.spark, [("true" if is_test else normalized,)], "json string"
+        )
+
+    @_command("python", usage="python <pure expression>  (sandboxed: no builtins/imports)")
+    def _python(self, rest):
+        # reference _python: evaluate a Python expression over
+        # dictionary values (`new_dir = python !watch_dir.rsplit(…)`) —
+        # here SANDBOXED to pure expressions: no builtins, no dunder
+        # access, str/int/float/len/min/max/abs/round only (the
+        # reference eval()s arbitrary code; an analytics engine should
+        # not)
+        if not rest:
+            return None
+        if "__" in rest or "import" in rest:
+            raise ValueError("python: only pure expressions are allowed")
+        safe = {
+            "__builtins__": {},
+            "str": str, "int": int, "float": float, "len": len,
+            "min": min, "max": max, "abs": abs, "round": round,
+        }
+        try:
+            value = eval(rest, safe, {})  # noqa: S307 — sandboxed above
+        except Exception as exc:
+            raise ValueError(f"python: {exc}")
+        return local_frame(self.spark, [(str(value),)], "python string")
+
+    @_command("from", usage='from <json> bring [paths] "literals" [separator = ..]')
+    def _from(self, rest):
+        # reference _execute_from (`from [json] bring [paths] …`): the
+        # bring language over an arbitrary JSON object — the scripts'
+        # standard way to pull fields out of a policy variable
+        # (`ip_port = from !selected_operator bring ['operator']['ip']
+        # ":" ['operator']['port']`). Reuses the ledger's bring
+        # evaluator on a one-object list.
+        import json
+
+        m = _args(r"(\{.*\})\s+(bring\b.*)", rest)
+        if not m:
+            return None
+        result = self.policy_store.run_bring([json.loads(m.group(1))], m.group(2), "*")
+        if isinstance(result, list):
+            result = "".join(str(v) for v in result)
+        return local_frame(self.spark, [(str(result),)], "from string")
+
+    @_command("help", usage="help [command prefix]")
+    def _help(self, rest):
+        # reference _print_help (`help [prefix]`): command inventory
+        # with usage strings, filtered by prefix
+        prefix = " ".join(rest.lower().split())
+        rows = [
+            (" ".join(key), usage)
+            for key, (usage, _) in _COMMANDS.items()
+            if " ".join(key).startswith(prefix)
+        ]
+        return local_frame(self.spark, rows or [], "command string, usage string")
+
+    # -- scheduler and scripts (reference member_cmd.py:11961 `run
+    # scheduler`, :11996 `schedule`, :12070 task ops, :16011 `get
+    # scheduler`, :13318 `process <file>`)
+
+    @_command("run scheduler", usage="run scheduler [<id>]")
+    def _run_scheduler(self, rest):
+        if not _args(r"\d*", rest):
+            return None
+        sched = self._get_scheduler(int(rest or 1))
+        already = sched.running
+        if not already and self.scheduler_wake_seconds > 0:
+            sched.start(self.scheduler_wake_seconds)
+        return local_frame(
+            self.spark, [(sched.sched_id, "already running" if already else "started")],
+            "scheduler_id int, status string",
+        )
+
+    @_command("exit scheduler", usage="exit scheduler [<id>]")
+    def _exit_scheduler(self, rest):
+        if not _args(r"\d*", rest):
+            return None
+        sched_id = int(rest or 1)
+        sched = self.schedulers.get(sched_id)
+        if sched:
+            sched.stop()
+        return local_frame(
+            self.spark, [(sched_id, "stopped" if sched else "not running")],
+            "scheduler_id int, status string",
+        )
+
+    @_command("get scheduler", usage="get scheduler [<id>]")
+    def _get_scheduler_tasks(self, rest):
+        if not _args(r"\d*", rest):
+            return None
+        rows = []
+        for sid, sched in sorted(self.schedulers.items()):
+            if not rest or sid == int(rest):
+                rows.extend(sched.snapshot())
+        return local_frame(
+            self.spark, rows or [],
+            "scheduler_id int, task_id int, mode string, name string, "
+            "run_counter bigint, run_status string, start_time string, "
+            "repeat_seconds bigint, task string",
+        )
+
+    @_command("schedule", usage="schedule time = <interval> [and name = .. and scheduler = N and start = ..] task <command>")
+    def _schedule(self, rest):
+        from edgelake_spark.scheduler import parse_interval_seconds
+
+        m = _args(r"(.*?)\s+task\s+(.+)", rest)
+        if not m:
+            return None
+        conds, opts = m.group(1), _where(m.group(1))
+        # the interval may carry a unit word: `time = 10 seconds`
+        tm = re.search(r"\btime\s*=\s*(\d+\s*[a-zA-Z]*)", conds, re.IGNORECASE)
+        if not tm:
+            raise ValueError("schedule: missing time = <interval>")
+        sched = self._get_scheduler(int(opts.get("scheduler", 1)))
+        task = sched.add_task(
+            m.group(2).strip(),
+            parse_interval_seconds(tm.group(1)),
+            name=opts.get("name"),
+            start=opts.get("start"),
+        )
+        return local_frame(
+            self.spark, [(sched.sched_id, task.task_id, task.name or "", task.repeat_seconds)],
+            "scheduler_id int, task_id int, name string, repeat_seconds bigint",
+        )
+
+    @_command("task {}", verbs=("stop", "resume", "remove", "init", "run"), usage="task {} where [scheduler = N and] name = .. | id = ..")
+    def _task(self, rest, verb):
+        opts = _where(rest)
+        if ("name" in opts) == ("id" in opts):
+            raise ValueError("task: provide exactly one of name= or id=")
+        sched = self._get_scheduler(int(opts.get("scheduler", 1)))
+        task = sched.change_mode(
+            verb,
+            name=opts.get("name"),
+            task_id=int(opts["id"]) if "id" in opts else None,
+            start=opts.get("start"),
+        )
+        return local_frame(
+            self.spark, [(sched.sched_id, task.task_id, task.name or "", task.mode)],
+            "scheduler_id int, task_id int, name string, mode string",
+        )
+
+    @_command("event", usage="event <name> [args..]  (name resolves to a script via the dictionary)")
+    def _event(self, rest):
+        # reference _event_trigger: an event name resolves through the
+        # node dictionary to a script file, which runs with the event's
+        # arguments as positional values
+        import shlex
+
+        m = _args(r"(\S+)(?:\s+(.*))?", rest)
+        if not m:
+            return None
+        script = self.params.get(m.group(1))
+        if not script:
+            raise ValueError(f"Missing script for event: {m.group(1)}")
+        args = " ".join(shlex.split(m.group(2))) if m.group(2) else ""
+        return self.run(f"process {script} {args}".strip())
+
+    @_command("process", usage="process <script file> [values..]  (script lines may also use wait <seconds> [for <condition>])")
+    def _process(self, rest):
+        from edgelake_spark.script import run_script_file
+
+        m = _args(r"(\S+)(?:\s+(.*))?", rest)
+        if not m or not (m.group(1).startswith(("/", "./", "~")) or "." in m.group(1)):
+            return None  # not a script path
+        values = m.group(2).split() if m.group(2) else None
+        result = run_script_file(self.run, m.group(1), values=values, variables=self.params)
+        if result.error:
+            raise RuntimeError(f"script failed: {result.error}")
+        rows = [(ln, cmd, type(r).__name__) for ln, cmd, r in result.executed]
+        return local_frame(
+            self.spark, rows or [], "line int, command string, result_type string"
+        )
+
+    def _get_scheduler(self, sched_id: int):
+        """Lazily create the task scheduler for an id (reference
+        task_scheduler.set_scheduler)."""
+        from edgelake_spark.scheduler import TaskScheduler
+
+        if sched_id not in self.schedulers:
+            self.schedulers[sched_id] = TaskScheduler(
+                sched_id, runner=self.run, clock=(lambda: self.now) if self.now else None
+            )
+        return self.schedulers[sched_id]
+
+    # ------------------------------------------------------------ blobs
+
+    def _blob_view(self, dbms: str, table: str) -> str:
+        return f"__blobs_{dbms}_{table}".replace(".", "_")
+
+    def _load_blobs(self, dbms: str, table: str) -> None:
+        """Durable engines (explicit work_dir): lazily re-attach a blob
+        table committed by a previous engine on the same work_dir. The
+        view reads the committed parquet executor-side; only the hash
+        set (the dup-check index) is collected."""
+        if not self._durable or (dbms, table) in self.blob_views:
+            return
+        tx = self._tx_table("blobs", f"{dbms}.{table}")
+        if not tx.latest_version():
+            return
+        view = self._blob_view(dbms, table)
+        tx.read(self.spark).createOrReplaceTempView(view)
+        self.blob_views[(dbms, table)] = view
+        self.blob_rows[(dbms, table)] = {
+            r.blob_hash: None
+            for r in tx.read(self.spark).select("blob_hash").collect()
+        }
+
+    def _load_dml_tables(self) -> None:
+        """Durable restart: re-register every committed DML table's
+        managed view so queries, time travel, and `get table versions`
+        see the committed state, not the raw storage table."""
+        import os as _os
+
+        root = _os.path.join(self._work_dir(), "dml")
+        if not _os.path.isdir(root):
+            return
+        for name in sorted(_os.listdir(root)):
+            tx = self._tx_table("dml", name)
+            if not tx.latest_version():
+                continue
+            managed = f"__dml_{name}"
+            tx.read(self.spark).createOrReplaceTempView(managed)
+            self.views[name] = managed
+
+    def _load_all_blobs(self) -> None:
+        """Attach every blob table present under the durable work dir
+        (for `get files count` on a freshly restarted node)."""
+        import os as _os
+
+        if not self._durable:
+            return
+        root = _os.path.join(self._work_dir(), "blobs")
+        if not _os.path.isdir(root):
+            return
+        for entry in sorted(_os.listdir(root)):
+            dbms, _, table = entry.rpartition(".")
+            self._load_blobs(dbms, table)
 
     def attach_partitioned(self, name: str, path: str) -> None:
         """Register a time-partitioned dataset (written via
@@ -2152,14 +2163,12 @@ class EdgeLakeEngine:
         reference's exact design (utils_sql.py:900-933
         get_leading_queries, job/leading_query.py), which also keeps
         plans cacheable because the outer query sees a constant."""
-        import re as _re
-
         if EdgeLakeEngine._LEADING_RE is None:
-            EdgeLakeEngine._LEADING_RE = _re.compile(
-                r"\{\s*(select\b[^{}]*?)\((\w+)\)\s*\}", _re.IGNORECASE | _re.DOTALL
+            EdgeLakeEngine._LEADING_RE = re.compile(
+                r"\{\s*(select\b[^{}]*?)\((\w+)\)\s*\}", re.IGNORECASE | re.DOTALL
             )
 
-        def _run(m: _re.Match) -> str:
+        def _run(m: re.Match) -> str:
             inner, _column = m.group(1).strip(), m.group(2)
             row = self.query(inner).collect()
             if not row or row[0][0] is None:
@@ -2367,13 +2376,11 @@ class EdgeLakeEngine:
         return self.spark.table(managed)
 
     def _try_dml(self, statement: str):
-        import re as _re
-
         text = statement.strip().rstrip(";")
-        m = _re.match(
+        m = re.match(
             r"insert\s+into\s+(\S+)\s*\(([^)]*)\)\s*values\s*\((.*)\)\s*$",
             text,
-            _re.IGNORECASE | _re.DOTALL,
+            re.IGNORECASE | re.DOTALL,
         )
         if m:
             from edgelake_spark.dialect.parser import split_top_level
@@ -2399,10 +2406,10 @@ class EdgeLakeEngine:
                     table, base.unionByName(row, allowMissingColumns=True), "insert"
                 )
             return self._tx_commit(table, row, "insert", append=True)
-        m = _re.match(
+        m = re.match(
             r"merge\s+into\s+(\S+)\s+using\s+\((.*)\)\s+on\s+([\w\s,]+)$",
             text,
-            _re.IGNORECASE | _re.DOTALL,
+            re.IGNORECASE | re.DOTALL,
         )
         if m:
             # superset of the reference DML (BASELINE north star —
@@ -2421,7 +2428,7 @@ class EdgeLakeEngine:
             tx.merge_upsert(self.spark, source, key_cols)
             tx.read(self.spark).createOrReplaceTempView(view)
             return self.spark.table(view)
-        m = _re.match(r"delete\s+from\s+(\S+)(?:\s+where\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL)
+        m = re.match(r"delete\s+from\s+(\S+)(?:\s+where\s+(.*))?$", text, re.IGNORECASE | re.DOTALL)
         if m:
             table, cond = m.group(1), m.group(2)
             view = self._managed_snapshot(table)
@@ -2433,8 +2440,8 @@ class EdgeLakeEngine:
             tx.delete_where(self.spark, cond)
             tx.read(self.spark).createOrReplaceTempView(view)
             return self.spark.table(view)
-        m = _re.match(
-            r"update\s+(\S+)\s+set\s+(.*?)(?:\s+where\s+(.*))?$", text, _re.IGNORECASE | _re.DOTALL
+        m = re.match(
+            r"update\s+(\S+)\s+set\s+(.*?)(?:\s+where\s+(.*))?$", text, re.IGNORECASE | re.DOTALL
         )
         if m:
             from edgelake_spark.dialect.parser import split_top_level
@@ -2512,85 +2519,3 @@ class EdgeLakeEngine:
             if isinstance(f_.dataType, T.TimestampType):
                 df = df.withColumn(f_.name, F.from_utc_timestamp(F.col(f_.name), zone))
         return df
-
-
-#: `help [prefix]` inventory (reference _print_help): every command the
-#: engine's _try_admin/_try_dml/query surface accepts, with the usage
-#: shape. Kept flat so `help get` prefix-filters like the reference.
-_COMMAND_HELP = [
-    ("sql", 'sql <dbms> [format = ..][dest = ..][timezone = ..][extend = (..)][include = (..)][table = ..] "SELECT ..."'),
-    ("blockchain get", "blockchain get <type> [where k = v and ..] [bring[.variant] [paths]]"),
-    ("blockchain insert", "blockchain insert where policy = {..}"),
-    ("blockchain load", "blockchain load <path>"),
-    ("blockchain save", "blockchain save <path>"),
-    ("create policy", "create policy <type> [with defaults] where k = v and .."),
-    ("create view", "create view <dbms.view> (col type [as source], ..)"),
-    ("create table", "create table <dbms.table> from suggest create / DDL"),
-    ("config from policy", "config from policy where id = <policy id>"),
-    ("get rows count", "get rows count [where dbms = .. and table = .. and group = table][estimate]"),
-    ("get data nodes", "get data nodes [where company/dbms/table = ..]"),
-    ("get virtual tables", "get virtual tables [info]"),
-    ("get partitions", "get partitions [where dbms = .. and table = ..]"),
-    ("get dictionary", "get dictionary"),
-    ("get scheduler", "get scheduler [id]"),
-    ("get processes", "get processes"),
-    ("get status", "get status [where format = json and include = key]"),
-    ("get streaming", "get streaming"),
-    ("get files count", "get files count [where dbms = .. and table = ..]"),
-    ("get event log", "get event log [where keyword]  (also error/file/query/streaming log; reset .. log)"),
-    ("generate insert from json", "generate insert from json where dbms_name = .. and table_name = .. and json_file = .. [and sql_dir = ..]"),
-    ("info table", "info table <dbms.table> columns"),
-    ("suggest create", "suggest create <dbms.table> from <json file>"),
-    ("file store", "file store where dbms = .. and table = .. and file = .."),
-    ("file retrieve", "file retrieve where dbms = .. and table = .. [hash = ..][dest = ..]"),
-    ("partition", "partition <dbms> <table> using <column> by <n> <unit>"),
-    ("drop partition", "drop partition [where dbms = .. and table = ..]"),
-    ("run scheduler", "run scheduler [where wake = Ns]"),
-    ("run kafka consumer", "run kafka consumer where ip = .. and topic = (name = .. and dbms = .. and table = .. and column..)"),
-    ("run rest server", "run rest server [where internal_ip = .. and internal_port = .. and user = .. and password = .. and token = ..]"),
-    ("run message broker", "run message broker [where internal_ip = .. and internal_port = .. and protocol = mqtt|kafka]"),
-    ("run mqtt client", "run mqtt client where broker = .. and topic = (..)"),
-    ("schedule", "schedule time = <interval> [and name = ..] task <command>"),
-    ("task", "task stop|resume|remove|init|run where name = .. | id = .."),
-    ("process", "process <script file> [values..]"),
-    ("event", "event <name> [args..]  (name resolves to a script via the dictionary)"),
-    ("query status", "query status [all]"),
-    ("query explain", "query explain [job|last]"),
-    ("query destination", "query destination [all|ID]  (storage each job read + scan pruning)"),
-    ("set", "set <name> = <value>  (empty value removes the key)"),
-    ("echo", "echo <message>"),
-    ("print", "print <text with !name substitution>"),
-    ("incr", "incr <int operand> [value]  (assignment form: x = incr !x 2)"),
-    ("json", "json <object> [test]"),
-    ("python", "python <pure expression>  (sandboxed: no builtins/imports)"),
-    ("wait", "wait <seconds> [for <condition>]  (scripts)"),
-    ("time file", "time file rename|new|add|update|get|delete|drop .. (TSD provenance)"),
-    ("run blobs archiver", "run blobs archiver where bwatch_dir = .. and blobs_dir = .. and archive_dir = .. [dbms|folder|compress|reuse_blobs = true/false]"),
-    ("run operator", "run operator where watch_dir = .. [create_table|update_tsd_info|archive_json|compress_json = true/false]"),
-    ("get operator", "get operator"),
-    ("delete archive", "delete archive where days = N"),
-    ("flush buffers", "flush buffers"),
-    ("connect dbms", "connect dbms <name> where type = .. [and path = <parquet dir>]"),
-    ("disconnect dbms", "disconnect dbms <name>"),
-    ("drop table", "drop table <table> [where dbms = ..]"),
-    ("drop policy", "drop policy where id = .."),
-    ("drop dbms", "drop dbms <name> (forget managed state incl. DML commit logs; raw storage untouched)"),
-    ("replace policy", "replace policy where id = <id> with <json>"),
-    ("prepare policy", "prepare policy <json> (stamp id/date without insert)"),
-    ("run msg client", "run msg client where broker = .. and port = .. and topic = (..) (alias of run mqtt client)"),
-    ("create work directories", "create work directories [where root = <dir>]"),
-    ("info view", "info view <dbms> <view> columns|exists"),
-    ("backup table", "backup table where dbms = .. and table = .. and dest = <dir>"),
-    ("get archived files", "get archived files [YYYY-MM-DD]"),
-    ("get table versions", "get table versions [where table = ..] (commit-log history)"),
-    ("stream", "stream <json row or array> where dbms = .. and table = .."),
-    ("monitor", "monitor <topic> where ip = .. and name = .. and info = {json}"),
-    ("get monitored", "get monitored [topic]"),
-    ("from", "from <json> bring [paths] \"literals\" [separator = ..]"),
-    ("test table", "test table <dbms.table> where .."),
-    ("test node", "test node"),
-    ("data monitor", "data monitor where dbms = .. and intervals = .. and time = .."),
-    ("get data monitor", "get data monitor [where dbms = ..]"),
-    ("exit scheduler", "exit scheduler [id]"),
-    ("help", "help [command prefix]"),
-]

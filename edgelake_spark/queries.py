@@ -2286,7 +2286,7 @@ _q(
 )
 
 
-def _split_by_cluster_sql(comp: str, pairs: str, cid_md5: str) -> str:
+def _split_by_cluster_sql(engine: str, comp: str, pairs: str, cid_md5: str) -> str:
     """Leakage-SAFE split assignment: the hash key is the near-dup
     CLUSTER id (component_id; a doc's own id when unclustered), so
     whole clusters co-assign and no near-duplicate pair can straddle
@@ -2300,8 +2300,9 @@ def _split_by_cluster_sql(comp: str, pairs: str, cid_md5: str) -> str:
     Scale shape: cluster map and pair table are LSH-bounded artifacts
     (broadcastable vs the corpus); assignment is one map-side hash;
     the invariant check is two joins on the tiny pair table; final agg
-    is 3 groups."""
-    u = dd.spark_hex60(cid_md5) if "concat" in cid_md5 else dd.duck_hex60(cid_md5)
+    is 3 groups. ``engine`` ("spark" or "duckdb") picks the hex
+    decoder of the ``cid_md5`` expression."""
+    u = dd.spark_hex60(cid_md5) if engine == "spark" else dd.duck_hex60(cid_md5)
     u = f"{u} / CAST(1152921504606846976 AS DOUBLE)"
     return f"""
 WITH comp AS ({comp}),
@@ -2338,6 +2339,7 @@ def _run_split_by_cluster(spark, sf_dir):
     ).createOrReplaceTempView("__sbc_comp")
     return spark.sql(
         _split_by_cluster_sql(
+            "spark",
             "SELECT * FROM __sbc_comp",
             "SELECT id1, id2 FROM __mh_pairs",
             "md5(concat('split:', CAST(cid AS STRING)))",
@@ -2349,6 +2351,7 @@ _q(
     "doc_split_by_cluster",
     _run_split_by_cluster,
     _split_by_cluster_sql(
+        "duckdb",
         _DEDUP_CLUSTERS_ORACLE.replace("ORDER BY doc_id", ""),
         ORACLE_SQL["doc_minhash_pairs"],
         "md5('split:' || CAST(cid AS VARCHAR))",

@@ -136,3 +136,17 @@ def test_doc_artifact_sweep_replaces_stale_states(spark, tmp_path):
     assert not os.path.exists(p2)
     for p in (_doc_artifact_path(str(src), "t_art", "v3"), p3):
         shutil.rmtree(p, ignore_errors=True)  # keep spark-warehouse clean
+
+
+def test_split_by_cluster_decoder_follows_engine():
+    """The hex decoder of the cluster-hash expression is chosen by the
+    engine argument, not by the text of the expression: a DuckDB
+    expression that calls concat( still gets the DuckDB decoder."""
+    from edgelake_spark import queries
+    from edgelake_spark.functions import dedup as dd
+
+    expr = "md5(concat('split:', CAST(cid AS VARCHAR)))"
+    sql = queries._split_by_cluster_sql("duckdb", "SELECT 1", "SELECT 1", expr)
+    assert dd.duck_hex60(expr) in sql and dd.spark_hex60(expr) not in sql
+    sql = queries._split_by_cluster_sql("spark", "SELECT 1", "SELECT 1", expr)
+    assert dd.spark_hex60(expr) in sql

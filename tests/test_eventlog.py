@@ -71,6 +71,18 @@ def test_engine_error_capture_and_get_error_log(eng):
     assert eng.run("get event log where nomatch").count() == 0
 
 
+def test_failed_command_logs_one_error_with_its_text(eng):
+    """An admin failure and a sql failure each add exactly one Error
+    entry, and the entry carries the command that failed."""
+    for command in ("get monitored nosuchtopic", 'sql db format=xml "select 1"'):
+        before = eng.run("get error log").count()
+        with pytest.raises(Exception):
+            eng.run(command)
+        rows = eng.run("get error log").collect()
+        assert len(rows) == before + 1
+        assert command in rows[-1]["text"]
+
+
 def test_engine_query_log_ring_and_reset(eng):
     eng.run('sql db "select count(*) as n from events"')
     rows = eng.run("get query log").collect()

@@ -73,6 +73,8 @@ def test_query_status_and_explain(spark):
     # a non-numeric selector falls back to the latest entry, no raise
     foo = eng.run("query explain foo").collect()[0]
     assert foo.job_id == status[-1].job_id
+    # an unknown numeric job id explains nothing, like query destination
+    assert eng.run("query explain 999999").collect() == []
 
 
 def test_query_destination(spark):
@@ -312,6 +314,53 @@ def test_help_inventory_and_prefix(engine):
     assert gets and all(r.command.startswith("get") for r in gets)
     one = engine.run("help blockchain get").collect()
     assert len(one) == 1 and "bring" in one[0].usage
+
+
+def test_help_lists_the_command_table(engine):
+    """`help` is generated from the dispatch table: every row names a
+    registered prefix that dispatches to its handler, and every
+    registered prefix is listed exactly once."""
+    from edgelake_spark.engine import _COMMANDS, _lookup
+
+    names = [r.command for r in engine.run("help").collect()]
+    assert sorted(names) == sorted(" ".join(key) for key in _COMMANDS)
+    assert len(names) == len(set(names))
+    for name in names:
+        found = _lookup(name)
+        assert found is not None and found[0] == name
+        assert found[1] is _COMMANDS[tuple(name.split())][1]
+
+
+@pytest.mark.parametrize(
+    "command, prefix",
+    [
+        ("get status", "get status"),
+        ("get status where format = json", "get status"),
+        ("get streaming", "get streaming"),
+        ("get streaming conditions where dbms = d", "get streaming conditions"),
+        ("get streaming log", "get streaming log"),
+        ("set streaming condition where dbms = d if [v] > 1 then x", "set streaming condition"),
+        ("set x = y", "set"),
+        ("set streaming = 1", "set"),
+        ("drop table t", "drop table"),
+        ("drop dbms d", "drop dbms"),
+        ("drop partition where table = t and date < '2024-02'", "drop partition"),
+        ("drop policy where id = 1", "drop policy"),
+        ("delete policy where id = 1", "delete policy"),
+        ("data monitor where dbms = d", "data monitor"),
+        ("get data monitor", "get data monitor"),
+        ("get data nodes where company = acme", "get data nodes"),
+        ("GET  Rows\tCount where table = x", "get rows count"),
+        ('sql d "select 1"', "sql"),
+        ("select count(*) from events", None),
+        ("delete from events where x = 1", None),
+    ],
+)
+def test_longest_registered_prefix_wins(command, prefix):
+    from edgelake_spark.engine import _lookup
+
+    found = _lookup(command)
+    assert (found[0] if found else None) == prefix
 
 
 def test_generate_insert_from_json(engine, tmp_path):
