@@ -468,8 +468,8 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
     # cost as localCheckpoint before the blow-up (~0.3 s at sf1).
     # Files land under the session checkpoint dir (HDFS/object store on
     # a cluster) — two alternating slots per run, a bounded footprint;
-    # the final slot backs the returned DataFrame so it must outlive
-    # this call (session-temp lifecycle, like checkpoint blocks).
+    # the final labels go through the materialization barrier, and the
+    # whole round directory is removed before returning.
     import os as _os
     import uuid as _uuid
 
@@ -484,59 +484,64 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
         df.write.mode("overwrite").parquet(slot)
         return spark.read.parquet(slot)
 
-    labels = barrier(
-        edges.select(F.col("id1").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id")),
-        0,
-    )
-    converged = False
-    for round_no in range(1, max_rounds + 1):
-        nmin = (
-            edges.join(labels, edges.id2 == labels.doc_id)
-            .groupBy(edges.id1.alias("doc_id"))
-            .agg(F.min("label").alias("nmin"))
+    try:
+        labels = barrier(
+            edges.select(F.col("id1").alias("doc_id"))
+            .distinct()
+            .withColumn("label", F.col("doc_id")),
+            0,
         )
-        stepped = labels.join(nmin, "doc_id", "left").select(
-            "doc_id",
-            F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-        )
-        # pointer jump: follow label -> label-of-label
-        parents = stepped.select(
-            F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
-        )
-        jumped = barrier(
-            stepped.join(parents, stepped.label == parents.p_id, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))).alias(
-                    "label"
-                ),
-            ),
-            round_no,
-        )
-        # convergence probe every other round (scheduling overhead
-        # stays bounded), and every round near the cap; both sides are
-        # parquet scans, so the probe re-executes nothing
-        if round_no % 2 == 0 or round_no >= max_rounds - 2:
-            changed = (
-                jumped.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
+        converged = False
+        for round_no in range(1, max_rounds + 1):
+            nmin = (
+                edges.join(labels, edges.id2 == labels.doc_id)
+                .groupBy(edges.id1.alias("doc_id"))
+                .agg(F.min("label").alias("nmin"))
             )
-            labels = jumped
-            if stats is not None:
-                stats["rounds"] = round_no
-            if changed == 0:
-                converged = True
-                break
-        else:
-            labels = jumped
-            if stats is not None:
-                stats["rounds"] = round_no
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not reach a fixpoint in {max_rounds} rounds"
-        )
-    return labels.select("doc_id", F.col("label").alias("component_id")).orderBy("doc_id")
+            stepped = labels.join(nmin, "doc_id", "left").select(
+                "doc_id",
+                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
+            )
+            # pointer jump: follow label -> label-of-label
+            parents = stepped.select(
+                F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
+            )
+            jumped = barrier(
+                stepped.join(parents, stepped.label == parents.p_id, "left")
+                .select(
+                    "doc_id",
+                    F.least(F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))).alias(
+                        "label"
+                    ),
+                ),
+                round_no,
+            )
+            # convergence probe every other round (scheduling overhead
+            # stays bounded), and every round near the cap; both sides are
+            # parquet scans, so the probe re-executes nothing
+            if round_no % 2 == 0 or round_no >= max_rounds - 2:
+                changed = (
+                    jumped.alias("n")
+                    .join(labels.alias("o"), "doc_id")
+                    .filter(F.col("n.label") != F.col("o.label"))
+                    .count()
+                )
+                labels = jumped
+                if stats is not None:
+                    stats["rounds"] = round_no
+                if changed == 0:
+                    converged = True
+                    break
+            else:
+                labels = jumped
+                if stats is not None:
+                    stats["rounds"] = round_no
+        if not converged:
+            raise RuntimeError(
+                f"connected_components did not reach a fixpoint in {max_rounds} rounds"
+            )
+        final = _materialize(labels.select("doc_id", F.col("label").alias("component_id")))
+    finally:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(base)
+        jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
+    return final.orderBy("doc_id")

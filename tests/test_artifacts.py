@@ -1,0 +1,108 @@
+"""Persisted artifacts follow their source files: a dataset regenerated
+in place is rebuilt, never re-attached, in the same session and after
+the catalog entries of the bucketed layouts are dropped."""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+import duckdb
+
+from edgelake_spark import artifacts
+from edgelake_spark.catalog import TESTDATA_TABLES
+from edgelake_spark.queries import ORACLE_SQL, SPARK_QUERIES
+from tests.conftest import SF_DIR, SF_DIR_MED
+from tests.test_oracle_parity import _rows_to_multiset
+
+#: one gate per persisted artifact family: bucketed layouts, IVF
+#: centroids + inverted lists, the PCA model, winnowing fingerprints,
+#: and a consumer of the __mh_pairs table
+GATES = (
+    "orders_bucketed_join",
+    "emb_ivf_topk",
+    "emb_pca_project",
+    "doc_winnow_fp",
+    "doc_split_leakage",
+)
+
+
+def _copy_tables(src_dir, dst_dir):
+    for t in TESTDATA_TABLES:
+        src = os.path.join(src_dir, f"{t}.parquet")
+        if os.path.exists(src):
+            shutil.copyfile(src, os.path.join(dst_dir, f"{t}.parquet"))
+
+
+def _assert_gates_match_oracle(spark, sf_dir, phase):
+    duck = duckdb.connect()
+    try:
+        for t in TESTDATA_TABLES:
+            p = os.path.join(sf_dir, f"{t}.parquet")
+            if os.path.exists(p):
+                duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+        for name in GATES:
+            df = SPARK_QUERIES[name](spark, sf_dir)
+            res = duck.execute(ORACLE_SQL[name])
+            got = _rows_to_multiset(df.columns, [tuple(r) for r in df.collect()])
+            want = _rows_to_multiset([d[0] for d in res.description], res.fetchall())
+            assert got == want, f"{phase}: {name} differs from the oracle"
+    finally:
+        duck.close()
+
+
+def _drop_bucketed_tables(spark):
+    for t in spark.catalog.listTables():
+        if t.name.startswith("bucketed_"):
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+
+
+def test_regenerated_dataset_rebuilds_every_artifact(spark, tmp_path):
+    ds = tmp_path / "ds"
+    ds.mkdir()
+    root = artifacts.root(spark)
+    before = set(os.listdir(root)) if os.path.isdir(root) else set()
+    try:
+        _copy_tables(SF_DIR, ds)
+        _assert_gates_match_oracle(spark, str(ds), "first build")
+        # regenerate in place: the same paths now hold another dataset
+        _copy_tables(SF_DIR_MED, ds)
+        _assert_gates_match_oracle(spark, str(ds), "same session")
+        _drop_bucketed_tables(spark)
+        _assert_gates_match_oracle(spark, str(ds), "after catalog drop")
+    finally:
+        _drop_bucketed_tables(spark)
+        for name in set(os.listdir(root)) - before:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+
+
+def test_incomplete_artifact_is_rebuilt_and_stale_states_swept(spark, tmp_path):
+    """A directory without a matching marker is rebuilt, never read; a
+    build removes the superseded state of the same source and kind."""
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"v1")
+    builds = []
+
+    def write(path):
+        builds.append(path)
+        os.makedirs(path)
+
+    p1 = artifacts.ensure(spark, str(src), "t_store", "v", write)
+    assert os.path.exists(os.path.join(p1, artifacts.MARKER))
+    assert artifacts.ensure(spark, str(src), "t_store", "v", write) == p1
+    assert builds == [p1]
+
+    # an interrupted build: files but no marker
+    os.remove(os.path.join(p1, artifacts.MARKER))
+    with open(os.path.join(p1, "partial"), "w") as fh:
+        fh.write("x")
+    assert artifacts.ensure(spark, str(src), "t_store", "v", write) == p1
+    assert builds == [p1, p1]
+    assert not os.path.exists(os.path.join(p1, "partial"))
+
+    # the source is regenerated: new state, old one swept
+    src.write_bytes(b"v2 longer")
+    p2 = artifacts.ensure(spark, str(src), "t_store", "v", write)
+    assert p2 != p1 and builds[-1] == p2
+    assert not os.path.exists(p1)
+    shutil.rmtree(p2)

@@ -108,34 +108,63 @@ def test_doc_artifact_sweep_replaces_stale_states(spark, tmp_path):
     import os
     import shutil
 
-    from edgelake_spark.queries import _doc_artifact_path, _doc_artifact_view
+    from edgelake_spark import artifacts
 
     src = tmp_path / "ds"
     src.mkdir()
     shutil.copy("/root/testdata/sf0.001/documents.parquet",
                 src / "documents.parquet")
+    doc = str(src / "documents.parquet")
 
     build = lambda: spark.range(3).selectExpr("id AS doc_id")
-    p1 = _doc_artifact_path(str(src), "t_art", "v1")
-    _doc_artifact_view(spark, str(src), "t_art", "v1", build, "__t_art")
-    assert os.path.exists(os.path.join(p1, "_SUCCESS"))
+    p1 = artifacts.path(spark, doc, "t_art", "v1")
+    artifacts.parquet(spark, doc, "t_art", "v1", build)
+    assert os.path.exists(os.path.join(p1, artifacts.MARKER))
 
     # semantics change -> new state tag; old state swept on build
-    p2 = _doc_artifact_path(str(src), "t_art", "v2")
+    p2 = artifacts.path(spark, doc, "t_art", "v2")
     assert p2 != p1
-    _doc_artifact_view(spark, str(src), "t_art", "v2", build, "__t_art")
-    assert os.path.exists(os.path.join(p2, "_SUCCESS"))
+    artifacts.parquet(spark, doc, "t_art", "v2", build)
+    assert os.path.exists(os.path.join(p2, artifacts.MARKER))
     assert not os.path.exists(p1)
 
     # a different KIND of the same source survives the sweep
-    p3 = _doc_artifact_path(str(src), "t_other", "v1")
-    _doc_artifact_view(spark, str(src), "t_other", "v1", build, "__t_other")
-    assert os.path.exists(os.path.join(p3, "_SUCCESS"))
-    _doc_artifact_view(spark, str(src), "t_art", "v3", build, "__t_art")
-    assert os.path.exists(os.path.join(p3, "_SUCCESS"))  # untouched
+    p3 = artifacts.path(spark, doc, "t_other", "v1")
+    artifacts.parquet(spark, doc, "t_other", "v1", build)
+    assert os.path.exists(os.path.join(p3, artifacts.MARKER))
+    artifacts.parquet(spark, doc, "t_art", "v3", build)
+    assert os.path.exists(os.path.join(p3, artifacts.MARKER))  # untouched
     assert not os.path.exists(p2)
-    for p in (_doc_artifact_path(str(src), "t_art", "v3"), p3):
-        shutil.rmtree(p, ignore_errors=True)  # keep spark-warehouse clean
+    for p in (artifacts.path(spark, doc, "t_art", "v3"), p3):
+        shutil.rmtree(p, ignore_errors=True)  # keep the warehouse clean
+
+
+def test_distributed_cc_leaves_no_round_directories(spark):
+    """Each distributed run removes its cc-rounds-<uuid> directory, on
+    success and on the no-fixpoint error, and its result stays readable
+    after the removal."""
+    import glob
+    import os
+    from urllib.parse import urlparse
+
+    from edgelake_spark.checkpoint import ensure_checkpoint_dir
+
+    root = urlparse(ensure_checkpoint_dir(spark)).path
+
+    def n_round_dirs():
+        return len(glob.glob(os.path.join(root, "**", "cc-rounds-*"), recursive=True))
+
+    edges = [(i, i + 1) for i in range(12)] + [(100, 100 + i) for i in range(1, 6)]
+    pairs = spark.createDataFrame(edges, "id1 long, id2 long")
+    drv = [tuple(r) for r in connected_components(pairs).collect()]
+    before = n_round_dirs()
+    for _ in range(3):
+        dist = connected_components(pairs, driver_threshold=0)
+        assert n_round_dirs() == before
+        assert [tuple(r) for r in dist.collect()] == drv
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        connected_components(pairs, driver_threshold=0, max_rounds=1)
+    assert n_round_dirs() == before
 
 
 def test_split_by_cluster_decoder_follows_engine():

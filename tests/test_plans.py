@@ -314,17 +314,19 @@ def test_bucketed_layout_reattaches_across_sessions(spark):
     layout files must be byte-untouched, the join still exchange-free,
     and the rows identical."""
     import glob
-    import hashlib
     import os
-    from urllib.parse import urlparse
+
+    from edgelake_spark import artifacts
+    from edgelake_spark.queries import _BUCKETS
 
     df1 = SPARK_QUERIES["orders_bucketed_join"](spark, SF_DIR_MED)
     rows1 = sorted(map(tuple, df1.collect()))
-    tag = hashlib.md5(os.path.abspath(SF_DIR_MED).encode()).hexdigest()[:8]
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    locs = [f"{wh}/bucketed_{t}_{tag}" for t in ("orders", "lineitem")]
+    locs = [
+        artifacts.path(spark, os.path.join(SF_DIR_MED, f"{t}.parquet"), f"bucketed_{t}", _BUCKETS)
+        for t in ("orders", "lineitem")
+    ]
     for loc in locs:
-        assert os.path.exists(os.path.join(loc, "_BUCKETS_OK")), loc
+        assert os.path.exists(os.path.join(loc, artifacts.MARKER)), loc
 
     def file_state(loc):
         return sorted(
@@ -334,8 +336,8 @@ def test_bucketed_layout_reattaches_across_sessions(spark):
     before = [file_state(loc) for loc in locs]
     assert all(before), "bucketed files must exist on disk"
     # simulate a fresh session: empty in-memory catalog, files persist
-    for t in ("orders", "lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS bucketed_{t}_{tag}")
+    for loc in locs:
+        spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(loc)}")
     for loc, st in zip(locs, before):
         assert file_state(loc) == st, "DROP of an external table must keep files"
     df2 = SPARK_QUERIES["orders_bucketed_join"](spark, SF_DIR_MED)
