@@ -115,20 +115,6 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def resolve_table(spark: SparkSession, name: str) -> DataFrame:
-    """Resolve ``dbms.table`` or bare ``table`` to a DataFrame.
-
-    EdgeLake scopes tables by logical dbms (edge_lake/dbms/db_info.py:1207);
-    we accept the prefix and fall back to the bare view name, which is how
-    the single-catalog Spark world flattens it.
-    """
-    short = name.split(".")[-1]
-    try:
-        return spark.table(name)
-    except Exception:
-        return spark.table(short)
-
-
 def view_name(name: str) -> str:
     """The Spark-side view name for an EdgeLake ``dbms.table`` reference."""
     return name.split(".")[-1]

@@ -12,7 +12,9 @@ local[32] to a 1000-executor cluster.
 from __future__ import annotations
 
 import itertools
+import os
 import re
+import shutil
 import threading
 from datetime import datetime
 from functools import partial
@@ -30,6 +32,7 @@ from edgelake_spark.eventlog import LOG_SIZES, EventLog
 from edgelake_spark.localframe import local_frame
 from edgelake_spark.output import format_result
 from edgelake_spark.script import _strip_quotes
+from edgelake_spark.txlog import TxTable
 
 _view_counter = itertools.count()
 _job_counter = itertools.count()
@@ -125,6 +128,10 @@ class EdgeLakeEngine:
     #: `limit = 0` opts back into unlimited (paged via toLocalIterator).
     RETRIEVE_CAP = 1000
 
+    #: every append adds a commit stage, one scan-union branch of the
+    #: snapshot read; past this many stages an append folds the small ones
+    FOLD_STAGES = 64
+
     def __init__(
         self,
         spark: SparkSession,
@@ -173,10 +180,9 @@ class EdgeLakeEngine:
         #: (dbms, table) → blobs temp view, fed by `file store`
         #: (reference bucket_dbms.py:110 store_file / :220 retrieve_files)
         self.blob_views: dict[tuple[str, str], str] = {}
-        #: (dbms, table) → {blob_hash: row tuple} — driver-side source of
-        #: truth for the blobs store; the temp view is ONE local_frame
-        #: over these rows (no per-store union lineage, O(1) dup checks)
-        self.blob_rows: dict[tuple[str, str], dict[str, tuple]] = {}
+        #: (dbms, table) → hashes of the stored blobs: the duplicate-hash
+        #: index. The content lives only in the table's TxTable.
+        self.blob_rows: dict[tuple[str, str], set[str]] = {}
         #: sched_id → TaskScheduler (reference task_scheduler.py's
         #: per-id task arrays); wake<=0 keeps schedulers tick-driven
         #: (deterministic — tests call .tick() with an explicit now)
@@ -208,23 +214,20 @@ class EdgeLakeEngine:
         self.connected_dbms: dict[str, list[str]] = {}
         #: topic → node → status struct pushed by `monitor <topic>`
         self.monitor_status: dict[str, dict] = {}
-        #: transactional table layer (txlog.TxTable): DML and the
-        #: log-backed blob store commit versioned parquet snapshots
-        #: here. An EXPLICIT work_dir makes the node durable — a new
-        #: engine on the same work_dir reloads committed state (the
+        #: transactional table layer (txlog.TxTable), "<kind>/<key>" →
+        #: table: DML tables under <work_dir>/dml/<table>, blob stores
+        #: under <work_dir>/blobs/<dbms>.<table>. A new engine on the
+        #: same work_dir re-attaches every committed table (the
         #: reference's operator node persists in its local SQL engine);
-        #: without one, a throwaway temp dir is created on first use.
+        #: without a work_dir, a temp dir removed at exit is made on
+        #: first use.
         self._work_dir_path = work_dir
-        self._durable = work_dir is not None
-        self.tx_tables: dict[str, object] = {}
+        self.tx_tables: dict[str, TxTable] = {}
         self.sf_dir = sf_dir
         if sf_dir:
             catalog.register_sf_tables(spark, sf_dir)
-        if self._durable:
-            # re-attach DML state committed by a previous engine on this
-            # work_dir — without this a restarted node would silently
-            # resolve queries to the raw storage tables (pre-DML data)
-            self._load_dml_tables()
+        if work_dir is not None:
+            self._attach_tables()
 
     def _resolve(self, name: str) -> str:
         if name in self.views:
@@ -530,8 +533,6 @@ class EdgeLakeEngine:
         # reference member_cmd.py:21135 backup table: write the table's
         # data to `dest` as JSON (one file; the reference writes per
         # partition — one logical snapshot here)
-        import os
-
         opts = _where(rest, "table", "dest")
         resolved = self._resolve(
             f"{opts['dbms']}.{opts['table']}" if opts.get("dbms") else opts["table"]
@@ -579,7 +580,6 @@ class EdgeLakeEngine:
     def _get_partitions(self, rest):
         from edgelake_spark.admin import get_partitions
         from edgelake_spark.ingest.partitions import tx_partitions
-        from edgelake_spark.txlog import TxTable
 
         table = _where(rest).get("table")
         rows = []
@@ -603,7 +603,6 @@ class EdgeLakeEngine:
             drop_partitions_before,
             drop_partitions_before_tx,
         )
-        from edgelake_spark.txlog import TxTable
 
         m = _args(r"where\s+table\s*=\s*(\S+)\s+and\s+date\s*<\s*'?([\w-]+)'?", rest)
         if not m:
@@ -630,8 +629,6 @@ class EdgeLakeEngine:
         # reference drop table: remove the operator-local table. Drops
         # the view mappings and the table's commit log (the raw sf_dir
         # parquet is immutable input, never deleted).
-        import shutil
-
         m = _args(r"(\S+)(.*)", rest)
         if not m:
             return None
@@ -641,13 +638,11 @@ class EdgeLakeEngine:
         for alias in [table, key] + ([f"{dbms}.{table}"] if dbms else []):
             if self.views.pop(alias, None) is not None:
                 removed.append(alias)
-        tx = self.tx_tables.pop(f"dml/{key}", None)
-        if tx is not None:
-            shutil.rmtree(tx.path, ignore_errors=True)
-        removed += self._purge_doomed_views({f"__dml_{key}", f"__ingest_{key}"})
+        dropped = self._drop_tx("dml", key)
+        removed += self._purge_doomed_views({f"__ingest_{key}"})
         self.event_log.add("Event", f"Table {table} dropped")
         return local_frame(
-            self.spark, [(table, bool(removed or tx))], "table_name string, dropped boolean"
+            self.spark, [(table, bool(removed) or dropped)], "table_name string, dropped boolean"
         )
 
     @_command("test table", usage="test table <table>|* where dbms = <dbms>")
@@ -690,8 +685,6 @@ class EdgeLakeEngine:
         # sqlite/psql/..`: declare a logical dbms. Here every engine type
         # maps to the parquet layer; `path = <dir>` attaches the
         # directory's parquet files as <name>.<table>
-        import os
-
         m = _args(r"(\S+)\s+where\s+(.*)", rest)
         if not m:
             return None
@@ -721,8 +714,6 @@ class EdgeLakeEngine:
         # disconnect keeps the storage; drop additionally forgets any
         # managed/DML state of the dbms's tables (the raw parquet inputs
         # are immutable and never deleted)
-        import shutil
-
         if not _args(r"\S+", rest):
             return None
         name = rest
@@ -737,26 +728,16 @@ class EdgeLakeEngine:
                 doomed_views.add(target)
         if verb == "drop":
             for qualified in [k for k in self.views if k.startswith(f"{name}.")]:
-                target = self.views.pop(qualified)
+                # an earlier _drop_tx may already have purged this alias
+                target = self.views.pop(qualified, "")
                 if target.startswith("__"):  # engine-managed only —
                     # a `create view` alias may target a base table
                     doomed_views.add(target)
                 # managed/DML state of this dbms's tables: the commit
-                # log is keyed by short name (`dml/<t>`); find it
-                # through the qualified alias target
-                short = qualified.split(".", 1)[1]
-                tx = self.tx_tables.pop(f"dml/{catalog.view_name(short)}", None)
-                if tx is not None:
-                    shutil.rmtree(tx.path, ignore_errors=True)
+                # log is keyed by short name (`dml/<t>`)
+                self._drop_tx("dml", catalog.view_name(qualified))
             for key in [k for k in self.tx_tables if k.startswith(f"blobs/{name}.")]:
-                tx = self.tx_tables.pop(key)
-                shutil.rmtree(tx.path, ignore_errors=True)
-            # the blob registry and its temp views must go with the
-            # logs, or `file retrieve` would scan the rmtree'd path and
-            # re-stores would hit stale duplicate-hash checks
-            for bkey in [k for k in self.blob_views if k[0] == name]:
-                doomed_views.add(self.blob_views.pop(bkey))
-                self.blob_rows.pop(bkey, None)
+                self._drop_tx(*key.split("/", 1))
             self.event_log.add("Event", f"DBMS {name} dropped")
         # purge the doomed temp views and every remaining alias (bare
         # short names included) that still points at them
@@ -1413,8 +1394,6 @@ class EdgeLakeEngine:
     def _run_operator(self, rest):
         # reference member_cmd.py:21740 / members/aloperator.py:
         # watch-dir → table ingest loop; tick-driven here
-        import os
-
         from edgelake_spark.ingest.operator import OperatorNode
 
         opts = _where(rest, "watch_dir")
@@ -1455,8 +1434,6 @@ class EdgeLakeEngine:
         # blobs archiver where dbms = true and folder = true and
         # compress = false and reuse_blobs = true`); tick-driven here
         # (archiver.process_once()) like the task scheduler
-        import os
-
         from edgelake_spark.ingest.archiver import BlobArchiver
 
         opts = _where(rest, "bwatch_dir", "blobs_dir", "archive_dir")
@@ -1517,8 +1494,6 @@ class EdgeLakeEngine:
         # reference utils_io._create_anylog_dirs: the operator node's
         # standard directory tree; root defaults to the engine work dir
         # so a durable node gets its dirs beside the commit logs
-        import os
-
         root = _where(rest).get("root") or self._work_dir()
         names = ("watch", "bwatch", "blobs", "archive", "err", "data", "scripts")
         made = []
@@ -1543,11 +1518,9 @@ class EdgeLakeEngine:
         self.event_log.add("File", f"file store {rest}")
         opts = _where(rest, "table", "file")
         dbms, table = opts.get("dbms", ""), opts["table"]
-        self._load_blobs(dbms, table)
         row = multimodal.file_to_blob_row(opts["file"], opts.get("hash"))
-        view = self._blob_view(dbms, table)
-        rows = self.blob_rows.setdefault((dbms, table), {})
-        if row[0] in rows:
+        hashes = self.blob_rows.setdefault((dbms, table), set())
+        if row[0] in hashes:
             # reference: duplicate key is an error unless
             # ignore_duplicate (multiple rows may point at one blob)
             if _flag(opts, "ignore", False):
@@ -1556,29 +1529,14 @@ class EdgeLakeEngine:
                     "dbms string, table_name string, blob_hash string, n_bytes bigint, stored boolean",
                 )
             raise ValueError(f"duplicate blob hash {row[0]} in {dbms}.{table}")
-        if self._durable:
-            # log-backed blob store: each store is an atomic O(1 blob)
-            # append commit; the view reads the committed parquet
-            # (executor-side), so the driver-side dict keeps only the
-            # dup-check hash key — never the content bytes
-            rows[row[0]] = None
-            tx = self._tx_table("blobs", f"{dbms}.{table}")
-            tx.append(local_frame(self.spark, [row], schema=multimodal.BLOB_SCHEMA))
-            # every append adds a scan-union branch to the snapshot
-            # read; fold the small stages once the chain is deep
-            # (size-gated compact_small — the Delta OPTIMIZE analogue,
-            # not a per-write table rewrite)
-            latest = tx.manifest(tx.latest_version())
-            if len({f.split("/", 2)[1] for f in latest["files"]}) > 64:
-                tx.compact_small(self.spark)
-            tx.read(self.spark).createOrReplaceTempView(view)
-        else:
-            rows[row[0]] = row
-            df = local_frame(
-                self.spark, list(rows.values()), schema=multimodal.BLOB_SCHEMA
-            )
-            df.createOrReplaceTempView(view)
-        self.blob_views[(dbms, table)] = view
+        # each store is an atomic O(1 blob) append commit; the view reads
+        # the committed parquet executor-side, so the driver keeps only
+        # the hash, never the content bytes
+        self.blob_views[(dbms, table)] = self._append(
+            "blobs", f"{dbms}.{table}",
+            local_frame(self.spark, [row], schema=multimodal.BLOB_SCHEMA),
+        )
+        hashes.add(row[0])
         return local_frame(
             self.spark, [(dbms, table, row[0], row[4], True)],
             "dbms string, table_name string, blob_hash string, n_bytes bigint, stored boolean",
@@ -1592,26 +1550,15 @@ class EdgeLakeEngine:
         matching blob content to dest (reference member_cmd.py:19377,
         bucket_dbms.py:220 retrieve_files: hash/name are unique keys →
         one file; otherwise dest is a directory)."""
-        import os
-
         self.event_log.add("File", f"file retrieve {rest}")
         opts = _where(rest)
         dbms, table = opts.get("dbms", ""), opts.get("table", "")
-        self._load_blobs(dbms, table)
         view = self.blob_views.get((dbms, table))
         if view is None:
             raise ValueError(f"no blobs stored for {dbms}.{table}")
         if opts.get("version"):
-            if not self._durable:
-                # returning the latest blobs here would silently answer a
-                # time-travel request with wrong data
-                raise ValueError(
-                    "file retrieve with 'version =' requires a durable "
-                    "node (log-backed blob store); this engine has no "
-                    "work_dir, so no snapshot history exists"
-                )
-            # time-travel retrieve from the log-backed blob store: the
-            # same commit-log versioning the DML layer exposes
+            # time-travel retrieve: the same commit-log versioning the
+            # DML layer exposes
             df = self._tx_table("blobs", f"{dbms}.{table}").read(
                 self.spark, version=int(opts["version"])
             )
@@ -1667,7 +1614,6 @@ class EdgeLakeEngine:
 
     @_command("get files count", usage="get files count [where dbms = .. and table = ..]")
     def _get_files_count(self, rest):
-        self._load_all_blobs()
         flt = _where(rest)
         rows = [
             (dbms, table, len(self.blob_rows.get((dbms, table), ())))
@@ -1721,7 +1667,6 @@ class EdgeLakeEngine:
     @_command("time file {}", verbs=("new", "add"), usage="time file {} <file name> [status1] [status2]")
     def _time_file_new(self, rest, verb):
         # `add` registers a file that must exist; `new` only its name
-        import os
         import shlex
 
         parts = shlex.split(rest)
@@ -1787,7 +1732,6 @@ class EdgeLakeEngine:
         `admin.suggest_create`; `sql_dir` also writes the .sql file the
         reference drops for its SQL loader."""
         import json
-        import os
 
         from edgelake_spark.ingest.infer import infer_schema
 
@@ -2085,66 +2029,97 @@ class EdgeLakeEngine:
             )
         return self.schedulers[sched_id]
 
-    # ------------------------------------------------------------ blobs
+    # ------------------------------------------------------ table store
 
-    def _blob_view(self, dbms: str, table: str) -> str:
-        return f"__blobs_{dbms}_{table}".replace(".", "_")
+    def _work_dir(self) -> str:
+        if self._work_dir_path is None:
+            import atexit
+            import tempfile
 
-    def _load_blobs(self, dbms: str, table: str) -> None:
-        """Durable engines (explicit work_dir): lazily re-attach a blob
-        table committed by a previous engine on the same work_dir. The
-        view reads the committed parquet executor-side; only the hash
-        set (the dup-check index) is collected."""
-        if not self._durable or (dbms, table) in self.blob_views:
-            return
-        tx = self._tx_table("blobs", f"{dbms}.{table}")
-        if not tx.latest_version():
-            return
-        view = self._blob_view(dbms, table)
-        tx.read(self.spark).createOrReplaceTempView(view)
-        self.blob_views[(dbms, table)] = view
-        self.blob_rows[(dbms, table)] = {
-            r.blob_hash: None
-            for r in tx.read(self.spark).select("blob_hash").collect()
-        }
+            self._work_dir_path = tempfile.mkdtemp(prefix="edgelake_tx_")
+            # engines given no work_dir own their throwaway dir: reclaim
+            # it at interpreter exit so repeated gate/bench runs don't
+            # leak table-sized snapshots into /tmp across processes. NOT
+            # GC-tied (weakref.finalize): DataFrames returned by a
+            # short-lived engine lazily scan these files after the
+            # engine is collected — deleting on GC broke every such
+            # deferred read (measured: dml gate FileNotFoundException)
+            atexit.register(shutil.rmtree, self._work_dir_path, ignore_errors=True)
+        return self._work_dir_path
 
-    def _load_dml_tables(self) -> None:
-        """Durable restart: re-register every committed DML table's
-        managed view so queries, time travel, and `get table versions`
-        see the committed state, not the raw storage table."""
-        import os as _os
+    def _tx_table(self, kind: str, key: str) -> TxTable:
+        """Open the TxTable for (kind, key) under the work dir, once."""
+        k = f"{kind}/{key}"
+        t = self.tx_tables.get(k)
+        if t is None:
+            t = TxTable(os.path.join(self._work_dir(), kind, key))
+            self.tx_tables[k] = t
+        return t
 
-        root = _os.path.join(self._work_dir(), "dml")
-        if not _os.path.isdir(root):
-            return
-        for name in sorted(_os.listdir(root)):
-            tx = self._tx_table("dml", name)
-            if not tx.latest_version():
-                continue
-            managed = f"__dml_{name}"
-            tx.read(self.spark).createOrReplaceTempView(managed)
-            self.views[name] = managed
+    @staticmethod
+    def _tx_view(kind: str, key: str) -> str:
+        """The temp view over a table's latest snapshot: ``__dml_<table>``
+        or ``__blobs_<dbms>_<table>``."""
+        return f"__{kind}_{key}".replace(".", "_")
 
-    def _load_all_blobs(self) -> None:
-        """Attach every blob table present under the durable work dir
-        (for `get files count` on a freshly restarted node)."""
-        import os as _os
+    def _attach_tables(self) -> None:
+        """Re-attach every table an earlier engine committed under the
+        work dir: register its view, and for a blob store load the hash
+        set behind the duplicate check. Without this a restarted node
+        would resolve queries to the raw storage tables (pre-DML data)
+        and miss its blob stores."""
+        for kind in ("dml", "blobs"):
+            root = os.path.join(self._work_dir_path, kind)
+            for key in sorted(os.listdir(root)) if os.path.isdir(root) else ():
+                if not self._tx_table(kind, key).latest_version():
+                    continue
+                view = self._publish(kind, key)
+                if kind == "dml":
+                    self.views[key] = view
+                    continue
+                dbms, _, table = key.rpartition(".")
+                self.blob_views[(dbms, table)] = view
+                self.blob_rows[(dbms, table)] = {
+                    r.blob_hash for r in self.spark.table(view).select("blob_hash").collect()
+                }
 
-        if not self._durable:
-            return
-        root = _os.path.join(self._work_dir(), "blobs")
-        if not _os.path.isdir(root):
-            return
-        for entry in sorted(_os.listdir(root)):
-            dbms, _, table = entry.rpartition(".")
-            self._load_blobs(dbms, table)
+    def _publish(self, kind: str, key: str) -> str:
+        """Register the table's latest snapshot as its view; returns the
+        view name."""
+        view = self._tx_view(kind, key)
+        self._tx_table(kind, key).read(self.spark).createOrReplaceTempView(view)
+        return view
+
+    def _append(self, kind: str, key: str, df: DataFrame, meta: dict | None = None) -> str:
+        """Commit ``df`` as an append, fold the small stages once the
+        manifest spans more than FOLD_STAGES, and publish the view. The
+        fold rewrites only the small files, never the table, so an append
+        stays O(new rows)."""
+        tx = self._tx_table(kind, key)
+        tx.append(df, meta=meta)
+        latest = tx.manifest(tx.latest_version())
+        if len({f.split("/", 2)[1] for f in latest["files"]}) > self.FOLD_STAGES:
+            tx.compact_small(self.spark)
+        return self._publish(kind, key)
+
+    def _drop_tx(self, kind: str, key: str) -> bool:
+        """Forget a table: pop its TxTable, delete its directory, and
+        purge its view and every alias of it (a blob store also leaves
+        the blob registry). Returns whether the table existed."""
+        tx = self.tx_tables.pop(f"{kind}/{key}", None)
+        if tx is not None:
+            shutil.rmtree(tx.path, ignore_errors=True)
+        if kind == "blobs":
+            dbms, _, table = key.rpartition(".")
+            self.blob_views.pop((dbms, table), None)
+            self.blob_rows.pop((dbms, table), None)
+        self._purge_doomed_views({self._tx_view(kind, key)})
+        return tx is not None
 
     def attach_partitioned(self, name: str, path: str) -> None:
         """Register a time-partitioned dataset (written via
         ingest.partitions.write_partitioned, or log-backed via
         write_partitioned_tx) under a table name."""
-        from edgelake_spark.txlog import TxTable
-
         self.partitioned_paths[name] = path
         df = (
             TxTable(path).read(self.spark)
@@ -2300,36 +2275,6 @@ class EdgeLakeEngine:
 
         return resolve
 
-    def _work_dir(self) -> str:
-        if self._work_dir_path is None:
-            import atexit
-            import shutil
-            import tempfile
-
-            self._work_dir_path = tempfile.mkdtemp(prefix="edgelake_tx_")
-            # non-durable engines own their throwaway dir: reclaim it at
-            # interpreter exit so repeated gate/bench runs don't leak
-            # table-sized snapshots into /tmp across processes. NOT
-            # GC-tied (weakref.finalize): DataFrames returned by a
-            # short-lived engine lazily scan these files after the
-            # engine is collected — deleting on GC broke every such
-            # deferred read (measured: dml gate FileNotFoundException)
-            atexit.register(shutil.rmtree, self._work_dir_path, ignore_errors=True)
-        return self._work_dir_path
-
-    def _tx_table(self, kind: str, key: str):
-        """Lazily open the TxTable for (kind, key) under the work dir."""
-        import os as _os
-
-        from edgelake_spark.txlog import TxTable
-
-        k = f"{kind}/{key}"
-        t = self.tx_tables.get(k)
-        if t is None:
-            t = TxTable(_os.path.join(self._work_dir(), kind, key))
-            self.tx_tables[k] = t
-        return t
-
     def _managed_snapshot(self, table: str) -> str:
         """Copy-on-first-write onto the transactional table layer: the
         first DML snapshots the underlying table as version 1 of a
@@ -2338,10 +2283,12 @@ class EdgeLakeEngine:
         the `version =` / `as_of =` query options and history via
         `get table versions`. (Reference: DML runs on the operator's
         local DB — member_cmd.py:159-165 sql_commands; durability
-        re-expressed as snapshot isolation over immutable parquet.)"""
+        re-expressed as snapshot isolation over immutable parquet.)
+        Returns the table's key under ``dml/``."""
+        key = catalog.view_name(table)
         resolved = self._resolve(table)
-        managed = f"__dml_{catalog.view_name(table)}"
-        tx = self._tx_table("dml", catalog.view_name(table))
+        managed = self._tx_view("dml", key)
+        tx = self._tx_table("dml", key)
         if (
             tx.latest_version() == 0
             and resolved != managed
@@ -2350,30 +2297,10 @@ class EdgeLakeEngine:
             tx.overwrite(self.spark.table(resolved), op="snapshot")
         if resolved != managed:
             self.views[table] = managed
-            self.views[catalog.view_name(table)] = managed
+            self.views[key] = managed
         if tx.latest_version():
-            tx.read(self.spark).createOrReplaceTempView(managed)
-        return managed
-
-    def _tx_commit(self, table: str, df: DataFrame, op: str, append: bool = False):
-        """Commit one DML statement's result and refresh the managed
-        view. ``append`` is the O(new rows) fast path (INSERT with a
-        schema-conforming row); otherwise copy-on-write of the state."""
-        tx = self._tx_table("dml", catalog.view_name(table))
-        if append:
-            tx.append(df, meta={"op": op})
-            # long INSERT chains deepen the snapshot's scan union; fold
-            # the SMALL stages once the chain is deep (compact_small is
-            # O(small-file data), never a table rewrite — a full-compact
-            # trigger would break the O(1 row) INSERT contract)
-            latest = tx.manifest(tx.latest_version())
-            if len({f.split("/", 2)[1] for f in latest["files"]}) > 64:
-                tx.compact_small(self.spark)
-        else:
-            tx.overwrite(df, op=op)
-        managed = f"__dml_{catalog.view_name(table)}"
-        tx.read(self.spark).createOrReplaceTempView(managed)
-        return self.spark.table(managed)
+            self._publish("dml", key)
+        return key
 
     def _try_dml(self, statement: str):
         text = statement.strip().rstrip(";")
@@ -2386,7 +2313,8 @@ class EdgeLakeEngine:
             from edgelake_spark.dialect.parser import split_top_level
 
             table, cols, values = m.group(1), m.group(2), m.group(3)
-            view = self._managed_snapshot(table)
+            key = self._managed_snapshot(table)
+            view = self._tx_view("dml", key)
             col_names = [c.strip() for c in cols.split(",")]
             exprs = ", ".join(
                 f"{v.strip()} AS {c}" for c, v in zip(col_names, split_top_level(values))
@@ -2400,12 +2328,13 @@ class EdgeLakeEngine:
                 # 100 TB table an INSERT must never rewrite the table
                 conformed = base.limit(0).unionByName(row, allowMissingColumns=True)
                 if conformed.schema == base.schema:
-                    return self._tx_commit(table, conformed, "insert", append=True)
+                    return self.spark.table(self._append("dml", key, conformed, {"op": "insert"}))
                 # schema evolution (new columns): copy-on-write
-                return self._tx_commit(
-                    table, base.unionByName(row, allowMissingColumns=True), "insert"
+                self._tx_table("dml", key).overwrite(
+                    base.unionByName(row, allowMissingColumns=True), op="insert"
                 )
-            return self._tx_commit(table, row, "insert", append=True)
+                return self.spark.table(self._publish("dml", key))
+            return self.spark.table(self._append("dml", key, row, {"op": "insert"}))
         m = re.match(
             r"merge\s+into\s+(\S+)\s+using\s+\((.*)\)\s+on\s+([\w\s,]+)$",
             text,
@@ -2418,28 +2347,24 @@ class EdgeLakeEngine:
             # source row, unmatched source rows insert; file-granular
             # copy-on-write (txlog.merge_upsert).
             table, source_sql, keys = m.group(1), m.group(2), m.group(3)
-            view = self._managed_snapshot(table)
+            key = self._managed_snapshot(table)
             key_cols = [k.strip() for k in keys.split(",") if k.strip()]
             # the source subquery resolves through the engine (dialect
             # rewriting + managed-view indirection), so it sees DML'd
             # state, not the raw storage table
             source = self.query(source_sql)
-            tx = self._tx_table("dml", catalog.view_name(table))
-            tx.merge_upsert(self.spark, source, key_cols)
-            tx.read(self.spark).createOrReplaceTempView(view)
-            return self.spark.table(view)
+            self._tx_table("dml", key).merge_upsert(self.spark, source, key_cols)
+            return self.spark.table(self._publish("dml", key))
         m = re.match(r"delete\s+from\s+(\S+)(?:\s+where\s+(.*))?$", text, re.IGNORECASE | re.DOTALL)
         if m:
             table, cond = m.group(1), m.group(2)
-            view = self._managed_snapshot(table)
+            key = self._managed_snapshot(table)
             # file-granular copy-on-write (txlog.delete_where): only the
             # files holding matching rows are rewritten — a DELETE of
             # one partition's rows from a 100 TB table moves that
             # partition, not the table
-            tx = self._tx_table("dml", catalog.view_name(table))
-            tx.delete_where(self.spark, cond)
-            tx.read(self.spark).createOrReplaceTempView(view)
-            return self.spark.table(view)
+            self._tx_table("dml", key).delete_where(self.spark, cond)
+            return self.spark.table(self._publish("dml", key))
         m = re.match(
             r"update\s+(\S+)\s+set\s+(.*?)(?:\s+where\s+(.*))?$", text, re.IGNORECASE | re.DOTALL
         )
@@ -2447,7 +2372,7 @@ class EdgeLakeEngine:
             from edgelake_spark.dialect.parser import split_top_level
 
             table, sets, cond = m.group(1), m.group(2), m.group(3)
-            view = self._managed_snapshot(table)
+            key = self._managed_snapshot(table)
             # SQL UPDATE evaluates every RHS against the pre-update row:
             # txlog.update_where builds all assignments first and applies
             # them in ONE select (so `set a = b, b = a` swaps instead of
@@ -2456,10 +2381,8 @@ class EdgeLakeEngine:
             for assignment in split_top_level(sets):
                 col, _, expr = assignment.partition("=")
                 assignments[col.strip()] = expr.strip()
-            tx = self._tx_table("dml", catalog.view_name(table))
-            tx.update_where(self.spark, assignments, cond)
-            tx.read(self.spark).createOrReplaceTempView(view)
-            return self.spark.table(view)
+            self._tx_table("dml", key).update_where(self.spark, assignments, cond)
+            return self.spark.table(self._publish("dml", key))
         return None
 
     def _build_union_view(self, cmd: SqlCommand) -> tuple[str, list[str]]:

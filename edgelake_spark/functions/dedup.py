@@ -88,14 +88,6 @@ def duck_shingles_over(toks: str) -> str:
     )
 
 
-def spark_shingles(col: str) -> str:
-    return spark_shingles_over(spark_tokens(col))
-
-
-def duck_shingles(col: str) -> str:
-    return duck_shingles_over(duck_tokens(col))
-
-
 def spark_word_grams_over(toks: str, k: int) -> str:
     """Word k-grams over a pre-staged token column (generalized
     shingle builder; k is a query-time choice, e.g. decontamination
@@ -352,10 +344,6 @@ def duck_char_ngrams_over(norm: str) -> str:
         f"list_distinct([({norm})[i:i+{n - 1}] "
         f"for i in range(1, greatest(length({norm}) - {n - 1}, 1) + 1)])"
     )
-
-
-def spark_char_ngrams(col: str) -> str:
-    return spark_char_ngrams_over(spark_normalize(col))
 
 
 def duck_char_ngrams(col: str) -> str:

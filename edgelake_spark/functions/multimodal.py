@@ -4,8 +4,8 @@ EdgeLake stores images/video/files in blob stores keyed by content hash
 and references them from rows (edge_lake/dbms/bucket_dbms.py:110
 store_file, :220 retrieve_files; mongodb_dbms.py:69; base64 extraction
 in map_json_to_insert.py:240 apply_blob_storage). Spark mapping: a
-blobs table with a BinaryType ``content`` column + metadata, loadable
-via the binaryFile source; per-blob compute (decode / resize /
+blobs table with a BinaryType ``content`` column + metadata, built from
+files by ``file_to_blob_row``; per-blob compute (decode / resize /
 frame-sample / feature-extract) runs as Arrow-batched ``mapInPandas``
 so bytes stream through Python in batches, never row-at-a-time.
 
@@ -24,7 +24,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from edgelake_spark.localframe import local_frame
@@ -52,20 +51,6 @@ def store_blobs(spark: SparkSession, rows: list[tuple[bytes, str, str]]) -> Data
         for content, media_type, name in rows
     ]
     return local_frame(spark, data, schema=BLOB_SCHEMA)
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Directory of files → blobs table via the binaryFile source."""
-    df = (
-        spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    )
-    return df.select(
-        F.sha2(F.col("content"), 256).alias("blob_hash"),
-        F.lit("file").alias("media_type"),
-        F.col("path").alias("source_name"),
-        F.col("content"),
-        F.col("length").alias("n_bytes"),
-    )
 
 
 _MEDIA_EXT = {

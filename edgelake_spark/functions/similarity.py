@@ -19,23 +19,6 @@ CENTROID_STRIDE = 47  # vec_id % 47 == 0 → deterministic centroid subset
 NPROBE = 2
 
 
-def spark_cosine(a: str, b: str) -> str:
-    da = f"transform({a}, x -> CAST(x AS DOUBLE))"
-    db = f"transform({b}, x -> CAST(x AS DOUBLE))"
-    dot = f"aggregate(zip_with({da}, {db}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    na = f"sqrt(aggregate({da}, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x))"
-    nb = f"sqrt(aggregate({db}, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x))"
-    return f"({dot} / ({na} * {nb}))"
-
-
-def duck_cosine(a: str, b: str) -> str:
-    # index-order accumulation to mirror Spark's aggregate() exactly
-    dot = f"list_sum([({a})[i]::DOUBLE * ({b})[i]::DOUBLE for i in range(1, len({a}) + 1)])"
-    na = f"sqrt(list_sum([x::DOUBLE * x::DOUBLE for x in {a}]))"
-    nb = f"sqrt(list_sum([x::DOUBLE * x::DOUBLE for x in {b}]))"
-    return f"({dot} / ({na} * {nb}))"
-
-
 # --- staged variant: cast + norm computed ONCE per vector -------------
 #
 # Spark's higher-order functions are interpreted; recomputing the

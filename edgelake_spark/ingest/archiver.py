@@ -7,8 +7,8 @@ row file into the watch dir for ingest), utils_io.py:2459 archive_file
 (archive/YY/MM/DD layout, optional compression) and :20711
 ``get archived files [YYYY-MM-DD]``.
 
-Spark re-expression: the blob lands in the engine's (optionally
-log-backed, txlog.py) blob store via the same ``file store`` path the
+Spark re-expression: the blob lands in the engine's log-backed
+(txlog.py) blob store via the same ``file store`` path the
 command surface uses; archive placement is the identical YY/MM/DD tree
 with gzip compression; the emitted row file feeds the existing
 watch-dir ingest (streaming/ingest.py); and every processed descriptor
@@ -27,13 +27,14 @@ alarchiver.py:258-280)::
 
 from __future__ import annotations
 
-import gzip
 import hashlib
 import json
 import os
 import shutil
 from dataclasses import dataclass, field
 from datetime import datetime
+
+from edgelake_spark.ingest.operator import archive_file
 
 
 @dataclass
@@ -147,7 +148,7 @@ class BlobArchiver:
                 ).collect()[0]
                 info["file"] = res.blob_hash  # row carries the content hash
             if self.archive_folder:
-                self._archive_blob(blob_path, date_key)
+                archive_file(blob_path, self.archive_dir, date_key, self.compress)
             elif self.update_dbms:
                 os.unlink(blob_path)  # stored in the DBMS, drop the file
             stat["ok"] += 1
@@ -165,23 +166,6 @@ class BlobArchiver:
             fh.write(payload)
         # TSD provenance row for the emitted file
         self.engine.tsd().register(out_name, status1="archived")
-
-    def _archive_blob(self, blob_path: str, date_key: str) -> str:
-        """archive/YY/MM/DD/<name>[.gz] — utils_io.archive_file's tree."""
-        day_dir = os.path.join(
-            self.archive_dir, date_key[0:2], date_key[2:4], date_key[4:6]
-        )
-        os.makedirs(day_dir, exist_ok=True)
-        base = os.path.basename(blob_path)
-        if self.compress:
-            dst = os.path.join(day_dir, base + ".gz")
-            with open(blob_path, "rb") as src, gzip.open(dst, "wb") as out:
-                shutil.copyfileobj(src, out)
-            os.unlink(blob_path)
-        else:
-            dst = os.path.join(day_dir, base)
-            shutil.move(blob_path, dst)
-        return dst
 
     # -------------------------------------------------------- readback
 

@@ -27,6 +27,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass, field
+from datetime import datetime
 
 
 @dataclass
@@ -117,7 +118,8 @@ class OperatorNode:
         # source beside the err files under a distinct prefix instead
         try:
             if self.archive_json:
-                self._archive_file(path)
+                now = getattr(eng, "now", None) or datetime.utcnow()
+                archive_file(path, self.archive_dir, now.strftime("%y%m%d"), self.compress_json)
             else:
                 os.unlink(path)
         except Exception as exc:
@@ -134,31 +136,30 @@ class OperatorNode:
                     self._ingested_stuck.add(path)
         return len(rows)
 
-    def _archive_file(self, path: str) -> str:
-        """archive/YY/MM/DD tree, gzip when compress_json (same layout
-        as utils_io.archive_file / the blobs archiver)."""
-        from datetime import datetime
-
-        now = getattr(self.engine, "now", None) or datetime.utcnow()
-        key = now.strftime("%y%m%d")
-        day_dir = os.path.join(self.archive_dir, key[0:2], key[2:4], key[4:6])
-        os.makedirs(day_dir, exist_ok=True)
-        base = os.path.basename(path)
-        if self.compress_json:
-            dst = os.path.join(day_dir, base + ".gz")
-            with open(path, "rb") as src, gzip.open(dst, "wb") as out:
-                shutil.copyfileobj(src, out)
-            os.unlink(path)
-        else:
-            dst = os.path.join(day_dir, base)
-            shutil.move(path, dst)
-        return dst
-
     def status(self) -> tuple:
         return (
             self.files_processed, self.files_errored, self.rows_ingested,
             self.last_error,
         )
+
+
+def archive_file(path: str, archive_dir: str, date_key: str, compress: bool) -> str:
+    """Move ``path`` into ``archive_dir/YY/MM/DD/`` (``date_key`` starts
+    with ``YYMMDD``), gzipped as ``<name>.gz`` when ``compress`` — the
+    tree of the reference's utils_io.archive_file, shared by the
+    operator and the blobs archiver. Returns the archived path."""
+    day_dir = os.path.join(archive_dir, date_key[0:2], date_key[2:4], date_key[4:6])
+    os.makedirs(day_dir, exist_ok=True)
+    base = os.path.basename(path)
+    if compress:
+        dst = os.path.join(day_dir, base + ".gz")
+        with open(path, "rb") as src, gzip.open(dst, "wb") as out:
+            shutil.copyfileobj(src, out)
+        os.unlink(path)
+    else:
+        dst = os.path.join(day_dir, base)
+        shutil.move(path, dst)
+    return dst
 
 
 def delete_archive_before(archive_dir: str, cutoff_ymd: tuple[str, str, str]) -> list[str]:

@@ -47,6 +47,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 from edgelake_spark.checkpoint import materialize as _materialize
+from edgelake_spark.localframe import local_frame
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
@@ -278,7 +279,7 @@ class TxTable:
         m = self.manifest(self._resolve_version(version, timestamp))
         schema = StructType.fromJson(json.loads(m["schema"]))
         if not m["files"]:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         groups: dict[str, list[str]] = {}
         for f in m["files"]:
             stage = f.split("/", 2)[1]  # data/<stage>/...

@@ -15,10 +15,6 @@ from tests.conftest import SF_DIR
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "edgelake_spark"
 
-#: list-based createDataFrame calls that stay for now: the empty snapshot
-#: frame of the transaction log (its conversion belongs with txlog work)
-ALLOWED = {("txlog.py", "TxTable.read")}
-
 
 def _leaf_classes(df) -> list[str]:
     leaves = df._jdf.queryExecution().analyzed().collectLeaves()
@@ -160,5 +156,5 @@ def _create_dataframe_calls() -> set[tuple[str, str]]:
 def test_no_list_based_create_dataframe_outside_the_helper():
     calls = _create_dataframe_calls()
     assert ("localframe.py", "local_frame") in calls
-    stray = calls - {("localframe.py", "local_frame")} - ALLOWED
+    stray = calls - {("localframe.py", "local_frame")}
     assert not stray, f"build driver-side rows with localframe.local_frame: {sorted(stray)}"

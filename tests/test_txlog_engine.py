@@ -82,7 +82,7 @@ def test_durable_blob_store_survives_restart(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate"):
         eng2.run(f"file store where dbms = bl and table = cam and file = {a}")
 
-    # non-durable engine (no work_dir) keeps the in-memory fast path
+    # an engine given no work_dir starts on an empty temp dir
     eng3 = EdgeLakeEngine(spark)
     assert eng3.run("get files count").collect() == []
 
@@ -150,16 +150,16 @@ def test_blob_retrieve_time_travel(spark, tmp_path):
     ).collect()
     assert sorted(o.source_name for o in out) == ["a.bin", "b.bin"]
 
-    # a NON-durable engine has no snapshot history: a version request
-    # must error, not silently return the latest blobs
-    import pytest
-
+    # an engine given no work_dir keeps the same history in its temp dir
     eng2 = EdgeLakeEngine(spark)
     eng2.run(f"file store where dbms = d and table = t and file = {a}")
-    with pytest.raises(ValueError, match="durable"):
-        eng2.run(
-            f"file retrieve where dbms = d and table = t and version = 1 and dest = {tmp_path / 'nv'}"
-        )
+    eng2.run(f"file store where dbms = d and table = t and file = {b}")
+    nv = tmp_path / "nv"
+    out = eng2.run(
+        f"file retrieve where dbms = d and table = t and version = 1 and dest = {nv}"
+    ).collect()
+    assert [(o.source_name, o.dest) for o in out] == [("a.bin", str(nv))]
+    assert nv.read_bytes() == b"first"
 
 
 def test_insert_schema_evolution_null_fills_history(spark, tmp_path):
@@ -321,3 +321,67 @@ def test_durable_work_dir_survives_gc(spark, tmp_path):
     del eng
     gc.collect()
     assert os.path.isdir(wd)
+
+
+def test_restarted_engine_lists_blob_store_versions(spark, tmp_path):
+    """A restarted node's `get table versions` lists the blob store it
+    committed before the restart, next to its DML table."""
+    wd = str(tmp_path / "node")
+    p = tmp_path / "x.bin"
+    p.write_bytes(b"x")
+    eng1 = EdgeLakeEngine(spark, work_dir=wd)
+    eng1.run(f"file store where dbms = bl and table = cam and file = {p}")
+    eng1.run('sql d "insert into gauges (k) values (1)"')
+
+    eng2 = EdgeLakeEngine(spark, work_dir=wd)
+    rows = eng2.run("get table versions").collect()
+    assert sorted((r.store, r.table_name, r.version, r.op) for r in rows) == [
+        ("blobs", "bl.cam", 1, "append"), ("dml", "gauges", 1, "append"),
+    ]
+
+
+def test_drop_dbms_on_restarted_engine_deletes_blob_store(spark, tmp_path):
+    """`drop dbms` on a restarted node deletes the blob store committed
+    before the restart: no files on that engine, nor after another
+    restart on the same work_dir."""
+    wd = str(tmp_path / "node")
+    p = tmp_path / "img.png"
+    p.write_bytes(b"png-bytes")
+    EdgeLakeEngine(spark, work_dir=wd).run(
+        f"file store where dbms = bl and table = cam and file = {p}"
+    )
+
+    eng2 = EdgeLakeEngine(spark, work_dir=wd)
+    eng2.run("drop dbms bl")
+    assert eng2.run("get files count").collect() == []
+    assert EdgeLakeEngine(spark, work_dir=wd).run("get files count").collect() == []
+
+
+def test_appends_fold_small_stages(spark, tmp_path, monkeypatch):
+    """Past FOLD_STAGES commit stages an append folds the small ones, for
+    DML inserts and blob stores alike; every row still reads back."""
+    monkeypatch.setattr(EdgeLakeEngine, "FOLD_STAGES", 4)
+    eng = EdgeLakeEngine(spark, work_dir=str(tmp_path / "node"))
+
+    def stages(key):
+        tx = eng.tx_tables[key]
+        return len({f.split("/", 2)[1] for f in tx.manifest(tx.latest_version())["files"]})
+
+    for i in range(6):
+        eng.run(f'sql d "insert into gauges (k) values ({i})"')
+        assert stages("dml/gauges") <= 4
+        p = tmp_path / f"f{i}.bin"
+        p.write_bytes(f"blob {i}".encode())
+        eng.run(f"file store where dbms = d and table = t and file = {p}")
+        assert stages("blobs/d.t") <= 4
+
+    for key in ("dml/gauges", "blobs/d.t"):
+        assert "compact" in [m["op"] for m in eng.tx_tables[key].history()]
+    assert sorted(r.k for r in eng.query("select k from gauges").collect()) == list(range(6))
+    dest = tmp_path / "out"
+    out = eng.run(
+        f"file retrieve where dbms = d and table = t and limit = 0 and dest = {dest}"
+    ).collect()
+    assert sorted((o.source_name, (dest / o.source_name).read_bytes()) for o in out) == [
+        (f"f{i}.bin", f"blob {i}".encode()) for i in range(6)
+    ]

@@ -44,11 +44,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def executor_pids() -> list[int]:
-    """PIDs of live executor JVMs (exist only in local-cluster /
-    standalone mode — local[*] runs everything in the driver JVM)."""
+def executor_pids(app_id: str) -> list[int]:
+    """PIDs of the live executor JVMs of application ``app_id`` (they
+    exist only in local-cluster / standalone mode — local[*] runs
+    everything in the driver JVM). Executors of other Spark
+    applications on the host are left out: their command line carries
+    another ``--app-id``."""
     out = subprocess.run(
-        ["pgrep", "-f", "CoarseGrainedExecutorBackend"],
+        ["pgrep", "-f", f"CoarseGrainedExecutorBackend .*--app-id {app_id}( |$)"],
         capture_output=True,
         text=True,
     )
@@ -84,7 +87,7 @@ class Killer(threading.Thread):
                 self.error = "no active stage within 60s"
                 return
             time.sleep(self.settle_s)  # let tasks land on both executors
-            pids = executor_pids()
+            pids = executor_pids(self.sc.applicationId)
             if not pids:
                 self.error = "no executor processes found"
                 return
@@ -195,10 +198,11 @@ def main() -> None:
     }
     try:
         # make sure both executors registered before timing anything
+        app_id = spark.sparkContext.applicationId
         deadline = time.time() + 120
-        while len(executor_pids()) < 2 and time.time() < deadline:
+        while len(executor_pids(app_id)) < 2 and time.time() < deadline:
             time.sleep(0.5)
-        report["executors_at_start"] = len(executor_pids())
+        report["executors_at_start"] = len(executor_pids(app_id))
 
         for name, fn in (("dedup_clusters_distributed", run_cc), ("emb_pca_power", run_pca)):
             base = drill(name, fn, spark, with_kill=False)
