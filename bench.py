@@ -1,14 +1,21 @@
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
-on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+on local[$SPARK_GRAFT_CPUS]. Writes the full result (per-query medians,
+samples, sf1 section) to BENCH_FULL.json next to this script and prints
+ONE short JSON line last (see ``summary_line``):
+{"metric": ..., "value": total_sec, "unit": "sec", "n_queries": ...,
+ "geomean_sec": ..., "cpus": ..., "sf": ..., "degraded": ..., "full": path}
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
+
+#: where main() writes the full result; the printed line names it
+FULL_RESULT_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
 
 
 BENCH_QUERIES = [
@@ -550,6 +557,7 @@ def main() -> None:
         ),
         # samples actually taken per query (pass-interleaved; min 1)
         "samples_per_query": {n: len(w) for n, w in all_runs.items()},
+        "cpus": cpus,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if sf1_timings is not None:
@@ -562,7 +570,29 @@ def main() -> None:
             },
         }
 
-    print(json.dumps(result))
+    with open(FULL_RESULT_PATH, "w") as fh:
+        json.dump(result, fh)
+    print(summary_line(result, FULL_RESULT_PATH))
+
+
+def summary_line(result: dict, full_path: str) -> str:
+    """The last stdout line: the headline numbers and the path of the
+    full result. It stays short (well under 1,500 chars) however many
+    queries run, so a consumer that keeps only the tail of stdout still
+    parses it; the per-query map lives in the full file."""
+    walls = [v for v in result["queries"].values() if v > 0]
+    geomean = math.exp(sum(map(math.log, walls)) / len(walls)) if walls else 0.0
+    return json.dumps({
+        "metric": result["metric"],
+        "value": result["value"],
+        "unit": result["unit"],
+        "n_queries": len(result["queries"]),
+        "geomean_sec": round(geomean, 4),
+        "cpus": result["cpus"],
+        "sf": result["sf"],
+        "degraded": len(result["degraded_to_single_run"]),
+        "full": full_path,
+    })
 
 
 #: one representative per headline plan family: broadcast join+agg,

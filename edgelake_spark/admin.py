@@ -1,24 +1,23 @@
 """Admin/metadata command surface: create view, get rows count,
-get partitions, info table columns, suggest create.
+info table columns, suggest create (`get partitions` lives with the
+partitioned TxTables in ingest/partitions.py).
 
 Reference: edge_lake/cmd/member_cmd.py — `create view` :21065-21079
 (column renaming via `using`, NULL padding via `not used`),
-`get rows count [where ... group = table]` :16740, `get partitions`
-(db_info.py:747-854), `info table ... columns` :21000, `suggest create`
+`get rows count [where ... group = table]` :16740,
+`info table ... columns` :21000, `suggest create`
 :21193 (via suggest_create_table.py).
 """
 
 from __future__ import annotations
 
 import re
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from edgelake_spark.dialect.parser import split_top_level
 from edgelake_spark.ingest.infer import infer_schema
-from edgelake_spark.ingest.partitions import PARTITION_COL
 from edgelake_spark.localframe import local_frame
 
 _SQL_TYPE_RE = re.compile(
@@ -120,16 +119,6 @@ def rows_count(spark: SparkSession, tables: list[str]) -> DataFrame:
         f"SELECT '{t}' AS table_name, count(*) AS n_rows FROM {t}" for t in tables
     ]
     return spark.sql(" UNION ALL ".join(parts) + " ORDER BY table_name")
-
-
-def get_partitions(path: str) -> list[str]:
-    """`get partitions` for a partitioned dataset — the bucket values
-    (the reference lists par_ tables, db_info.py:747-854)."""
-    return sorted(
-        d.name.split("=", 1)[1]
-        for d in Path(path).glob(f"{PARTITION_COL}=*")
-        if d.is_dir()
-    )
 
 
 def info_table_columns(spark: SparkSession, table: str) -> DataFrame:

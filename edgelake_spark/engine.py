@@ -302,7 +302,8 @@ class EdgeLakeEngine:
     def _plan_destinations(plan: str) -> list[dict]:
         """File-scan destinations from a formatted physical plan: one
         dict per scan with the location root, the table name (path
-        basename), and the scan-time pruning predicates. Non-file scans
+        basename, or a TxTable's root), and the scan-time pruning
+        predicates. Non-file scans
         (checkpointed intermediates, in-memory relations) are reported
         as a single ``memory`` destination so a query never vanishes
         from the report."""
@@ -316,6 +317,11 @@ class EdgeLakeEngine:
                 first_path = loc.group(1).split(",")[0].strip()
                 if not first_path:
                     continue
+                # a TxTable read lists files under <root>/data/<stage>/:
+                # the destination is the table root
+                tx_root = re.match(r"(.*)/data/[0-9a-f]{16}/", first_path)
+                if tx_root:
+                    first_path = tx_root.group(1)
                 table = first_path.rstrip("/").rsplit("/", 1)[-1]
                 table = re.sub(r"\.(parquet|csv|json|orc)$", "", table)
                 filters = []
@@ -578,7 +584,6 @@ class EdgeLakeEngine:
 
     @_command("get partitions", usage="get partitions [where table = ..]")
     def _get_partitions(self, rest):
-        from edgelake_spark.admin import get_partitions
         from edgelake_spark.ingest.partitions import tx_partitions
 
         table = _where(rest).get("table")
@@ -586,12 +591,7 @@ class EdgeLakeEngine:
         for name, path in sorted(self.partitioned_paths.items()):
             if table and catalog.view_name(name) != catalog.view_name(table):
                 continue
-            buckets = (
-                tx_partitions(TxTable(path))
-                if TxTable.exists(path)
-                else get_partitions(path)
-            )
-            for bucket in buckets:
+            for bucket in tx_partitions(TxTable(path)):
                 rows.append((name, bucket))
         return local_frame(
             self.spark, rows or [], "table_name string, partition string"
@@ -599,26 +599,16 @@ class EdgeLakeEngine:
 
     @_command("drop partition", usage="drop partition where table = <table> and date < <YYYY-MM[-DD]>")
     def _drop_partition(self, rest):
-        from edgelake_spark.ingest.partitions import (
-            drop_partitions_before,
-            drop_partitions_before_tx,
-        )
+        from edgelake_spark.ingest.partitions import drop_partitions_before_tx
 
         m = _args(r"where\s+table\s*=\s*(\S+)\s+and\s+date\s*<\s*'?([\w-]+)'?", rest)
         if not m:
             return None
         table, cutoff = m.group(1), m.group(2)
         path = self.partitioned_paths[table]
-        if TxTable.exists(path):
-            # log-backed dataset: the drop is a manifest edit (no
-            # file deletes); prior versions still read the buckets
-            dropped = drop_partitions_before_tx(TxTable(path), cutoff)
-        else:
-            dropped = drop_partitions_before(self.spark, path, cutoff)
-            # the temp view's cached file index still lists the
-            # deleted files — refresh or the next query on the
-            # table dies with FileNotFoundException
-            self.spark.catalog.refreshByPath(path)
+        # the drop is a manifest edit (no file deletes); prior versions
+        # still read the buckets
+        dropped = drop_partitions_before_tx(TxTable(path), cutoff)
         self.attach_partitioned(table, path)
         return local_frame(
             self.spark, [(b,) for b in dropped] or [], "dropped_partition string"
@@ -2117,16 +2107,15 @@ class EdgeLakeEngine:
         return tx is not None
 
     def attach_partitioned(self, name: str, path: str) -> None:
-        """Register a time-partitioned dataset (written via
-        ingest.partitions.write_partitioned, or log-backed via
-        write_partitioned_tx) under a table name."""
+        """Register a time-partitioned TxTable (written via
+        ingest.partitions.write_partitioned_tx) under a table name."""
+        if not TxTable.exists(path):
+            raise ValueError(
+                f"attach_partitioned: {path} has no commit log; write it "
+                "with ingest.partitions.write_partitioned_tx"
+            )
         self.partitioned_paths[name] = path
-        df = (
-            TxTable(path).read(self.spark)
-            if TxTable.exists(path)
-            else self.spark.read.parquet(path)
-        )
-        df.createOrReplaceTempView(catalog.view_name(name))
+        TxTable(path).read(self.spark).createOrReplaceTempView(catalog.view_name(name))
 
     # ----------------------------------------------------------- internal
 

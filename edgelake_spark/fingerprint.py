@@ -8,8 +8,9 @@ was rewritten after its last green run and never re-checked). This
 module keys verification on *content*: a gate's fingerprint covers its
 DuckDB oracle SQL text and the Spark callable's code — compiled
 bytecode, constants, closure cells (where the dialect/SQL strings
-live), and directly referenced helper functions inside
-``edgelake_spark`` (depth-limited so an engine-wide refactor does not
+live), and helper functions inside ``edgelake_spark`` it references
+directly, through a module attribute, or through a function-local
+``from ... import`` (depth-limited so an engine-wide refactor does not
 flood the window; the engine has its own pytest + plan-shape coverage).
 
 ``VERIFIED_GATES.json`` at the repo root maps each gate to the list of
@@ -24,7 +25,9 @@ history (one snapshot import per recorded round).
 
 from __future__ import annotations
 
+import dis
 import hashlib
+import importlib
 import types
 
 _MAX_DEPTH = 2  # gate fn -> direct helper fns; deeper layers are named only
@@ -104,6 +107,13 @@ def _update_value(h, val, seen: set, depth: int) -> None:
         h.update(f"<{type(val).__module__}.{type(val).__qualname__}>".encode())
 
 
+def _is_helper(ref) -> bool:
+    """A function defined inside ``edgelake_spark``."""
+    return isinstance(ref, types.FunctionType) and (
+        ref.__module__ or ""
+    ).startswith("edgelake_spark")
+
+
 def _update_function(h, fn: types.FunctionType, seen: set, depth: int) -> None:
     key = (fn.__module__, fn.__qualname__)
     h.update(f"<fn {key[0]}.{key[1]}>".encode())
@@ -126,9 +136,7 @@ def _update_function(h, fn: types.FunctionType, seen: set, depth: int) -> None:
     mods = []
     for name in fn.__code__.co_names:
         ref = fn.__globals__.get(name)
-        if isinstance(ref, types.FunctionType) and (
-            ref.__module__ or ""
-        ).startswith("edgelake_spark"):
+        if _is_helper(ref):
             _update_function(h, ref, seen, depth + 1)
         elif isinstance(ref, types.ModuleType) and ref.__name__.startswith(
             "edgelake_spark"
@@ -148,10 +156,32 @@ def _update_function(h, fn: types.FunctionType, seen: set, depth: int) -> None:
         for mod in mods:
             for attr in sorted(attrs):
                 ref = getattr(mod, attr, None)
-                if isinstance(ref, types.FunctionType) and (
-                    ref.__module__ or ""
-                ).startswith("edgelake_spark"):
+                if _is_helper(ref):
                     _update_function(h, ref, seen, depth + 1)
+    # Helpers a gate imports inside its own body (`from
+    # edgelake_spark.streaming.ingest import stream_parquet_source`)
+    # are neither globals nor module attributes of it.
+    for ref in _imported_functions(fn.__code__):
+        _update_function(h, ref, seen, depth + 1)
+
+
+def _imported_functions(code: types.CodeType) -> list[types.FunctionType]:
+    """``edgelake_spark`` functions bound by the ``from <module> import
+    <name>`` statements of ``code`` and of the code nested in it, in
+    bytecode order."""
+    out = []
+    module = None
+    for ins in dis.get_instructions(code):
+        if ins.opname == "IMPORT_NAME":
+            module = ins.argval
+        elif ins.opname == "IMPORT_FROM" and (module or "").startswith("edgelake_spark"):
+            ref = getattr(importlib.import_module(module), ins.argval, None)
+            if _is_helper(ref):
+                out.append(ref)
+    for const in code.co_consts:
+        if isinstance(const, types.CodeType):
+            out.extend(_imported_functions(const))
+    return out
 
 
 def gate_fingerprint(name: str, spark_fn, oracle_sql: str | None) -> str:

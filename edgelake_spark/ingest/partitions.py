@@ -8,12 +8,14 @@ prunes them by comparing the WHERE clause against each bucket's range
 dataset: the bucket becomes a partition column, `partitionBy` lays one
 directory per bucket, and Catalyst partition pruning + parquet
 row-group stats replace `is_par_with_data` — a WHERE on the time column
-touches only matching directories, at any scale.
+touches only matching directories, at any scale. Every partitioned
+table is a txlog.TxTable, so writes publish atomically and a partition
+drop is a manifest edit with time travel.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PARTITION_COL = "_par_bucket"
@@ -52,29 +54,6 @@ def bucket_column(time_col: str, unit: str, count: int = 1) -> F.Column:
     return F.date_format(trunc, fmt)
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    time_col: str,
-    unit: str = "day",
-    count: int = 1,
-    mode: str = "append",
-) -> None:
-    """``partition ... using <time_col> by <count> <unit>`` + write."""
-    (
-        df.withColumn(PARTITION_COL, bucket_column(time_col, unit, count))
-        .write.mode(mode)
-        .partitionBy(PARTITION_COL)
-        .parquet(path)
-    )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read back; WHERE on the time column prunes via partition values
-    AND parquet min/max stats (verify with .explain → PartitionFilters)."""
-    return spark.read.parquet(path)
-
-
 def _bucket_of(rel_file: str) -> str | None:
     """Partition-bucket value embedded in a committed file's relative
     path (``data/<stage>/_par_bucket=<v>/part-...parquet``)."""
@@ -86,10 +65,12 @@ def _bucket_of(rel_file: str) -> str | None:
 
 def write_partitioned_tx(df: DataFrame, table, time_col: str, unit: str = "day",
                          count: int = 1, mode: str = "append") -> int:
-    """Log-backed ``partition ... using <time_col> by <count> <unit>``:
-    the bucket layout of write_partitioned committed through a
+    """``partition ... using <time_col> by <count> <unit>`` + write: one
+    bucket directory per partition value, committed through a
     txlog.TxTable — atomic publish, snapshot isolation, and
-    metadata-only partition drops with time travel."""
+    metadata-only partition drops with time travel. Reads go through
+    ``table.read`` (WHERE on the bucket prunes via partition values AND
+    parquet min/max stats; verify with .explain → PartitionFilters)."""
     staged = df.withColumn(PARTITION_COL, bucket_column(time_col, unit, count))
     if mode == "overwrite" or table.latest_version() == 0:
         return table.overwrite(staged, partition_by=PARTITION_COL)
@@ -97,9 +78,10 @@ def write_partitioned_tx(df: DataFrame, table, time_col: str, unit: str = "day",
 
 
 def drop_partitions_before_tx(table, cutoff_bucket: str) -> list[str]:
-    """``drop partition where date < ...`` on a log-backed table: a
-    manifest edit, not a file delete — the dropped buckets still read at
-    every prior version, and expire()+vacuum() reclaims them later."""
+    """``drop partition where date < ...``: a manifest edit, not a file
+    delete (the reference drops whole par_ tables) — the dropped buckets
+    still read at every prior version, and expire()+vacuum() reclaims
+    them later."""
     def too_old(f: str) -> bool:
         b = _bucket_of(f)
         return b is not None and b < cutoff_bucket
@@ -109,25 +91,10 @@ def drop_partitions_before_tx(table, cutoff_bucket: str) -> list[str]:
 
 
 def tx_partitions(table) -> list[str]:
-    """`get partitions` for a log-backed dataset: bucket values present
-    in the LATEST committed manifest."""
+    """`get partitions` (the reference lists par_ tables,
+    db_info.py:747-854): bucket values present in the LATEST committed
+    manifest."""
     if not table.latest_version():
         return []
     m = table.manifest(table.latest_version())
     return sorted({b for b in (_bucket_of(f) for f in m["files"]) if b is not None})
-
-
-def drop_partitions_before(spark: SparkSession, path: str, cutoff_bucket: str) -> list[str]:
-    """``drop partition where date < ...`` — delete bucket directories
-    older than the cutoff (the reference drops whole par_ tables, which
-    is exactly a partition-directory delete here)."""
-    import shutil
-    from pathlib import Path
-
-    dropped = []
-    for d in sorted(Path(path).glob(f"{PARTITION_COL}=*")):
-        bucket = d.name.split("=", 1)[1]
-        if bucket < cutoff_bucket:
-            shutil.rmtree(d)
-            dropped.append(bucket)
-    return dropped

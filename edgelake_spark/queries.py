@@ -3860,50 +3860,49 @@ ORDER BY interval_start
 def _run_stream_conditions(spark, sf_dir):
     """Streaming-conditions ingest (streaming/conditions.py; reference
     streaming_conditions.py:31-113 `then ignore entry`) over the same
-    replay: every micro-batch passes the condition filter inside
-    foreachBatch, survivors append to a landed table, and the gate
-    aggregates the landed rows. The filter is a Column predicate with
-    SQL three-valued logic, so `WHERE NOT (value > 150)` is the exact
-    batch oracle."""
+    replay: every micro-batch passes the condition filter inside the
+    StreamIngest sink, survivors commit to a scratch TxTable, and the
+    gate aggregates the landed rows. The filter is a Column predicate
+    with SQL three-valued logic, so `WHERE NOT (value > 150)` is the
+    exact batch oracle. The tiny per-type aggregate is collected and
+    re-emitted so the gate's DataFrame outlives the scratch table."""
     import os as _os
     import tempfile
 
-    from edgelake_spark.streaming.conditions import StreamingCondition, apply_conditions
-    from edgelake_spark.streaming.ingest import stream_parquet_source
+    from edgelake_spark.streaming.conditions import StreamingCondition
+    from edgelake_spark.streaming.ingest import StreamIngest, stream_parquet_source
+    from edgelake_spark.txlog import TxTable
 
     register_sf_tables(spark, sf_dir)
     stream = stream_parquet_source(
         spark, _os.path.join(_os.path.abspath(sf_dir), "events.parquet")
     )
     cond = StreamingCondition.parse("if [value] > 150 then ignore entry")
-    work = tempfile.mkdtemp(prefix="el_stream_cond_")
-    landed_dir = _os.path.join(work, "landed")
-
-    def _batch(bdf, _epoch):
-        apply_conditions(bdf, [cond]).write.mode("append").parquet(landed_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    spark.read.parquet(landed_dir).createOrReplaceTempView("__stream_kept")
-    return spark.sql(
-        f"""
+    with tempfile.TemporaryDirectory(prefix="el_stream_cond_") as work:
+        sink = StreamIngest(spark, work, conditions=[cond], write_immediate=True)
+        q = sink.land(stream, "__stream_cond")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        TxTable(work).read(spark).createOrReplaceTempView("__stream_kept")
+        rows = [
+            tuple(r)
+            for r in spark.sql(
+                f"""
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
        min(value) AS mn, max(value) AS mx,
        {_dsum('value')} AS sum_value
 FROM __stream_kept
 GROUP BY event_type
-ORDER BY event_type
 """
-    )
+            ).collect()
+        ]
+    return local_frame(
+        spark, rows,
+        "event_type string, n bigint, mn double, mx double, sum_value double",
+    ).orderBy("event_type")
 
 
 _q(

@@ -11,9 +11,10 @@ MQTT client's identical topic→column mapping
 Spark mapping: the subscription is ``readStream.format("kafka")`` —
 messages arrive as a ``value`` column; the per-column bring specs
 compile (via the mapping-policy engine) to JVM-side ``get_json_object``
-pulls, so the whole consumer is a map-only stage feeding the partitioned
-append. Offsets/checkpointing come from Structured Streaming's
-checkpoint dir, replacing the reference's hand-tracked consumer offsets.
+pulls, so the whole consumer is a map-only stage feeding the
+StreamIngest sink's TxTable append. Offsets/checkpointing come from
+Structured Streaming's checkpoint (kept under the target table),
+replacing the reference's hand-tracked consumer offsets.
 
 The container has no external broker and no kafka connector jar. Tests
 drive the identical topology two ways: through the ``text`` file source
@@ -34,7 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from edgelake_spark.ingest.mapping import apply_mapping_policy
-from edgelake_spark.streaming.conditions import StreamingCondition, apply_conditions
+from edgelake_spark.streaming.conditions import StreamingCondition
+from edgelake_spark.streaming.ingest import StreamIngest
 from edgelake_spark.streaming.monitor import DataMonitor
 
 #: column.<name>.<type> = "bring [path]" (member_cmd.py:9197 example;
@@ -127,7 +129,7 @@ def parse_kafka_consumer_command(text: str) -> dict:
 @dataclass
 class BrokerConsumer:
     """The consumer topology: source → bring-mapping → conditions →
-    monitor → partitioned append. ``source='kafka'`` is the production
+    monitor → TxTable append. ``source='kafka'`` is the production
     path; ``source='mqtt'`` runs a real MQTT 3.1.1 subscriber
     (streaming/mqtt.py) that spools PUBLISH payloads into ``source_dir``
     for the file source; ``source='text'`` + ``source_dir`` is the bare
@@ -193,29 +195,18 @@ class BrokerConsumer:
             self.spark, self._raw_stream(), self.topic.to_mapping_policy()
         )
 
-    def start(self, target_dir: str, checkpoint_dir: str, trigger_sec: int = 0):
-        """Run the consumer: lands typed rows in ``target_dir`` (parquet
-        append; a Delta/iceberg sink at cluster scale is the same call)."""
-
-        def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-            kept = apply_conditions(batch_df, self.conditions)
-            if self.monitor is not None:
-                self.monitor.process_batch(kept)
-            (
-                kept.withColumn("insert_timestamp", F.current_timestamp())
-                .write.mode("append")
-                .parquet(target_dir)
-            )
-
-        writer = (
-            self.mapped_stream()
-            .writeStream.queryName(f"broker_{self.topic.name}")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_batch)
+    def start(self, target_dir: str, trigger_sec: int = 0):
+        """Run the consumer: lands typed rows in the TxTable at
+        ``target_dir`` through the StreamIngest sink (exactly-once; a
+        Delta/iceberg sink at cluster scale is the same call)."""
+        sink = StreamIngest(
+            spark=self.spark,
+            target_dir=target_dir,
+            max_time_sec=trigger_sec,
+            conditions=self.conditions,
+            monitor=self.monitor,
         )
-        if trigger_sec:
-            writer = writer.trigger(processingTime=f"{trigger_sec} seconds")
-        return writer.start()
+        return sink.land(self.mapped_stream(), f"broker_{self.topic.name}")
 
 
 # ------------------------------------------------------------------ sink

@@ -12,13 +12,14 @@ Spark mapping: a file/kafka streaming source micro-batched by
 ``trigger(processingTime=...)`` IS the time threshold; source options
 (maxFilesPerTrigger / maxOffsetsPerTrigger) are the volume threshold.
 Each batch passes through streaming conditions and the data monitor in
-``foreachBatch``, then appends to the partitioned table. At cluster
-scale the same topology runs with a Kafka source and a Delta sink —
-nothing in this module assumes local mode.
+``foreachBatch``, then commits to the table's TxTable with its epoch
+token. At cluster scale the same topology runs with a Kafka source and
+a Delta sink — nothing in this module assumes local mode.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +29,7 @@ from pyspark.sql import types as T
 from edgelake_spark.streaming.conditions import StreamingCondition, apply_conditions
 from edgelake_spark.streaming.monitor import DataMonitor
 from edgelake_spark.checkpoint import materialize as _materialize
+from edgelake_spark.txlog import TxTable
 
 DEFAULT_MAX_TIME_SEC = 60  # reference streaming_data.py:28
 DEFAULT_MAX_VOLUME_BYTES = 10_000  # reference streaming_data.py:29
@@ -35,38 +37,37 @@ DEFAULT_MAX_VOLUME_BYTES = 10_000  # reference streaming_data.py:29
 
 @dataclass
 class StreamIngest:
-    """One table's ingest pipeline: source stream → conditions → monitor
-    → partitioned append.
+    """One table's ingest sink: stream → conditions → monitor → TxTable
+    append.
 
-    Delivery semantics: the plain-parquet sink (``tx_target`` unset) is
-    AT-LEAST-ONCE — foreachBatch replays the last uncommitted epoch
-    after a failure, and a blind append duplicates it. Setting
-    ``tx_target`` (a TxTable path) upgrades to EXACTLY-ONCE: each
-    batch's append publishes atomically WITH an (ingest_query, epoch)
-    idempotence token in the commit manifest, so a replayed epoch is
-    recognized and skipped — data and token commit in the same
-    hard-link CAS, leaving no window where one lands without the
-    other. Staged files of an attempt that crashed before publish are
-    unreferenced orphans; vacuum() reclaims them. This is the
-    Spark-first upgrade of the reference's flush path
+    ``target_dir`` is always a TxTable root, and ``_handle_batch`` is
+    the only place a streamed row lands. Delivery is EXACTLY-ONCE:
+    foreachBatch replays the last uncommitted epoch after a failure, so
+    each batch's append publishes atomically WITH an (ingest_query,
+    epoch) idempotence token in the commit manifest, and a replayed
+    epoch is recognized and skipped — data and token commit in the same
+    hard-link CAS, leaving no window where one lands without the other.
+    The streaming checkpoint lives at
+    ``<target_dir>/_checkpoints/<query_name>``, so a restart always
+    resumes the same epoch numbering. Staged files of an attempt that
+    crashed before publish are unreferenced orphans; vacuum() reclaims
+    them. This is the Spark-first upgrade of the reference's flush path
     (edge_lake/generic/streaming_data.py:124-194), whose file-append
-    buffers re-land rows after a crash mid-flush."""
+    buffers re-land rows after a crash mid-flush.
+
+    ``start`` streams ``source_dir`` (a file source of ``schema`` rows);
+    ``land`` puts any streaming DataFrame through the same sink."""
 
     spark: SparkSession
-    source_dir: str
     target_dir: str
-    schema: T.StructType
+    source_dir: str | None = None
+    schema: T.StructType | None = None
     fmt: str = "json"
     max_time_sec: int = DEFAULT_MAX_TIME_SEC
     max_files_per_trigger: int = 16  # the volume threshold, in source units
     conditions: list[StreamingCondition] = field(default_factory=list)
     monitor: DataMonitor | None = None
     write_immediate: bool = False  # reference: bypass buffering
-    #: TxTable path for exactly-once ingest; None = plain parquet append
-    tx_target: str | None = None
-    #: streaming checkpoint dir (source progress + epoch numbering);
-    #: REQUIRED for exactly-once to mean anything across restarts
-    checkpoint_dir: str | None = None
 
     #: rows written by flushes so far (reference counter_rows_flushed_,
     #: streaming_data.py:713 show_info)
@@ -78,12 +79,7 @@ class StreamIngest:
     _query_name: str = "edgelake_ingest"
     _committed_epoch: int | None = None  # lazy cache of the ledger scan
 
-    def _tx_table(self):
-        from edgelake_spark.txlog import TxTable
-
-        return TxTable(self.tx_target)
-
-    def _last_committed_epoch(self, table) -> int:
+    def _last_committed_epoch(self, table: TxTable) -> int:
         """Highest epoch this query ever published, from the commit
         manifests — scanned ONCE per (re)started query instance, then
         maintained in memory; the scan is O(versions) of local JSON."""
@@ -97,57 +93,50 @@ class StreamIngest:
         return self._committed_epoch
 
     def _handle_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self.tx_target is not None:
-            # Replay check FIRST: a replayed epoch must not update monitor
-            # counters or pay a materialization — its rows were already
-            # processed by the committed run, so any side effect here would
-            # drift monitor stats from rows_flushed under exactly-once.
-            table = self._tx_table()
-            if epoch_id <= self._last_committed_epoch(table):
-                self.epochs_skipped += 1  # replayed epoch: already durable
-                return
+        # Replay check FIRST: a replayed epoch must not update monitor
+        # counters or pay a materialization — its rows were already
+        # processed by the committed run, so any side effect here would
+        # drift monitor stats from rows_flushed.
+        table = TxTable(self.target_dir)
+        if epoch_id <= self._last_committed_epoch(table):
+            self.epochs_skipped += 1  # replayed epoch: already durable
+            return
         kept = apply_conditions(batch_df, self.conditions)
         if self.monitor is not None:
             self.monitor.process_batch(kept)
         out = kept.withColumn("insert_timestamp", F.current_timestamp())
         out = out.transform(_materialize)  # count + write from one materialization
-        if self.tx_target is not None:
-            n = out.count()
-            table.append(
-                out, meta={"ingest_query": self._query_name, "epoch": epoch_id}
-            )
-            self._committed_epoch = epoch_id
-            self.rows_flushed += n
-            return
-        self.rows_flushed += out.count()
-        out.write.mode("append").parquet(self.target_dir)
+        n = out.count()
+        table.append(out, meta={"ingest_query": self._query_name, "epoch": epoch_id})
+        self._committed_epoch = epoch_id
+        self.rows_flushed += n
 
-    def start(self, query_name: str = "edgelake_ingest"):
-        if self.tx_target is not None and not self.checkpoint_dir:
-            # Without a streaming checkpoint, a restarted query renumbers
-            # epochs from 0, so `epoch <= last_committed` misreads genuinely
-            # NEW batches as replays and silently drops them — data loss,
-            # not dedup. Exactly-once requires durable epoch numbering.
-            raise ValueError(
-                "StreamIngest: tx_target (exactly-once) requires checkpoint_dir; "
-                "without it a restart resets epoch ids and new batches would be "
-                "dropped as replays"
-            )
+    def land(self, stream: DataFrame, query_name: str):
+        """Start ``stream`` into the table through the sink; returns the
+        StreamingQuery."""
         self._query_name = query_name
         self._committed_epoch = None  # new query instance: re-scan ledger
+        writer = (
+            stream.writeStream.queryName(query_name)
+            .option(
+                "checkpointLocation",
+                os.path.join(self.target_dir, "_checkpoints", query_name),
+            )
+            .foreachBatch(self._handle_batch)
+        )
+        trigger_sec = 0 if self.write_immediate else self.max_time_sec
+        if trigger_sec:
+            writer = writer.trigger(processingTime=f"{trigger_sec} seconds")
+        return writer.start()
+
+    def start(self, query_name: str = "edgelake_ingest"):
         reader = (
             self.spark.readStream.format(self.fmt)
             .schema(self.schema)
             .option("maxFilesPerTrigger", self.max_files_per_trigger)
             .load(self.source_dir)
         )
-        trigger_sec = 0 if self.write_immediate else self.max_time_sec
-        writer = reader.writeStream.queryName(query_name).foreachBatch(self._handle_batch)
-        if self.checkpoint_dir:
-            writer = writer.option("checkpointLocation", self.checkpoint_dir)
-        if trigger_sec:
-            writer = writer.trigger(processingTime=f"{trigger_sec} seconds")
-        return writer.start()
+        return self.land(reader, query_name)
 
 
 def stream_parquet_source(spark: SparkSession, path: str) -> DataFrame:
@@ -156,9 +145,6 @@ def stream_parquet_source(spark: SparkSession, path: str) -> DataFrame:
     to batch reads (the testdata ships ns timestamps, which Spark reads
     as int64 under nanosAsLong). Lets replay/backfill pipelines stream
     the exact bytes the batch engine queries."""
-    import os
-    import tempfile
-
     import pyarrow.parquet as pq
 
     from edgelake_spark.catalog import ensure_session_confs
@@ -166,13 +152,13 @@ def stream_parquet_source(spark: SparkSession, path: str) -> DataFrame:
     ensure_session_confs(spark)
     schema = spark.read.parquet(path).schema
     stream_path = path
+    reader = spark.readStream.schema(schema)
     if os.path.isfile(path):
-        # the file-stream source requires a directory; expose a
-        # single-file dataset through a symlink dir
-        d = tempfile.mkdtemp(prefix="el_stream_src_")
-        os.symlink(os.path.abspath(path), os.path.join(d, os.path.basename(path)))
-        stream_path = d
-    df = spark.readStream.schema(schema).parquet(stream_path)
+        # the file-stream source requires a directory: stream the
+        # file's own directory, filtered to the file's name
+        stream_path = os.path.dirname(os.path.abspath(path))
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+    df = reader.parquet(stream_path)
     try:
         arrow_schema = pq.read_schema(path)
     except Exception:

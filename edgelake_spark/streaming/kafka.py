@@ -37,6 +37,8 @@ import time
 import uuid
 import zlib
 
+from edgelake_spark.streaming.mqtt import Spooler, _recv_exact
+
 API_PRODUCE, API_FETCH, API_LIST_OFFSETS, API_METADATA = 0, 1, 2, 3
 API_VERSIONS = 18
 
@@ -95,16 +97,6 @@ class _Reader:
 
 def _frame(payload: bytes) -> bytes:
     return struct.pack(">i", len(payload)) + payload
-
-
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("peer closed")
-        buf += chunk
-    return buf
 
 
 def read_frame(sock: socket.socket) -> bytes:
@@ -395,7 +387,7 @@ class KafkaProducerClient:
         self._conn.close()
 
 
-class KafkaWireConsumer:
+class KafkaWireConsumer(Spooler):
     """The ``run kafka consumer`` transport: Metadata discovery, reset
     resolution via ListOffsets (earliest/latest), then a Fetch v2 poll
     loop spooling each record value to ``spool_dir`` as a text file —
@@ -528,23 +520,6 @@ class KafkaWireConsumer:
                     time.sleep(self.poll_interval)
             except (ConnectionError, OSError, ValueError, struct.error):
                 return
-
-    def _spool(self, payload: bytes) -> None:
-        name = f"{time.time_ns()}_{self.received}.txt"
-        tmp = os.path.join(self.spool_dir, f".{name}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(payload.rstrip(b"\n") + b"\n")
-        # atomic rename so the streaming file source never reads partials
-        os.rename(tmp, os.path.join(self.spool_dir, name))
-        self.received += 1
-
-    def wait_for(self, n: int, timeout: float = 10.0) -> bool:
-        deadline = time.monotonic() + timeout
-        while time.monotonic() < deadline:
-            if self.received >= n:
-                return True
-            time.sleep(0.02)
-        return self.received >= n
 
     def stop(self) -> None:
         self._alive = False

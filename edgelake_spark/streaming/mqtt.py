@@ -283,7 +283,34 @@ class MqttPublisher:
         self._sock.close()
 
 
-class MqttSubscriber:
+class Spooler:
+    """The socket transports' handoff: each received payload becomes one
+    text file in ``spool_dir``, which BrokerConsumer's file source
+    streams as a single ``value`` column. Subclasses set ``spool_dir``
+    and ``received = 0``."""
+
+    spool_dir: str
+    received: int
+
+    def _spool(self, payload: bytes) -> None:
+        name = f"{time.time_ns()}_{self.received}.txt"
+        tmp = os.path.join(self.spool_dir, f".{name}.tmp")
+        with open(tmp, "wb") as fh:
+            fh.write(payload.rstrip(b"\n") + b"\n")
+        # atomic rename so the streaming file source never reads partials
+        os.rename(tmp, os.path.join(self.spool_dir, name))
+        self.received += 1
+
+    def wait_for(self, n: int, timeout: float = 10.0) -> bool:
+        deadline = time.monotonic() + timeout
+        while time.monotonic() < deadline:
+            if self.received >= n:
+                return True
+            time.sleep(0.02)
+        return self.received >= n
+
+
+class MqttSubscriber(Spooler):
     """The ``run mqtt client`` transport: subscribe to a topic and spool
     each received payload to ``spool_dir`` as a text file — the handoff
     point where BrokerConsumer's file source picks messages up as a
@@ -334,23 +361,6 @@ class MqttSubscriber:
                     self._sock.sendall(puback_packet(pid))
             elif ptype == PINGRESP:
                 pass
-
-    def _spool(self, payload: bytes) -> None:
-        name = f"{time.time_ns()}_{self.received}.txt"
-        tmp = os.path.join(self.spool_dir, f".{name}.tmp")
-        with open(tmp, "wb") as fh:
-            fh.write(payload.rstrip(b"\n") + b"\n")
-        # atomic rename so the streaming file source never reads partials
-        os.rename(tmp, os.path.join(self.spool_dir, name))
-        self.received += 1
-
-    def wait_for(self, n: int, timeout: float = 10.0) -> bool:
-        deadline = time.monotonic() + timeout
-        while time.monotonic() < deadline:
-            if self.received >= n:
-                return True
-            time.sleep(0.02)
-        return self.received >= n
 
     def stop(self) -> None:
         self._alive = False

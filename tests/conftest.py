@@ -22,6 +22,18 @@ SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
 
 
+def drop_last_commit(checkpoint: str) -> None:
+    """Forget the last committed batch of a streaming checkpoint, as a
+    crash between a sink's write and Spark's batch commit does: the
+    restarted query replays that epoch."""
+    import os
+
+    commits = os.path.join(checkpoint, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+
+
 @pytest.fixture(scope="session")
 def duck_views(duck):
     from edgelake_spark.catalog import TESTDATA_TABLES

@@ -164,7 +164,8 @@ def test_rest_server_query_and_ingest(engine):
 def test_dest_file_and_partition_commands(engine, tmp_path):
     from pyspark.sql import functions as F
 
-    from edgelake_spark.ingest.partitions import write_partitioned
+    from edgelake_spark.ingest.partitions import write_partitioned_tx
+    from edgelake_spark.txlog import TxTable
 
     # dest = file:<path>.json → distributed json write
     out = tmp_path / "out.json"
@@ -175,7 +176,7 @@ def test_dest_file_and_partition_commands(engine, tmp_path):
     # partitioned dataset lifecycle: attach → get partitions → drop
     df = engine.spark.table("events").withColumn("ts", F.col("ts"))
     ppath = str(tmp_path / "events_part")
-    write_partitioned(df, ppath, "ts", unit="day", count=7)
+    write_partitioned_tx(df, TxTable(ppath), "ts", unit="day", count=7)
     engine.attach_partitioned("d.events_part", ppath)
     parts = engine.run("get partitions where table = events_part").collect()
     assert len(parts) >= 4 and parts[0].table_name == "d.events_part"

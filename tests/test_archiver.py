@@ -145,6 +145,7 @@ def test_archiver_feeds_watch_dir_ingest(spark, tmp_path):
     from pyspark.sql import types as T
 
     from edgelake_spark.streaming.ingest import StreamIngest
+    from edgelake_spark.txlog import TxTable
 
     eng = _setup(tmp_path, spark)
     (tmp_path / "blobs" / "clip.mp4").write_bytes(b"mp4-bytes")
@@ -174,7 +175,7 @@ def test_archiver_feeds_watch_dir_ingest(spark, tmp_path):
         q.stop()
     assert ingest.rows_flushed == 1
 
-    landed = spark.read.parquet(str(tmp_path / "landed"))
+    landed = TxTable(str(tmp_path / "landed")).read(spark)
     row = landed.collect()[0]
     assert row.name == "A" and len(row.file) == 32  # the blob content hash
     # ...and the hash joins back to the stored blob

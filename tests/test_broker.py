@@ -13,6 +13,8 @@ from edgelake_spark.streaming.broker import (
 )
 from edgelake_spark.streaming.conditions import StreamingCondition
 from edgelake_spark.streaming.monitor import DataMonitor
+from edgelake_spark.txlog import TxTable
+from tests.conftest import drop_last_commit
 
 
 def test_parse_topic_spec():
@@ -53,7 +55,7 @@ def test_engine_registers_consumer(spark):
 
 def test_broker_consumer_end_to_end(spark, tmp_path):
     """Simulated topic messages → bring mapping → conditions → monitor →
-    partitioned append, via the text-source double."""
+    TxTable append, via the text-source double."""
     src = tmp_path / "topic"
     src.mkdir()
     msgs = [
@@ -78,17 +80,45 @@ def test_broker_consumer_end_to_end(spark, tmp_path):
         monitor=mon,
     )
     out = tmp_path / "landed"
-    q = consumer.start(str(out), str(tmp_path / "ckpt"))
+    q = consumer.start(str(out))
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    landed = spark.read.parquet(str(out))
+    landed = TxTable(str(out)).read(spark)
     rows = sorted((r.ts.isoformat(), r.value) for r in landed.collect())
     # value=50 dropped by the condition; types are real timestamp/int
     assert rows == [("2024-01-01T00:00:00", 5), ("2024-01-01T00:02:00", 7)]
     assert dict(landed.dtypes)["value"] == "int"
     assert mon.snapshot()[0]["count"] == 2
+
+
+def test_broker_consumer_replay_after_lost_commit_lands_once(spark, tmp_path):
+    """The consumer lands through the StreamIngest sink: after the last
+    `commits/<n>` of its checkpoint is lost, the restarted consumer
+    replays epoch n and the sink skips it — the table keeps exactly the
+    topic's rows instead of doubling them."""
+    src = tmp_path / "topic"
+    src.mkdir()
+    (src / "m1.txt").write_text(
+        "\n".join(json.dumps({"value": v}) for v in range(5))
+    )
+    tm = parse_topic_spec('name = replay and column.value.int = "bring [value]"')
+    out = str(tmp_path / "landed")
+
+    def run_once() -> None:
+        consumer = BrokerConsumer(spark=spark, topic=tm, source="text", source_dir=str(src))
+        q = consumer.start(out)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run_once()
+    drop_last_commit(f"{out}/_checkpoints/broker_replay")
+    run_once()
+    landed = TxTable(out).read(spark)
+    assert sorted(r.value for r in landed.collect()) == list(range(5))
 
 
 def test_kafka_wire_format_and_file_sink(spark, tmp_path):

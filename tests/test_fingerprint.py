@@ -113,6 +113,38 @@ def test_module_attr_helper_changes_fingerprint():
     assert a != b
 
 
+def test_function_local_import_helper_changes_fingerprint(monkeypatch):
+    """A helper a gate imports inside its own body (`from
+    edgelake_spark.streaming.ingest import stream_parquet_source` in the
+    stream replay gates) must feed the fingerprint: editing it has to
+    re-queue every gate that imports it."""
+    import sys
+    import types
+
+    from edgelake_spark import fingerprint as fp
+
+    mod = types.ModuleType("edgelake_spark._fp_local_probe")
+    monkeypatch.setitem(sys.modules, mod.__name__, mod)
+
+    def set_helper(src: str) -> None:
+        mod.helper = eval(src)
+        mod.helper.__module__ = mod.__name__
+
+    ns: dict = {}
+    exec(
+        "def gate(spark, sf):\n"
+        "    from edgelake_spark._fp_local_probe import helper\n"
+        "    return helper()",
+        ns,
+    )
+    gate = ns["gate"]
+    set_helper("lambda: 1")
+    a = fp.gate_fingerprint("g", gate, "SELECT 1")
+    assert a == fp.gate_fingerprint("g", gate, "SELECT 1")
+    set_helper("lambda: 2")
+    assert a != fp.gate_fingerprint("g", gate, "SELECT 1")
+
+
 def test_set_fingerprint_stable_across_processes():
     """Round-9 advice regression: set elements whose repr embeds a
     memory address (tuples holding functions/objects) must fingerprint

@@ -9,11 +9,11 @@ from pyspark.sql import functions as F
 from edgelake_spark.ingest.mapping import apply_mapping_policy, parse_bring_path
 from edgelake_spark.ingest.partitions import (
     PARTITION_COL,
-    drop_partitions_before,
-    read_partitioned,
-    write_partitioned,
+    drop_partitions_before_tx,
+    write_partitioned_tx,
 )
 from edgelake_spark.functions.multimodal import extract_features, store_blobs
+from edgelake_spark.txlog import TxTable
 
 
 def test_parse_bring_path():
@@ -61,9 +61,9 @@ def test_partitioned_write_prunes(spark, tmp_path):
         ],
         "ts string, value double",
     ).withColumn("ts", F.to_timestamp("ts"))
-    path = str(tmp_path / "t")
-    write_partitioned(df, path, "ts", unit="day", count=2)
-    back = read_partitioned(spark, path)
+    table = TxTable(str(tmp_path / "t"))
+    write_partitioned_tx(df, table, "ts", unit="day", count=2)
+    back = table.read(spark)
     assert back.count() == 3
     # three rows land in three distinct 2-day epoch-anchored buckets
     buckets = sorted(r[0] for r in back.select(PARTITION_COL).distinct().collect())
@@ -73,9 +73,9 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert pruned.count() == 1
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull" in plan
-    dropped = drop_partitions_before(spark, path, "2024-02-01")
+    dropped = drop_partitions_before_tx(table, "2024-02-01")
     assert len(dropped) == 2
-    assert read_partitioned(spark, path).count() == 1
+    assert table.read(spark).count() == 1
 
 
 def test_multimodal_feature_stub(spark):

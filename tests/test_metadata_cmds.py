@@ -125,15 +125,20 @@ def test_query_destination_partition_filters(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from edgelake_spark.ingest.partitions import PARTITION_COL, write_partitioned
+    from edgelake_spark.ingest.partitions import (
+        PARTITION_COL,
+        tx_partitions,
+        write_partitioned_tx,
+    )
+    from edgelake_spark.txlog import TxTable
     from tests.conftest import SF_DIR
 
     eng = EdgeLakeEngine(spark, SF_DIR, now=datetime(2024, 2, 1))
     df = eng.spark.table("events").withColumn("ts", F.col("ts"))
     ppath = str(tmp_path / "events_part")
-    write_partitioned(df, ppath, "ts", unit="day", count=7)
+    write_partitioned_tx(df, TxTable(ppath), "ts", unit="day", count=7)
     eng.attach_partitioned("d.events_part", ppath)
-    bucket = eng.spark.read.parquet(ppath).select(PARTITION_COL).first()[0]
+    bucket = tx_partitions(TxTable(ppath))[0]
     eng.run(
         f'sql d "select count(*) as n from events_part'
         f" where {PARTITION_COL} = '{bucket}'\""
@@ -142,6 +147,22 @@ def test_query_destination_partition_filters(spark, tmp_path):
     assert len(rows) >= 1 and rows[0].table_name == "events_part"
     assert "PartitionFilters" in rows[0].scan_filters
     assert PARTITION_COL in rows[0].scan_filters
+
+
+def test_query_destination_names_dml_table(spark, tmp_path):
+    """After a DELETE the table reads from its TxTable, whose scan lists
+    files under <root>/data/<stage>/: `query destination` names the
+    table (the TxTable root), not the first part file."""
+    from datetime import datetime
+
+    from tests.conftest import SF_DIR
+
+    eng = EdgeLakeEngine(spark, SF_DIR, now=datetime(2024, 2, 1), work_dir=str(tmp_path))
+    eng.run('sql d "delete from orders where o_orderkey = 1"')
+    eng.run('sql d "select count(*) as n from orders"')
+    row = eng.run("query destination").collect()[0]
+    assert row.table_name == "orders"
+    assert row.destination.endswith("/orders")
 
 
 def test_dest_buffer(spark):

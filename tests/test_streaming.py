@@ -14,6 +14,8 @@ from edgelake_spark.streaming import (
     aggregation_ingest,
     apply_conditions,
 )
+from edgelake_spark.txlog import TxTable
+from tests.conftest import drop_last_commit
 
 
 def test_condition_parse():
@@ -135,7 +137,7 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    landed = spark.read.parquet(str(dst))
+    landed = TxTable(str(dst)).read(spark)
     rows_out = landed.collect()
     assert len(rows_out) == 1 and rows_out[0].device == "d1"
     assert "insert_timestamp" in landed.columns
@@ -580,8 +582,8 @@ def test_lsh_dedup_claims_survive_query_restart(spark, tmp_path):
 
 def test_tx_ingest_is_exactly_once_across_replay_and_restart(spark, tmp_path):
     """foreachBatch is at-least-once: after a crash between the data
-    write and the batch commit, Spark REPLAYS the epoch. The tx_target
-    mode publishes each batch atomically with an (ingest_query, epoch)
+    write and the batch commit, Spark REPLAYS the epoch. The sink
+    publishes each batch atomically with an (ingest_query, epoch)
     token in the TxTable manifest, so: (a) a replayed epoch on a live
     query is skipped via the in-memory cache; (b) a replayed epoch on a
     RESTARTED query (cold cache) is skipped via the ledger scan; and
@@ -601,17 +603,14 @@ def test_tx_ingest_is_exactly_once_across_replay_and_restart(spark, tmp_path):
     src = tmp_path / "txsrc"
     src.mkdir()
     tx_path = str(tmp_path / "txtable")
-    ckpt = str(tmp_path / "txckpt")
 
     def ingest():
         return StreamIngest(
             spark=spark,
             source_dir=str(src),
-            target_dir=str(tmp_path / "unused_plain"),
+            target_dir=tx_path,
             schema=schema,
             write_immediate=True,
-            tx_target=tx_path,
-            checkpoint_dir=ckpt,
         )
 
     (src / "a.json").write_text(
@@ -662,28 +661,41 @@ def test_tx_ingest_is_exactly_once_across_replay_and_restart(spark, tmp_path):
     assert got.select("event_id").distinct().count() == 65
 
 
-def test_tx_ingest_requires_checkpoint_dir(spark, tmp_path):
-    """tx_target without checkpoint_dir must be REJECTED at start():
-    a restarted query would renumber epochs from 0 and the
-    `epoch <= last_committed` guard would drop genuinely new batches
-    as replays — silent data loss, not dedup."""
-    import pytest as _pytest
+def test_stream_ingest_replay_after_lost_commit_lands_once(spark, tmp_path):
+    """A StreamIngest with no delivery options is exactly-once: after
+    the last `commits/<n>` of its checkpoint is lost, the restarted
+    query replays epoch n, and the sink skips it instead of landing
+    the batch a second time."""
+    import json as _json
 
-    from edgelake_spark.streaming.ingest import StreamIngest
-
-    schema = T.StructType([T.StructField("event_id", T.LongType())])
-    src = tmp_path / "nockpt_src"
-    src.mkdir()
-    ing = StreamIngest(
-        spark=spark,
-        source_dir=str(src),
-        target_dir=str(tmp_path / "out"),
-        schema=schema,
-        tx_target=str(tmp_path / "txtable"),
-        checkpoint_dir=None,
+    schema = T.StructType(
+        [T.StructField("event_id", T.LongType()), T.StructField("value", T.DoubleType())]
     )
-    with _pytest.raises(ValueError, match="checkpoint_dir"):
-        ing.start("no_ckpt_q")
+    src = tmp_path / "replay_src"
+    src.mkdir()
+    (src / "a.json").write_text(
+        "\n".join(_json.dumps({"event_id": i, "value": i / 2}) for i in range(5))
+    )
+    dst = str(tmp_path / "replay_table")
+
+    def run_once() -> StreamIngest:
+        ing = StreamIngest(
+            spark=spark, source_dir=str(src), target_dir=dst, schema=schema,
+            write_immediate=True,
+        )
+        q = ing.start("replay_q")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return ing
+
+    run_once()
+    drop_last_commit(f"{dst}/_checkpoints/replay_q")
+    again = run_once()
+    assert again.epochs_skipped == 1
+    landed = TxTable(dst).read(spark)
+    assert sorted(r.event_id for r in landed.collect()) == list(range(5))
 
 
 def test_tx_ingest_replayed_epoch_skips_monitor(spark, tmp_path):
@@ -711,11 +723,9 @@ def test_tx_ingest_replayed_epoch_skips_monitor(spark, tmp_path):
     ing = StreamIngest(
         spark=spark,
         source_dir=str(src),
-        target_dir=str(tmp_path / "unused"),
+        target_dir=str(tmp_path / "txtable"),
         schema=schema,
         write_immediate=True,
-        tx_target=str(tmp_path / "txtable"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
         monitor=mon,
     )
     q = ing.start("mon_q")

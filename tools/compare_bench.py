@@ -1,17 +1,21 @@
 """Compare two bench artifacts: per-query ratios, geomean, regressions.
 
-Handles both artifact shapes:
-- a raw bench stdout line / log containing the `{"metric": ...}` JSON;
-- the driver's BENCH_r{N}.json wrapper, whose "tail" holds only the
-  LAST ~N chars of stdout — the JSON line may be truncated mid-dict, and
-  when the sf1 section ran, its keys would shadow the sf0.1 entries in a
-  naive regex sweep, so parsing cuts at the first 'sf1' marker.
+Handles these artifact shapes:
+- the full result file bench.py writes (BENCH_FULL.json);
+- a bench stdout log, or a round-close BENCH_r{N}.json wrapper whose
+  "tail" holds the last chars of stdout: the short `{"metric": ...}`
+  last line names the full file, which is read;
+- older artifacts whose one JSON line carried the per-query map: read
+  whole when present; when the tail truncated it mid-dict, the pairs
+  are regexed out, cutting at the first 'sf1' marker so the sf1
+  section's keys do not shadow the sf0.1 entries.
 
 Single-run medians (the wall-budget degrade path) are marked so a
 reader doesn't over-read one cold sample as a regression.
 
 Usage:
     python tools/compare_bench.py BENCH_r08.json BENCH_r09.json
+    python tools/compare_bench.py old/BENCH_FULL.json BENCH_FULL.json
     python tools/compare_bench.py old_run.log new_run.log [--top 8]
 """
 
@@ -26,18 +30,22 @@ import sys
 def load_queries(path: str) -> tuple[dict[str, float], set[str]]:
     """Returns ({query: median_sec}, {degraded query names})."""
     text = open(path).read()
-    # driver wrapper? -> work on its stdout tail
     try:
-        wrapper = json.loads(text)
-        if isinstance(wrapper, dict) and "tail" in wrapper:
-            text = wrapper["tail"]
+        whole = json.loads(text)
     except ValueError:
-        pass
-    # whole JSON line present -> exact parse
+        whole = None
+    if isinstance(whole, dict) and "queries" in whole:  # the full file
+        return whole["queries"], set(whole.get("degraded_to_single_run", []))
+    if isinstance(whole, dict) and "tail" in whole:  # round-close wrapper
+        text = whole["tail"]
+    # whole JSON line present -> exact parse (the short line names the
+    # full file; older lines carry the per-query map themselves)
     for line in text.splitlines():
         ls = line.strip()
         if ls.startswith('{"metric"'):
             d = json.loads(ls)
+            if "full" in d:
+                return load_queries(d["full"])
             return d.get("queries", {}), set(d.get("degraded_to_single_run", []))
     # truncated tail -> regex the key/value pairs, cut before sf1 keys
     cut = text.find("sf1")
