@@ -263,7 +263,6 @@ TIER1_CORE = frozenset({
 def main() -> None:
     t_main = time.perf_counter()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     # median-of-N per query: single-shot walls at this data size are
     # dominated by janino codegen compiles + GC storms (measured ±3×
     # run-to-run in round 1); the median of 3 measures the plan
@@ -293,10 +292,13 @@ def main() -> None:
 
     def fresh_session():
         """(Re)build the session and warm the codegen paths. Warming is
-        cheap (sf0.001) and survives SparkContext restarts anyway — the
-        janino/JIT caches live in the JVM, which py4j keeps alive across
-        SparkContext stop/start."""
-        spark = get_spark(app_name="edgelake-bench", cpus=cpus)
+        cheap (sf0.001). Its Janino classes stay compiled across the
+        timed queries because get_spark sizes the generated-code cache
+        (CODEGEN_CACHE_ENTRIES) past the classes this query list
+        generates; Spark's default of 100 entries would let later
+        queries evict them. The cache and the JIT's code live in the JVM,
+        which py4j keeps alive across SparkContext stop/start."""
+        spark = get_spark(app_name="edgelake-bench")
         # warm the JVM, parquet footers, and the codegen paths (HOF
         # pipelines + window/cosine exprs) so per-query numbers measure
         # the plans, not first-touch JIT/janino compilation.
@@ -557,7 +559,7 @@ def main() -> None:
         ),
         # samples actually taken per query (pass-interleaved; min 1)
         "samples_per_query": {n: len(w) for n, w in all_runs.items()},
-        "cpus": cpus,
+        "cpus": state["spark"].sparkContext.defaultParallelism,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if sf1_timings is not None:

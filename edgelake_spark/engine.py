@@ -301,9 +301,11 @@ class EdgeLakeEngine:
     @staticmethod
     def _plan_destinations(plan: str) -> list[dict]:
         """File-scan destinations from a formatted physical plan: one
-        dict per scan with the location root, the table name (path
-        basename, or a TxTable's root), and the scan-time pruning
-        predicates. Non-file scans
+        dict per distinct scan with the location root, the table name
+        (path basename, or a TxTable's root), and the scan-time pruning
+        predicates. A TxTable read unions one scan per commit stage, so
+        repeats of the same (location, table, filters) are dropped,
+        keeping first-seen order. Non-file scans
         (checkpointed intermediates, in-memory relations) are reported
         as a single ``memory`` destination so a query never vanishes
         from the report."""
@@ -332,13 +334,9 @@ class EdgeLakeEngine:
                     fm = re.search(rf"{key}:\s*(\[.*?)\s*$", block, re.MULTILINE)
                     if fm and fm.group(1) != "[]":
                         filters.append(f"{key}={fm.group(1)}")
-                out.append(
-                    {
-                        "location": first_path,
-                        "table": table,
-                        "filters": "; ".join(filters),
-                    }
-                )
+                dest = {"location": first_path, "table": table, "filters": "; ".join(filters)}
+                if dest not in out:
+                    out.append(dest)
         if not out:
             in_memory = "Scan ExistingRDD" in plan or "LocalTableScan" in plan
             kind = "memory" if in_memory else "local"

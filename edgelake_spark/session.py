@@ -6,6 +6,20 @@ partition coalescing), UTC session timezone (EdgeLake stores and compares
 timestamps in UTC — reference edge_lake/generic/utils_columns.py:1660 —
 and the DuckDB oracle is UTC-naive), Arrow enabled for the Pandas-UDF
 slow path.
+
+Generated-code cache: every whole-stage and expression class Spark
+generates is compiled by Janino once and kept in an LRU cache keyed by
+its source (``spark.sql.codegen.cache.maxEntries``). Spark's default of
+100 entries is smaller than one pass of the gate runners: the six
+runners ``tpch_q1``, ``tpch_q3``, ``tpch_q5ish``, ``tpch_q18ish``,
+``events_sessionize`` and ``doc_minhash_pairs`` generate 151 classes at
+sf0.001, and a cold pass of the 13 perfbench ``batch`` runners 342-345.
+At 100 entries the cache thrashes: a warm pass of the six runners
+recompiles 120-150 of their 151 classes, so a query node running the
+same shapes over and over pays Janino on every query. The cache holds
+``CODEGEN_CACHE_ENTRIES`` (4000) classes, over ten times the largest
+measured mix, and a warm pass compiles none. It is a static conf, so it
+is set here, at session build.
 """
 
 from __future__ import annotations
@@ -13,6 +27,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Janino-compiled classes kept across queries: a cold ``batch`` pass
+#: generates 342-345 (module docstring), so 4000 holds the gate mix with
+#: room to spare.
+CODEGEN_CACHE_ENTRIES = 4000
+
+
+def _driver_memory() -> str:
+    """Half of this host's RAM. Local mode runs every task in the driver
+    JVM; the other half is left to the Python workers (pandas UDFs, the
+    Arrow boundary) and to the page cache the parquet scans read from."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 // 2**20}m"
 
 
 def get_spark(
@@ -26,7 +53,8 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores.
     ``shuffle_partitions`` defaults to the core count — at cluster scale
     you would size it to total-cores or rely on AQE coalescing, which is
-    enabled here and does the right thing in both regimes.
+    enabled here and does the right thing in both regimes. The driver
+    heap is ``$SPARK_DRIVER_MEMORY`` or half of this host's RAM.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -43,14 +71,15 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode = driver-only JVM: size its heap to the machine, or
-        # 32 executor threads + checkpointed intermediates GC-thrash
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # the executor threads + checkpointed intermediates GC-thrash
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory())
         # explicit System.gc() (bench inter-query cleanup, block-manager
-        # housekeeping) must not stop the world for a ~48 GB heap: run it
-        # as a concurrent G1 cycle so a timed query never eats a full STW
-        # collection triggered by the previous query's cleanup
+        # housekeeping) must not stop the world for a multi-GB heap: run
+        # it as a concurrent G1 cycle so a timed query never eats a full
+        # STW collection triggered by the previous query's cleanup
         .config("spark.driver.extraJavaOptions", "-XX:+ExplicitGCInvokesConcurrent")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata ships timestamp[ns] columns (events.ts); Spark has no
         # nanosecond timestamp type, so read them as int64 and the

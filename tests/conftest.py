@@ -5,7 +5,7 @@ import pytest
 def spark():
     from edgelake_spark import get_spark
 
-    s = get_spark(app_name="edgelake-tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="edgelake-tests")
     yield s
 
 

@@ -152,17 +152,21 @@ def test_query_destination_partition_filters(spark, tmp_path):
 def test_query_destination_names_dml_table(spark, tmp_path):
     """After a DELETE the table reads from its TxTable, whose scan lists
     files under <root>/data/<stage>/: `query destination` names the
-    table (the TxTable root), not the first part file."""
+    table (the TxTable root), not the first part file, and names it
+    once although the read unions one scan per commit stage."""
     from datetime import datetime
 
     from tests.conftest import SF_DIR
 
     eng = EdgeLakeEngine(spark, SF_DIR, now=datetime(2024, 2, 1), work_dir=str(tmp_path))
     eng.run('sql d "delete from orders where o_orderkey = 1"')
+    eng.run('sql d "insert into orders (o_orderkey) values (900001)"')
+    eng.run('sql d "insert into orders (o_orderkey) values (900002)"')
     eng.run('sql d "select count(*) as n from orders"')
-    row = eng.run("query destination").collect()[0]
-    assert row.table_name == "orders"
-    assert row.destination.endswith("/orders")
+    rows = eng.run("query destination").collect()
+    assert len(rows) == 1
+    assert rows[0].table_name == "orders"
+    assert rows[0].destination.endswith("/orders")
 
 
 def test_dest_buffer(spark):
