@@ -20,7 +20,8 @@ its CURRENT fingerprint is in that list — editing a gate (Spark side or
 oracle side) automatically re-queues it for the next driver window.
 
 ``tools/refresh_verified_gates.py`` regenerates the file from git
-history (one snapshot import per recorded round).
+history (one snapshot import per recorded round). ``python -m
+edgelake_spark.fingerprint`` prints the gates that are stale against it.
 """
 
 from __future__ import annotations
@@ -205,9 +206,24 @@ def all_fingerprints() -> dict[str, str]:
     }
 
 
+def stale_gates(verified: dict[str, list[str]]) -> list[str]:
+    """Gates whose current fingerprint is not among their verified ones."""
+    return sorted(
+        g for g, fp in all_fingerprints().items() if fp not in verified.get(g, ())
+    )
+
+
 if __name__ == "__main__":
+    # python -m edgelake_spark.fingerprint [VERIFIED_GATES.json]
     import json
+    import os
     import sys
 
-    json.dump(all_fingerprints(), sys.stdout, indent=0, sort_keys=True)
-    sys.stdout.write("\n")
+    path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "VERIFIED_GATES.json"
+    )
+    with open(path) as fh:
+        stale = stale_gates(json.load(fh))
+    print(f"{len(stale)} stale gates against {os.path.basename(path)}")
+    for g in stale:
+        print(g)

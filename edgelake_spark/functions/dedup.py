@@ -533,3 +533,37 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
         jpath = spark._jvm.org.apache.hadoop.fs.Path(base)
         jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
     return final.orderBy("doc_id")
+
+
+def keep_quality_sql(comp: str, score: str) -> str:
+    """Engine-shared body for quality-aware dedup keep: every doc gets
+    its near-dup component (itself if unclustered), the keeper is the
+    component's argmax-quality doc (ties → min doc_id). The argmax is
+    a max(q) aggregate + equality join + min(doc_id) — all map-side
+    combinable, NO per-component sort window (a 95%-of-corpus skew
+    component would serialize a window's task; an aggregate stays
+    partial). Equality on the DOUBLE score is safe cross-engine
+    because the score itself is hash-verified bit-identical
+    (doc_quality); it is never emitted, only compared."""
+    return f"""
+WITH comp AS ({comp}),
+q AS (SELECT doc_id, {score} AS q FROM documents),
+everyone AS (
+  SELECT q.doc_id, coalesce(c.component_id, q.doc_id) AS component_id, q.q
+  FROM q LEFT JOIN comp c ON c.doc_id = q.doc_id
+),
+best AS (
+  SELECT component_id, max(q) AS qmax FROM everyone GROUP BY component_id
+),
+kept AS (
+  SELECT e.component_id, min(e.doc_id) AS kept_id
+  FROM everyone e JOIN best b
+    ON b.component_id = e.component_id AND e.q = b.qmax
+  GROUP BY e.component_id
+)
+SELECT e.doc_id, e.component_id, k.kept_id,
+       CAST(CASE WHEN e.doc_id = k.kept_id THEN 1 ELSE 0 END AS BIGINT)
+         AS is_kept
+FROM everyone e JOIN kept k ON k.component_id = e.component_id
+ORDER BY e.doc_id
+"""

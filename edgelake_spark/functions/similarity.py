@@ -11,9 +11,19 @@
   probe the nprobe nearest centroids per query. The corpus-side work
   drops by ~|centroids|/nprobe; at 100 TB the assignment becomes a
   bucketed/partitioned layout so probes touch only matching partitions.
+
+This module also owns every embedding-index BUILD (IVF centroids and
+inverted lists, PQ/SQ8/BQ code tables, the PCA model): each is built once
+per dataset through the artifact store and read back as a temp view by
+the query half in queries.py.
 """
 
 from __future__ import annotations
+
+import os
+
+from edgelake_spark import artifacts
+from edgelake_spark.checkpoint import materialize
 
 CENTROID_STRIDE = 47  # vec_id % 47 == 0 → deterministic centroid subset
 NPROBE = 2
@@ -63,6 +73,33 @@ def duck_cosine_staged(a: str, b: str) -> str:
         f"for i in range(1, len({a}.demb) + 1)])"
     )
     return f"({dot} / ({a}.norm * {b}.norm))"
+
+
+def cosine_staged(engine: str, a: str, b: str) -> str:
+    """Cosine over two pre-staged rows in ``engine``'s SQL ("spark" or
+    "duck")."""
+    if engine == "spark":
+        return spark_cosine_staged(a, b)
+    return duck_cosine_staged(a, b)
+
+
+def long_form_sql(engine: str, col: str = "dim", table: str | None = None,
+                  dims: int = 64) -> str:
+    """One row (vec_id, ``col``, v) per embedding element, ``col``
+    0-based and v cast to double: the long form every per-dimension
+    aggregate scans (quantizer ranges, the PCA Gram, projections).
+    Spark posexplodes; DuckDB cross-joins a dimension series. ``table``
+    defaults to the embeddings table as each engine's gates read it."""
+    if engine == "spark":
+        return (
+            f"SELECT vec_id, pos AS {col}, CAST(v AS DOUBLE) AS v "
+            f"FROM (SELECT vec_id, posexplode(embedding) AS (pos, v) "
+            f"FROM {table or 'embeddings_rep'})"
+        )
+    return (
+        f"SELECT vec_id, g.i - 1 AS {col}, CAST(embedding[g.i] AS DOUBLE) AS v "
+        f"FROM {table or 'embeddings'} CROSS JOIN generate_series(1, {dims}) g(i)"
+    )
 
 
 # --- k-means centroid refinement (the IVF scale path) -----------------
@@ -305,18 +342,8 @@ def pca_cov_sql(engine: str, table: str, dim: int = 64) -> str:
     ds = (
         "(CAST(SUM(CAST(floor(({x}) * " + q + ") AS BIGINT)) AS DOUBLE) / " + q + ")"
     )
-    if engine == "spark":
-        long_src = (
-            f"SELECT vec_id, pos AS i, CAST(v AS DOUBLE) AS v "
-            f"FROM (SELECT vec_id, posexplode(embedding) AS (pos, v) FROM {table})"
-        )
-    else:
-        long_src = (
-            f"SELECT vec_id, g.i - 1 AS i, CAST(embedding[g.i] AS DOUBLE) AS v "
-            f"FROM {table} CROSS JOIN generate_series(1, {dim}) g(i)"
-        )
     return f"""
-WITH long AS ({long_src}),
+WITH long AS ({long_form_sql(engine, "i", table, dim)}),
 nn AS (SELECT CAST(count(DISTINCT vec_id) AS BIGINT) AS n FROM long),
 mu AS (
   SELECT i, {ds.format(x='v')} / CAST(nn.n AS DOUBLE) AS mu
@@ -436,3 +463,252 @@ JOIN mud ON mud.i = s2.i
 CROSS JOIN tr
 ORDER BY dim
 """
+
+
+def pca_fit(spark):
+    """Fit the top principal component of `embeddings_rep` live: the
+    covariance is materialized once (dim² = 4096 rows) because the
+    power-iteration SQL reads it from seven places and CTE inlining
+    would re-run the N·dim² Gram pipeline per reference."""
+    spark.sql(pca_cov_sql("spark", "embeddings_rep")).transform(
+        materialize
+    ).createOrReplaceTempView("__pca_cov")
+    return spark.sql(pca_power_sql("spark", "", cov_table="__pca_cov"))
+
+
+# ------------------------------------------------- offline index builds
+#
+# Each embedding index is built ONCE per dataset, written straight from
+# executors through the artifact store, and registered as a temp view
+# for the query half (queries.py). Every build is deterministic
+# (fixed-point staged means, lexicographic argmin/argmax, exact integer
+# codes), so reusing an artifact cannot change any hash. The Spark
+# builds read the `embeddings_rep` view (IVF: the staged view ``n``),
+# which the calling runner registers.
+
+
+def _embeddings(sf_dir: str) -> str:
+    return os.path.join(sf_dir, "embeddings.parquet")
+
+
+def ivf_assign_cte(engine: str, n: str, name: str = "assign") -> str:
+    """``assign AS (…)`` — nearest-centroid assignment as an ARGMAX
+    AGGREGATE, not a window: max_by/arg_max over the lexicographic
+    (cos, -cid) pair picks the same centroid as ``row_number() ORDER BY
+    cos DESC, cid`` but partial-combines map-side — the shuffle carries
+    one row per vector instead of sorting all N×C (vector, centroid)
+    pairs."""
+    cos = cosine_staged(engine, "e", "c")
+    if engine == "spark":
+        assign = (
+            f"SELECT e.vec_id, max_by(c.cid, struct({cos}, -c.cid)) AS cid "
+            f"FROM {n} e JOIN centroids c ON true GROUP BY e.vec_id"
+        )
+    else:
+        # DuckDB's arg_max has no struct overload — the oracle keeps the
+        # (provably equivalent) window formulation; oracle speed is moot
+        assign = f"""SELECT vec_id, cid FROM (
+    SELECT e.vec_id, c.cid,
+      row_number() OVER (PARTITION BY e.vec_id
+                         ORDER BY {cos} DESC, c.cid) AS rn
+    FROM {n} e JOIN centroids c ON true
+  ) WHERE rn = 1"""
+    return f"{name} AS (\n  {assign}\n)"
+
+
+def ivf_index_views(spark, sf_dir: str, n: str) -> tuple[str, str]:
+    """The IVF index as `__ivf_centroids` (trained centroids) and
+    `__ivf_assign` (the (vec_id, cid) inverted lists) over the staged
+    (vec_id, demb, norm) view ``n``."""
+    source = _embeddings(sf_dir)
+    # I2: centroid means staged as floor(x·2^40) (see kmeans_refine)
+    version = f"S{CENTROID_STRIDE}:I2"
+    artifacts.parquet(
+        spark, source, "ivf_centroids", version,
+        lambda: kmeans_refine(
+            spark, spark.sql(f"SELECT vec_id, demb FROM {n}"),
+            iters=1, stride=CENTROID_STRIDE,
+        ),
+    ).selectExpr(
+        "centroid_id AS cid",
+        "centroid AS demb",
+        "sqrt(aggregate(centroid, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)) AS norm",
+    ).createOrReplaceTempView("__ivf_centroids")
+    artifacts.parquet(
+        spark, source, "ivf_assign", version,
+        lambda: spark.sql(
+            "WITH centroids AS (SELECT cid, demb, norm FROM __ivf_centroids),\n"
+            f"{ivf_assign_cte('spark', n)}\n"
+            "SELECT vec_id, cid FROM assign"
+        ),
+    ).createOrReplaceTempView("__ivf_assign")
+    return "__ivf_centroids", "__ivf_assign"
+
+
+#: product quantization: M subspaces x K centroids over the 64-dim
+#: embeddings. 64 floats -> M 4-bit codes packed in ONE BIGINT — the
+#: 32x compression that lets an ANN index hold 100 TB of vectors in
+#: executor memory (ADC scans the codes, not the floats). Codebook is
+#: stride-initialized from the dataset itself (deterministic; a
+#: production build would kmeans_refine each subspace codebook exactly
+#: like the IVF gate refines its coarse centroids).
+PQ_M = 8  # subspaces (8 dims each)
+PQ_K = 16  # centroids per subspace (4-bit codes)
+
+
+def pq_sql(engine: str, prefix_only: bool = False) -> str:
+    """PQ encoding: the stride codebook ``cents(cid, m, sub)``, the
+    per-subspace argmin ``assign`` and the packed ``codes(vec_id,
+    pq_code)``; ``prefix_only`` emits just those CTEs (no leading
+    WITH) for callers that append their own."""
+    d = 64 // PQ_M
+    if engine == "spark":
+        cids = f"SELECT explode(sequence(0, {PQ_K - 1})) AS cid"
+        ms = f"SELECT explode(sequence(0, {PQ_M - 1})) AS m"
+        demb = "CAST(embedding AS array<double>)"
+        sub_c = f"slice(e.demb, mm.m * {d} + 1, {d})"
+        dist = (
+            f"aggregate(zip_with(slice(e.demb, cn.m * {d} + 1, {d}), cn.sub, "
+            f"(x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+        )
+        # argmin as an aggregate: max of (-dist, -cid) == min of (dist, cid).
+        # BROADCAST(cn): both sides of the keyless join fit under the
+        # broadcast threshold at bench scale and Catalyst was choosing
+        # the CORPUS as the build side — legal here, fatal at 1B vectors.
+        # The hint pins the K*M codebook as the broadcast so the corpus
+        # always streams (BENCH_EXPLAIN round-4 finding).
+        assign = (
+            f"SELECT /*+ BROADCAST(cn) */ e.vec_id, cn.m, "
+            f"max_by(cn.cid, struct(-({dist}), -cn.cid)) AS cid "
+            f"FROM e JOIN cents cn ON true GROUP BY e.vec_id, cn.m"
+        )
+        pack = "sum(shiftleft(CAST(cid AS BIGINT), CAST(4 * m AS INT)))"
+    else:
+        cids = f"SELECT unnest(range(0, {PQ_K})) AS cid"
+        ms = f"SELECT unnest(range(0, {PQ_M})) AS m"
+        demb = "CAST(embedding AS DOUBLE[])"
+        sub_c = f"(e.demb)[mm.m * {d} + 1 : mm.m * {d} + {d}]"
+        dist = (
+            f"list_sum([((e.demb)[cn.m * {d} + i] - (cn.sub)[i]) "
+            f"* ((e.demb)[cn.m * {d} + i] - (cn.sub)[i]) for i in range(1, {d + 1})])"
+        )
+        assign = f"""SELECT vec_id, m, cid FROM (
+    SELECT e.vec_id, cn.m, cn.cid,
+      row_number() OVER (PARTITION BY e.vec_id, cn.m
+                         ORDER BY {dist} ASC, cn.cid) AS rn
+    FROM e JOIN cents cn ON true) WHERE rn = 1"""
+        pack = "sum(cid << (4 * m))"
+    prefix = f"""e AS (SELECT vec_id, {demb} AS demb FROM embeddings),
+stride AS (SELECT CAST(floor(count(*) / {PQ_K}.0) AS BIGINT) AS s FROM e),
+cents AS (
+  SELECT c.cid, mm.m, {sub_c} AS sub
+  FROM ({cids}) c
+  CROSS JOIN ({ms}) mm
+  JOIN stride st ON true
+  JOIN e ON e.vec_id = c.cid * st.s),
+assign AS (
+  {assign}),
+codes AS (
+  SELECT vec_id, CAST({pack} AS BIGINT) AS pq_code
+  FROM assign
+  GROUP BY vec_id)"""
+    return prefix if prefix_only else f"""
+WITH {prefix}
+SELECT vec_id, pq_code FROM codes
+ORDER BY vec_id
+"""
+
+
+def pq_codes_view(spark, sf_dir: str) -> str:
+    """The persisted PQ code table as `__pq_codes`."""
+    artifacts.parquet(
+        spark, _embeddings(sf_dir), "pq_codes", f"M{PQ_M}K{PQ_K}",
+        lambda: spark.sql(
+            f"WITH {pq_sql('spark', prefix_only=True)} "
+            f"SELECT vec_id, pq_code FROM codes"
+        ),
+    ).createOrReplaceTempView("__pq_codes")
+    return "__pq_codes"
+
+
+def sq8_index_sql(engine: str, dims: int = 64) -> str:
+    """SQ8 scalar-quantization index build: per-dimension global
+    [min, max] → each float maps to an 8-bit code, 4x smaller than
+    float32 with no codebook training (the quantization family member
+    between raw floats and PQ). Distance is EXACT integer L2 over
+    codes, so the gate hash-matches bit-for-bit across engines.
+
+    floor(x + 0.5) instead of round(): identical half-up semantics on
+    both engines for the non-negative scaled operand.
+    """
+    return f"""
+WITH long AS ({long_form_sql(engine, dims=dims)}),
+dims AS (
+  SELECT dim, min(v) AS mn, max(v) AS mx FROM long GROUP BY dim
+)
+SELECT l.vec_id, l.dim,
+       CAST(floor(CASE WHEN d.mx = d.mn THEN 0.0
+                       ELSE (l.v - d.mn) / (d.mx - d.mn) * 255.0 END + 0.5)
+            AS BIGINT) AS code
+FROM long l JOIN dims d ON l.dim = d.dim"""
+
+
+def sq8_codes_view(spark, sf_dir: str) -> str:
+    """The persisted SQ8 code table (vec_id, dim, code) as `__sq8_codes`.
+    The artifact is also the barrier that stops Catalyst inlining the
+    long/dims/codes subtree into both sides of a distance join."""
+    artifacts.parquet(
+        spark, _embeddings(sf_dir), "sq8_codes", "sq8d64",
+        lambda: spark.sql(sq8_index_sql("spark")),
+    ).createOrReplaceTempView("__sq8_codes")
+    return "__sq8_codes"
+
+
+def bq_index_sql(engine: str) -> str:
+    """Binary-quantization index build: each dimension binarizes
+    against its global mean (exact decimal mean → identical threshold
+    bits on both engines), packing 64 dims into two BIGINTs of 32 bits
+    each (no sign-bit overflow anywhere). 32x smaller than float32 —
+    the cheapest ANN family member, one step below SQ8.
+
+    Scale shape: the dims table is 64 rows (broadcast); packing is a
+    map-side conditional-shift SUM that partial-combines, so the only
+    shuffle carries one (vec_id, lo, hi) row per vector."""
+    if engine == "spark":
+        shift_lo = "shiftleft(1L, CAST(l.dim AS INT))"
+        shift_hi = "shiftleft(1L, CAST(l.dim - 32 AS INT))"
+    else:
+        shift_lo = "(1::BIGINT << CAST(l.dim AS INT))"
+        shift_hi = "(1::BIGINT << CAST(l.dim - 32 AS INT))"
+    return f"""
+WITH long AS ({long_form_sql(engine)}),
+dims AS (
+  SELECT dim,
+         CAST(SUM(CAST(v AS DECIMAL(25,6))) AS DOUBLE)
+           / CAST(count(*) AS DOUBLE) AS mu
+  FROM long GROUP BY dim
+)
+SELECT l.vec_id,
+  CAST(SUM(CASE WHEN l.dim < 32 AND l.v > d.mu THEN {shift_lo} ELSE 0 END) AS BIGINT) AS lo,
+  CAST(SUM(CASE WHEN l.dim >= 32 AND l.v > d.mu THEN {shift_hi} ELSE 0 END) AS BIGINT) AS hi
+FROM long l JOIN dims d ON l.dim = d.dim
+GROUP BY l.vec_id"""
+
+
+def bq_codes_view(spark, sf_dir: str) -> str:
+    """The persisted BQ code table (vec_id, lo, hi) as `__bq_codes`."""
+    artifacts.parquet(
+        spark, _embeddings(sf_dir), "bq_codes", "bq128",
+        lambda: spark.sql(bq_index_sql("spark")),
+    ).createOrReplaceTempView("__bq_codes")
+    return "__bq_codes"
+
+
+def pca_model_view(spark, sf_dir: str) -> str:
+    """The persisted PCA model (dim, mu, pc1_loading; 64 rows) as
+    `__pca_model`: pca_fit, trained once per dataset."""
+    artifacts.parquet(
+        spark, _embeddings(sf_dir), "pca_model", "pca1",
+        lambda: pca_fit(spark).select("dim", "mu", "pc1_loading"),
+    ).createOrReplaceTempView("__pca_model")
+    return "__pca_model"

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 from datetime import datetime
+from functools import partial
 
 from edgelake_spark import artifacts
 from edgelake_spark.catalog import load_parquet, register_sf_tables
@@ -824,37 +825,6 @@ ORDER BY query_id, sel_rank
 )
 
 
-def _ivf_assign_cte(engine: str, n: str, name: str = "assign") -> str:
-    """``assign AS (…)`` — nearest-centroid assignment as an ARGMAX
-    AGGREGATE, not a window: max_by/arg_max over the lexicographic
-    (cos, -cid) pair picks the same centroid as ``row_number() ORDER BY
-    cos DESC, cid`` but partial-combines map-side — the shuffle carries
-    one row per vector instead of sorting all N×C (vector, centroid)
-    pairs."""
-    def cos(a, b):
-        return (
-            sim.spark_cosine_staged(a, b)
-            if engine == "spark"
-            else sim.duck_cosine_staged(a, b)
-        )
-
-    if engine == "spark":
-        assign = (
-            f"SELECT e.vec_id, max_by(c.cid, struct({cos('e', 'c')}, -c.cid)) AS cid "
-            f"FROM {n} e JOIN centroids c ON true GROUP BY e.vec_id"
-        )
-    else:
-        # DuckDB's arg_max has no struct overload — the oracle keeps the
-        # (provably equivalent) window formulation; oracle speed is moot
-        assign = f"""SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-      row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY {cos('e', 'c')} DESC, c.cid) AS rn
-    FROM {n} e JOIN centroids c ON true
-  ) WHERE rn = 1"""
-    return f"{name} AS (\n  {assign}\n)"
-
-
 def _ivf_body(engine: str, n: str, assign_src: str | None = None) -> str:
     """IVF: k-means-refined centroids (stride init + one fixed-point-staged
     Lloyd round — kmeans_refine on the Spark side, its DuckDB CTE twin
@@ -865,18 +835,12 @@ def _ivf_body(engine: str, n: str, assign_src: str | None = None) -> str:
     pre-built (vec_id, cid) inverted-list table for the assignment
     aggregate — in production IVF the assignment is the offline index
     build, not part of the query."""
-    def cos(a, b):
-        return (
-            sim.spark_cosine_staged(a, b)
-            if engine == "spark"
-            else sim.duck_cosine_staged(a, b)
-        )
-
+    cos = partial(sim.cosine_staged, engine)
     nprobe = sim.NPROBE
     if assign_src is not None:
         assign_cte = f"assign AS (SELECT vec_id, cid FROM {assign_src})"
     else:
-        assign_cte = _ivf_assign_cte(engine, n)
+        assign_cte = sim.ivf_assign_cte(engine, n)
     # emitted WITHOUT a leading WITH so callers can prepend their own CTEs
     return f"""
 {assign_cte},
@@ -908,10 +872,10 @@ def _run_ivf_topk(spark, sf_dir):
     so the real k-means implementation is what gets hash-verified.
 
     Centroids AND the nearest-centroid assignment are the offline index
-    build (see _ivf_index_views); the per-query path is then what IVF
+    build (see sim.ivf_index_views); the per-query path is then what IVF
     actually costs: probe-list cosines over the selected buckets."""
     n = _emb_norm_view_for(spark, sf_dir)
-    _ivf_index_views(spark, sf_dir, n)
+    sim.ivf_index_views(spark, sf_dir, n)
     return spark.sql(
         "WITH centroids AS (SELECT cid, demb, norm FROM __ivf_centroids),\n"
         + _ivf_body("spark", n, assign_src="__ivf_assign")
@@ -922,38 +886,6 @@ def _emb_norm_view_for(spark, sf_dir):
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
     return _emb_norm_view(spark)
-
-
-def _ivf_index_views(spark, sf_dir, n) -> tuple[str, str]:
-    """The IVF index as `__ivf_centroids` (trained centroids) and
-    `__ivf_assign` (the (vec_id, cid) inverted lists). Both are the
-    offline index build, persisted per dataset and written straight
-    from executors: k-means training and the assignment are
-    deterministic (fixed-point staged means, lexicographic argmax), so
-    reusing them cannot change any hash."""
-    source = os.path.join(sf_dir, "embeddings.parquet")
-    # I2: centroid means staged as floor(x·2^40) (see kmeans_refine)
-    version = f"S{sim.CENTROID_STRIDE}:I2"
-    artifacts.parquet(
-        spark, source, "ivf_centroids", version,
-        lambda: sim.kmeans_refine(
-            spark, spark.sql(f"SELECT vec_id, demb FROM {n}"),
-            iters=1, stride=sim.CENTROID_STRIDE,
-        ),
-    ).selectExpr(
-        "centroid_id AS cid",
-        "centroid AS demb",
-        "sqrt(aggregate(centroid, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)) AS norm",
-    ).createOrReplaceTempView("__ivf_centroids")
-    artifacts.parquet(
-        spark, source, "ivf_assign", version,
-        lambda: spark.sql(
-            "WITH centroids AS (SELECT cid, demb, norm FROM __ivf_centroids),\n"
-            f"{_ivf_assign_cte('spark', n)}\n"
-            "SELECT vec_id, cid FROM assign"
-        ),
-    ).createOrReplaceTempView("__ivf_assign")
-    return "__ivf_centroids", "__ivf_assign"
 
 
 _q(
@@ -1462,40 +1394,6 @@ ORDER BY doc_id
 )
 
 
-def _keep_quality_sql(comp: str, score: str) -> str:
-    """Engine-shared body for quality-aware dedup keep: every doc gets
-    its near-dup component (itself if unclustered), the keeper is the
-    component's argmax-quality doc (ties → min doc_id). The argmax is
-    a max(q) aggregate + equality join + min(doc_id) — all map-side
-    combinable, NO per-component sort window (a 95%-of-corpus skew
-    component would serialize a window's task; an aggregate stays
-    partial). Equality on the DOUBLE score is safe cross-engine
-    because the score itself is hash-verified bit-identical
-    (doc_quality); it is never emitted, only compared."""
-    return f"""
-WITH comp AS ({comp}),
-q AS (SELECT doc_id, {score} AS q FROM documents),
-everyone AS (
-  SELECT q.doc_id, coalesce(c.component_id, q.doc_id) AS component_id, q.q
-  FROM q LEFT JOIN comp c ON c.doc_id = q.doc_id
-),
-best AS (
-  SELECT component_id, max(q) AS qmax FROM everyone GROUP BY component_id
-),
-kept AS (
-  SELECT e.component_id, min(e.doc_id) AS kept_id
-  FROM everyone e JOIN best b
-    ON b.component_id = e.component_id AND e.q = b.qmax
-  GROUP BY e.component_id
-)
-SELECT e.doc_id, e.component_id, k.kept_id,
-       CAST(CASE WHEN e.doc_id = k.kept_id THEN 1 ELSE 0 END AS BIGINT)
-         AS is_kept
-FROM everyone e JOIN kept k ON k.component_id = e.component_id
-ORDER BY e.doc_id
-"""
-
-
 def _run_dedup_keep_quality(spark, sf_dir):
     """Quality-aware dedup keep — the production refinement of
     doc_dedup_keep: instead of keeping each near-dup cluster's MIN
@@ -1509,26 +1407,19 @@ def _run_dedup_keep_quality(spark, sf_dir):
     quality is map-side scalar work; keeper selection is two
     map-side-combinable aggregates on component_id — no window, no
     sort, skew-safe even when one component holds most of the corpus.
-    The pair graph comes from the PERSISTED __mh_pairs artifact (the
-    offline dedup table PageRank/leakage also consume), so this gate
-    pays CC + selection, not a pipeline re-derivation."""
-    from pyspark.sql import functions as F
-
+    The cluster map is the PERSISTED CC artifact (_cc_map_view), so
+    this gate pays selection only, not a pipeline re-derivation."""
     register_sf_tables(spark, sf_dir)
-    _pairs_view(spark, sf_dir)
-    comp = dd.connected_components(
-        spark.table("__mh_pairs").select("id1", "id2")
-    )
-    comp.createOrReplaceTempView("__dkq_comp")
+    comp = _cc_map_view(spark, sf_dir)
     return spark.sql(
-        _keep_quality_sql("SELECT * FROM __dkq_comp", tx.spark_quality_score("text"))
+        dd.keep_quality_sql(f"SELECT * FROM {comp}", tx.spark_quality_score("text"))
     )
 
 
 _q(
     "doc_dedup_keep_quality",
     _run_dedup_keep_quality,
-    _keep_quality_sql(
+    dd.keep_quality_sql(
         _DEDUP_CLUSTERS_ORACLE.replace("ORDER BY doc_id", ""),
         tx.duck_quality_score("text"),
     ),
@@ -2257,15 +2148,13 @@ ORDER BY a.split
 
 def _run_split_by_cluster(spark, sf_dir):
     register_sf_tables(spark, sf_dir)
-    _pairs_view(spark, sf_dir)
-    dd.connected_components(
-        spark.table("__mh_pairs").select("id1", "id2")
-    ).createOrReplaceTempView("__sbc_comp")
+    comp = _cc_map_view(spark, sf_dir)
+    pairs = _pairs_view(spark, sf_dir)
     return spark.sql(
         _split_by_cluster_sql(
             "spark",
-            "SELECT * FROM __sbc_comp",
-            "SELECT id1, id2 FROM __mh_pairs",
+            f"SELECT * FROM {comp}",
+            f"SELECT id1, id2 FROM {pairs}",
             "md5(concat('split:', CAST(cid AS STRING)))",
         )
     )
@@ -3032,76 +2921,6 @@ ORDER BY column_name
 )
 
 
-#: product quantization: M subspaces x K centroids over the 64-dim
-#: embeddings. 64 floats -> M 4-bit codes packed in ONE BIGINT — the
-#: 32x compression that lets an ANN index hold 100 TB of vectors in
-#: executor memory (ADC scans the codes, not the floats). Codebook is
-#: stride-initialized from the dataset itself (deterministic; a
-#: production build would kmeans_refine each subspace codebook exactly
-#: like the IVF gate refines its coarse centroids).
-_PQ_M = 8  # subspaces (8 dims each)
-_PQ_K = 16  # centroids per subspace (4-bit codes)
-
-
-def _pq_sql(engine: str, prefix_only: bool = False) -> str:
-    d = 64 // _PQ_M
-    if engine == "spark":
-        cids = f"SELECT explode(sequence(0, {_PQ_K - 1})) AS cid"
-        ms = f"SELECT explode(sequence(0, {_PQ_M - 1})) AS m"
-        demb = "CAST(embedding AS array<double>)"
-        sub_c = f"slice(e.demb, mm.m * {d} + 1, {d})"
-        dist = (
-            f"aggregate(zip_with(slice(e.demb, cn.m * {d} + 1, {d}), cn.sub, "
-            f"(x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        # argmin as an aggregate: max of (-dist, -cid) == min of (dist, cid).
-        # BROADCAST(cn): both sides of the keyless join fit under the
-        # broadcast threshold at bench scale and Catalyst was choosing
-        # the CORPUS as the build side — legal here, fatal at 1B vectors.
-        # The hint pins the K*M codebook as the broadcast so the corpus
-        # always streams (BENCH_EXPLAIN round-4 finding).
-        assign = (
-            f"SELECT /*+ BROADCAST(cn) */ e.vec_id, cn.m, "
-            f"max_by(cn.cid, struct(-({dist}), -cn.cid)) AS cid "
-            f"FROM e JOIN cents cn ON true GROUP BY e.vec_id, cn.m"
-        )
-        pack = "sum(shiftleft(CAST(cid AS BIGINT), CAST(4 * m AS INT)))"
-    else:
-        cids = f"SELECT unnest(range(0, {_PQ_K})) AS cid"
-        ms = f"SELECT unnest(range(0, {_PQ_M})) AS m"
-        demb = "CAST(embedding AS DOUBLE[])"
-        sub_c = f"(e.demb)[mm.m * {d} + 1 : mm.m * {d} + {d}]"
-        dist = (
-            f"list_sum([((e.demb)[cn.m * {d} + i] - (cn.sub)[i]) "
-            f"* ((e.demb)[cn.m * {d} + i] - (cn.sub)[i]) for i in range(1, {d + 1})])"
-        )
-        assign = f"""SELECT vec_id, m, cid FROM (
-    SELECT e.vec_id, cn.m, cn.cid,
-      row_number() OVER (PARTITION BY e.vec_id, cn.m
-                         ORDER BY {dist} ASC, cn.cid) AS rn
-    FROM e JOIN cents cn ON true) WHERE rn = 1"""
-        pack = "sum(cid << (4 * m))"
-    prefix = f"""e AS (SELECT vec_id, {demb} AS demb FROM embeddings),
-stride AS (SELECT CAST(floor(count(*) / {_PQ_K}.0) AS BIGINT) AS s FROM e),
-cents AS (
-  SELECT c.cid, mm.m, {sub_c} AS sub
-  FROM ({cids}) c
-  CROSS JOIN ({ms}) mm
-  JOIN stride st ON true
-  JOIN e ON e.vec_id = c.cid * st.s),
-assign AS (
-  {assign}),
-codes AS (
-  SELECT vec_id, CAST({pack} AS BIGINT) AS pq_code
-  FROM assign
-  GROUP BY vec_id)"""
-    return prefix if prefix_only else f"""
-WITH {prefix}
-SELECT vec_id, pq_code FROM codes
-ORDER BY vec_id
-"""
-
-
 # PQ code assignment: the codebook is K*M tiny rows → broadcast; the
 # N×(K·M) distance evaluation is map-side behind that broadcast, the
 # argmin is an aggregate (partial-combines, no window sort of the
@@ -3110,8 +2929,8 @@ ORDER BY vec_id
 # bit-identical on both engines
 _q(
     "emb_pq_codes",
-    _sql(_pq_sql("spark")),
-    _pq_sql("duck"),
+    _sql(sim.pq_sql("spark")),
+    sim.pq_sql("duck"),
 )
 
 
@@ -3289,7 +3108,7 @@ def _pq_adc_sql(engine: str, codes_src: str = "codes") -> str:
     of M table lookups selected by unpacking its 4-bit code fields.
     The M-term sum is decimal-staged so aggregation order cannot change
     a bit; ranking breaks ties on vec_id."""
-    d = 64 // _PQ_M
+    d = 64 // sim.PQ_M
     if engine == "spark":
         qdist = (
             f"aggregate(zip_with(slice(q.demb, cn.m * {d} + 1, {d}), cn.sub, "
@@ -3303,7 +3122,7 @@ def _pq_adc_sql(engine: str, codes_src: str = "codes") -> str:
         )
         unpack = "((co.pq_code >> (4 * dt.m)) & 15)"
     return f"""
-WITH {_pq_sql(engine, prefix_only=True)},
+WITH {sim.pq_sql(engine, prefix_only=True)},
 q AS (SELECT vec_id AS query_id, demb FROM e WHERE vec_id < 5),
 dt AS (
   SELECT q.query_id, cn.m, cn.cid, {qdist} AS dsub
@@ -3335,21 +3154,8 @@ def _run_pq_adc(spark, sf_dir):
     any hash (encoding is deterministic); it only keeps the per-query
     cost at what ADC actually costs: a scan of the 8-byte codes."""
     register_sf_tables(spark, sf_dir)
-    _pq_codes_view(spark, sf_dir)
-    return spark.sql(_pq_adc_sql("spark", codes_src="__pq_codes"))
-
-
-def _pq_codes_view(spark, sf_dir) -> str:
-    """Build (or reuse) the persisted PQ code table as `__pq_codes`."""
-    artifacts.parquet(
-        spark, os.path.join(sf_dir, "embeddings.parquet"), "pq_codes",
-        f"M{_PQ_M}K{_PQ_K}",
-        lambda: spark.sql(
-            f"WITH {_pq_sql('spark', prefix_only=True)} "
-            f"SELECT vec_id, pq_code FROM codes"
-        ),
-    ).createOrReplaceTempView("__pq_codes")
-    return "__pq_codes"
+    codes = sim.pq_codes_view(spark, sf_dir)
+    return spark.sql(_pq_adc_sql("spark", codes_src=codes))
 
 
 # ADC completes the PQ story (codes are the storage half, ADC the
@@ -3671,63 +3477,75 @@ ORDER BY event_type NULLS FIRST, bucket NULLS FIRST
 _q("events_rollup", _sql(_ROLLUP), _ROLLUP)
 
 
-def _run_ivf_recall(spark, sf_dir):
-    """Recall@5 of the IVF index against brute-force ground truth,
-    per query — the ANN quality metric AS a query, so index-quality
-    regressions hash-fail instead of hiding in comments. Composes the
-    two registered pipelines; the semi join + tiny agg add nothing to
-    their plans."""
-    from pyspark.sql import functions as F
+# ------------------------------------------------------ ANN recall gates
 
-    brute = SPARK_QUERIES["emb_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    ivf = SPARK_QUERIES["emb_ivf_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    return (
-        brute.join(ivf, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_matched"))
-        .join(
-            brute.groupBy("query_id").agg(F.count("*").alias("n_brute")), "query_id"
+
+def _run_recall_of(ann_name: str):
+    """Recall@5 of an ANN gate against brute-force ground truth — the
+    index-quality metric AS a query, so index-quality regressions
+    hash-fail instead of hiding in comments. Zero-match queries KEEP
+    their row (left join + coalesce 0): a 4-bit PQ code or an IVF probe
+    that lands in the wrong buckets legitimately misses everything for
+    some queries, and that is the fact the gate exists to pin."""
+
+    def run(spark, sf_dir):
+        from pyspark.sql import functions as F
+
+        brute = SPARK_QUERIES["emb_cosine_topk"](spark, sf_dir).select(
+            "query_id", "neighbor_id"
         )
-        .select(
-            "query_id",
-            F.col("n_matched").cast("bigint").alias("n_matched"),
-            F.col("n_brute").cast("bigint").alias("n_brute"),
-            (F.col("n_matched").cast("double") / F.col("n_brute").cast("double")).alias(
-                "recall"
-            ),
+        ann = SPARK_QUERIES[ann_name](spark, sf_dir).select(
+            "query_id", "neighbor_id"
         )
-        .orderBy("query_id")
-    )
+        matched = (
+            brute.join(ann, ["query_id", "neighbor_id"], "left_semi")
+            .groupBy("query_id")
+            .agg(F.count("*").alias("n_matched"))
+        )
+        return (
+            brute.groupBy("query_id")
+            .agg(F.count("*").alias("n_brute"))
+            .join(matched, "query_id", "left")
+            .select(
+                "query_id",
+                F.coalesce(F.col("n_matched"), F.lit(0)).cast("bigint").alias("n_matched"),
+                F.col("n_brute").cast("bigint").alias("n_brute"),
+                (
+                    F.coalesce(F.col("n_matched"), F.lit(0)).cast("double")
+                    / F.col("n_brute").cast("double")
+                ).alias("recall"),
+            )
+            .orderBy("query_id")
+        )
+
+    return run
 
 
-def _ivf_recall_oracle() -> str:
-    brute = ORACLE_SQL["emb_cosine_topk"].strip().rstrip()
-    ivf = ORACLE_SQL["emb_ivf_topk"].strip().rstrip()
+def _recall_oracle_of(ann_name: str) -> str:
+    brute = ORACLE_SQL["emb_cosine_topk"].strip()
+    ann = ORACLE_SQL[ann_name].strip()
     return f"""
 WITH brute AS (SELECT query_id, neighbor_id FROM ({brute}) b),
-ivf AS (SELECT query_id, neighbor_id FROM ({ivf}) i),
+ann AS (SELECT query_id, neighbor_id FROM ({ann}) i),
 matched AS (
   SELECT b.query_id, CAST(count(*) AS BIGINT) AS n_matched
-  FROM brute b JOIN ivf USING (query_id, neighbor_id)
+  FROM brute b JOIN ann USING (query_id, neighbor_id)
   GROUP BY b.query_id),
 totals AS (
   SELECT query_id, CAST(count(*) AS BIGINT) AS n_brute
   FROM brute GROUP BY query_id)
-SELECT t.query_id, m.n_matched, t.n_brute,
-       CAST(m.n_matched AS DOUBLE) / CAST(t.n_brute AS DOUBLE) AS recall
-FROM totals t JOIN matched m USING (query_id)
+SELECT t.query_id, CAST(coalesce(m.n_matched, 0) AS BIGINT) AS n_matched,
+       t.n_brute,
+       CAST(coalesce(m.n_matched, 0) AS DOUBLE) / CAST(t.n_brute AS DOUBLE) AS recall
+FROM totals t LEFT JOIN matched m USING (query_id)
 ORDER BY t.query_id
 """
 
 
 _q(
     "emb_ivf_recall",
-    _run_ivf_recall,
-    _ivf_recall_oracle(),
+    _run_recall_of("emb_ivf_topk"),
+    _recall_oracle_of("emb_ivf_topk"),
 )
 
 
@@ -3804,28 +3622,15 @@ def _run_stream_agg(spark, sf_dir):
     the append+watermark eviction path is exercised in
     tests/test_streaming.py. Sums are decimal-staged per the module
     convention so streaming accumulation order cannot change a bit."""
-    import os as _os
-
     from pyspark.sql import functions as F
 
-    from edgelake_spark.streaming.ingest import aggregation_ingest, stream_parquet_source
+    from edgelake_spark.streaming.ingest import aggregation_ingest
 
-    register_sf_tables(spark, sf_dir)
-    stream = stream_parquet_source(
-        spark, _os.path.join(_os.path.abspath(sf_dir), "events.parquet")
-    ).withColumn("value", F.col("value").cast("decimal(25,6)"))
-    agg = aggregation_ingest(stream, "ts", "value", window="1 hour", watermark="1 hour")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("__stream_agg")
-        .trigger(availableNow=True)
-        .start()
+    stream = _replay(spark, sf_dir, "events").withColumn(
+        "value", F.col("value").cast("decimal(25,6)")
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    agg = aggregation_ingest(stream, "ts", "value", window="1 hour", watermark="1 hour")
+    _drain(agg, "__stream_agg", mode="complete")
     return spark.sql(
         """
 SELECT interval_start,
@@ -3866,17 +3671,13 @@ def _run_stream_conditions(spark, sf_dir):
     with SQL three-valued logic, so `WHERE NOT (value > 150)` is the
     exact batch oracle. The tiny per-type aggregate is collected and
     re-emitted so the gate's DataFrame outlives the scratch table."""
-    import os as _os
     import tempfile
 
     from edgelake_spark.streaming.conditions import StreamingCondition
-    from edgelake_spark.streaming.ingest import StreamIngest, stream_parquet_source
+    from edgelake_spark.streaming.ingest import StreamIngest
     from edgelake_spark.txlog import TxTable
 
-    register_sf_tables(spark, sf_dir)
-    stream = stream_parquet_source(
-        spark, _os.path.join(_os.path.abspath(sf_dir), "events.parquet")
-    )
+    stream = _replay(spark, sf_dir, "events")
     cond = StreamingCondition.parse("if [value] > 150 then ignore entry")
     with tempfile.TemporaryDirectory(prefix="el_stream_cond_") as work:
         sink = StreamIngest(spark, work, conditions=[cond], write_immediate=True)
@@ -4272,14 +4073,8 @@ def _ivfpq_sql(engine: str, n: str, assign_src: str, codes_src: str) -> str:
     training-data operator set (brief) with the standard scale path.
     """
 
-    def cos(a, b):
-        return (
-            sim.spark_cosine_staged(a, b)
-            if engine == "spark"
-            else sim.duck_cosine_staged(a, b)
-        )
-
-    d = 64 // _PQ_M
+    cos = partial(sim.cosine_staged, engine)
+    d = 64 // sim.PQ_M
     if engine == "spark":
         qdist = (
             f"aggregate(zip_with(slice(q.demb, cn.m * {d} + 1, {d}), cn.sub, "
@@ -4334,13 +4129,13 @@ def _run_ivfpq_topk(spark, sf_dir):
     tables and broadcasts the centroid/codebook CTEs; no full-corpus
     cosine anywhere."""
     n = _emb_norm_view_for(spark, sf_dir)
-    _ivf_index_views(spark, sf_dir, n)
-    _pq_codes_view(spark, sf_dir)
+    centroids, assign = sim.ivf_index_views(spark, sf_dir, n)
+    codes = sim.pq_codes_view(spark, sf_dir)
     return spark.sql(
-        "WITH centroids AS (SELECT cid, demb, norm FROM __ivf_centroids),\n"
-        + _pq_sql("spark", prefix_only=True)
+        f"WITH centroids AS (SELECT cid, demb, norm FROM {centroids}),\n"
+        + sim.pq_sql("spark", prefix_only=True)
         + ",\n"
-        + _ivfpq_sql("spark", n, assign_src="__ivf_assign", codes_src="__pq_codes")
+        + _ivfpq_sql("spark", n, assign_src=assign, codes_src=codes)
     )
 
 
@@ -4353,9 +4148,9 @@ _q(
     f"WITH n AS ({sim.duck_norm_stage_sql('embeddings')}),\n"
     + sim.duck_kmeans_centroids_cte("n", sim.CENTROID_STRIDE)
     + ",\n"
-    + _ivf_assign_cte("duck", "n", name="ivf_assign")
+    + sim.ivf_assign_cte("duck", "n", name="ivf_assign")
     + ",\n"
-    + _pq_sql("duck", prefix_only=True)
+    + sim.pq_sql("duck", prefix_only=True)
     + ",\n"
     + _ivfpq_sql("duck", "n", assign_src="ivf_assign", codes_src="codes"),
 )
@@ -4499,39 +4294,6 @@ _q("events_m4_downsample", _sql(_m4_sql("spark")), _m4_sql("duck"))
 # ------------------------------------------- scalar-quantized (SQ8) ANN
 
 
-def _sq8_index_sql(engine: str, dims: int = 64) -> str:
-    """SQ8 scalar-quantization index build: per-dimension global
-    [min, max] → each float maps to an 8-bit code, 4x smaller than
-    float32 with no codebook training (the quantization family member
-    between raw floats and PQ). Distance is EXACT integer L2 over
-    codes, so the gate hash-matches bit-for-bit across engines.
-
-    floor(x + 0.5) instead of round(): identical half-up semantics on
-    both engines for the non-negative scaled operand.
-    """
-    if engine == "spark":
-        long_src = (
-            "SELECT vec_id, pos AS dim, CAST(v AS DOUBLE) AS v "
-            "FROM (SELECT vec_id, posexplode(embedding) AS (pos, v) "
-            "FROM embeddings_rep)"
-        )
-    else:
-        long_src = (
-            "SELECT vec_id, g.i - 1 AS dim, CAST(embedding[g.i] AS DOUBLE) AS v "
-            f"FROM embeddings CROSS JOIN generate_series(1, {dims}) g(i)"
-        )
-    return f"""
-WITH long AS ({long_src}),
-dims AS (
-  SELECT dim, min(v) AS mn, max(v) AS mx FROM long GROUP BY dim
-)
-SELECT l.vec_id, l.dim,
-       CAST(floor(CASE WHEN d.mx = d.mn THEN 0.0
-                       ELSE (l.v - d.mn) / (d.mx - d.mn) * 255.0 END + 0.5)
-            AS BIGINT) AS code
-FROM long l JOIN dims d ON l.dim = d.dim"""
-
-
 _SQ8_QUERY_BODY = """
 WITH q AS (SELECT * FROM {codes} WHERE vec_id < 5),
 dist AS (
@@ -4560,17 +4322,14 @@ def _run_sq8_topk(spark, sf_dir):
     partial-aggregates map-side before the (5·N)-row shuffle."""
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
-    artifacts.parquet(
-        spark, os.path.join(sf_dir, "embeddings.parquet"), "sq8_codes", "sq8d64",
-        lambda: spark.sql(_sq8_index_sql("spark")),
-    ).createOrReplaceTempView("__sq8_codes")
-    return spark.sql(_SQ8_QUERY_BODY.format(codes="__sq8_codes", topk=5))
+    codes = sim.sq8_codes_view(spark, sf_dir)
+    return spark.sql(_SQ8_QUERY_BODY.format(codes=codes, topk=5))
 
 
 _q(
     "emb_sq8_topk",
     _run_sq8_topk,
-    f"WITH codes AS ({_sq8_index_sql('duck')})"
+    f"WITH codes AS ({sim.sq8_index_sql('duck')})"
     + _SQ8_QUERY_BODY.format(codes="codes", topk=5).replace("\nWITH q AS", ", q AS", 1),
 )
 
@@ -5096,71 +4855,6 @@ _q(
 )
 
 
-# ------------------------------------------------ PQ / SQ8 recall gates
-
-
-def _run_recall_of(ann_name: str):
-    """Recall@5 of an ANN gate against brute-force ground truth — the
-    index-quality metric AS a query (same composition as
-    _run_ivf_recall, parametrized over the ANN pipeline). Zero-match
-    queries KEEP their row (left join + coalesce 0): a 4-bit PQ code
-    legitimately misses everything for some queries, and that is the
-    fact the gate exists to pin."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        brute = SPARK_QUERIES["emb_cosine_topk"](spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        )
-        ann = SPARK_QUERIES[ann_name](spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        )
-        matched = (
-            brute.join(ann, ["query_id", "neighbor_id"], "left_semi")
-            .groupBy("query_id")
-            .agg(F.count("*").alias("n_matched"))
-        )
-        return (
-            brute.groupBy("query_id")
-            .agg(F.count("*").alias("n_brute"))
-            .join(matched, "query_id", "left")
-            .select(
-                "query_id",
-                F.coalesce(F.col("n_matched"), F.lit(0)).cast("bigint").alias("n_matched"),
-                F.col("n_brute").cast("bigint").alias("n_brute"),
-                (
-                    F.coalesce(F.col("n_matched"), F.lit(0)).cast("double")
-                    / F.col("n_brute").cast("double")
-                ).alias("recall"),
-            )
-            .orderBy("query_id")
-        )
-
-    return run
-
-
-def _recall_oracle_of(ann_name: str) -> str:
-    brute = ORACLE_SQL["emb_cosine_topk"].strip()
-    ann = ORACLE_SQL[ann_name].strip()
-    return f"""
-WITH brute AS (SELECT query_id, neighbor_id FROM ({brute}) b),
-ann AS (SELECT query_id, neighbor_id FROM ({ann}) i),
-matched AS (
-  SELECT b.query_id, CAST(count(*) AS BIGINT) AS n_matched
-  FROM brute b JOIN ann USING (query_id, neighbor_id)
-  GROUP BY b.query_id),
-totals AS (
-  SELECT query_id, CAST(count(*) AS BIGINT) AS n_brute
-  FROM brute GROUP BY query_id)
-SELECT t.query_id, CAST(coalesce(m.n_matched, 0) AS BIGINT) AS n_matched,
-       t.n_brute,
-       CAST(coalesce(m.n_matched, 0) AS DOUBLE) / CAST(t.n_brute AS DOUBLE) AS recall
-FROM totals t LEFT JOIN matched m USING (query_id)
-ORDER BY t.query_id
-"""
-
-
 # quantization loses precision by design; these gates pin HOW MUCH, so
 # a codebook/packing regression hash-fails instead of silently
 # degrading retrieval
@@ -5179,20 +4873,11 @@ def _sq8_recon_sql(engine: str) -> str:
     rounded to 12 decimals to absorb the engines' decimal→double
     last-ulp disagreement at 17-digit magnitudes."""
     if engine == "spark":
-        long_src = (
-            "SELECT vec_id, pos AS dim, CAST(v AS DOUBLE) AS v "
-            "FROM (SELECT vec_id, posexplode(embedding) AS (pos, v) "
-            "FROM embeddings_rep)"
-        )
         codes_src = "SELECT vec_id, dim, code FROM __sq8_codes"
     else:
-        long_src = (
-            "SELECT vec_id, g.i - 1 AS dim, CAST(embedding[g.i] AS DOUBLE) AS v "
-            "FROM embeddings CROSS JOIN generate_series(1, 64) g(i)"
-        )
-        codes_src = _sq8_index_sql("duck")
+        codes_src = sim.sq8_index_sql("duck")
     return f"""
-WITH long AS ({long_src}),
+WITH long AS ({sim.long_form_sql(engine)}),
 dims AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM long GROUP BY dim),
 codes AS ({codes_src}),
 errs AS (
@@ -5217,10 +4902,7 @@ def _run_sq8_recon(spark, sf_dir):
     the persisted artifact; output is ONE row."""
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
-    artifacts.parquet(
-        spark, os.path.join(sf_dir, "embeddings.parquet"), "sq8_codes", "sq8d64",
-        lambda: spark.sql(_sq8_index_sql("spark")),
-    ).createOrReplaceTempView("__sq8_codes")
+    sim.sq8_codes_view(spark, sf_dir)
     return spark.sql(_sq8_recon_sql("spark"))
 
 
@@ -5468,46 +5150,6 @@ _q(
 # ---------------------------------- binary-quantized (1-bit) hamming ANN
 
 
-def _bq_index_sql(engine: str) -> str:
-    """Binary-quantization index build: each dimension binarizes
-    against its global mean (exact decimal mean → identical threshold
-    bits on both engines), packing 64 dims into two BIGINTs of 32 bits
-    each (no sign-bit overflow anywhere). 32x smaller than float32 —
-    the cheapest ANN family member, one step below SQ8.
-
-    Scale shape: the dims table is 64 rows (broadcast); packing is a
-    map-side conditional-shift SUM that partial-combines, so the only
-    shuffle carries one (vec_id, lo, hi) row per vector."""
-    if engine == "spark":
-        long_src = (
-            "SELECT vec_id, pos AS dim, CAST(v AS DOUBLE) AS v "
-            "FROM (SELECT vec_id, posexplode(embedding) AS (pos, v) "
-            "FROM embeddings_rep)"
-        )
-        shift_lo = "shiftleft(1L, CAST(l.dim AS INT))"
-        shift_hi = "shiftleft(1L, CAST(l.dim - 32 AS INT))"
-    else:
-        long_src = (
-            "SELECT vec_id, g.i - 1 AS dim, CAST(embedding[g.i] AS DOUBLE) AS v "
-            "FROM embeddings CROSS JOIN generate_series(1, 64) g(i)"
-        )
-        shift_lo = "(1::BIGINT << CAST(l.dim AS INT))"
-        shift_hi = "(1::BIGINT << CAST(l.dim - 32 AS INT))"
-    return f"""
-WITH long AS ({long_src}),
-dims AS (
-  SELECT dim,
-         CAST(SUM(CAST(v AS DECIMAL(25,6))) AS DOUBLE)
-           / CAST(count(*) AS DOUBLE) AS mu
-  FROM long GROUP BY dim
-)
-SELECT l.vec_id,
-  CAST(SUM(CASE WHEN l.dim < 32 AND l.v > d.mu THEN {shift_lo} ELSE 0 END) AS BIGINT) AS lo,
-  CAST(SUM(CASE WHEN l.dim >= 32 AND l.v > d.mu THEN {shift_hi} ELSE 0 END) AS BIGINT) AS hi
-FROM long l JOIN dims d ON l.dim = d.dim
-GROUP BY l.vec_id"""
-
-
 _BQ_QUERY_BODY = """
 WITH q AS (SELECT * FROM {codes} WHERE vec_id < 5),
 dist AS (
@@ -5532,13 +5174,10 @@ def _run_bq_topk(spark, sf_dir):
     the first-pass filter at billion-vector scale."""
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
-    artifacts.parquet(
-        spark, os.path.join(sf_dir, "embeddings.parquet"), "bq_codes", "bq128",
-        lambda: spark.sql(_bq_index_sql("spark")),
-    ).createOrReplaceTempView("__bq_codes")
+    codes = sim.bq_codes_view(spark, sf_dir)
     return spark.sql(
         _BQ_QUERY_BODY.format(
-            codes="__bq_codes",
+            codes=codes,
             ham_lo="bit_count(q.lo ^ c.lo)",
             ham_hi="bit_count(q.hi ^ c.hi)",
             topk=5,
@@ -5549,7 +5188,7 @@ def _run_bq_topk(spark, sf_dir):
 _q(
     "emb_bq_hamming_topk",
     _run_bq_topk,
-    f"WITH codes AS ({_bq_index_sql('duck')})"
+    f"WITH codes AS ({sim.bq_index_sql('duck')})"
     + _BQ_QUERY_BODY.format(
         codes="codes",
         ham_lo="bit_count(xor(q.lo, c.lo))",
@@ -6708,19 +6347,9 @@ def _emb_drift_sql(engine: str, table: str) -> str:
     Scale shape: posexplode/unnest to (vec_id, dim, v) long form —
     linear in N*dims — then ONE (dim, half) aggregate with map-side
     partials; the final top-k sorts |dims| rows."""
-    if engine == "spark":
-        long_src = (
-            f"SELECT vec_id, pos AS dim, CAST(v AS DOUBLE) AS v "
-            f"FROM (SELECT vec_id, posexplode(embedding) AS (pos, v) FROM {table})"
-        )
-    else:
-        long_src = (
-            f"SELECT vec_id, g.i - 1 AS dim, CAST(embedding[g.i] AS DOUBLE) AS v "
-            f"FROM {table} CROSS JOIN generate_series(1, 64) g(i)"
-        )
     dmean = "CAST(SUM(CAST(v AS DECIMAL(25,12))) AS DOUBLE) / CAST(count(*) AS BIGINT)"
     return f"""
-WITH long AS ({long_src}),
+WITH long AS ({sim.long_form_sql(engine, table=table)}),
 halves AS (
   SELECT dim,
     {dmean.replace('v AS DECIMAL', 'CASE WHEN vec_id < 250 THEN v END AS DECIMAL').replace('count(*)', 'SUM(CASE WHEN vec_id < 250 THEN 1 ELSE 0 END)')} AS mu_ref,
@@ -7381,17 +7010,11 @@ def _semdedup_body(engine: str, n: str, assign_src: str | None = None, tau: floa
     re-clustering cost is the IVF build, already amortized as a
     persisted artifact). max() is order-independent, so the per-vector
     aggregate is hash-exact across engines."""
-    def cos(a, b):
-        return (
-            sim.spark_cosine_staged(a, b)
-            if engine == "spark"
-            else sim.duck_cosine_staged(a, b)
-        )
-
+    cos = partial(sim.cosine_staged, engine)
     if assign_src is not None:
         assign_cte = f"assign AS (SELECT vec_id, cid FROM {assign_src})"
     else:
-        assign_cte = _ivf_assign_cte(engine, n)
+        assign_cte = sim.ivf_assign_cte(engine, n)
     return f"""
 {assign_cte},
 av AS (
@@ -7412,8 +7035,8 @@ ORDER BY v.vec_id
 
 def _run_semdedup(spark, sf_dir):
     n = _emb_norm_view_for(spark, sf_dir)
-    _ivf_index_views(spark, sf_dir, n)
-    return spark.sql("WITH " + _semdedup_body("spark", n, assign_src="__ivf_assign"))
+    _, assign = sim.ivf_index_views(spark, sf_dir, n)
+    return spark.sql("WITH " + _semdedup_body("spark", n, assign_src=assign))
 
 
 _q(
@@ -7750,15 +7373,10 @@ _q(
 # shuffle, bounded at dim² cells by map-side partials) + four unrolled
 # power-method steps, fixed-point-staged end to end
 def _run_pca_power(spark, sf_dir):
-    """The covariance table is read from seven places in the iteration
-    SQL; materialize it once (localCheckpoint, dim² = 4096 rows) so CTE
-    inlining doesn't re-run the N·dim² Gram pipeline per reference."""
+    """Fits live (sim.pca_fit) on every call: the fit IS the gate."""
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
-    spark.sql(
-        sim.pca_cov_sql("spark", "embeddings_rep")
-    ).transform(_materialize).createOrReplaceTempView("__pca_cov")
-    return spark.sql(sim.pca_power_sql("spark", "", cov_table="__pca_cov"))
+    return sim.pca_fit(spark)
 
 
 _q(
@@ -8183,27 +7801,11 @@ def _run_pca_project(spark, sf_dir):
     via MATERIALIZED CTEs."""
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
-
-    def build():
-        spark.sql(
-            sim.pca_cov_sql("spark", "embeddings_rep")
-        ).transform(_materialize).createOrReplaceTempView("__pca_cov")
-        return spark.sql(
-            sim.pca_power_sql("spark", "", cov_table="__pca_cov")
-        ).select("dim", "mu", "pc1_loading")
-
-    artifacts.parquet(
-        spark, os.path.join(sf_dir, "embeddings.parquet"), "pca_model", "pca1", build
-    ).createOrReplaceTempView("__pca_model")
-    long_src = (
-        "SELECT vec_id, pos AS i, CAST(v AS DOUBLE) AS v "
-        "FROM (SELECT vec_id, posexplode(embedding) AS (pos, v) "
-        "FROM embeddings_rep)"
-    )
+    model = sim.pca_model_view(spark, sf_dir)
     return spark.sql(
         "WITH "
         + _PCA_PROJECT_BODY.format(
-            long_src=long_src, model="__pca_model", emb="embeddings_rep"
+            long_src=sim.long_form_sql("spark", "i"), model=model, emb="embeddings_rep"
         )
     )
 
@@ -8215,10 +7817,7 @@ _q(
     + sim.pca_power_sql("duck", "embeddings")
     + "),\n"
     + _PCA_PROJECT_BODY.format(
-        long_src=(
-            "SELECT vec_id, g.i - 1 AS i, CAST(embedding[g.i] AS DOUBLE) AS v "
-            "FROM embeddings CROSS JOIN generate_series(1, 64) g(i)"
-        ),
+        long_src=sim.long_form_sql("duck", "i"),
         model="model",
         emb="embeddings",
     ),

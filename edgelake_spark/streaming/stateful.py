@@ -19,6 +19,28 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+def _keyed_state(
+    df: DataFrame, group_col: str, fn, output: str, state: str,
+    mode: str = "update", key_col: str | None = None,
+) -> DataFrame:
+    """``df`` grouped on ``group_col`` through the stateful ``fn`` (per-key
+    state, no timeout). With ``key_col``, ``group_col`` is first set to
+    ``key_col`` cast to string — a named column, not an inline alias
+    expression, because FlatMapGroupsInPandasWithState requires
+    resolvable grouping attributes."""
+    if key_col is not None:
+        from pyspark.sql import functions as F
+
+        df = df.withColumn(group_col, F.col(key_col).cast("string"))
+    return df.groupBy(group_col).applyInPandasWithState(
+        fn,
+        outputStructType=output,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 OUTPUT_SCHEMA = "key string, n_rows bigint, last_value double, ewma double"
 STATE_SCHEMA = "ewma double, n bigint"
 
@@ -53,21 +75,8 @@ def ewma_stream(
 ) -> DataFrame:
     """Per-key EWMA over a stream; emits one row per key per batch with
     the running state. Attach .writeStream (update mode) to consume."""
-    from pyspark.sql import functions as F
-
-    # groupBy on a named column (not an inline alias expression) —
-    # FlatMapGroupsInPandasWithState requires resolvable grouping attrs
-    return (
-        stream_df.withColumn("key", F.col(key_col).cast("string"))
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_ewma_fn(alpha, value_col),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream_df, "key", make_ewma_fn(alpha, value_col),
+                        OUTPUT_SCHEMA, STATE_SCHEMA, key_col=key_col)
 
 
 # ------------------------------------------------------ sessionization
@@ -133,19 +142,8 @@ def session_stream(
     """Closed sessions per key over a stream (append semantics: a row is
     final once emitted). State is one small tuple per key in the state
     store — partitioned, checkpointed, no driver involvement."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream_df.withColumn("user_id", F.col(key_col).cast("string"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            make_session_fn(gap_minutes, ts_col),
-            outputStructType=SESSION_OUTPUT,
-            stateStructType=SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream_df, "user_id", make_session_fn(gap_minutes, ts_col),
+                        SESSION_OUTPUT, SESSION_STATE, mode="append", key_col=key_col)
 
 
 # ------------------------------------------------- streaming anomaly
@@ -227,19 +225,9 @@ def anomaly_stream(
     operator): emits per-batch flag counts against a cross-batch
     Welford state. State is three scalars per key — bounded at any
     stream length or key cardinality that fits a state store."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream_df.withColumn("key", F.col(key_col).cast("string"))
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_anomaly_fn(z_threshold, value_col, min_n, order_cols),
-            outputStructType=ANOMALY_OUTPUT,
-            stateStructType=ANOMALY_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream_df, "key",
+                        make_anomaly_fn(z_threshold, value_col, min_n, order_cols),
+                        ANOMALY_OUTPUT, ANOMALY_STATE, key_col=key_col)
 
 
 # ------------------------------------------------ streaming LSH dedup
@@ -341,13 +329,7 @@ def lsh_dedup_stream(
         .withColumn("band_key", F.explode(band_keys_udf(F.col(text_col))))
         .select("band_key", "doc_id")
     )
-    return exploded.groupBy("band_key").applyInPandasWithState(
-        _band_claim,
-        outputStructType=LSH_BAND_OUTPUT,
-        stateStructType=LSH_BAND_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(exploded, "band_key", _band_claim, LSH_BAND_OUTPUT, LSH_BAND_STATE)
 
 
 # ------------------------------------------------- HLL distinct monitor
@@ -434,19 +416,8 @@ def hll_stream(
     gate — watch a stream's cardinality (distinct devices, distinct
     users) with O(m) state per key and exactly-merged registers across
     restarts (checkpointed state store)."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream_df.withColumn("key", F.col(key_col).cast("string"))
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_hll_fn(value_col=value_col),
-            outputStructType=HLL_OUTPUT,
-            stateStructType=HLL_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream_df, "key", make_hll_fn(value_col=value_col),
+                        HLL_OUTPUT, HLL_STATE, key_col=key_col)
 
 
 # --------------------------------------------- CMS heavy-cell monitor
@@ -499,7 +470,6 @@ def cms_cells_stream(stream_df: DataFrame, text_col: str = "text",
     from edgelake_spark.functions import dedup as dd
     from edgelake_spark.functions import text as tx
     from edgelake_spark.functions.sketch import CMS_DEPTH, CMS_WIDTH
-    from pyspark.sql import functions as F
 
     words = stream_df.selectExpr(
         f"explode({tx.spark_tokens(text_col)}) AS word"
@@ -509,13 +479,7 @@ def cms_cells_stream(stream_df: DataFrame, text_col: str = "text",
         "CAST(j AS BIGINT) AS j",
         f"CAST({dd.spark_hex60(h)} % {CMS_WIDTH} AS BIGINT) AS col",
     )
-    return cols.groupBy("j").applyInPandasWithState(
-        make_cms_fn(min_cell),
-        outputStructType=CMS_OUTPUT,
-        stateStructType=CMS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(cols, "j", make_cms_fn(min_cell), CMS_OUTPUT, CMS_STATE)
 
 
 # --------------------------------------------- KLL quantile monitor
@@ -583,19 +547,8 @@ def kll_stream(
     Scale shape: the only shuffle is the key grouping; state per key is
     ≤ ~3k doubles regardless of stream length; per-shard sketches merge
     associatively (KllSketch.merge) for cross-node rollup."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream_df.withColumn("key", F.col(key_col).cast("string"))
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_kll_fn(value_col=value_col),
-            outputStructType=KLL_OUTPUT,
-            stateStructType=KLL_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(stream_df, "key", make_kll_fn(value_col=value_col),
+                        KLL_OUTPUT, KLL_STATE, key_col=key_col)
 
 
 # ------------------------------- weighted reservoir sampler (ES top-k)
@@ -690,16 +643,7 @@ def weighted_sample_stream(
     output are k rows per stratum regardless of stream length; shard
     reservoirs merge by top-k-of-union (associative), so a two-level
     rollup (per-executor reservoir → global) needs no re-scan."""
-    from pyspark.sql import functions as F
-
-    return (
-        stream_df.withColumn("key", F.col(key_col).cast("string"))
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_weighted_sample_fn(k=k, id_col=id_col, weight_col=weight_col),
-            outputStructType=WSAMP_OUTPUT,
-            stateStructType=WSAMP_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        stream_df, "key", make_weighted_sample_fn(k=k, id_col=id_col, weight_col=weight_col),
+        WSAMP_OUTPUT, WSAMP_STATE, key_col=key_col,
     )

@@ -16,14 +16,19 @@ from tests.conftest import SF_DIR, SF_DIR_MED
 from tests.test_oracle_parity import _rows_to_multiset
 
 #: one gate per persisted artifact family: bucketed layouts, IVF
-#: centroids + inverted lists, the PCA model, winnowing fingerprints,
-#: and a consumer of the __mh_pairs table
+#: centroids + inverted lists, the PCA model, the PQ, SQ8 and BQ code
+#: tables, winnowing fingerprints, a consumer of the __mh_pairs table
+#: and one of the connected-components cluster map
 GATES = (
     "orders_bucketed_join",
     "emb_ivf_topk",
     "emb_pca_project",
+    "emb_pq_adc_topk",
+    "emb_sq8_recon_error",
+    "emb_bq_hamming_topk",
     "doc_winnow_fp",
     "doc_split_leakage",
+    "doc_cluster_sizes",
 )
 
 

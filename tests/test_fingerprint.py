@@ -13,7 +13,7 @@ from __future__ import annotations
 import json
 import os
 
-from edgelake_spark.fingerprint import all_fingerprints, gate_fingerprint
+from edgelake_spark.fingerprint import all_fingerprints, gate_fingerprint, stale_gates
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -80,9 +80,7 @@ def test_stale_gates_rank_first_in_window():
     if not os.path.exists(path):
         return  # fallback ordering; nothing to assert
     with open(path) as fh:
-        verified = json.load(fh)
-    current = all_fingerprints()
-    stale = {g for g, fp in current.items() if fp not in verified.get(g, ())}
+        stale = set(stale_gates(json.load(fh)))
     window = list(entry.queries().keys())[:50]
     missing = stale - set(window)
     assert not missing, f"stale gates outside driver window: {sorted(missing)}"

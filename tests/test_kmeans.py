@@ -1,5 +1,6 @@
 """kmeans_refine: Lloyd rounds over DataFrame ops are deterministic and
-reduce within-cluster distance vs the stride initialization."""
+reduce within-cluster distance vs the stride initialization; the recall
+gate over the IVF index it trains keeps every query."""
 
 from pyspark.sql import functions as F
 
@@ -45,3 +46,28 @@ def test_kmeans_reduces_cost_and_is_deterministic(spark):
     a = sorted(tuple(r) for r in refined.collect())
     b = sorted(tuple(r) for r in again.collect())
     assert a == b
+
+
+def test_ivf_recall_keeps_zero_match_queries(spark):
+    """At sf0.001 the two probed buckets of query 2 hold none of its
+    five true neighbours. The recall gate reports it as a zero-recall
+    row on both engines instead of dropping it."""
+    import duckdb
+
+    from edgelake_spark.queries import ORACLE_SQL, SPARK_QUERIES
+
+    got = {
+        r.query_id: (r.n_matched, r.n_brute, r.recall)
+        for r in SPARK_QUERIES["emb_ivf_recall"](spark, SF_DIR).collect()
+    }
+    assert sorted(got) == [0, 1, 2, 3, 4]
+    assert got[2] == (0, 5, 0.0)
+    duck = duckdb.connect()
+    try:
+        duck.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{SF_DIR}/embeddings.parquet')"
+        )
+        want = duck.execute(ORACLE_SQL["emb_ivf_recall"]).fetchall()
+    finally:
+        duck.close()
+    assert {r[0]: tuple(r[1:]) for r in want} == got

@@ -68,44 +68,6 @@ def test_increments_single_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_bucketed_join_has_no_shuffle(spark):
-    """Two tables bucketed on the join key join bucket-for-bucket: the
-    SortMergeJoin's inputs show NO Exchange (the co-location payoff)."""
-    from edgelake_spark.catalog import register_sf_tables
-    from edgelake_spark.ingest.bucketing import drop_bucketed, write_bucketed
-
-    register_sf_tables(spark, SF_DIR_MED)
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the planner considers the co-located
-        # sort-merge path (at real scale neither side broadcasts)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(spark.table("orders"), "b_orders", "o_custkey", buckets=8)
-        write_bucketed(spark.table("customer"), "b_customer", "c_custkey", buckets=8)
-        joined = spark.sql(
-            "SELECT o.o_orderkey, c.c_name "
-            "FROM b_orders o JOIN b_customer c ON o.o_custkey = c.c_custkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # and it actually answers correctly
-        n = joined.count()
-        plain = (
-            spark.table("orders")
-            .join(
-                spark.table("customer"),
-                spark.table("orders").o_custkey == spark.table("customer").c_custkey,
-            )
-            .count()
-        )
-        assert n == plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        drop_bucketed(spark, "b_orders")
-        drop_bucketed(spark, "b_customer")
-
-
 def test_exists_compiles_to_semi_join(spark):
     # tpch_q4ish: EXISTS must become a semi join (one probe per order),
     # never an inner join + distinct (fact duplication at scale)
@@ -779,12 +741,8 @@ def test_mmr_composes_with_ivf_pool(spark):
     pool-source-agnostic: full ranks per query, selections drawn from
     the pool, mmr monotone non-increasing."""
     from edgelake_spark.functions import similarity as sim
-    from edgelake_spark.queries import (
-        _MMR_K,
-        _emb_norm_view_for,
-        _ivf_index_views,
-        _mmr_select,
-    )
+    from edgelake_spark.functions.similarity import ivf_index_views as _ivf_index_views
+    from edgelake_spark.queries import _MMR_K, _emb_norm_view_for, _mmr_select
 
     n = _emb_norm_view_for(spark, SF_DIR_MED)
     _ivf_index_views(spark, SF_DIR_MED, n)

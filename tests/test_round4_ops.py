@@ -13,7 +13,8 @@ from datetime import datetime
 import pytest
 
 from edgelake_spark import catalog
-from edgelake_spark.queries import _m4_sql, _sq8_index_sql, _token_rank_sql
+from edgelake_spark.functions.similarity import sq8_index_sql as _sq8_index_sql
+from edgelake_spark.queries import _m4_sql, _token_rank_sql
 
 
 @pytest.fixture(autouse=True)
