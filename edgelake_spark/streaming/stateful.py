@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+
 def _keyed_state(
     df: DataFrame, group_col: str, fn, output: str, state: str,
     mode: str = "update", key_col: str | None = None,
