@@ -214,12 +214,11 @@ def stale_gates(verified: dict[str, list[str]]) -> list[str]:
 
 
 if __name__ == "__main__":
-    # python -m edgelake_spark.fingerprint [VERIFIED_GATES.json]
+    # python -m edgelake_spark.fingerprint
     import json
     import os
-    import sys
 
-    path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+    path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "VERIFIED_GATES.json"
     )
     with open(path) as fh:

@@ -875,10 +875,10 @@ def _run_ivf_topk(spark, sf_dir):
     build (see sim.ivf_index_views); the per-query path is then what IVF
     actually costs: probe-list cosines over the selected buckets."""
     n = _emb_norm_view_for(spark, sf_dir)
-    sim.ivf_index_views(spark, sf_dir, n)
+    centroids, assign = sim.ivf_index_views(spark, sf_dir, n)
     return spark.sql(
-        "WITH centroids AS (SELECT cid, demb, norm FROM __ivf_centroids),\n"
-        + _ivf_body("spark", n, assign_src="__ivf_assign")
+        f"WITH centroids AS (SELECT cid, demb, norm FROM {centroids}),\n"
+        + _ivf_body("spark", n, assign_src=assign)
     )
 
 
@@ -4124,8 +4124,8 @@ ORDER BY query_id, adc_dist ASC, neighbor_id
 
 def _run_ivfpq_topk(spark, sf_dir):
     """Spark side: both index halves come from the SAME offline builds
-    the standalone gates persist (`__ivf_assign` inverted lists,
-    `__pq_codes` code table) — the query plan reads two small parquet
+    the standalone gates persist (sim.ivf_index_views inverted lists,
+    sim.pq_codes_view code table) — the query plan reads two small parquet
     tables and broadcasts the centroid/codebook CTEs; no full-corpus
     cosine anywhere."""
     n = _emb_norm_view_for(spark, sf_dir)
@@ -4862,7 +4862,7 @@ _q("emb_pq_recall", _run_recall_of("emb_pq_adc_topk"), _recall_oracle_of("emb_pq
 _q("emb_sq8_recall", _run_recall_of("emb_sq8_topk"), _recall_oracle_of("emb_sq8_topk"))
 
 
-def _sq8_recon_sql(engine: str) -> str:
+def _sq8_recon_sql(engine: str, codes: str | None = None) -> str:
     """SQ8 reconstruction error — the quality metric the recall gates
     don't capture: how far the 8-bit codes sit from the floats they
     replace, in CODE UNITS (1 unit = one quantization step of the
@@ -4871,11 +4871,14 @@ def _sq8_recon_sql(engine: str) -> str:
     units with the floor(x + 0.5) trick, the sums run in exact
     DECIMAL(38,0), and only the final divisions touch floating point —
     rounded to 12 decimals to absorb the engines' decimal→double
-    last-ulp disagreement at 17-digit magnitudes."""
-    if engine == "spark":
-        codes_src = "SELECT vec_id, dim, code FROM __sq8_codes"
+    last-ulp disagreement at 17-digit magnitudes.
+
+    `codes` names the persisted code table the Spark side reads; the
+    oracle (codes=None) rebuilds the codes inline."""
+    if codes is not None:
+        codes_src = f"SELECT vec_id, dim, code FROM {codes}"
     else:
-        codes_src = sim.sq8_index_sql("duck")
+        codes_src = sim.sq8_index_sql(engine)
     return f"""
 WITH long AS ({sim.long_form_sql(engine)}),
 dims AS (SELECT dim, min(v) AS mn, max(v) AS mx FROM long GROUP BY dim),
@@ -4902,8 +4905,8 @@ def _run_sq8_recon(spark, sf_dir):
     the persisted artifact; output is ONE row."""
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
-    sim.sq8_codes_view(spark, sf_dir)
-    return spark.sql(_sq8_recon_sql("spark"))
+    codes = sim.sq8_codes_view(spark, sf_dir)
+    return spark.sql(_sq8_recon_sql("spark", codes))
 
 
 _q("emb_sq8_recon_error", _run_sq8_recon, _sq8_recon_sql("duck"))
