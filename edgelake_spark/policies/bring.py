@@ -94,29 +94,6 @@ class PolicyStore:
         with open(path) as fh:
             return cls.from_json_lines(fh.read())
 
-    def to_dataframe(self, spark):
-        """The ledger as a Spark DataFrame (policy_type, policy_id,
-        policy_date, policy) — registerable as a `policies` view so SQL
-        and bring queries share one source of truth."""
-        from edgelake_spark.localframe import local_frame
-
-        rows = []
-        for p in self.policies:
-            ptype = next(iter(p)) if len(p) == 1 else "*"
-            body = p.get(ptype, p) if ptype != "*" else p
-            rows.append(
-                (
-                    ptype,
-                    str(body.get("id", "")),
-                    str(body.get("date", "")),
-                    json.dumps(p, separators=(",", ":")),
-                )
-            )
-        return local_frame(
-            spark,
-            rows or [], "policy_type string, policy_id string, policy_date string, policy string"
-        )
-
     # ------------------------------------------------------------ query
 
     def blockchain_get(

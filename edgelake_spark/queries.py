@@ -1227,7 +1227,9 @@ def _run_multimodal_features(spark, sf_dir):
     blob contract, bucket_dbms.py:110) → Arrow-batched mapInPandas
     feature extraction (deterministic stub decode — see
     functions/multimodal.py). The oracle recomputes the stub's
-    hash-derived width/height arithmetic in SQL."""
+    hash-derived width/height arithmetic in SQL. The feature rows are
+    checkpointed before the global sort, whose range-partition sampling
+    would otherwise run the pandas UDF over every blob a second time."""
     from edgelake_spark.functions.multimodal import extract_features
 
     register_sf_tables(spark, sf_dir)
@@ -1242,6 +1244,7 @@ def _run_multimodal_features(spark, sf_dir):
     return (
         extract_features(blobs, decode_stub=True)
         .selectExpr("blob_hash", "n_bytes", "width", "height")
+        .transform(_materialize)
         .orderBy("blob_hash", "n_bytes")
     )
 

@@ -20,6 +20,20 @@ same shapes over and over pays Janino on every query. The cache holds
 ``CODEGEN_CACHE_ENTRIES`` (4000) classes, over ten times the largest
 measured mix, and a warm pass compiles none. It is a static conf, so it
 is set here, at session build.
+
+Python worker daemon: Python workers fork from
+``edgelake_spark.worker_daemon`` (``spark.python.daemon.module``), whose
+zip importers skip the archive re-read that PySpark triggers at the
+start of every task on CPython before 3.12: about 0.2 s of CPU per task
+however small, so a 4-partition ``mapInPandas`` cost 0.8-1.0 s of
+worker CPU, and about 0.2 s with the daemon. ``spark.executorEnv.PYTHONPATH``
+names the directory that holds this package, so the daemon and the
+engine's pandas UDFs pickled by reference
+(``functions.multimodal.extract_features``) import from any working
+directory. Both are static confs: a session the engine did not build,
+such as a bare ``SparkSession.builder`` one, keeps stock workers and their
+per-task cost, and its workers find engine UDFs only through their cwd
+or ``$PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -32,6 +46,10 @@ from pyspark.sql import SparkSession
 #: generates 342-345 (module docstring), so 4000 holds the gate mix with
 #: room to spare.
 CODEGEN_CACHE_ENTRIES = 4000
+
+#: the directory that holds the ``edgelake_spark`` package, put on the
+#: Python workers' path so the daemon and engine UDFs import anywhere
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _driver_memory() -> str:
@@ -93,6 +111,9 @@ def get_spark(
         # which an iterative job (CC label rounds) accumulates one file
         # set per round until the checkpoint dir fills
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # Python workers skip the per-task archive re-read (module docstring)
+        .config("spark.python.daemon.module", "edgelake_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 
@@ -18,6 +20,10 @@ def duck():
     con.close()
 
 
+#: the checkout these tests belong to: subprocesses run its code, not
+#: another copy's
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
 
@@ -26,8 +32,6 @@ def drop_last_commit(checkpoint: str) -> None:
     """Forget the last committed batch of a streaming checkpoint, as a
     crash between a sink's write and Spark's batch commit does: the
     restarted query replays that epoch."""
-    import os
-
     commits = os.path.join(checkpoint, "commits")
     last = max(int(n) for n in os.listdir(commits) if n.isdigit())
     os.remove(os.path.join(commits, str(last)))

@@ -102,16 +102,3 @@ class TestLedgerPersistence:
         assert back.blockchain_get("operator", bring='bring [operator][name] separator = ","') == "op1,op2"
         # ids survive the round trip
         assert back.policies[0]["operator"]["id"] == store.policies[0]["operator"]["id"]
-
-    def test_to_dataframe(self, spark, tmp_path):
-        from edgelake_spark.policies.bring import PolicyStore
-
-        store = PolicyStore()
-        store.add({"operator": {"name": "op1"}})
-        store.add({"cluster": {"name": "c1"}})
-        df = store.to_dataframe(spark)
-        df.createOrReplaceTempView("policies")
-        rows = spark.sql(
-            "select policy_type, count(*) as n from policies group by policy_type order by policy_type"
-        ).collect()
-        assert [(r.policy_type, r.n) for r in rows] == [("cluster", 1), ("operator", 1)]

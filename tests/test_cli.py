@@ -3,7 +3,7 @@
 import subprocess
 import sys
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 
 def _run(args, stdin=None):
@@ -13,7 +13,7 @@ def _run(args, stdin=None):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
 
 

@@ -17,7 +17,7 @@ import pytest
 
 from edgelake_spark import checkpoint as ck
 from edgelake_spark.queries import SPARK_QUERIES
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 
 # one representative per checkpoint-discipline family (VERDICT r8 #1):
 # explode-discipline _ckpt_view (winnow pairs), iterative distributed
@@ -133,7 +133,7 @@ def test_executor_loss_drill():
 
     proc = subprocess.run(
         [sys.executable, "tools/drill_executor_loss.py"],
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         capture_output=True,
         text=True,
         timeout=570,

@@ -15,6 +15,7 @@ import os
 import pytest
 
 from edgelake_spark.txlog import TxConflict, TxTable
+from tests.conftest import REPO_ROOT
 
 
 def _df(spark, rows):
@@ -267,7 +268,7 @@ def test_concurrent_processes_all_appends_survive(spark, tmp_path):
     procs = [
         subprocess.Popen(
             [_sys.executable, "-c", writer_src, table_path, tag, str(n_each)],
-            cwd="/root/repo",
+            cwd=REPO_ROOT,
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,

@@ -12,6 +12,8 @@ from __future__ import annotations
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 _SCRIPT = r"""
 import math
 from datetime import datetime
@@ -117,7 +119,7 @@ def test_vanilla_driver_session_gate():
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert "VANILLA_GATE_PASS" in proc.stdout, (
         f"stdout:\n{proc.stdout[-2000:]}\nstderr:\n{proc.stderr[-3000:]}"
