@@ -14,8 +14,10 @@ import os
 import sys
 import time
 
+#: the checkout this script belongs to
+REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 #: where main() writes the full result; the printed line names it
-FULL_RESULT_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
+FULL_RESULT_PATH = os.path.join(REPO_DIR, "BENCH_FULL.json")
 
 
 BENCH_QUERIES = [
@@ -443,7 +445,7 @@ def main() -> None:
     sf1_timings: dict[str, float] | None = None
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and not only:
         try:
-            sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.bench_sf1")
+            sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO_DIR, ".bench_sf1"))
             # a COLD cache means the 10-replica synthesis runs first —
             # require enough remaining budget to cover its measured
             # ~2 min cost, or the synthesis itself would blow through
@@ -533,7 +535,7 @@ def main() -> None:
         extra = degraded_heavy[:3]
     if slowest:
         try:
-            with open(os.path.join(os.path.dirname(__file__) or ".", "BENCH_EXPLAIN.txt"), "w") as fh:
+            with open(os.path.join(REPO_DIR, "BENCH_EXPLAIN.txt"), "w") as fh:
                 for name in slowest + extra:
                     tag = " [single-sample]" if name in extra else ""
                     fh.write(f"{'=' * 20} {name} ({timings[name]}s{tag}) {'=' * 20}\n")

@@ -20,12 +20,6 @@ from edgelake_spark.dialect.parser import split_top_level
 from edgelake_spark.ingest.infer import infer_schema
 from edgelake_spark.localframe import local_frame
 
-_SQL_TYPE_RE = re.compile(
-    r"\b(serial|timestamp|varchar|char\s*\(\d+\)|int|integer|bigint|float|double|"
-    r"decimal(?:\s*\(\d+(?:,\d+)?\))?|bool|boolean|date|time|uuid|cidr)\b(.*)$",
-    re.IGNORECASE,
-)
-
 _TYPE_TO_SPARK = {
     "serial": "bigint",
     "int": "int",

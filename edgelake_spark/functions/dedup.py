@@ -271,20 +271,6 @@ def duck_hs64_expr(col: str) -> str:
     return f"[{duck_hex60('md5(t)')} for t in {toks}]"
 
 
-def spark_simhash_over(hs64: str, bits: int = SIMHASH_BITS) -> str:
-    """``bits``-wide SimHash over a pre-hashed token column: bit j set
-    iff the majority of token hashes have bit j set. Width is a
-    query-time choice: 16 for the compact gate, up to 60 (the
-    md5-derived integer width) for the wide form a large corpus needs
-    to keep band buckets selective."""
-    return (
-        f"aggregate(sequence(0, {bits - 1}), 0L, (acc, j) -> acc + "
-        f"CASE WHEN aggregate({hs64}, 0, (a, h) -> a + "
-        f"CASE WHEN (shiftright(h, j) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN shiftleft(1L, j) ELSE 0L END)"
-    )
-
-
 def spark_simhash_sql(table: str, where: str = "", id_col: str = "doc_id", text_col: str = "text", bits: int = SIMHASH_BITS) -> str:
     """SimHash via explode + groupBy — whole-stage-codegen'd integer
     aggregation instead of interpreted nested-lambda loops (~6× faster
@@ -567,3 +553,57 @@ SELECT e.doc_id, e.component_id, k.kept_id,
 FROM everyone e JOIN kept k ON k.component_id = e.component_id
 ORDER BY e.doc_id
 """
+
+
+# ------------------------------------------------- PageRank over the dup graph
+
+
+def pagerank_sql(edges: str, iters: int = 3, d: float = 0.85) -> str:
+    """PageRank (``iters`` unrolled Jacobi iterations, damping ``d``)
+    over a near-duplicate graph — ranking duplicate-cluster centrality,
+    e.g. to pick the canonical copy. ``edges`` names a (src, dst)
+    relation holding both directions of every undirected pair: a view
+    name, or an aliased parenthesized subquery. Every node has
+    degree >= 1 (nodes exist only via edges), so there is no dangling
+    mass; the (1-d)/N teleport term keeps the distribution proper.
+
+    Determinism: the per-neighbor contribution pr/deg is an IEEE double
+    division; the neighbor SUM is decimal-staged (exact, order-free);
+    iterations are unrolled CTEs so both engines execute the identical
+    dataflow. Scale shape: edges come from the LSH band join (linear in
+    collisions), each iteration is ONE shuffle on dst joined back on a
+    co-located key; production would checkpoint each iteration, exactly
+    like connected_components' pointer jumping."""
+    sql = f"""
+WITH edges AS (SELECT src, dst FROM {edges}),
+nodes AS (SELECT DISTINCT src AS id FROM edges),
+deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
+n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
+pr0 AS (
+  SELECT id, CAST(1.0 AS DOUBLE) / CAST(n.n AS DOUBLE) AS pr FROM nodes CROSS JOIN n
+)"""
+    prev = "pr0"
+    for k in range(1, iters + 1):
+        sql += f""",
+pr{k} AS (
+  SELECT nodes.id,
+    {1.0 - d:.2f} / CAST(n.n AS DOUBLE)
+      + {d} * CAST(coalesce(s.acc, 0) AS DOUBLE) AS pr
+  FROM nodes CROSS JOIN n
+  LEFT JOIN (
+    SELECT e.dst AS id,
+           SUM(CAST(p.pr / CAST(d2.deg AS DOUBLE) AS DECIMAL(30,15))) AS acc
+    FROM edges e
+    JOIN {prev} p ON p.id = e.src
+    JOIN deg d2 ON d2.id = e.src
+    GROUP BY e.dst
+  ) s ON s.id = nodes.id
+)"""
+        prev = f"pr{k}"
+    sql += f"""
+SELECT p.id AS doc_id, p.pr AS pagerank, deg.deg
+FROM {prev} p JOIN deg ON deg.id = p.id
+ORDER BY pagerank DESC, doc_id
+LIMIT 20
+"""
+    return sql

@@ -5,13 +5,14 @@ and references them from rows (edge_lake/dbms/bucket_dbms.py:110
 store_file, :220 retrieve_files; mongodb_dbms.py:69; base64 extraction
 in map_json_to_insert.py:240 apply_blob_storage). Spark mapping: a
 blobs table with a BinaryType ``content`` column + metadata, built from
-files by ``file_to_blob_row``; per-blob compute (decode / resize /
-frame-sample / feature-extract) runs as Arrow-batched ``mapInPandas``
-so bytes stream through Python in batches, never row-at-a-time.
+files by ``file_to_blob_row``; per-blob compute (``extract_features``,
+``sample_frames``) runs as Arrow-batched ``mapInPandas`` so bytes
+stream through Python in batches, never row-at-a-time. They back the
+multimodal_features and multimodal_frames gates.
 
 Decode: real where the media library is importable (PIL for images —
 import-guarded, see ``decode_for``), a deterministic double otherwise
-(image/audio libs aren't in this container). The Spark-side plumbing
+(the image and video libraries are optional). The Spark-side plumbing
 (schema, partitioning, UDF signature, batch shape) is identical either
 way, so pipelines exercise end-to-end in both environments;
 ``decode_stub="auto"`` picks per media type at runtime.
@@ -23,10 +24,8 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-from edgelake_spark.localframe import local_frame
 
 BLOB_SCHEMA = T.StructType(
     [
@@ -41,16 +40,6 @@ BLOB_SCHEMA = T.StructType(
 FEATURE_SCHEMA = (
     "blob_hash string, media_type string, n_bytes bigint, feature array<float>, width int, height int"
 )
-
-
-def store_blobs(spark: SparkSession, rows: list[tuple[bytes, str, str]]) -> DataFrame:
-    """(content, media_type, source_name) → blobs table keyed by content
-    hash (the reference's store-by-hash contract, bucket_dbms.py:110)."""
-    data = [
-        (hashlib.sha256(content).hexdigest(), media_type, name, content, len(content))
-        for content, media_type, name in rows
-    ]
-    return local_frame(spark, data, schema=BLOB_SCHEMA)
 
 
 _MEDIA_EXT = {
@@ -168,83 +157,17 @@ def extract_features(df: DataFrame, decode_stub: bool | str = True) -> DataFrame
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-# ------------------------------------------------------- resize / frames
+# ------------------------------------------------------------- frames
 #
-# The remaining per-blob ops a training pipeline runs before featurizing:
-# resize (image normalization) and frame sampling (video → image rows,
-# a 1→N expansion INSIDE mapInPandas — the Arrow-batched flatMap shape).
-# Real decode is import-guarded like extract_features; the deterministic
-# doubles derive everything from the blob-hash STRING so a SQL oracle
-# can reproduce them byte-for-byte.
-
-RESIZE_SCHEMA = (
-    "blob_hash string, media_type string, width int, height int, "
-    "resized_width int, resized_height int, content binary"
-)
+# Frame sampling (video → image rows, a 1→N expansion INSIDE mapInPandas
+# — the Arrow-batched flatMap shape). The deterministic double derives
+# everything from the blob-hash STRING so a SQL oracle can reproduce it
+# byte-for-byte.
 
 FRAME_SCHEMA = (
     "blob_hash string, frame_idx int, frame_hash string, "
     "frame_width int, frame_height int, frame bytes".replace("bytes", "binary")
 )
-
-AUDIO_SCHEMA = (
-    "blob_hash string, sample_rate int, n_samples bigint, "
-    "duration_s double, rms double"
-)
-
-
-def _fit_box(w: int, h: int, max_side: int) -> tuple[int, int]:
-    """Aspect-preserving fit into max_side (integer floor, min 1) —
-    shared by the real and fake paths so dims are always comparable."""
-    scale = max_side / max(w, h)
-    if scale >= 1.0:
-        return w, h
-    return max(1, int(w * scale)), max(1, int(h * scale))
-
-
-def resize_images(df: DataFrame, max_side: int = 32, decode_stub: bool | str = "auto") -> DataFrame:
-    """Aspect-preserving resize of image blobs to fit ``max_side``.
-
-    PIL path re-encodes the resized image (PNG); the double keeps the
-    fake dims/bytes deterministic from the blob hash. Batch shape and
-    schema are identical either way."""
-    if decode_stub is False and _PILImage is None:
-        raise NotImplementedError(
-            "resize_images(decode_stub=False) requires PIL, which is not "
-            "installed; use decode_stub='auto' for the deterministic double"
-        )
-    use_real = decode_stub is False or (decode_stub == "auto" and _PILImage is not None)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            rows = {k: [] for k in ("blob_hash", "media_type", "width", "height",
-                                    "resized_width", "resized_height", "content")}
-            for bh, mt, content in zip(pdf["blob_hash"], pdf["media_type"], pdf["content"]):
-                if use_real and mt == "image":
-                    img = _PILImage.open(io.BytesIO(bytes(content)))
-                    img.load()
-                    w, h = img.width, img.height
-                    rw, rh = _fit_box(w, h, max_side)
-                    out = io.BytesIO()
-                    img.resize((rw, rh)).save(out, format="PNG")
-                    data = out.getvalue()
-                else:
-                    _, w, h = _decode_fake(bytes(content), mt)
-                    rw, rh = _fit_box(w, h, max_side)
-                    data = hashlib.sha256(f"{bh}|resize|{rw}x{rh}".encode()).digest()
-                rows["blob_hash"].append(bh)
-                rows["media_type"].append(mt)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["resized_width"].append(rw)
-                rows["resized_height"].append(rh)
-                rows["content"].append(data)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=RESIZE_SCHEMA)
-
 
 def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
     """Uniform frame sampling: each (video) blob expands to ``n_frames``
@@ -280,57 +203,3 @@ def sample_frames(df: DataFrame, n_frames: int = 3) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def _decode_wav(content: bytes) -> tuple[int, int, float, float]:
-    """REAL audio decode for WAV/PCM — pure stdlib (wave) + numpy, no
-    optional dependency: returns (sample_rate, n_samples, duration_s,
-    rms in [0,1]). mp3/flac would need torchaudio; WAV is the honest
-    real path this container can run."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(content), "rb") as w:
-        sr = w.getframerate()
-        n = w.getnframes()
-        width = w.getsampwidth()
-        raw = w.readframes(n)
-    # 8-bit WAV is UNSIGNED (silence = 0x80); 16/32-bit are signed.
-    if width == 1:
-        x = np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0
-    else:
-        dtype = {2: np.int16, 4: np.int32}[width]
-        x = np.frombuffer(raw, dtype=dtype).astype(np.float64)
-    full = float(2 ** (8 * width - 1))
-    rms = float(np.sqrt(np.mean((x / full) ** 2))) if len(x) else 0.0
-    return sr, n, n / sr if sr else 0.0, rms
-
-
-def audio_features(df: DataFrame) -> DataFrame:
-    """Per-blob audio stats via mapInPandas. WAV decodes for REAL
-    (stdlib); other audio codecs fall back to the deterministic double
-    (sample_rate/n_samples from the content hash)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("blob_hash", "sample_rate", "n_samples",
-                                    "duration_s", "rms")}
-            for bh, content in zip(pdf["blob_hash"], pdf["content"]):
-                data = bytes(content)
-                try:
-                    sr, n, dur, rms = _decode_wav(data)
-                except Exception:
-                    h = hashlib.sha256(data).digest()
-                    sr = 8000 * (1 + h[0] % 6)
-                    n = 1 + int.from_bytes(h[1:4], "big") % 100000
-                    dur, rms = n / sr, h[4] / 255.0
-                rows["blob_hash"].append(bh)
-                rows["sample_rate"].append(sr)
-                rows["n_samples"].append(n)
-                rows["duration_s"].append(dur)
-                rows["rms"].append(rms)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=AUDIO_SCHEMA)

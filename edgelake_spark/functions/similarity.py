@@ -712,3 +712,77 @@ def pca_model_view(spark, sf_dir: str) -> str:
         lambda: pca_fit(spark).select("dim", "mu", "pc1_loading"),
     ).createOrReplaceTempView("__pca_model")
     return "__pca_model"
+
+
+# --- MMR diversified top-k: the greedy selection loop -----------------
+#
+# Runs k−1 rounds over state that is ONE row per query holding the
+# selected array (KBs): each round joins the tiny state against the
+# pooled candidates (pool-sized, not corpus-sized), scores the
+# max-sim-to-selected with an index-order fold inside greatest()
+# (order-independent max → engine-identical doubles), and picks the
+# argmax as a map-side max_by aggregate. State is re-materialized per
+# round, so the plan stays k-bounded instead of nesting 2^k references —
+# the kmeans_refine staging discipline. No union of checkpointed
+# branches (the state row grows an ARRAY instead: the Catalyst
+# rewriteConstraints hazard documented on _run_dedup_incremental never
+# arises).
+
+MMR_K = 8
+
+_MMR_INIT = """
+SELECT query_id,
+       array(named_struct('sel_rank', CAST(1 AS BIGINT), 'vec_id', vec_id,
+                          'rel', rel, 'mmr', rel, 'demb', demb, 'norm', norm)) AS sel
+FROM (SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, vec_id) AS rn
+      FROM __mmr_pool p) z
+WHERE rn = 1
+"""
+
+_MMR_STEP = """
+WITH scored AS (
+  SELECT p.query_id, p.vec_id, p.rel, p.demb, p.norm, s.sel,
+         CAST(0.7 AS DOUBLE) * p.rel - CAST(0.3 AS DOUBLE) *
+         aggregate(s.sel, CAST(-2 AS DOUBLE), (acc, e) -> greatest(acc,
+           aggregate(zip_with(p.demb, e.demb, (x, y) -> x * y),
+                     CAST(0 AS DOUBLE), (a2, v) -> a2 + v)
+           / (p.norm * e.norm))) AS mmr
+  FROM __mmr_pool p JOIN __mmr_state s ON p.query_id = s.query_id
+  WHERE NOT array_contains(transform(s.sel, e -> e.vec_id), p.vec_id)
+)
+SELECT query_id,
+       concat(sel0, array(named_struct(
+           'sel_rank', CAST({t} AS BIGINT), 'vec_id', __b.vec_id,
+           'rel', __b.rel, 'mmr', __b.mmr,
+           'demb', __b.demb, 'norm', __b.norm))) AS sel
+FROM (
+  SELECT query_id, first(sel) AS sel0,
+         max_by(named_struct('vec_id', vec_id, 'rel', rel, 'mmr', mmr,
+                             'demb', demb, 'norm', norm),
+                named_struct('m', mmr, 'v', -vec_id)) AS __b
+  FROM scored GROUP BY query_id
+) g
+"""
+
+_MMR_OUT = """
+SELECT query_id, e.sel_rank AS sel_rank, e.vec_id AS vec_id,
+       e.rel AS relevance, e.mmr AS mmr_score
+FROM (SELECT query_id, explode(sel) AS e FROM __mmr_final) z
+ORDER BY query_id, sel_rank
+"""
+
+
+def mmr_select(spark, pool):
+    """Greedy MMR (λ = 0.7, MMR_K picks per query) over any
+    (query_id, vec_id, rel, demb, norm) candidate pool — the pool source
+    is pluggable by design: the emb_mmr_diversify gate feeds it the
+    brute-force top-20, tests/test_plans.py feeds it the IVF
+    probe-bucket candidates (ANN-prune, then rerank)."""
+    pool = materialize(pool)
+    pool.createOrReplaceTempView("__mmr_pool")
+    state = materialize(spark.sql(_MMR_INIT))
+    for t in range(2, MMR_K + 1):
+        state.createOrReplaceTempView("__mmr_state")
+        state = materialize(spark.sql(_MMR_STEP.format(t=t)))
+    state.createOrReplaceTempView("__mmr_final")
+    return spark.sql(_MMR_OUT)

@@ -24,6 +24,9 @@ unlike a float sum. Bias corrections (linear counting) need ln(); they
 are presentation-side policy, deliberately left to the caller, so the
 gate output stays bit-exact.
 
+There is no quantile sketch: the events_quantiles gate computes exact
+percentiles, and no gate needs an approximate one.
+
 Reference parity: the reference engine has no sketch surface; this is
 part of the training-data/OLAP superset (SURVEY.md §2 "beyond the
 reference"), next to approx row-count estimation (admin.py `get rows
@@ -648,123 +651,3 @@ SELECT j, max_cell, total_mass,
 FROM cmp
 ORDER BY j
 """
-
-
-# ------------------------------------------------------ KLL quantiles
-
-#: level-0 capacity; rank error of the classic sketch is O(1/k), so
-#: k=200 targets ~0.5-1% rank error at any stream length
-KLL_K = 200
-#: capacity decay per level (the KLL geometric schedule)
-KLL_C = 2.0 / 3.0
-
-
-class KllSketch:
-    """DETERMINISTIC KLL quantile sketch (Karnin-Lang-Liberty 2016,
-    arXiv:1603.05346): per-level buffers with geometrically decaying
-    capacities; a full level sorts and promotes every other item to the
-    level above (doubling its weight). The classic analysis flips a
-    coin to pick even/odd survivors; this variant ALTERNATES the offset
-    per compaction (``flips`` counter) — zero-mean error like the coin,
-    but bit-reproducible, which is what lets a streaming replay equal
-    the reference sketch exactly (the repo's HLL/CMS monitors give the
-    same guarantee through order-insensitive merges; quantile
-    compaction is order-sensitive, so determinism must be explicit).
-
-    State is three flat arrays (values, weights=2^level, flip counter)
-    — bounded by ~3k items TOTAL no matter the stream length, which is
-    the fixed-size-per-key property the streaming monitor needs.
-
-    Merge concatenates level buffers then re-compresses — associative
-    up to the deterministic compaction schedule; at 100 TB per-shard
-    sketches roll up the same way the KMV/CMS artifacts do.
-    """
-
-    __slots__ = ("k", "levels", "n", "flips")
-
-    def __init__(self, k: int = KLL_K):
-        self.k = int(k)
-        self.levels: list[list[float]] = [[]]
-        self.n = 0
-        self.flips = 0
-
-    # -- capacity schedule: top level gets k, each lower level k*c^d
-    def _cap(self, h: int) -> int:
-        depth = len(self.levels) - 1 - h
-        return max(2, int(self.k * (KLL_C ** depth)))
-
-    def update(self, v: float) -> None:
-        self.levels[0].append(float(v))
-        self.n += 1
-        self._compress()
-
-    def extend(self, vals) -> None:
-        for v in vals:
-            self.update(v)
-
-    def _compress(self) -> None:
-        h = 0
-        while h < len(self.levels):
-            buf = self.levels[h]
-            if len(buf) <= self._cap(h):
-                h += 1
-                continue
-            buf.sort()
-            offset = self.flips & 1
-            self.flips += 1
-            promoted = buf[offset::2]
-            self.levels[h] = []
-            if h + 1 == len(self.levels):
-                self.levels.append([])
-            self.levels[h + 1].extend(promoted)
-            h += 1
-
-    def merge(self, other: "KllSketch") -> "KllSketch":
-        while len(self.levels) < len(other.levels):
-            self.levels.append([])
-        for h, buf in enumerate(other.levels):
-            self.levels[h].extend(buf)
-        self.n += other.n
-        self._compress()
-        return self
-
-    def items(self):
-        """(value, weight) pairs; weight = 2^level."""
-        for h, buf in enumerate(self.levels):
-            w = 1 << h
-            for v in buf:
-                yield v, w
-
-    def quantile(self, q: float) -> float:
-        if self.n == 0:
-            raise ValueError("empty sketch")
-        target = q * self.n
-        cum = 0
-        for v, w in sorted(self.items()):
-            cum += w
-            if cum >= target:
-                return v
-        return max(v for v, _ in self.items())
-
-    def size(self) -> int:
-        return sum(len(b) for b in self.levels)
-
-    # -- flat state-store encoding (streaming monitor round-trip)
-    def to_state(self):
-        vals, wts = [], []
-        for v, w in self.items():
-            vals.append(v)
-            wts.append(w)
-        return vals, wts, self.n, self.flips
-
-    @classmethod
-    def from_state(cls, vals, wts, n, flips, k: int = KLL_K) -> "KllSketch":
-        s = cls(k)
-        for v, w in zip(vals, wts):
-            h = int(w).bit_length() - 1
-            while len(s.levels) <= h:
-                s.levels.append([])
-            s.levels[h].append(float(v))
-        s.n = int(n)
-        s.flips = int(flips)
-        return s

@@ -1,17 +1,12 @@
-"""Skew-handling utilities: salted joins and salted distinct counts.
+"""Skew handling: salted distinct counts.
 
 At 100 TB a handful of hot keys (one device emitting 100× the events,
 one dbms.table holding most rows) turn a shuffle join or a
-count(distinct) into a single straggler task. AQE's skew-join splitting
-(enabled in session.py) handles sort-merge joins after the fact; these
-helpers pre-shape the plan when the skew is known:
+count(distinct) into a single straggler task. Hot-key joins need no
+helper: AQE's skew-join splitting (enabled in session.py) splits the
+oversized sort-merge-join partitions at run time. A count(distinct)
+has no such rescue, so this module pre-shapes it:
 
-- ``salted_join``: probe side gets a random salt in [0, buckets);
-  build side is replicated once per salt value; the join key becomes
-  (key, salt) so one hot key spreads over ``buckets`` tasks. The same
-  move the reference cannot make — its per-operator fan-out
-  (edge_lake/cmd/member_cmd.py:5330 partition_query) is fixed by node
-  layout — but which a Spark cluster needs for hot-key joins.
 - ``salted_distinct_count``: two-stage exact distinct — stage 1
   dedups (group, salt(value)) partitions, stage 2 merges partial
   distinct counts per group. Same result as count(distinct) with the
@@ -27,30 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 32
-
-
-def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: list[str],
-    buckets: int = DEFAULT_BUCKETS,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the probe side salted and the build side
-    replicated ``buckets`` times.
-
-    Use when the probe side has hot join keys and the build side is too
-    big to broadcast but small enough to replicate ``buckets``× through
-    a shuffle. Output columns = probe columns + build's non-key columns
-    (same contract as ``probe.join(build, on, how)``).
-    """
-    salt = F.pmod(F.hash(*[F.col(c) for c in probe.columns]), F.lit(buckets))
-    p = probe.withColumn("__salt", salt)
-    b = build.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-    out = p.join(b, on + ["__salt"], how)
-    return out.drop("__salt")
 
 
 def salted_distinct_count(

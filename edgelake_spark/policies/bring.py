@@ -17,8 +17,6 @@ from __future__ import annotations
 import json
 import re
 
-_TOKEN_RE = re.compile(r"\[([^\]]*)\]|\"([^\"]*)\"|'([^']*)'")
-
 
 def stamp_policy(policy: dict) -> dict:
     """Add ``id`` (md5 of the single-key body, excluding date/ledger)

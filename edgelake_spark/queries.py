@@ -684,17 +684,8 @@ _q(
 # window per query over its candidates — at 100 TB the pool would come
 # from the IVF/LSH path instead of brute force, same contract: a
 # per-query candidate set whose size is k-bounded and INDEPENDENT of
-# corpus size). The greedy loop then runs k−1 rounds over state that is
-# ONE row per query holding the selected array (KBs): each round joins
-# the tiny state against the pooled candidates (pool-sized, not
-# corpus-sized), scores the max-sim-to-selected with an index-order
-# fold inside greatest() (order-independent max → engine-identical
-# doubles), and picks the argmax as a map-side max_by aggregate. State
-# is re-materialized per round, so the plan stays k-bounded instead of
-# nesting 2^k references — the kmeans_refine staging discipline. No
-# union of checkpointed branches (the state row grows an ARRAY instead:
-# the Catalyst rewriteConstraints hazard documented on
-# _run_dedup_incremental never arises).
+# corpus size). The greedy loop over the pool is
+# functions/similarity.mmr_select.
 #
 # Oracle: DuckDB runs the same greedy recursion as a recursive CTE
 # whose working row carries the selected list; the candidate-vs-
@@ -712,71 +703,11 @@ SELECT query_id, vec_id, rel, demb, norm FROM (
 ) z WHERE rn <= 20
 """
 
-_MMR_INIT = """
-SELECT query_id,
-       array(named_struct('sel_rank', CAST(1 AS BIGINT), 'vec_id', vec_id,
-                          'rel', rel, 'mmr', rel, 'demb', demb, 'norm', norm)) AS sel
-FROM (SELECT p.*, row_number() OVER (PARTITION BY query_id ORDER BY rel DESC, vec_id) AS rn
-      FROM __mmr_pool p) z
-WHERE rn = 1
-"""
-
-_MMR_STEP = """
-WITH scored AS (
-  SELECT p.query_id, p.vec_id, p.rel, p.demb, p.norm, s.sel,
-         CAST(0.7 AS DOUBLE) * p.rel - CAST(0.3 AS DOUBLE) *
-         aggregate(s.sel, CAST(-2 AS DOUBLE), (acc, e) -> greatest(acc,
-           aggregate(zip_with(p.demb, e.demb, (x, y) -> x * y),
-                     CAST(0 AS DOUBLE), (a2, v) -> a2 + v)
-           / (p.norm * e.norm))) AS mmr
-  FROM __mmr_pool p JOIN __mmr_state s ON p.query_id = s.query_id
-  WHERE NOT array_contains(transform(s.sel, e -> e.vec_id), p.vec_id)
-)
-SELECT query_id,
-       concat(sel0, array(named_struct(
-           'sel_rank', CAST({t} AS BIGINT), 'vec_id', __b.vec_id,
-           'rel', __b.rel, 'mmr', __b.mmr,
-           'demb', __b.demb, 'norm', __b.norm))) AS sel
-FROM (
-  SELECT query_id, first(sel) AS sel0,
-         max_by(named_struct('vec_id', vec_id, 'rel', rel, 'mmr', mmr,
-                             'demb', demb, 'norm', norm),
-                named_struct('m', mmr, 'v', -vec_id)) AS __b
-  FROM scored GROUP BY query_id
-) g
-"""
-
-_MMR_OUT = """
-SELECT query_id, e.sel_rank AS sel_rank, e.vec_id AS vec_id,
-       e.rel AS relevance, e.mmr AS mmr_score
-FROM (SELECT query_id, explode(sel) AS e FROM __mmr_final) z
-ORDER BY query_id, sel_rank
-"""
-
-_MMR_K = 8
-
-
-def _mmr_select(spark, pool):
-    """Greedy MMR over any (query_id, vec_id, rel, demb, norm)
-    candidate pool — the pool source is pluggable by design: the gate
-    feeds it the brute-force top-20, tests/test_plans.py feeds it the
-    IVF probe-bucket candidates (the actual 100 TB composition:
-    ANN-prune, then rerank)."""
-    pool = _materialize(pool)
-    pool.createOrReplaceTempView("__mmr_pool")
-    state = _materialize(spark.sql(_MMR_INIT))
-    for t in range(2, _MMR_K + 1):
-        state.createOrReplaceTempView("__mmr_state")
-        state = _materialize(spark.sql(_MMR_STEP.format(t=t)))
-    state.createOrReplaceTempView("__mmr_final")
-    return spark.sql(_MMR_OUT)
-
-
 def _run_emb_mmr(spark, sf_dir):
     register_sf_tables(spark, sf_dir)
     _rep_view(spark, "embeddings")
     n = _emb_norm_view(spark)
-    return _mmr_select(
+    return sim.mmr_select(
         spark,
         spark.sql(
             _MMR_POOL_BODY.format(
@@ -815,11 +746,11 @@ st AS (
     ORDER BY mmr DESC, p.vec_id
     LIMIT 1
   ) c
-  WHERE s.iter < {_MMR_K}
+  WHERE s.iter < {sim.MMR_K}
 )
 SELECT query_id, u.sel_rank AS sel_rank, u.vec_id AS vec_id,
        u.rel AS relevance, u.mmr AS mmr_score
-FROM (SELECT query_id, unnest(sel) AS u FROM st WHERE iter = {_MMR_K}) z
+FROM (SELECT query_id, unnest(sel) AS u FROM st WHERE iter = {sim.MMR_K}) z
 ORDER BY query_id, sel_rank
 """,
 )
@@ -1272,13 +1203,11 @@ FROM b ORDER BY blob_hash, n_bytes
 """,
 )
 
-# batch EWMA with the streaming operator's exact fold semantics
-# (streaming/stateful.py ewma_stream: ewma' = (1-α)·ewma + α·x, α=0.5,
-# rows in unique event_id order: ts would tie-break differently across
-# engines because DuckDB keeps ns while Spark truncates to µs) —
-# verifiable against a DuckDB
-# list_reduce oracle bit-for-bit because both engines fold doubles in
-# the same sequence. The continuous-stream variant is unit-tested.
+# batch per-user EWMA (ewma' = (1-α)·ewma + α·x, α=0.5, rows in unique
+# event_id order: ts would tie-break differently across engines because
+# DuckDB keeps ns while Spark truncates to µs) — verifiable against a
+# DuckDB list_reduce oracle bit-for-bit because both engines fold
+# doubles in the same sequence.
 _EWMA_SPARK = """
 SELECT user_id,
   CAST(aggregate(slice(vals, 2, size(vals) - 1), element_at(vals, 1),
@@ -5423,89 +5352,28 @@ _q("events_funnel", _sql(_funnel_sql("events")), _funnel_sql("events"))
 # ---------------------------------------- PageRank over the dedup graph
 
 
-def _pagerank_body(pairs: str, iters: int = 3, d: float = 0.85) -> str:
-    """PageRank (3 unrolled Jacobi iterations, damping 0.85) over the
-    UNDIRECTED MinHash near-duplicate graph — ranking duplicate-cluster
-    centrality, e.g. to pick the canonical copy. Every node has
-    degree >= 1 (nodes exist only via pairs), so there is no dangling
-    mass; the (1-d)/N teleport term keeps the distribution proper.
-
-    Determinism: the per-neighbor contribution pr/deg is an IEEE double
-    division; the neighbor SUM is decimal-staged (exact, order-free);
-    iterations are unrolled CTEs so both engines execute the identical
-    dataflow. Scale shape: edges come from the LSH band join (linear in
-    collisions), each iteration is ONE shuffle on dst joined back on a
-    co-located key; production would checkpoint each iteration, exactly
-    like functions/dedup.py's pointer-jumping CC."""
-    sql = f"""
-WITH edges AS (
-  SELECT id1 AS src, id2 AS dst FROM {pairs}
-  UNION ALL
-  SELECT id2, id1 FROM {pairs}
-),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY src),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-pr0 AS (
-  SELECT id, CAST(1.0 AS DOUBLE) / CAST(n.n AS DOUBLE) AS pr FROM nodes CROSS JOIN n
-)"""
-    prev = "pr0"
-    for k in range(1, iters + 1):
-        sql += f""",
-pr{k} AS (
-  SELECT nodes.id,
-    {1.0 - d:.2f} / CAST(n.n AS DOUBLE)
-      + {d} * CAST(coalesce(s.acc, 0) AS DOUBLE) AS pr
-  FROM nodes CROSS JOIN n
-  LEFT JOIN (
-    SELECT e.dst AS id,
-           SUM(CAST(p.pr / CAST(d2.deg AS DOUBLE) AS DECIMAL(30,15))) AS acc
-    FROM edges e
-    JOIN {prev} p ON p.id = e.src
-    JOIN deg d2 ON d2.id = e.src
-    GROUP BY e.dst
-  ) s ON s.id = nodes.id
-)"""
-        prev = f"pr{k}"
-    sql += f"""
-SELECT p.id AS doc_id, p.pr AS pagerank, deg.deg
-FROM {prev} p JOIN deg ON deg.id = p.id
-ORDER BY pagerank DESC, doc_id
-LIMIT 20
-"""
-    return sql
-
-
 def _run_pagerank(spark, sf_dir):
-    _pairs_view(spark, sf_dir)
-    spark.table("__mh_pairs").createOrReplaceTempView("__pr_pairs")
+    pairs = _pairs_view(spark, sf_dir)
     # materialize the graph once: the unrolled iterations reference
     # edges/deg repeatedly and Catalyst inlines CTEs — without the
     # barrier each of the 3 iterations replans (and would recompute)
     # the whole edge derivation
-    _ckpt_view(
+    edges = _ckpt_view(
         spark,
-        "SELECT id1 AS src, id2 AS dst FROM __pr_pairs "
-        "UNION ALL SELECT id2, id1 FROM __pr_pairs",
+        f"SELECT id1 AS src, id2 AS dst FROM {pairs} UNION ALL SELECT id2, id1 FROM {pairs}",
         "__pr_edges",
     )
-    body = _pagerank_body("__pr_pairs")
-    body = body.replace(
-        """WITH edges AS (
-  SELECT id1 AS src, id2 AS dst FROM __pr_pairs
-  UNION ALL
-  SELECT id2, id1 FROM __pr_pairs
-),""",
-        "WITH edges AS (SELECT * FROM __pr_edges),",
-    )
-    return spark.sql(body)
+    return spark.sql(dd.pagerank_sql(edges))
 
 
 _q(
     "doc_pagerank3",
     _run_pagerank,
-    f"WITH pairs AS ({ORACLE_SQL['doc_minhash_pairs']})"
-    + _pagerank_body("pairs").replace("\nWITH edges AS", ", edges AS", 1),
+    dd.pagerank_sql(
+        f"(WITH pairs AS ({ORACLE_SQL['doc_minhash_pairs']}) "
+        "SELECT id1 AS src, id2 AS dst FROM pairs "
+        "UNION ALL SELECT id2, id1 FROM pairs) pe"
+    ),
 )
 
 

@@ -30,11 +30,6 @@ from datetime import datetime, timedelta
 
 from edgelake_spark.dialect.timefns import apply_time_modifier, utc_now
 
-#: task modes mirror sche_task.ScheduledTask.mode (reference
-#: sche_task.py:37 + change_task_mode): Active → runs when due;
-#: Stopped → retained but skipped; Removed → slot reusable.
-_MODES = ("Active", "Stopped", "Removed")
-
 
 @dataclass
 class ScheduledTask:
@@ -45,6 +40,9 @@ class ScheduledTask:
     start_time: datetime
     repeat_seconds: int
     command: str
+    #: mirrors sche_task.ScheduledTask.mode (reference sche_task.py:37 +
+    #: change_task_mode): Active → runs when due; Stopped → retained but
+    #: skipped; Removed → slot reusable.
     mode: str = "Active"
     run_counter: int = 0
     last_error: str | None = None

@@ -15,7 +15,7 @@ maxFilesPerTrigger-style source options; conditions + monitor + alerts
 
 from edgelake_spark.streaming.conditions import StreamingCondition, apply_conditions
 from edgelake_spark.streaming.monitor import DataMonitor
-from edgelake_spark.streaming.ingest import StreamIngest, aggregation_ingest, dedup_stream
+from edgelake_spark.streaming.ingest import StreamIngest, aggregation_ingest
 
 __all__ = [
     "StreamingCondition",
@@ -23,5 +23,4 @@ __all__ = [
     "DataMonitor",
     "StreamIngest",
     "aggregation_ingest",
-    "dedup_stream",
 ]

@@ -170,33 +170,6 @@ def stream_parquet_source(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def dedup_stream(
-    stream_df: DataFrame,
-    key_cols: list[str],
-    time_col: str,
-    watermark: str = "10 minutes",
-    exact: bool = False,
-) -> DataFrame:
-    """Streaming exact dedup: drop re-arrivals of the same key (e.g. a
-    document content hash) as they flow through ingest.
-
-    The scale property is the WATERMARK BOUND: plain dropDuplicates on
-    an unbounded stream keeps every key in state forever and OOMs at
-    ingest scale; dropDuplicatesWithinWatermark evicts keys older than
-    the watermark, so state is ∝ traffic within the late-data horizon,
-    not ∝ history. Use exact=True only for bounded backfills where
-    all-history dedup is the actual semantic.
-
-    Reference behavior: the ingest path's hash-keyed duplicate discard
-    (edge_lake/generic/streaming_data.py buffers by table+hash); here
-    the key is explicit and the state store enforces it.
-    """
-    with_wm = stream_df.withWatermark(time_col, watermark)
-    if exact:
-        return with_wm.dropDuplicates(key_cols)
-    return with_wm.dropDuplicatesWithinWatermark(key_cols)
-
-
 def aggregation_ingest(
     stream_df: DataFrame,
     time_col: str,

@@ -6,9 +6,11 @@ operators that need per-key state across micro-batches — state lives in
 the state store, partitioned by key, surviving restarts via
 checkpointing; no driver involvement.
 
-``ewma`` — exponentially-weighted moving average per key: the classic
-sensor-smoothing operator a Grafana panel would chart next to raw
-values.
+Operators: ``session_stream`` (gap-based sessions), ``anomaly_stream``
+(per-key running z-score), ``lsh_dedup_stream`` (MinHash-LSH band
+claims), ``hll_stream`` (distinct counts), ``cms_cells_stream``
+(count-min heavy cells) and ``weighted_sample_stream`` (ES weighted
+reservoir). Each backs a ``stream_*`` gate in queries.py.
 """
 
 from __future__ import annotations
@@ -40,44 +42,6 @@ def _keyed_state(
         outputMode=mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-OUTPUT_SCHEMA = "key string, n_rows bigint, last_value double, ewma double"
-STATE_SCHEMA = "ewma double, n bigint"
-
-
-def make_ewma_fn(alpha: float = 0.3, value_col: str = "value"):
-    """Build the applyInPandasWithState function for a per-key EWMA."""
-
-    def ewma(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            current, n = state.get
-        else:
-            current, n = None, 0
-        last = None
-        for pdf in batches:
-            for v in pdf[value_col]:
-                v = float(v)
-                current = v if current is None else alpha * v + (1 - alpha) * current
-                last = v
-                n += 1
-        state.update((current, n))
-        yield pd.DataFrame(
-            [{"key": key[0], "n_rows": n, "last_value": last, "ewma": current}]
-        )
-
-    return ewma
-
-
-def ewma_stream(
-    stream_df: DataFrame, key_col: str, value_col: str = "value", alpha: float = 0.3
-) -> DataFrame:
-    """Per-key EWMA over a stream; emits one row per key per batch with
-    the running state. Attach .writeStream (update mode) to consume."""
-    return _keyed_state(stream_df, "key", make_ewma_fn(alpha, value_col),
-                        OUTPUT_SCHEMA, STATE_SCHEMA, key_col=key_col)
 
 
 # ------------------------------------------------------ sessionization
@@ -483,75 +447,6 @@ def cms_cells_stream(stream_df: DataFrame, text_col: str = "text",
     return _keyed_state(cols, "j", make_cms_fn(min_cell), CMS_OUTPUT, CMS_STATE)
 
 
-# --------------------------------------------- KLL quantile monitor
-
-KLL_OUTPUT = (
-    "key string, n_rows bigint, sketch_size bigint, "
-    "q50 double, q90 double, q99 double"
-)
-#: per-key state: the sketch's (value, weight) pairs flattened to two
-#: arrays + counters — bounded at ~3k items TOTAL however long the
-#: stream runs (the fixed-size property shared with the HLL registers
-#: and CMS cells above; quantile state closes the sketch-monitor
-#: matrix: cardinality / frequency / order statistics)
-KLL_STATE = "vals array<double>, wts array<long>, n bigint, flips bigint"
-
-
-def make_kll_fn(value_col: str = "value"):
-    """applyInPandasWithState function for a per-key streaming quantile
-    monitor over a deterministic KLL sketch
-    (functions/sketch.KllSketch). Quantile compaction is ORDER-
-    sensitive (unlike HLL max-merge / CMS addition), so each
-    micro-batch's values are sorted before insertion — the emitted
-    sketch is then a pure function of the SET of batch contents and the
-    batch sequence, and a replay of the same batches reproduces the
-    reference sketch exactly (pinned in tests/test_kll.py)."""
-    from edgelake_spark.functions.sketch import KllSketch
-
-    def kll(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals, wts, n, flips = state.get
-            sk = KllSketch.from_state(vals, wts, n, flips)
-        else:
-            sk = KllSketch()
-        incoming: list[float] = []
-        for pdf in batches:
-            incoming.extend(float(v) for v in pdf[value_col].dropna())
-        incoming.sort()
-        sk.extend(incoming)
-        state.update(sk.to_state())
-        if sk.n:
-            row = {
-                "key": key[0],
-                "n_rows": sk.n,
-                "sketch_size": sk.size(),
-                "q50": sk.quantile(0.50),
-                "q90": sk.quantile(0.90),
-                "q99": sk.quantile(0.99),
-            }
-            yield pd.DataFrame([row])
-
-    return kll
-
-
-def kll_stream(
-    stream_df: DataFrame, key_col: str, value_col: str = "value"
-) -> DataFrame:
-    """Per-key streaming quantile monitor: one row per key per
-    micro-batch with the running p50/p90/p99 estimates (rank error
-    O(1/k), k=200) from fixed-size sketch state. The streaming twin of
-    the batch events_quantiles gate (exact percentiles) — at the edge
-    you watch a latency/value stream's tail without keeping the values.
-
-    Scale shape: the only shuffle is the key grouping; state per key is
-    ≤ ~3k doubles regardless of stream length; per-shard sketches merge
-    associatively (KllSketch.merge) for cross-node rollup."""
-    return _keyed_state(stream_df, "key", make_kll_fn(value_col=value_col),
-                        KLL_OUTPUT, KLL_STATE, key_col=key_col)
-
-
 # ------------------------------- weighted reservoir sampler (ES top-k)
 
 WSAMP_OUTPUT = (
@@ -586,7 +481,7 @@ def make_weighted_sample_fn(k: int = 10, id_col: str = "doc_id",
     replacement of the entire stream, so the reservoir never needs to
     revisit evicted rows. Top-k-of-union is associative and
     commutative: per-shard reservoirs merge losslessly for cross-node
-    rollup, the same lifecycle as the HLL/CMS/KLL monitors above.
+    rollup, the same lifecycle as the HLL/CMS monitors above.
 
     ln() here is libm (Python) vs the JVM's in the batch gate — a
     potential 1-ULP key difference; selection parity holds because the

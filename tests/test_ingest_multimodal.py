@@ -1,5 +1,6 @@
 """Mapping policies, partitioned writes, multimodal plumbing."""
 
+import hashlib
 import json
 
 import pytest
@@ -12,8 +13,19 @@ from edgelake_spark.ingest.partitions import (
     drop_partitions_before_tx,
     write_partitioned_tx,
 )
-from edgelake_spark.functions.multimodal import extract_features, store_blobs
+from edgelake_spark.functions.multimodal import BLOB_SCHEMA, extract_features
+from edgelake_spark.localframe import local_frame
 from edgelake_spark.txlog import TxTable
+
+
+def _mk_blobs(spark, rows):
+    """(content, media_type, source_name) → blobs-table rows keyed by
+    content sha256."""
+    data = [
+        (hashlib.sha256(content).hexdigest(), media_type, name, content, len(content))
+        for content, media_type, name in rows
+    ]
+    return local_frame(spark, data, BLOB_SCHEMA)
 
 
 def test_parse_bring_path():
@@ -79,7 +91,7 @@ def test_partitioned_write_prunes(spark, tmp_path):
 
 
 def test_multimodal_feature_stub(spark):
-    blobs = store_blobs(
+    blobs = _mk_blobs(
         spark,
         [(b"fake-image-bytes-1", "image", "a.jpg"), (b"fake-image-bytes-2", "image", "b.jpg")],
     )
@@ -164,7 +176,7 @@ def test_decode_paths_and_auto_selection(spark):
 
     from edgelake_spark.functions import multimodal as mm
 
-    blobs = store_blobs(spark, [(b"not-an-image", "image", "x.png")])
+    blobs = _mk_blobs(spark, [(b"not-an-image", "image", "x.png")])
     # "auto" always runs end-to-end: double here (no PIL), real decode
     # in deployments that have it (exercised in the skipif test below)
     if mm._PILImage is None:
@@ -191,58 +203,10 @@ def test_real_image_decode_with_pil(spark):
     img = mm._PILImage.new("L", (4, 2), color=128)
     buf = io.BytesIO()
     img.save(buf, format="PNG")
-    blobs = store_blobs(spark, [(buf.getvalue(), "image", "gray.png")])
+    blobs = _mk_blobs(spark, [(buf.getvalue(), "image", "gray.png")])
     row = extract_features(blobs, decode_stub="auto").collect()[0]
     assert (row.width, row.height) == (4, 2)
     assert abs(sum(row.feature) - 1.0) < 1e-6 and row.feature[4] == 1.0
-
-
-# ---------------------------------------------------------------------
-# resize / frame-sample / audio (round 3)
-
-
-def _mk_blobs(spark, rows):
-    from edgelake_spark.functions.multimodal import store_blobs
-
-    return store_blobs(spark, rows)
-
-
-def test_resize_fake_deterministic(spark):
-    from edgelake_spark.functions.multimodal import resize_images
-
-    blobs = _mk_blobs(
-        spark, [(b"img-one", "image", "a.png"), (b"img-two", "image", "b.png")]
-    )
-    out = resize_images(blobs, max_side=16, decode_stub=True)
-    rows = {r["blob_hash"]: r for r in out.collect()}
-    assert len(rows) == 2
-    for r in rows.values():
-        assert 1 <= r["resized_width"] <= 16 and 1 <= r["resized_height"] <= 16
-        assert r["resized_width"] <= r["width"] or r["width"] <= 16
-        assert isinstance(r["content"], (bytes, bytearray))
-    # same input → same bytes (deterministic double)
-    again = {r["blob_hash"]: r for r in resize_images(blobs, 16, True).collect()}
-    for k in rows:
-        assert bytes(rows[k]["content"]) == bytes(again[k]["content"])
-
-
-def test_resize_real_with_pil_if_present(spark):
-    pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    from edgelake_spark.functions.multimodal import resize_images
-
-    buf = io.BytesIO()
-    Image.new("RGB", (64, 32), (200, 10, 10)).save(buf, format="PNG")
-    blobs = _mk_blobs(spark, [(buf.getvalue(), "image", "wide.png")])
-    r = resize_images(blobs, max_side=16, decode_stub="auto").collect()[0]
-    assert (r["width"], r["height"]) == (64, 32)
-    assert (r["resized_width"], r["resized_height"]) == (16, 8)
-    # the re-encoded content must decode to the resized dims
-    back = Image.open(io.BytesIO(bytes(r["content"])))
-    assert (back.width, back.height) == (16, 8)
 
 
 def test_sample_frames_expands_in_batch(spark):
@@ -262,46 +226,6 @@ def test_sample_frames_expands_in_batch(spark):
         assert len({f["frame_hash"] for f in frames}) == 4
         for f in frames:
             assert 1 <= f["frame_width"] <= 64
-
-
-def test_audio_wav_decodes_for_real(spark):
-    import io
-    import math
-    import wave
-
-    from edgelake_spark.functions.multimodal import audio_features
-
-    # 1 kHz sine, 0.25 s @ 8 kHz, 16-bit mono — amplitude 0.5 → RMS ≈ 0.3535
-    sr, dur, amp = 8000, 0.25, 0.5
-    n = int(sr * dur)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        frames = b"".join(
-            int(amp * 32767 * math.sin(2 * math.pi * 1000 * i / sr)).to_bytes(
-                2, "little", signed=True
-            )
-            for i in range(n)
-        )
-        w.writeframes(frames)
-    blobs = _mk_blobs(spark, [(buf.getvalue(), "audio", "tone.wav")])
-    r = audio_features(blobs).collect()[0]
-    assert r["sample_rate"] == sr
-    assert r["n_samples"] == n
-    assert abs(r["duration_s"] - dur) < 1e-9
-    assert abs(r["rms"] - amp / math.sqrt(2)) < 0.01
-
-
-def test_audio_non_wav_falls_back_deterministic(spark):
-    from edgelake_spark.functions.multimodal import audio_features
-
-    blobs = _mk_blobs(spark, [(b"not-a-wav-stream", "audio", "x.mp3")])
-    a = audio_features(blobs).collect()[0]
-    b = audio_features(blobs).collect()[0]
-    assert a["sample_rate"] == b["sample_rate"] and a["rms"] == b["rms"]
-    assert a["sample_rate"] % 8000 == 0
 
 
 def test_file_retrieve_default_cap(spark, tmp_path, monkeypatch):

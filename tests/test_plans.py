@@ -737,12 +737,12 @@ def test_mmr_greedy_rounds_are_state_bounded(spark):
 def test_mmr_composes_with_ivf_pool(spark):
     """The production composition: candidates from the IVF probe
     buckets (persisted inverted lists), reranked by the SAME greedy
-    MMR loop the gate runs on the brute pool. Pins that _mmr_select is
+    MMR loop the gate runs on the brute pool. Pins that mmr_select is
     pool-source-agnostic: full ranks per query, selections drawn from
     the pool, mmr monotone non-increasing."""
     from edgelake_spark.functions import similarity as sim
     from edgelake_spark.functions.similarity import ivf_index_views as _ivf_index_views
-    from edgelake_spark.queries import _MMR_K, _emb_norm_view_for, _mmr_select
+    from edgelake_spark.queries import _emb_norm_view_for
 
     n = _emb_norm_view_for(spark, SF_DIR_MED)
     _ivf_index_views(spark, SF_DIR_MED, n)
@@ -766,7 +766,7 @@ def test_mmr_composes_with_ivf_pool(spark):
       JOIN {n} q ON q.vec_id = p.query_id
     ) z WHERE rn <= 20
     """)
-    out = _mmr_select(spark, pool).collect()
+    out = sim.mmr_select(spark, pool).collect()
     per = {}
     for r in out:
         per.setdefault(r.query_id, []).append(r)
@@ -776,8 +776,8 @@ def test_mmr_composes_with_ivf_pool(spark):
     }
     for qid, rows in per.items():
         rows.sort(key=lambda r: r.sel_rank)
-        assert [r.sel_rank for r in rows] == list(range(1, _MMR_K + 1))
-        assert len({r.vec_id for r in rows}) == _MMR_K
+        assert [r.sel_rank for r in rows] == list(range(1, sim.MMR_K + 1))
+        assert len({r.vec_id for r in rows}) == sim.MMR_K
         assert all((qid, r.vec_id) in pool_ids for r in rows)
         mmrs = [r.mmr_score for r in rows]
         assert all(a >= b for a, b in zip(mmrs, mmrs[1:]))

@@ -1,28 +1,9 @@
-"""Salted join / salted distinct-count equal their unsalted forms."""
+"""Salted distinct-count equals count(distinct)."""
 
 from pyspark.sql import functions as F
 
-from edgelake_spark.functions.skew import salted_distinct_count, salted_join
+from edgelake_spark.functions.skew import salted_distinct_count
 from tests.conftest import SF_DIR
-
-
-def test_salted_join_matches_plain_join(spark):
-    from edgelake_spark.catalog import register_sf_tables
-
-    register_sf_tables(spark, SF_DIR)
-    probe = spark.table("events").select("event_id", "user_id", "value")
-    build = spark.table("customer").select(
-        F.col("c_custkey").alias("user_id"), "c_name"
-    )
-    plain = {
-        tuple(r)
-        for r in probe.join(build, ["user_id"], "inner").collect()
-    }
-    salted = {
-        tuple(r)
-        for r in salted_join(probe, build, ["user_id"], buckets=8).collect()
-    }
-    assert salted == plain and len(plain) > 0
 
 
 def test_salted_distinct_count_matches_count_distinct(spark):

@@ -1,4 +1,4 @@
-"""Conditional mapping rules + stateful streaming EWMA."""
+"""Conditional mapping rules."""
 
 import json
 
@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import types as T
 
 from edgelake_spark.ingest.mapping import apply_mapping_policy
-from edgelake_spark.streaming.stateful import ewma_stream
 
 
 def test_mapping_conditions_first_match_wins(spark):
@@ -54,39 +53,6 @@ def test_mapping_ignore_if_drops_rows(spark):
     raw = spark.createDataFrame([(json.dumps(r),) for r in rows], "value string")
     got = apply_mapping_policy(spark, raw, policy).collect()
     assert [r.device for r in got] == ["a"]
-
-
-def test_ewma_state_survives_batches(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = T.StructType(
-        [T.StructField("device", T.StringType()), T.StructField("value", T.DoubleType())]
-    )
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps(r) for r in [{"device": "d1", "value": 10.0}, {"device": "d1", "value": 20.0}])
-    )
-    stream = spark.readStream.format("json").schema(schema).load(str(src))
-    out = ewma_stream(stream, "device", "value", alpha=0.5)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("ewma_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = spark.sql("select * from ewma_out").collect()
-        # batch1: ewma = 0.5*20 + 0.5*10 = 15
-        assert first[-1].ewma == 15.0 and first[-1].n_rows == 2
-
-        (src / "b2.json").write_text(json.dumps({"device": "d1", "value": 35.0}))
-        q.processAllAvailable()
-        rows = spark.sql("select * from ewma_out order by n_rows").collect()
-        # state carried: ewma = 0.5*35 + 0.5*15 = 25, n = 3
-        assert rows[-1].ewma == 25.0 and rows[-1].n_rows == 3
-    finally:
-        q.stop()
 
 
 def test_mapping_compound_conditions(spark):

@@ -183,49 +183,6 @@ def test_get_streaming_command(spark, tmp_path):
     assert out[("consumer", "s1")] == "iot.m"
 
 
-def test_dedup_stream_drops_rearrivals(spark, tmp_path):
-    # streaming exact dedup: same content hash re-arriving within the
-    # watermark horizon is dropped; distinct hashes pass through
-    from edgelake_spark.streaming.ingest import dedup_stream
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("doc_hash", T.StringType()),
-            T.StructField("payload", T.StringType()),
-        ]
-    )
-    src = tmp_path / "dsrc"
-    src.mkdir()
-    rows = [
-        {"ts": "2024-01-01T00:00:01.000", "doc_hash": "h1", "payload": "a"},
-        {"ts": "2024-01-01T00:00:02.000", "doc_hash": "h2", "payload": "b"},
-        {"ts": "2024-01-01T00:00:03.000", "doc_hash": "h1", "payload": "a-dup"},
-        {"ts": "2024-01-01T00:00:04.000", "doc_hash": "h3", "payload": "c"},
-        {"ts": "2024-01-01T00:00:05.000", "doc_hash": "h2", "payload": "b-dup"},
-    ]
-    (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = spark.readStream.format("json").schema(schema).load(str(src))
-    deduped = dedup_stream(stream, ["doc_hash"], "ts", watermark="10 minutes")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = sorted(
-            (r.doc_hash, r.payload)
-            for r in spark.sql("select * from dedup_out").collect()
-        )
-    finally:
-        q.stop()
-    assert [h for h, _ in got] == ["h1", "h2", "h3"]
-    # first arrival wins
-    assert ("h1", "a") in got and ("h2", "b") in got
-
-
 def test_lsh_band_keys_match_batch_sql(spark):
     # the streaming fingerprinter must land every doc in EXACTLY the
     # buckets the batch sweep computes — compare per-doc band-key sets
@@ -875,16 +832,15 @@ def test_cms_stream_cells_survive_query_restart(spark, tmp_path):
     assert got == ref
 
 
-def test_ewma_and_anomaly_state_survive_query_restart(spark, tmp_path):
-    """Last two cells of the recovery matrix (every
-    applyInPandasWithState operator now pinned): EWMA's running
-    (current, n) and the anomaly monitor's Welford (n, mean, m2) must
+def test_anomaly_state_survives_query_restart(spark, tmp_path):
+    """A cell of the recovery matrix (every applyInPandasWithState
+    operator pinned): the anomaly monitor's Welford (n, mean, m2) must
     restore bit-identically in a NEW query instance — the restarted
     stream's final emission equals a single-process fold over all
     values in order."""
     import math
 
-    from edgelake_spark.streaming.stateful import anomaly_stream, ewma_stream
+    from edgelake_spark.streaming.stateful import anomaly_stream
 
     schema = T.StructType(
         [
@@ -895,67 +851,54 @@ def test_ewma_and_anomaly_state_survive_query_restart(spark, tmp_path):
     vals1 = [float(v) for v in range(1, 41)]           # warm-up, no flags
     vals2 = [20.5, 1000.0, 19.5]                       # 1000 is the outlier
 
-    for name, build in (
-        ("ewma", lambda s: ewma_stream(s, "event_type", alpha=0.3)),
-        ("anom", lambda s: anomaly_stream(s, "event_type", z_threshold=3.0)),
-    ):
-        src = tmp_path / f"{name}_src"
-        src.mkdir()
-        ckpt = str(tmp_path / f"{name}_ckpt")
-        rows: list = []
+    src = tmp_path / "anom_src"
+    src.mkdir()
+    ckpt = str(tmp_path / "anom_ckpt")
+    rows: list = []
 
-        def start():
-            out = build(
-                spark.readStream.format("json").schema(schema).load(str(src))
-            )
-            return (
-                out.writeStream.outputMode("update")
-                .foreachBatch(lambda df, bid: rows.extend(df.collect()))
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-
-        (src / "a.json").write_text(
-            "\n".join(
-                json.dumps({"event_type": "t", "value": v}) for v in vals1
-            )
+    def start():
+        out = anomaly_stream(
+            spark.readStream.format("json").schema(schema).load(str(src)),
+            "event_type",
+            z_threshold=3.0,
         )
-        q1 = start()
-        try:
-            q1.processAllAvailable()
-        finally:
-            q1.stop()
-        (src / "b.json").write_text(
-            "\n".join(
-                json.dumps({"event_type": "t", "value": v}) for v in vals2
-            )
+        return (
+            out.writeStream.outputMode("update")
+            .foreachBatch(lambda df, bid: rows.extend(df.collect()))
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-        q2 = start()
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
 
-        if name == "ewma":
-            got = max(rows, key=lambda r: r.n_rows)
-            ref = None
-            for v in vals1 + vals2:
-                ref = v if ref is None else 0.3 * v + 0.7 * ref
-            assert got.n_rows == 43 and got.ewma == ref
-        else:
-            got = max(rows, key=lambda r: r.n_total)
-            n, mean, m2 = 0, 0.0, 0.0
-            flagged = 0
-            for v in vals1 + vals2:
-                if n >= 30:
-                    var = m2 / n
-                    if var > 0 and abs(v - mean) / math.sqrt(var) > 3.0:
-                        flagged += 1
-                n += 1
-                d = v - mean
-                mean += d / n
-                m2 += d * (v - mean)
-            assert got.n_total == 43
-            assert got.mean == mean and got.std == math.sqrt(m2 / n)
-            assert got.n_flagged >= 1 and got.last_flagged_value == 1000.0
-            assert flagged >= 1
+    (src / "a.json").write_text(
+        "\n".join(json.dumps({"event_type": "t", "value": v}) for v in vals1)
+    )
+    q1 = start()
+    try:
+        q1.processAllAvailable()
+    finally:
+        q1.stop()
+    (src / "b.json").write_text(
+        "\n".join(json.dumps({"event_type": "t", "value": v}) for v in vals2)
+    )
+    q2 = start()
+    try:
+        q2.processAllAvailable()
+    finally:
+        q2.stop()
+
+    got = max(rows, key=lambda r: r.n_total)
+    n, mean, m2 = 0, 0.0, 0.0
+    flagged = 0
+    for v in vals1 + vals2:
+        if n >= 30:
+            var = m2 / n
+            if var > 0 and abs(v - mean) / math.sqrt(var) > 3.0:
+                flagged += 1
+        n += 1
+        d = v - mean
+        mean += d / n
+        m2 += d * (v - mean)
+    assert got.n_total == 43
+    assert got.mean == mean and got.std == math.sqrt(m2 / n)
+    assert got.n_flagged >= 1 and got.last_flagged_value == 1000.0
+    assert flagged >= 1

@@ -25,11 +25,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_DIR)
 
 SF01_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.bench_sf1")
-SF10_DIR = os.environ.get("SPARK_GRAFT_SF10_DIR", "/root/repo/.bench_sf10")
+SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", os.path.join(REPO_DIR, ".bench_sf1"))
+SF10_DIR = os.environ.get("SPARK_GRAFT_SF10_DIR", os.path.join(REPO_DIR, ".bench_sf10"))
 
 #: the r9-verdict representative set: broadcast join ladder, LSH band
 #: join, window sessionize, SQL BPE encode, mergeable-sketch rollup,
