@@ -8,7 +8,6 @@ Reference entry points (SURVEY §3.2/§3.3):
   SQL (edge_lake/api/al_grafana.py:60-180, 2115-2125).
 """
 
-from edgelake_spark.api.grafana import grafana_to_sql
 from edgelake_spark.api.rest import EdgeLakeRestServer
 
-__all__ = ["grafana_to_sql", "EdgeLakeRestServer"]
+__all__ = ["EdgeLakeRestServer"]

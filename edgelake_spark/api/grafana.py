@@ -207,66 +207,3 @@ def grafana_search(engine) -> list[str]:
     return sorted(
         t.name for t in engine.spark.catalog.listTables() if not t.name.startswith("__")
     )
-
-
-# ------------------------------------------------- low-level SQL builder
-
-ALLOWED_FUNCTIONS = ("count", "avg", "min", "max")  # al_grafana.py:50
-
-
-def grafana_to_sql(payload: dict) -> str:
-    """Build the dialect SQL string for one explicit target payload
-    (mirroring the reference's AlQueryParams fields directly, for
-    callers that bypass the HTTP body shape).
-
-    payload keys: table, time_column, value_column, request_type
-    ('increments' | 'period' | 'sql'), start, end (ISO strings),
-    interval_unit + interval_time OR data_points, functions,
-    where_cond, limit, sql (for request_type='sql')."""
-    rtype = payload.get("request_type", "increments")
-    if rtype == "sql":
-        return payload["sql"]
-
-    table = payload["table"]
-    time_col = payload.get("time_column", "timestamp")
-    value_col = payload.get("value_column", "value")
-    functions = payload.get("functions") or ["min", "max", "avg"]
-    for f in functions:
-        if f not in ALLOWED_FUNCTIONS:
-            raise ValueError(f"unsupported Grafana aggregate: {f}")
-    start, end = payload.get("start"), payload.get("end")
-    where_parts = []
-    if start:
-        where_parts.append(f"{time_col} >= '{start}'")
-    if end:
-        where_parts.append(f"{time_col} < '{end}'")
-    if payload.get("where_cond"):
-        where_parts.append(payload["where_cond"])
-    where = (" where " + " and ".join(where_parts)) if where_parts else ""
-    limit = f" limit {int(payload['limit'])}" if payload.get("limit") else ""
-
-    if rtype == "increments":
-        unit = payload.get("interval_unit")
-        if unit:
-            incr = f"increments({unit}, {int(payload.get('interval_time', 1))}, {time_col})"
-        elif payload.get("data_points"):
-            incr = f"increments({int(payload['data_points'])}, {time_col})"
-        else:
-            incr = f"increments({time_col})"
-        aggs = ", ".join(
-            f"{f}(*) as {f}_all" if f == "count" else f"{f}({value_col}) as {f}_{value_col}"
-            for f in functions
-        )
-        return f"select {incr}, max({time_col}) as last_ts, {aggs} from {table}{where}{limit}"
-
-    if rtype == "period":
-        unit = payload.get("interval_unit", "minute")
-        n = int(payload.get("interval_time", 1))
-        anchor = f"'{end}'" if end else "now()"
-        return (
-            f"select {time_col}, {value_col} from {table} "
-            f"where period({unit}, {n}, {anchor}, {time_col})"
-            f"{limit}"
-        )
-
-    raise ValueError(f"unknown request_type: {rtype}")

@@ -16,10 +16,13 @@ session's ``spark.sql.warehouse.dir``. A regenerated source file, or a
 change to how the artifact is built, gives a new name, so a stale
 artifact is never read.
 
-The marker is written after the build returns and records the full key.
-A directory without a matching marker (an interrupted build) is removed
-and rebuilt. A build removes the other states of the same source and
-kind, so superseded artifacts do not accumulate. Deleting the whole
+The marker is written after the build returns and records the full key
+and the schema of what was written, so a read needs no footer scan (a
+schema-less ``spark.read.parquet`` runs one Spark job to infer it). A
+directory without a matching marker (an interrupted build, or a marker
+that predates the recorded schema) is removed and rebuilt. A build
+removes the other states of the same source and kind, so superseded
+artifacts do not accumulate. Deleting the whole
 directory between sessions is always safe: every artifact is rebuilt on
 next use.
 """
@@ -32,6 +35,8 @@ import json
 import os
 import shutil
 from urllib.parse import urlparse
+
+from pyspark.sql.types import StructType
 
 #: completeness marker; Spark's file listing skips names starting with
 #: ``_``, so no reader of the artifact sees it
@@ -66,32 +71,40 @@ def path(spark, source: str, kind: str, version: str) -> str:
     return _path(spark, _key(source, kind, version))
 
 
-def ensure(spark, source: str, kind: str, version: str, write) -> str:
-    """Return the directory of the current artifact, first calling
-    ``write(directory)`` to build it unless a complete one exists."""
+def ensure(spark, source: str, kind: str, version: str, write) -> tuple[str, StructType]:
+    """Return the directory and schema of the current artifact, first
+    calling ``write(directory)`` to build it unless a complete one
+    exists; ``write`` returns the schema of the data it wrote."""
     key = _key(source, kind, version)
     target = _path(spark, key)
     marker = os.path.join(target, MARKER)
     try:
         with open(marker) as fh:
-            if json.load(fh) == key:
-                return target
+            recorded = json.load(fh)
+        schema = recorded.pop("schema", None)
+        if schema is not None and recorded == key:
+            return target, StructType.fromJson(schema)
     except (OSError, ValueError):
         pass
     shutil.rmtree(target, ignore_errors=True)
-    write(target)
+    schema = write(target)
     with open(marker, "w") as fh:
-        json.dump(key, fh)
+        json.dump({**key, "schema": schema.jsonValue()}, fh)
     for stale in glob.glob(glob.escape(target.rsplit("_", 1)[0]) + "_*"):
         if stale != target:
             shutil.rmtree(stale, ignore_errors=True)
-    return target
+    return target, schema
 
 
 def parquet(spark, source: str, kind: str, version: str, build):
-    """The artifact as a parquet DataFrame; ``build()`` returns the
-    DataFrame to write, executor-side, when it must be built."""
-    return spark.read.parquet(ensure(
-        spark, source, kind, version,
-        lambda p: build().write.mode("overwrite").parquet(p),
-    ))
+    """The artifact as a parquet DataFrame read with its recorded schema;
+    ``build()`` returns the DataFrame to write, executor-side, when it
+    must be built."""
+
+    def write(directory):
+        df = build()
+        df.write.mode("overwrite").parquet(directory)
+        return df.schema
+
+    target, schema = ensure(spark, source, kind, version, write)
+    return spark.read.schema(schema).parquet(target)

@@ -20,10 +20,12 @@ the query half in queries.py.
 
 from __future__ import annotations
 
+import math
 import os
 
 from edgelake_spark import artifacts
 from edgelake_spark.checkpoint import materialize
+from edgelake_spark.localframe import local_frame
 
 CENTROID_STRIDE = 47  # vec_id % 47 == 0 → deterministic centroid subset
 NPROBE = 2
@@ -330,20 +332,98 @@ def duck_srp_probes(key: str) -> str:
 
 
 # ------------------------------------------------------- distributed PCA
+#
+# The fit has MLlib's RowMatrix.computePrincipalComponents shape: the
+# one data-sized step is a Gramian aggregate on the executors (dim·(dim+1)/2
+# upper-triangle cells plus dim column sums, map-side partial sums, one
+# shuffle of ≤ that many rows per partition); the covariance and the
+# power iteration run on the driver over those ~2k numbers: as Spark SQL
+# over the dim²-row covariance they take ~20 jobs whose fixed per-job
+# cost dwarfs their arithmetic.
+
+_FIX = 1099511627776  # 2^40, the fixed-point scale (exact in double)
+_PCA_ITERS = 4  # power-method steps
 
 
-def pca_cov_sql(engine: str, table: str, dim: int = 64) -> str:
-    """The covariance table (i, j, c, mu_i) — PCA's one corpus-sized
-    stage, split out so the Spark runner can materialize it ONCE
-    (localCheckpoint): the power-iteration SQL reads `cov` from seven
-    places (four matvecs, Rayleigh matvec, trace, v0 domain), and CTE
-    inlining would re-run the N·dim² Gram pipeline per reference."""
+def pca_gram_sql(table: str) -> str:
+    """One row (i, p, s, k) per Gram cell of ``table``'s embeddings: ``s``
+    is the fixed-point sum SUM(floor(e_i · x · 2^40)) with x = 1 at
+    p = 0 (the column sum of dimension i) and x = e_(i+p-1) at p ≥ 1 (the
+    Gram cell (i, i+p-1), upper triangle only: the lower one is the same
+    integer sum). ``k`` counts the contributing vectors; at (0, 0) that
+    is every vector with a non-empty embedding, the oracle's
+    count(DISTINCT vec_id) on the vec_id key. No join and no window:
+    two posexplodes and one partial/final aggregate.
+
+    The pairs are generated, not spelled out: one literal array of all
+    dim·(dim+3)/2 products compiles to a method over the JVM's 64 KB
+    limit, and the interpreted fallback costs seconds of CPU per call."""
+    return f"""
+SELECT i, p, SUM(CAST(floor((ei * x) * {_FIX}.0) AS BIGINT)) AS s, count(*) AS k
+FROM (SELECT CAST(embedding AS array<double>) AS e FROM {table}) t
+LATERAL VIEW posexplode(e) a AS i, ei
+LATERAL VIEW posexplode(concat(array(CAST(1 AS DOUBLE)), slice(e, i + 1, size(e) - i))) b AS p, x
+GROUP BY i, p
+"""
+
+
+def _fixed_sum(xs) -> float:
+    """The staged sum CAST(SUM(floor(x · 2^40)) AS DOUBLE) / 2^40: exact
+    integers, one rounding to double, one exact division."""
+    return float(sum(math.floor(x * _FIX) for x in xs)) / _FIX
+
+
+def pca_power(gram) -> list[tuple]:
+    """The power-method fit from pca_gram_sql's rows: (dim, mu,
+    pc1_loading, lambda1, var_share, resid) per dimension, with every
+    IEEE op in pca_power_sql's order."""
+    sums = {(i, p): s for i, p, s, _ in gram}
+    n = float(next(k for i, p, _, k in gram if i == 0 and p == 0))
+    dim = 1 + max(i for i, _, _, _ in gram)
+    mu = [float(sums[i, 0]) / _FIX / n for i in range(dim)]
+    c = [[0.0] * dim for _ in range(dim)]
+    for i in range(dim):
+        for j in range(i, dim):
+            g = float(sums[i, j - i + 1]) / _FIX
+            # (n·mu_i)·mu_j and (n·mu_j)·mu_i round differently
+            c[i][j] = (g - n * mu[i] * mu[j]) / n
+            c[j][i] = (g - n * mu[j] * mu[i]) / n
+    v = [0.125] * dim
+    for _ in range(_PCA_ITERS):
+        r = [_fixed_sum(ci[j] * v[j] for j in range(dim)) for ci in c]
+        norm = math.sqrt(_fixed_sum(x * x for x in r))
+        v = [x / norm for x in r]
+    w = [_fixed_sum(ci[j] * v[j] for j in range(dim)) for ci in c]
+    lambda1 = _fixed_sum(w[i] * v[i] for i in range(dim))
+    resid = math.sqrt(_fixed_sum((w[i] - lambda1 * v[i]) * (w[i] - lambda1 * v[i])
+                                 for i in range(dim)))
+    trace = _fixed_sum(c[i][i] for i in range(dim))
+    return [(i, mu[i], v[i], lambda1, lambda1 / trace, resid) for i in range(dim)]
+
+
+def pca_fit(spark):
+    """Fit the top principal component of `embeddings_rep` live: one
+    Spark aggregate (pca_gram_sql) collected to the driver, then
+    pca_power. The 64-row result is a local frame: reading it starts
+    no Spark job."""
+    gram = [tuple(r) for r in spark.sql(pca_gram_sql("embeddings_rep")).collect()]
+    return local_frame(
+        spark, pca_power(gram),
+        "dim BIGINT, mu DOUBLE, pc1_loading DOUBLE, lambda1 DOUBLE, "
+        "var_share DOUBLE, resid DOUBLE",
+    )
+
+
+def pca_cov_sql(table: str, dim: int = 64) -> str:
+    """The DuckDB oracle's covariance table (i, j, c, mu_i): the long
+    form self-joined on vec_id into the full dim² Gram, with the same
+    fixed-point staging as pca_gram_sql."""
     q = "1099511627776.0"  # 2^40, exact in double
     ds = (
         "(CAST(SUM(CAST(floor(({x}) * " + q + ") AS BIGINT)) AS DOUBLE) / " + q + ")"
     )
     return f"""
-WITH long AS ({long_form_sql(engine, "i", table, dim)}),
+WITH long AS ({long_form_sql("duck", "i", table, dim)}),
 nn AS (SELECT CAST(count(DISTINCT vec_id) AS BIGINT) AS n FROM long),
 mu AS (
   SELECT i, {ds.format(x='v')} / CAST(nn.n AS DOUBLE) AS mu
@@ -364,23 +444,14 @@ CROSS JOIN nn
 """
 
 
-def pca_power_sql(
-    engine: str,
-    table: str,
-    dim: int = 64,
-    iters: int = 4,
-    cov_table: str | None = None,
-) -> str:
-    """Top principal component of the embedding cloud by Gram-matrix
-    accumulation + ``iters`` unrolled power-method steps — the
-    distributed PCA shape (embedding whitening / drift decomposition /
-    low-rank probes): the ONLY corpus-sized stage is the (i, j) product
-    aggregation, whose shuffled state is dim² cells thanks to map-side
-    partial aggregation; every later step (covariance, matvecs,
-    normalizations, Rayleigh quotient) runs on ≤ dim² rows.
+def pca_power_sql(table: str, dim: int = 64) -> str:
+    """The DuckDB oracle of pca_fit: pca_cov_sql's covariance (declared
+    MATERIALIZED, it is read from seven places) and _PCA_ITERS unrolled
+    power-method steps in SQL, the same ops in the same order as
+    pca_power.
 
     Cross-engine determinism: every sum is staged as FIXED-POINT
-    floor(x · 2^40) BIGINTs — NOT decimal: double→DECIMAL casts round
+    floor(x · 2^40) integers — NOT decimal: double→DECIMAL casts round
     HALF_UP on the shortest repr in Spark but HALF_EVEN on the exact
     binary value in DuckDB, and float32-sourced data hits exact ties
     routinely (this dataset: embedding[2][37] = 0.1983642578125, a
@@ -389,23 +460,17 @@ def pca_power_sql(
     multiply has no tie cases, integer sums are order-independent, and
     the 2^-40 per-term quantization is far below the estimate's
     accuracy. Each later product/divide is a single correctly-rounded
-    IEEE op in the same order on both engines; the power-iteration
-    init is the exact binary constant 1/8; sqrt is IEEE-exact.
-
-    At 100 TB: the long-form explode is linear in N·dim; the Gram
-    aggregate is the one shuffle (≤ dim² × partitions partial rows);
-    power iterations are free. This is why PCA-style probes run fine as
-    SQL — the data-sized work is a single self-joined aggregation.
+    IEEE op in the same order here and in pca_power's Python floats;
+    the power-iteration init is the exact binary constant 1/8; sqrt is
+    IEEE-exact. So the driver-side fit and this oracle agree bit for
+    bit.
 
     Plan-size discipline: every CTE in the iteration chain is
     referenced EXACTLY ONCE (normalization is a window sum over the
     matvec output instead of a cross-joined scalar; the tail picks the
     eigvec component off the covariance DIAGONAL inside the final
     matvec aggregate) — a vK referenced twice doubles the inlined plan
-    per iteration, 2^iters blow-up, measured as seconds of pure
-    planning per run. The covariance table is the one multi-referenced
-    input: the Spark runner materializes it (localCheckpoint) and the
-    DuckDB form declares it AS MATERIALIZED.
+    per iteration, 2^steps blow-up.
     """
     q = "1099511627776.0"  # 2^40, exact in double
     ds = (
@@ -415,22 +480,15 @@ def pca_power_sql(
         "(CAST(SUM(CAST(floor(({x}) * " + q + ") AS BIGINT)) OVER () AS DOUBLE) / "
         + q + ")"
     )
-    if cov_table is None:
-        mat = " MATERIALIZED" if engine == "duck" else ""
-        cov_cte = f"cov AS{mat} ({pca_cov_sql(engine, table, dim)}),\n"
-        cov = "cov"
-    else:
-        cov_cte = ""
-        cov = cov_table
     # unrolled power iterations: vK = normalize(C vK-1); the window-sum
     # normalization keeps each rK referenced once (single-path chain)
     its = []
     prev = "v0"
-    for k in range(1, iters + 1):
+    for k in range(1, _PCA_ITERS + 1):
         its.append(
             f"""r{k} AS (
   SELECT c.i, {ds.format(x='c.c * p.v')} AS r
-  FROM {cov} c JOIN {prev} p ON p.i = c.j
+  FROM cov c JOIN {prev} p ON p.i = c.j
   GROUP BY c.i
 ),
 v{k} AS (SELECT i, r / sqrt({wds.format(x='r * r')}) AS v FROM r{k})"""
@@ -438,7 +496,8 @@ v{k} AS (SELECT i, r / sqrt({wds.format(x='r * r')}) AS v FROM r{k})"""
         prev = f"v{k}"
     its_sql = ",\n".join(its)
     return f"""
-WITH {cov_cte}mud AS (SELECT i, mu_i AS mu FROM {cov} WHERE i = j),
+WITH cov AS MATERIALIZED ({pca_cov_sql(table, dim)}),
+mud AS (SELECT i, mu_i AS mu FROM cov WHERE i = j),
 v0 AS (SELECT i, CAST(0.125 AS DOUBLE) AS v FROM mud),
 {its_sql},
 wv AS (
@@ -446,7 +505,7 @@ wv AS (
   -- last iterate is referenced exactly once
   SELECT c.i, {ds.format(x='c.c * p.v')} AS w,
          max(CASE WHEN c.j = c.i THEN p.v END) AS v
-  FROM {cov} c JOIN {prev} p ON p.i = c.j
+  FROM cov c JOIN {prev} p ON p.i = c.j
   GROUP BY c.i
 ),
 s1 AS (SELECT i, w, v, {wds.format(x='w * v')} AS lambda1 FROM wv),
@@ -455,7 +514,7 @@ s2 AS (
          sqrt({wds.format(x='(w - lambda1 * v) * (w - lambda1 * v)')}) AS resid
   FROM s1
 ),
-tr AS (SELECT {ds.format(x='c')} AS trace FROM {cov} WHERE i = j)
+tr AS (SELECT {ds.format(x='c')} AS trace FROM cov WHERE i = j)
 SELECT CAST(s2.i AS BIGINT) AS dim, mud.mu, s2.v AS pc1_loading,
        s2.lambda1, s2.lambda1 / tr.trace AS var_share, s2.resid
 FROM s2
@@ -463,17 +522,6 @@ JOIN mud ON mud.i = s2.i
 CROSS JOIN tr
 ORDER BY dim
 """
-
-
-def pca_fit(spark):
-    """Fit the top principal component of `embeddings_rep` live: the
-    covariance is materialized once (dim² = 4096 rows) because the
-    power-iteration SQL reads it from seven places and CTE inlining
-    would re-run the N·dim² Gram pipeline per reference."""
-    spark.sql(pca_cov_sql("spark", "embeddings_rep")).transform(
-        materialize
-    ).createOrReplaceTempView("__pca_cov")
-    return spark.sql(pca_power_sql("spark", "", cov_table="__pca_cov"))
 
 
 # ------------------------------------------------- offline index builds

@@ -5266,20 +5266,19 @@ def _run_bucketed_join(spark, sf_dir):
         def write(path, source=source, key=key):
             # read the file the layout is keyed on: a view registered
             # before the file was rewritten still lists its old length
-            (load_parquet(spark, source).write.bucketBy(8, key).sortBy(key)
+            df = load_parquet(spark, source)
+            (df.write.bucketBy(8, key).sortBy(key)
              .mode("overwrite").format("parquet")
              .option("path", path)  # external: files outlive DROP
              .saveAsTable(os.path.basename(path)))
+            return df.schema
 
-        loc = artifacts.ensure(spark, source, f"bucketed_{table}", _BUCKETS, write)
+        loc, schema = artifacts.ensure(spark, source, f"bucketed_{table}", _BUCKETS, write)
         name = names[table] = os.path.basename(loc)
         if not spark.catalog.tableExists(name):
             # metadata-only re-attach of a complete layout written with
             # this exact bucket spec: no data movement
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in spark.table(table).schema
-            )
+            cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema)
             spark.sql(
                 f"CREATE TABLE {name} ({cols}) USING parquet "
                 f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO 8 BUCKETS "
@@ -7256,7 +7255,7 @@ def _run_pca_power(spark, sf_dir):
 _q(
     "emb_pca_power",
     _run_pca_power,
-    sim.pca_power_sql("duck", "embeddings"),
+    sim.pca_power_sql("embeddings"),
 )
 
 
@@ -7688,7 +7687,7 @@ _q(
     "emb_pca_project",
     _run_pca_project,
     "WITH model AS MATERIALIZED ("
-    + sim.pca_power_sql("duck", "embeddings")
+    + sim.pca_power_sql("embeddings")
     + "),\n"
     + _PCA_PROJECT_BODY.format(
         long_src=sim.long_form_sql("duck", "i"),

@@ -85,6 +85,10 @@ def suback_packet(pid: int, granted: list[int]) -> bytes:
     return _packet(SUBACK, 0, struct.pack(">H", pid) + bytes(granted))
 
 
+def unsuback_packet(pid: int) -> bytes:
+    return _packet(UNSUBACK, 0, struct.pack(">H", pid))
+
+
 def pingreq_packet() -> bytes:
     return _packet(PINGREQ, 0, b"")
 
@@ -153,9 +157,9 @@ def topic_matches(filt: str, topic: str) -> bool:
 
 class MqttBroker:
     """In-process MQTT 3.1.1 broker double (QoS 0/1): CONNECT/SUBSCRIBE/
-    PUBLISH routing with real framing, standing in for the reference
-    node's local message server (message_server.py) so round-trip tests
-    need no external daemon."""
+    UNSUBSCRIBE/PUBLISH routing with real framing, standing in for the
+    reference node's local message server (message_server.py) so
+    round-trip tests need no external daemon."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self._srv = socket.create_server((host, port))
@@ -199,6 +203,19 @@ class MqttBroker:
                         with self._lock:
                             self._subs.append((filt, min(qos, 1), conn))
                     conn.sendall(suback_packet(pid, granted))
+                elif ptype == UNSUBSCRIBE:
+                    # packet id, then length-prefixed filters (§3.10)
+                    pid = struct.unpack(">H", body[:2])[0]
+                    off, filters = 2, set()
+                    while off < len(body):
+                        tlen = struct.unpack(">H", body[off : off + 2])[0]
+                        filters.add(body[off + 2 : off + 2 + tlen].decode("utf-8"))
+                        off += 2 + tlen
+                    with self._lock:
+                        self._subs = [
+                            s for s in self._subs if s[2] is not conn or s[0] not in filters
+                        ]
+                    conn.sendall(unsuback_packet(pid))
                 elif ptype == PUBLISH:
                     topic, qos, pid, payload = parse_publish(flags, body)
                     # count BEFORE acking: a QoS-1 publisher unblocks on
@@ -222,7 +239,7 @@ class MqttBroker:
                     self._route(topic, payload)
                 elif ptype == PINGREQ:
                     conn.sendall(pingresp_packet())
-                elif ptype in (PUBACK, UNSUBACK):
+                elif ptype == PUBACK:
                     pass
                 elif ptype == DISCONNECT:
                     break

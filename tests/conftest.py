@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 
@@ -47,3 +48,18 @@ def duck_views(duck):
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR_MED}/{t}.parquet')"
         )
     return duck
+
+
+def spark_jobs(spark, fn):
+    """Run ``fn()`` in a job group of its own; return its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

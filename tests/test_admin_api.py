@@ -1,5 +1,5 @@
 """Admin commands (views, rows count, info table, suggest create) and
-the REST/Grafana façades."""
+the REST façade."""
 
 import json
 import urllib.request
@@ -7,7 +7,6 @@ import urllib.request
 import pytest
 
 from edgelake_spark.admin import suggest_create
-from edgelake_spark.api import grafana_to_sql
 from edgelake_spark.engine import EdgeLakeEngine
 from tests.conftest import SF_DIR
 
@@ -61,46 +60,6 @@ def test_suggest_create_ddl():
     assert "timestamp TIMESTAMP NOT NULL DEFAULT NOW()" in ddl
     assert "device_name CHAR(4)" in ddl
     assert "value DECIMAL" in ddl  # DECIMAL ∨ INT → DECIMAL per the lattice
-
-
-def test_grafana_increments_sql():
-    sql = grafana_to_sql(
-        {
-            "table": "ping_sensor",
-            "time_column": "ts",
-            "value_column": "value",
-            "request_type": "increments",
-            "interval_unit": "minute",
-            "interval_time": 5,
-            "functions": ["min", "max", "avg"],
-            "start": "2024-01-01 00:00:00",
-            "end": "2024-01-02 00:00:00",
-        }
-    )
-    assert sql == (
-        "select increments(minute, 5, ts), max(ts) as last_ts, min(value) as min_value, "
-        "max(value) as max_value, avg(value) as avg_value from ping_sensor "
-        "where ts >= '2024-01-01 00:00:00' and ts < '2024-01-02 00:00:00'"
-    )
-
-
-def test_grafana_period_and_validation(engine):
-    sql = grafana_to_sql(
-        {
-            "table": "events",
-            "time_column": "ts",
-            "value_column": "value",
-            "request_type": "period",
-            "interval_unit": "hour",
-            "interval_time": 6,
-            "end": "2024-01-15 00:00:00",
-        }
-    )
-    assert "period(hour, 6, '2024-01-15 00:00:00', ts)" in sql
-    # the emitted SQL actually runs through the engine
-    assert engine.run(f'sql d "{sql}"').count() > 0
-    with pytest.raises(ValueError):
-        grafana_to_sql({"table": "t", "functions": ["median"]})
 
 
 def test_rest_server_query_and_ingest(engine):

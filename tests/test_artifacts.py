@@ -4,15 +4,17 @@ the catalog entries of the bucketed layouts are dropped."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 import duckdb
+from pyspark.sql.types import LongType, StructField, StructType
 
 from edgelake_spark import artifacts
 from edgelake_spark.catalog import TESTDATA_TABLES
 from edgelake_spark.queries import ORACLE_SQL, SPARK_QUERIES
-from tests.conftest import SF_DIR, SF_DIR_MED
+from tests.conftest import SF_DIR, SF_DIR_MED, spark_jobs
 from tests.test_oracle_parity import _rows_to_multiset
 
 #: one gate per persisted artifact family: bucketed layouts, IVF
@@ -30,6 +32,9 @@ GATES = (
     "doc_split_leakage",
     "doc_cluster_sizes",
 )
+
+
+SCHEMA = StructType([StructField("x", LongType())])
 
 
 def _copy_tables(src_dir, dst_dir):
@@ -91,23 +96,63 @@ def test_incomplete_artifact_is_rebuilt_and_stale_states_swept(spark, tmp_path):
     def write(path):
         builds.append(path)
         os.makedirs(path)
+        return SCHEMA
 
-    p1 = artifacts.ensure(spark, str(src), "t_store", "v", write)
+    p1, schema = artifacts.ensure(spark, str(src), "t_store", "v", write)
     assert os.path.exists(os.path.join(p1, artifacts.MARKER))
-    assert artifacts.ensure(spark, str(src), "t_store", "v", write) == p1
-    assert builds == [p1]
+    assert artifacts.ensure(spark, str(src), "t_store", "v", write) == (p1, SCHEMA)
+    assert builds == [p1] and schema == SCHEMA
 
     # an interrupted build: files but no marker
     os.remove(os.path.join(p1, artifacts.MARKER))
     with open(os.path.join(p1, "partial"), "w") as fh:
         fh.write("x")
-    assert artifacts.ensure(spark, str(src), "t_store", "v", write) == p1
+    assert artifacts.ensure(spark, str(src), "t_store", "v", write) == (p1, SCHEMA)
     assert builds == [p1, p1]
     assert not os.path.exists(os.path.join(p1, "partial"))
 
     # the source is regenerated: new state, old one swept
     src.write_bytes(b"v2 longer")
-    p2 = artifacts.ensure(spark, str(src), "t_store", "v", write)
+    p2, _ = artifacts.ensure(spark, str(src), "t_store", "v", write)
     assert p2 != p1 and builds[-1] == p2
     assert not os.path.exists(p1)
     shutil.rmtree(p2)
+
+
+def test_warm_read_uses_recorded_schema_and_old_marker_rebuilds(spark, tmp_path):
+    """A built artifact is read with the schema its marker records, so a
+    warm read infers nothing and starts no Spark job. A marker from
+    before schemas were recorded counts as incomplete: rebuilt once."""
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"v1")
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(5).selectExpr("id AS x", "CAST(id AS DOUBLE) AS y")
+
+    first = artifacts.parquet(spark, str(src), "t_schema", "v", build)
+    path = artifacts.path(spark, str(src), "t_schema", "v")
+    try:
+        assert sorted(first.collect()) == sorted(build().collect())
+        builds.clear()
+        warm, jobs = spark_jobs(
+            spark, lambda: artifacts.parquet(spark, str(src), "t_schema", "v", build)
+        )
+        assert jobs == 0 and not builds
+        assert warm.schema == spark.read.parquet(path).schema
+
+        # the marker as it was written before it recorded the schema
+        marker = os.path.join(path, artifacts.MARKER)
+        with open(marker) as fh:
+            key = json.load(fh)
+        del key["schema"]
+        with open(marker, "w") as fh:
+            json.dump(key, fh)
+        artifacts.parquet(spark, str(src), "t_schema", "v", build)
+        artifacts.parquet(spark, str(src), "t_schema", "v", build)
+        assert builds == [1]
+        with open(marker) as fh:
+            assert "schema" in json.load(fh)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

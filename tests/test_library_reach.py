@@ -5,9 +5,11 @@ top-level function, class or constant that nothing outside its own
 definition references in the code that runs: ``edgelake_spark/``,
 ``perfbench/``, ``tools/``, ``bench.py`` and ``__spark_entry__.py``. A
 reference is a Name, an Attribute or an import alias; a mention in a
-docstring or comment is not. Names assigned together by one tuple
-assignment (a table of protocol codes) form one definition, reached
-when any of them is. ``__all__`` is read by the import system, not by
+docstring or comment is not, and neither is an import in a package
+``__init__.py``: a re-export only makes a name importable, and an
+importer outside the running code (a test) would otherwise pass as a
+caller. Names assigned together by one tuple assignment (a table of
+protocol codes) form one definition, reached when any of them is. ``__all__`` is read by the import system, not by
 name, and is not checked. Tests are not scanned: code only a test
 calls is not part of the library.
 """
@@ -65,14 +67,15 @@ def _definitions(tree):
                     yield names, _span(node)
 
 
-def _references(tree):
-    """(name, line) for each Name load, Attribute and import alias."""
+def _references(tree, reexports: bool):
+    """(name, line) for each Name load, Attribute and, unless the module
+    only ``reexports`` (a package ``__init__``), import alias."""
     for n in ast.walk(tree):
         if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
             yield n.id, n.lineno
         elif isinstance(n, ast.Attribute):
             yield n.attr, n.lineno
-        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+        elif isinstance(n, (ast.Import, ast.ImportFrom)) and not reexports:
             for a in n.names:
                 yield a.name.rsplit(".", 1)[-1], n.lineno
 
@@ -81,7 +84,7 @@ def _unreached() -> dict[str, str]:
     trees = {p: ast.parse(p.read_text(), str(p)) for p in _files()}
     refs: dict[str, list[tuple[pathlib.Path, int]]] = {}
     for p, tree in trees.items():
-        for name, line in _references(tree):
+        for name, line in _references(tree, p.name == "__init__.py"):
             refs.setdefault(name, []).append((p, line))
     out = {}
     for p, tree in trees.items():

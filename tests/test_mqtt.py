@@ -95,6 +95,33 @@ def test_broker_rejects_non_connect_first():
         broker.stop()
 
 
+def test_broker_unsubscribe_acks_and_stops_delivery():
+    broker = mq.MqttBroker().start()
+    try:
+        s = socket.create_connection((broker.host, broker.port))
+        s.settimeout(10)
+        s.sendall(mq.connect_packet("unsub"))
+        assert mq.read_packet(s)[0] == mq.CONNACK
+        s.sendall(mq.subscribe_packet(1, "t/a", qos=0))
+        assert mq.read_packet(s)[0] == mq.SUBACK
+        s.sendall(mq._packet(mq.UNSUBSCRIBE, 0x02, struct.pack(">H", 7) + mq._utf8("t/a")))
+        assert mq.read_packet(s) == (mq.UNSUBACK, 0, b"\x00\x07")
+        s.sendall(mq.subscribe_packet(2, "t/b", qos=0))
+        assert mq.read_packet(s)[0] == mq.SUBACK
+        # one publishing session routes in order: had t/a still been
+        # subscribed, its PUBLISH would arrive before t/b's
+        pub = mq.MqttPublisher(broker.host, broker.port)
+        pub.publish("t/a", b"dropped", qos=1)
+        pub.publish("t/b", b"kept", qos=1)
+        ptype, flags, body = mq.read_packet(s)
+        assert ptype == mq.PUBLISH
+        assert mq.parse_publish(flags, body)[0::3] == ("t/b", b"kept")
+        pub.close()
+        s.close()
+    finally:
+        broker.stop()
+
+
 # ------------------------------------------- full `run mqtt client` path
 
 

@@ -10,7 +10,7 @@ PartitionFilters (covered in test_ingest_multimodal)."""
 import pytest
 
 from edgelake_spark.queries import SPARK_QUERIES
-from tests.conftest import SF_DIR_MED
+from tests.conftest import SF_DIR_MED, spark_jobs
 
 
 def plan_of(spark, name: str) -> str:
@@ -616,17 +616,33 @@ def test_hll_rollup_two_level_partial_final(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_pca_gram_partial_final_dim_bounded(spark):
-    plan = plan_of(spark, "emb_pca_power")
-    # the Gram accumulation happened in the runner (materialized cov
-    # view); the iteration plan aggregates/joins ≤ dim²-row tables with
-    # partial/final matvec aggregates and window normalizations — no
-    # cartesian over data (the one BroadcastNestedLoopJoin is the 1-row
-    # trace scalar cross-join, the standard denominator pattern)
-    assert plan.count("HashAggregate") >= 6
-    assert plan.count("Window") >= 4
+def test_pca_gram_one_aggregate_no_join(spark):
+    from edgelake_spark.functions.similarity import pca_gram_sql
+
+    SPARK_QUERIES["emb_pca_power"](spark, SF_DIR_MED)  # registers embeddings_rep
+    plan = spark.sql(pca_gram_sql("embeddings_rep"))._jdf.queryExecution().executedPlan().toString()
+    # the one data-sized step: two posexplodes into a partial/final
+    # aggregate of dim·(dim+3)/2 cells — no self-join on vec_id, nothing
+    # quadratic in the corpus
+    assert plan.count("Generate") == 2
+    assert plan.count("HashAggregate") >= 2
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_pca_fit_is_local_and_runs_three_jobs(spark):
+    run = SPARK_QUERIES["emb_pca_power"]
+    df = run(spark, SF_DIR_MED)
+    # the power iteration ran on the driver: the fit is a 64-row local
+    # relation, and reading it starts no job
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip().startswith("LocalTableScan")
+    rows, jobs = spark_jobs(spark, df.collect)
+    assert len(rows) == 64 and jobs == 0
+    # a warm call: the repartitioned scan and the Gram aggregate
+    _, jobs = spark_jobs(spark, lambda: run(spark, SF_DIR_MED).collect())
+    assert jobs <= 3
 
 
 def test_triangles_equi_joins_only(spark):

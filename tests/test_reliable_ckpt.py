@@ -22,7 +22,8 @@ from tests.conftest import REPO_ROOT, SF_DIR
 # one representative per checkpoint-discipline family (VERDICT r8 #1):
 # explode-discipline _ckpt_view (winnow pairs), iterative distributed
 # artifact reuse (dedup clusters via LSH pair graph), staged fixed-point
-# (PCA power iteration over the materialized covariance table)
+# (PCA: a Gram aggregate and a driver-side power iteration, no barrier
+# of its own any more; kept to pin its results in either mode)
 FAMILIES = [
     "doc_winnow_pairs",
     "doc_dedup_clusters",
