@@ -3,7 +3,9 @@ complete and current, and when they are removed.
 
 An artifact is anything the engine derives from one source file and
 reuses across queries and sessions: quantization code tables, trained
-IVF centroids and PCA models, near-dup pair tables, bucketed layouts.
+IVF centroids and PCA models, the MinHash-LSH index (signatures and
+band keys), near-dup pair tables and cluster maps, winnowing
+fingerprints, bucketed layouts.
 Its key is
 
 * a source tag, from the source file's absolute path and the artifact

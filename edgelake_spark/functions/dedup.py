@@ -21,6 +21,9 @@ results are bit-identical across engines (verified in tests).
 
 from __future__ import annotations
 
+import os
+
+from edgelake_spark import artifacts
 from edgelake_spark.functions.text import duck_tokens, spark_tokens
 from edgelake_spark.checkpoint import materialize as _materialize
 from edgelake_spark.localframe import local_frame
@@ -189,6 +192,44 @@ def duck_band_key(sig: str, band: int) -> str:
     return f"md5(array_to_string(({sig})[{lo}:{hi}], '|'))"
 
 
+def band_unions(engine: str, source: str) -> str:
+    """The band keys of a signature relation ``source`` (doc_id, sig) as
+    (doc_id, band_id, band_key) rows: one UNION ALL branch per band."""
+    band = spark_band_key if engine == "spark" else duck_band_key
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {k} AS band_id, {band('sig', k)} AS band_key FROM {source}"
+        for k in range(BANDS)
+    )
+
+
+def minhash_index_views(spark, sf_dir: str) -> tuple[str, str]:
+    """The corpus's MinHash-LSH index as `__mh_sig` (doc_id, sig) and
+    `__mh_bands` (doc_id, band_id, band_key), both persisted per state
+    of ``documents.parquet``: the offline half of every LSH runner.
+    Signatures are hashed once, over a repartitioned scan (the
+    single-row-group source file is one input split); the band keys are
+    derived from the signature artifact, not by hashing shingles again,
+    and written as one file per signature file (not one per band).
+    A warm call reads both with their recorded schemas and starts no
+    Spark job."""
+    source = os.path.join(sf_dir, "documents.parquet")
+    version = spark_minhash_sig_sql("documents_rep")
+
+    def signatures():
+        n = spark.sparkContext.defaultParallelism
+        spark.table("documents").repartition(n).createOrReplaceTempView("documents_rep")
+        return spark.sql(version)
+
+    sig = artifacts.parquet(spark, source, "minhash_sig", version, signatures)
+    sig.createOrReplaceTempView("__mh_sig")
+    bands = band_unions("spark", "__mh_sig")
+    artifacts.parquet(
+        spark, source, "minhash_bands", version + bands,
+        lambda: spark.sql(bands).coalesce(sig.rdd.getNumPartitions()),
+    ).createOrReplaceTempView("__mh_bands")
+    return "__mh_sig", "__mh_bands"
+
+
 def band_claim_policy(claimed, doc_ids):
     """THE greedy keep-first band-claim rule, in one place (r9 verdict
     stretch: the streaming monitor and the batch sweeps each carried
@@ -218,11 +259,12 @@ def band_claim_policy(claimed, doc_ids):
     return claimed, rows
 
 
-def band_claims_sql(engine: str, sig_source: str) -> str:
-    """Batch driver of ``band_claim_policy`` over a signature table
-    (id, sig): per-doc keep/dup verdicts for a static corpus processed
-    in doc_id order. Runs on both engines — band extraction is the only
-    per-engine text (spark_band_key/duck_band_key).
+def band_claims_sql(bands: str) -> str:
+    """Batch driver of ``band_claim_policy`` over a band relation
+    ``bands`` (doc_id, band_id, band_key) — the ``band_unions`` of a
+    signature table, or the persisted band index: per-doc keep/dup
+    verdicts for a static corpus processed in doc_id order. The text is
+    engine-neutral; band extraction is the only per-engine part.
 
     Semantics = the policy fold: a bucket's claimant is its min doc_id;
     ``is_dup`` = doc shares ANY bucket with a smaller doc_id (the
@@ -233,14 +275,8 @@ def band_claims_sql(engine: str, sig_source: str) -> str:
     back + one doc groupBy — all map-side-combinable, no pairwise
     work, the same band-bucket partitioning the pair sweep shuffles on.
     """
-    band = spark_band_key if engine == "spark" else duck_band_key
-    unions = " UNION ALL ".join(
-        f"SELECT doc_id, {k} AS band_id, {band('sig', k)} AS band_key "
-        f"FROM {sig_source}"
-        for k in range(BANDS)
-    )
     return f"""
-WITH bands AS ({unions}),
+WITH bands AS ({bands}),
 claims AS (
   SELECT band_id, band_key, min(doc_id) AS claimed_by
   FROM bands GROUP BY band_id, band_key
@@ -385,16 +421,24 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
     ``stats`` (optional dict) is filled with {n_edges, branch, rounds}
     so callers/benchmarks can record which branch ran and its
     rounds-to-fixpoint without re-deriving them.
+
+    ``pairs`` may be any plan: it is materialized here, once, and both
+    branches read that barrier, so the pair plan runs exactly once. One
+    ``limit(driver_threshold + 1)`` collect over the barrier picks the
+    branch and is the driver branch's input; only the distributed
+    branch counts its edges.
     """
     from pyspark.sql import functions as F
 
     spark = pairs.sparkSession
-    n_edges = pairs.count()
+    pairs = _materialize(pairs)
+    head = pairs.limit(driver_threshold + 1).collect()
+    on_driver = len(head) <= driver_threshold
     if stats is not None:
-        stats["n_edges"] = n_edges
-        stats["branch"] = "driver" if n_edges <= driver_threshold else "distributed"
+        stats["n_edges"] = len(head) if on_driver else pairs.count()
+        stats["branch"] = "driver" if on_driver else "distributed"
         stats["rounds"] = 0
-    if n_edges <= driver_threshold:
+    if on_driver:
         parent: dict = {}
 
         def find(x):
@@ -405,7 +449,7 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
                 parent[x], x = root, parent[x]
             return root
 
-        for a, b in pairs.collect():
+        for a, b in head:
             if a not in parent:
                 parent[a] = a
             if b not in parent:
@@ -419,10 +463,13 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
         rows = sorted(comp.items())
         return local_frame(spark, rows, "doc_id long, component_id long")
 
-    # bidirectional edge set (no distinct — id1<id2 halves cannot overlap)
-    edges = pairs.union(
-        pairs.select(F.col("id2").alias("id1"), F.col("id1").alias("id2"))
-    ).transform(_materialize)
+    # bidirectional edge set: both orientations of each row, in one scan
+    # of the barrier. NOT a union of two scans: Union.rewriteConstraints
+    # dies on a checkpoint's constraints (key not found id1#…)
+    edges = pairs.select(F.inline(F.array(
+        F.struct("id1", "id2"),
+        F.struct(F.col("id2").alias("id1"), F.col("id1").alias("id2")),
+    )))
 
     # ROUND BARRIER = PARQUET ROUND-TRIP, deliberately NOT materialize()/
     # localCheckpoint. Dataset.checkpoint snapshots the source plan's

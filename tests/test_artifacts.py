@@ -4,6 +4,7 @@ the catalog entries of the bucketed layouts are dropped."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -44,21 +45,25 @@ def _copy_tables(src_dir, dst_dir):
             shutil.copyfile(src, os.path.join(dst_dir, f"{t}.parquet"))
 
 
-def _assert_gates_match_oracle(spark, sf_dir, phase):
+def _assert_gates_match_oracle(spark, sf_dir, phase, gates=GATES):
+    """Run ``gates`` on both engines; return each gate's Spark rows."""
     duck = duckdb.connect()
+    rows = {}
     try:
         for t in TESTDATA_TABLES:
             p = os.path.join(sf_dir, f"{t}.parquet")
             if os.path.exists(p):
                 duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-        for name in GATES:
+        for name in gates:
             df = SPARK_QUERIES[name](spark, sf_dir)
             res = duck.execute(ORACLE_SQL[name])
             got = _rows_to_multiset(df.columns, [tuple(r) for r in df.collect()])
             want = _rows_to_multiset([d[0] for d in res.description], res.fetchall())
             assert got == want, f"{phase}: {name} differs from the oracle"
+            rows[name] = got
     finally:
         duck.close()
+    return rows
 
 
 def _drop_bucketed_tables(spark):
@@ -84,6 +89,44 @@ def test_regenerated_dataset_rebuilds_every_artifact(spark, tmp_path):
         _drop_bucketed_tables(spark)
         for name in set(os.listdir(root)) - before:
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+
+
+def test_rewritten_corpus_rebuilds_the_minhash_index(spark, tmp_path):
+    """The LSH runners read the persisted MinHash-LSH index. A
+    documents.parquet rewritten in place rebuilds both index kinds (the
+    signatures and the band keys), the runners return the new corpus's
+    rows, and the old index states are swept."""
+    gates = ("doc_minhash_pairs", "doc_dedup_clusters")
+    ds = tmp_path / "ds"
+    ds.mkdir()
+    doc = str(ds / "documents.parquet")
+
+    def index_dirs():
+        out = {}
+        for kind in ("minhash_sig", "minhash_bands"):
+            prefix = artifacts.path(spark, doc, kind, "").rsplit("_", 1)[0]
+            out[kind] = sorted(glob.glob(glob.escape(prefix) + "_*"))
+        return out
+
+    try:
+        _copy_tables(SF_DIR, ds)
+        old_rows = _assert_gates_match_oracle(spark, str(ds), "first build", gates)
+        old = index_dirs()
+        assert all(len(dirs) == 1 for dirs in old.values()), old
+        # a warm call reads the index: nothing is rebuilt
+        _assert_gates_match_oracle(spark, str(ds), "warm", gates)
+        assert index_dirs() == old
+
+        shutil.copyfile(os.path.join(SF_DIR_MED, "documents.parquet"), doc)
+        new_rows = _assert_gates_match_oracle(spark, str(ds), "rewritten", gates)
+        assert all(new_rows[g] != old_rows[g] for g in gates)
+        new = index_dirs()
+        for kind, dirs in new.items():
+            assert len(dirs) == 1 and dirs != old[kind], (kind, old[kind], dirs)
+    finally:
+        for dirs in index_dirs().values():
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
 
 
 def test_incomplete_artifact_is_rebuilt_and_stale_states_swept(spark, tmp_path):

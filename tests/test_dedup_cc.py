@@ -86,6 +86,35 @@ def test_distributed_branch_raises_without_fixpoint(spark, edge_df):
         connected_components(edge_df, driver_threshold=0, max_rounds=1)
 
 
+@pytest.mark.parametrize("threshold", [None, 0])
+def test_pair_plan_runs_once_and_stats_hold(spark, threshold):
+    """connected_components owns the one barrier over its input: the
+    pair plan runs once in either branch (a Python UDF counts the rows
+    it sees), and ``stats`` reports the edges, branch and rounds."""
+    from pyspark.sql import functions as F
+
+    edges = [(i, i + 1) for i in range(12)] + [(100, 100 + i) for i in range(1, 6)]
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        seen.add(1)
+        return x
+
+    pairs = spark.createDataFrame(edges, "id1 long, id2 long").select(
+        F.udf(tap, "long").asNondeterministic()("id1").alias("id1"), "id2"
+    )
+    kwargs = {} if threshold is None else {"driver_threshold": threshold}
+    stats: dict = {}
+    got = [tuple(r) for r in connected_components(pairs, stats=stats, **kwargs).collect()]
+    assert got == _duck_cc_oracle(edges)
+    assert seen.value == len(edges)
+    assert stats["n_edges"] == len(edges)
+    if threshold is None:
+        assert stats["branch"] == "driver" and stats["rounds"] == 0
+    else:
+        assert stats["branch"] == "distributed" and stats["rounds"] >= 1
+
+
 def test_distributed_branch_on_real_lsh_pairs(spark):
     """The sf0.001 LSH candidate pairs through the distributed branch
     must agree with the driver branch (the gate path)."""

@@ -10,7 +10,7 @@ PartitionFilters (covered in test_ingest_multimodal)."""
 import pytest
 
 from edgelake_spark.queries import SPARK_QUERIES
-from tests.conftest import SF_DIR_MED, spark_jobs
+from tests.conftest import SF_DIR, SF_DIR_MED, spark_jobs
 
 
 def plan_of(spark, name: str) -> str:
@@ -643,6 +643,22 @@ def test_pca_fit_is_local_and_runs_three_jobs(spark):
     # a warm call: the repartitioned scan and the Gram aggregate
     _, jobs = spark_jobs(spark, lambda: run(spark, SF_DIR_MED).collect())
     assert jobs <= 3
+
+
+def test_lsh_runners_query_the_persisted_minhash_index(spark):
+    """Warm LSH calls read the persisted MinHash-LSH index: the plans of
+    the pair sweep and the band claims scan the index, read no
+    checkpointed RDD and compute no md5 (no shingle or band hashing),
+    and warm job counts at sf0.001 stay pinned."""
+    for name in ("doc_minhash_pairs", "doc_lsh_claims"):
+        SPARK_QUERIES[name](spark, SF_DIR).collect()  # builds the index when cold
+        plan = SPARK_QUERIES[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert "minhash_bands_" in plan, name
+        assert "ExistingRDD" not in plan and "md5(" not in plan, name
+    for name, most in (("doc_minhash_pairs", 6), ("doc_dedup_clusters", 4)):
+        SPARK_QUERIES[name](spark, SF_DIR).collect()
+        _, jobs = spark_jobs(spark, lambda: SPARK_QUERIES[name](spark, SF_DIR).collect())
+        assert jobs <= most, (name, jobs)
 
 
 def test_triangles_equi_joins_only(spark):

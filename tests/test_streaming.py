@@ -270,21 +270,40 @@ def test_band_claim_policy_unifies_stream_and_batch(spark, tmp_path):
     drivers verdict-identical on the same corpus — (a) the batch SQL
     twin (band_claims_sql, the doc_lsh_claims gate body), (b) the
     streaming monitor folding arrivals in doc_id order, and (c) a
-    direct Python fold of the policy over each band bucket."""
+    direct Python fold of the policy over each band bucket. The
+    doc_lsh_claims gate, which reads the persisted band index, agrees
+    with the fold over the whole corpus."""
     import json as _json
 
     from edgelake_spark.catalog import register_sf_tables
     from edgelake_spark.functions import dedup as dd
+    from edgelake_spark.queries import SPARK_QUERIES
     from edgelake_spark.streaming.stateful import (
         lsh_dedup_stream,
         minhash_band_keys_py,
     )
 
-    register_sf_tables(spark, "/root/testdata/sf0.001")
-    docs = spark.sql(
-        "SELECT doc_id, text FROM documents WHERE doc_id < 60 ORDER BY doc_id"
-    ).collect()
+    sf_dir = "/root/testdata/sf0.001"
+    register_sf_tables(spark, sf_dir)
+    corpus = spark.sql("SELECT doc_id, text FROM documents ORDER BY doc_id").collect()
+    docs = [r for r in corpus if r["doc_id"] < 60]
     assert docs
+
+    def fold(rows):
+        """(c) direct fold of the shared policy per band bucket."""
+        buckets: dict = {}
+        for r in rows:
+            for b, key in enumerate(minhash_band_keys_py(r["text"])):
+                buckets.setdefault((b, key), []).append(r["doc_id"])
+        dup_fold: dict = {}
+        kept_fold: dict = {}
+        for ids in buckets.values():
+            claimant, verdicts = dd.band_claim_policy(None, sorted(ids))
+            for d, dup in verdicts:
+                dup_fold[d] = dup_fold.get(d, False) or dup
+                if dup:
+                    kept_fold[d] = min(kept_fold.get(d, claimant), claimant)
+        return {d: (dup, kept_fold.get(d)) for d, dup in dup_fold.items()}
 
     # (a) batch SQL twin
     spark.sql(
@@ -293,26 +312,18 @@ def test_band_claim_policy_unifies_stream_and_batch(spark, tmp_path):
     batch = {
         r["doc_id"]: (bool(r["is_dup"]), r["kept_by"])
         for r in spark.sql(
-            dd.band_claims_sql("spark", "__claims_parity_sig")
+            dd.band_claims_sql(dd.band_unions("spark", "__claims_parity_sig"))
         ).collect()
     }
+    assert batch == fold(docs)
 
-    # (c) direct fold of the shared policy per band bucket
-    buckets: dict = {}
-    for r in docs:
-        for b, key in enumerate(minhash_band_keys_py(r["text"])):
-            buckets.setdefault((b, key), []).append(r["doc_id"])
-    dup_fold: dict = {}
-    kept_fold: dict = {}
-    for ids in buckets.values():
-        claimant, verdicts = dd.band_claim_policy(None, sorted(ids))
-        for d, dup in verdicts:
-            dup_fold[d] = dup_fold.get(d, False) or dup
-            if dup:
-                kept_fold[d] = min(kept_fold.get(d, claimant), claimant)
-    assert set(dup_fold) == set(batch)
-    for d in dup_fold:
-        assert batch[d] == (dup_fold[d], kept_fold.get(d)), d
+    # the gate over the persisted index, whole corpus
+    gate = {
+        r["doc_id"]: (bool(r["is_dup"]), r["kept_by"])
+        for r in SPARK_QUERIES["doc_lsh_claims"](spark, sf_dir).collect()
+    }
+    assert len(gate) == len(corpus)
+    assert gate == fold(corpus)
 
     # (b) the stream over the same docs in ONE micro-batch (arrival
     # order = doc_id order inside a batch) produces the same per-doc
