@@ -32,7 +32,7 @@ from edgelake_spark.eventlog import LOG_SIZES, EventLog
 from edgelake_spark.localframe import local_frame
 from edgelake_spark.output import format_result
 from edgelake_spark.script import _strip_quotes
-from edgelake_spark.txlog import TxTable
+from edgelake_spark.txlog import DV_MAX_ROWS, TxTable, deleted_rows
 
 _view_counter = itertools.count()
 _job_counter = itertools.count()
@@ -128,8 +128,9 @@ class EdgeLakeEngine:
     #: `limit = 0` opts back into unlimited (paged via toLocalIterator).
     RETRIEVE_CAP = 1000
 
-    #: every append adds a commit stage, one scan-union branch of the
-    #: snapshot read; past this many stages an append folds the small ones
+    #: every append (and every point UPDATE or MERGE) adds a commit stage,
+    #: one scan-union branch of the snapshot read; past this many stages
+    #: a commit folds the small ones
     FOLD_STAGES = 64
 
     def __init__(
@@ -303,8 +304,9 @@ class EdgeLakeEngine:
         """File-scan destinations from a formatted physical plan: one
         dict per distinct scan with the location root, the table name
         (path basename, or a TxTable's root), and the scan-time pruning
-        predicates. A TxTable read unions one scan per commit stage, so
-        repeats of the same (location, table, filters) are dropped,
+        predicates. A TxTable read of a partitioned table unions one
+        scan per commit stage, so repeats of the same (location, table,
+        filters) are dropped,
         keeping first-seen order. Non-file scans
         (checkpointed intermediates, in-memory relations) are reported
         as a single ``memory`` destination so a query never vanishes
@@ -2078,16 +2080,23 @@ class EdgeLakeEngine:
         self._tx_table(kind, key).read(self.spark).createOrReplaceTempView(view)
         return view
 
+    def _fold(self, tx: TxTable) -> None:
+        """Fold the small stages (``compact_small``) once the head
+        manifest spans more than FOLD_STAGES stages or its deletion
+        vectors hold more than ``txlog.DV_MAX_ROWS`` dead rows. The fold
+        rewrites only small or dead-row-carrying files, never the whole
+        table, so a commit stays O(rows changed) amortized."""
+        m = tx.manifest(tx.latest_version())
+        if (len({f.split("/", 2)[1] for f in m["files"]}) > self.FOLD_STAGES
+                or deleted_rows(m) > DV_MAX_ROWS):
+            tx.compact_small(self.spark)
+
     def _append(self, kind: str, key: str, df: DataFrame, meta: dict | None = None) -> str:
-        """Commit ``df`` as an append, fold the small stages once the
-        manifest spans more than FOLD_STAGES, and publish the view. The
-        fold rewrites only the small files, never the table, so an append
-        stays O(new rows)."""
+        """Commit ``df`` as an append, fold (``_fold``), and publish the
+        view."""
         tx = self._tx_table(kind, key)
         tx.append(df, meta=meta)
-        latest = tx.manifest(tx.latest_version())
-        if len({f.split("/", 2)[1] for f in latest["files"]}) > self.FOLD_STAGES:
-            tx.compact_small(self.spark)
+        self._fold(tx)
         return self._publish(kind, key)
 
     def _drop_tx(self, kind: str, key: str) -> bool:
@@ -2276,18 +2285,33 @@ class EdgeLakeEngine:
         resolved = self._resolve(table)
         managed = self._tx_view("dml", key)
         tx = self._tx_table("dml", key)
-        if (
-            tx.latest_version() == 0
+        head = tx.latest_version()
+        snapshot = (
+            head == 0
             and resolved != managed
             and self.spark.catalog.tableExists(resolved)
-        ):
-            tx.overwrite(self.spark.table(resolved), op="snapshot")
+        )
+        if snapshot:
+            head = tx.overwrite(self.spark.table(resolved), op="snapshot")
         if resolved != managed:
             self.views[table] = managed
             self.views[key] = managed
-        if tx.latest_version():
+        # every commit republishes the view (_commit_dml), so it is
+        # current unless this call took the snapshot or it is missing
+        if head and (snapshot or not self.spark.catalog.tableExists(managed)):
             self._publish("dml", key)
         return key
+
+    def _commit_dml(self, key: str, commit) -> DataFrame:
+        """Run ``commit(tx)`` (a TxTable DML returning the head version)
+        on table ``key``; when it committed, fold and republish the view.
+        Returns the view."""
+        tx = self._tx_table("dml", key)
+        before = tx.latest_version()
+        if commit(tx) != before:
+            self._fold(tx)
+            self._publish("dml", key)
+        return self.spark.table(self._tx_view("dml", key))
 
     def _try_dml(self, statement: str):
         text = statement.strip().rstrip(";")
@@ -2301,14 +2325,16 @@ class EdgeLakeEngine:
 
             table, cols, values = m.group(1), m.group(2), m.group(3)
             key = self._managed_snapshot(table)
-            view = self._tx_view("dml", key)
+            tx = self._tx_table("dml", key)
             col_names = [c.strip() for c in cols.split(",")]
             exprs = ", ".join(
                 f"{v.strip()} AS {c}" for c, v in zip(col_names, split_top_level(values))
             )
             row = self.spark.sql(f"SELECT {exprs}")
-            if self.spark.catalog.tableExists(view):
-                base = self.spark.table(view)
+            if tx.latest_version():
+                # the head snapshot, not the view: another engine on the
+                # same work_dir may have committed since this one published
+                base = tx.read(self.spark)
                 # conform the row to the table schema (missing cols →
                 # NULL, engine-coerced types); when that reproduces the
                 # schema exactly, commit O(1 row) as an append — at a
@@ -2317,9 +2343,7 @@ class EdgeLakeEngine:
                 if conformed.schema == base.schema:
                     return self.spark.table(self._append("dml", key, conformed, {"op": "insert"}))
                 # schema evolution (new columns): copy-on-write
-                self._tx_table("dml", key).overwrite(
-                    base.unionByName(row, allowMissingColumns=True), op="insert"
-                )
+                tx.overwrite(base.unionByName(row, allowMissingColumns=True), op="insert")
                 return self.spark.table(self._publish("dml", key))
             return self.spark.table(self._append("dml", key, row, {"op": "insert"}))
         m = re.match(
@@ -2331,8 +2355,9 @@ class EdgeLakeEngine:
             # superset of the reference DML (BASELINE north star —
             # Delta-style table management): full-row upsert, the CDC
             # MERGE special case. Matched keys are replaced by the
-            # source row, unmatched source rows insert; file-granular
-            # copy-on-write (txlog.merge_upsert).
+            # source row, unmatched source rows insert; a deletion vector
+            # plus one stage of source rows, or above txlog.DV_MAX_ROWS
+            # matches a file-granular rewrite (txlog.merge_upsert).
             table, source_sql, keys = m.group(1), m.group(2), m.group(3)
             key = self._managed_snapshot(table)
             key_cols = [k.strip() for k in keys.split(",") if k.strip()]
@@ -2340,18 +2365,16 @@ class EdgeLakeEngine:
             # rewriting + managed-view indirection), so it sees DML'd
             # state, not the raw storage table
             source = self.query(source_sql)
-            self._tx_table("dml", key).merge_upsert(self.spark, source, key_cols)
-            return self.spark.table(self._publish("dml", key))
+            return self._commit_dml(key, lambda tx: tx.merge_upsert(self.spark, source, key_cols))
         m = re.match(r"delete\s+from\s+(\S+)(?:\s+where\s+(.*))?$", text, re.IGNORECASE | re.DOTALL)
         if m:
             table, cond = m.group(1), m.group(2)
             key = self._managed_snapshot(table)
-            # file-granular copy-on-write (txlog.delete_where): only the
-            # files holding matching rows are rewritten — a DELETE of
-            # one partition's rows from a 100 TB table moves that
-            # partition, not the table
-            self._tx_table("dml", key).delete_where(self.spark, cond)
-            return self.spark.table(self._publish("dml", key))
+            # txlog.delete_where: a point DELETE records the dead rows'
+            # positions (no data file written); a bulk one rewrites only
+            # the files holding matching rows — a DELETE of one
+            # partition's rows from a 100 TB table moves that partition
+            return self._commit_dml(key, lambda tx: tx.delete_where(self.spark, cond))
         m = re.match(
             r"update\s+(\S+)\s+set\s+(.*?)(?:\s+where\s+(.*))?$", text, re.IGNORECASE | re.DOTALL
         )
@@ -2363,13 +2386,15 @@ class EdgeLakeEngine:
             # SQL UPDATE evaluates every RHS against the pre-update row:
             # txlog.update_where builds all assignments first and applies
             # them in ONE select (so `set a = b, b = a` swaps instead of
-            # cascading), rewriting only the files with matching rows
+            # cascading), staging only the updated rows (point UPDATE) or
+            # rewriting only the files with matching rows (bulk)
             assignments = {}
             for assignment in split_top_level(sets):
                 col, _, expr = assignment.partition("=")
                 assignments[col.strip()] = expr.strip()
-            self._tx_table("dml", key).update_where(self.spark, assignments, cond)
-            return self.spark.table(self._publish("dml", key))
+            return self._commit_dml(
+                key, lambda tx: tx.update_where(self.spark, assignments, cond)
+            )
         return None
 
     def _build_union_view(self, cmd: SqlCommand) -> tuple[str, list[str]]:

@@ -26,7 +26,7 @@ import os
 from edgelake_spark import artifacts
 from edgelake_spark.functions.text import duck_tokens, spark_tokens
 from edgelake_spark.checkpoint import materialize as _materialize
-from edgelake_spark.localframe import local_frame
+from edgelake_spark.localframe import collect_head, local_frame
 
 NUM_HASHES = 16
 BANDS = 4
@@ -424,7 +424,8 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
 
     ``pairs`` may be any plan: it is materialized here, once, and both
     branches read that barrier, so the pair plan runs exactly once. One
-    ``limit(driver_threshold + 1)`` collect over the barrier picks the
+    bounded collect of ``driver_threshold + 1`` rows over the barrier
+    (``collect_head``: one Spark job at any partition count) picks the
     branch and is the driver branch's input; only the distributed
     branch counts its edges.
     """
@@ -432,7 +433,7 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
 
     spark = pairs.sparkSession
     pairs = _materialize(pairs)
-    head = pairs.limit(driver_threshold + 1).collect()
+    head = collect_head(pairs, driver_threshold + 1)
     on_driver = len(head) <= driver_threshold
     if stats is not None:
         stats["n_edges"] = len(head) if on_driver else pairs.count()

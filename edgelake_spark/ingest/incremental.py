@@ -14,7 +14,8 @@ is atomic, time-travelable, and records the source version it is
 consistent with in the commit metadata.
 
 Append-only contract: if a source version REMOVED files (DML rewrite,
-compaction folds, drop partition), the delta algebra is invalid and
+compaction folds, drop partition) or deleted rows of files it kept
+(a point DML's deletion vector), the delta algebra is invalid and
 refresh() raises — callers rebuild with full_refresh(), exactly what
 Delta/materialized-view engines do on non-append changes.
 
@@ -25,11 +26,9 @@ policies); this is its incremental form, which the reference lacks.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from edgelake_spark.txlog import TxTable
+from edgelake_spark.txlog import TxTable, changed_files
 
 
 class IncrementalAgg:
@@ -98,27 +97,18 @@ class IncrementalAgg:
         applied = self._applied_version()
         if not cur or cur == applied:
             return {"src_version": applied, "delta_files": 0, "skipped": True}
-        old_files = set(
-            self.src.manifest(applied)["files"] if applied else []
-        )
+        old_manifest = self.src.manifest(applied) if applied else {}
         new_manifest = self.src.manifest(cur)
-        new_files = set(new_manifest["files"])
-        removed = old_files - new_files
-        if removed:
+        changed = changed_files(old_manifest, new_manifest)
+        if changed:
             raise ValueError(
-                f"source removed {len(removed)} files since version "
-                f"{applied} (DML rewrite/compaction/drop) — the append-only "
+                f"source removed {len(changed)} files or rows of them since "
+                f"version {applied} (DML/compaction/drop) — the append-only "
                 f"delta algebra does not apply; run full_refresh()"
             )
-        delta = sorted(new_files - old_files)
+        delta = sorted(set(new_manifest["files"]) - set(old_manifest.get("files", [])))
         if delta:
-            paths = [os.path.join(self.src.path, f) for f in delta]
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(_json.loads(new_manifest["schema"]))
-            part = self._aggregate(spark.read.schema(schema).parquet(*paths))
+            part = self._aggregate(self.src.frame(spark, new_manifest, delta))
             if self.dst.latest_version():
                 state = self.dst.read(spark)
                 part = self._merge_states(state.unionByName(part))

@@ -1,4 +1,4 @@
-"""Driver-side rows → a DataFrame whose data lives in the JVM.
+"""Driver-side rows ↔ DataFrames, without Python RDDs or extra jobs.
 
 ``spark.createDataFrame(<python list>)`` parallelizes pickled rows: the
 result is a ``LogicalRDD`` and every later scan of it starts Python
@@ -23,6 +23,8 @@ Value rules follow the Arrow type of each field
   time zone is UTC, see ``session.py``);
 - a null in a field declared NOT NULL is an error, as on Spark's own
   list path.
+
+The way back, a bounded head of a DataFrame, is ``collect_head``.
 """
 
 from __future__ import annotations
@@ -49,3 +51,21 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
         if not f.nullable and arr.null_count:
             raise ValueError(f"field {f.name} is not nullable, but got None")
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema=struct)
+
+
+#: the low 33 bits of ``monotonically_increasing_id`` count rows within a partition
+_ROW_IN_PARTITION = (1 << 33) - 1
+
+
+def collect_head(df: DataFrame, n: int) -> list:
+    """The first ``n`` rows of ``df`` (partition order) in ONE Spark job
+    at any partition count. ``df.limit(n).collect()`` scans partitions in
+    rounds (1, then 4× the partitions scanned so far), one job per round,
+    so a short result over P partitions costs 1 + ⌈log4 P⌉ jobs. Here
+    every partition keeps at most its first ``n`` rows and one collect
+    reads them all; like a single round over all partitions, up to
+    P·n rows reach the driver, which keeps the first ``n``."""
+    from pyspark.sql import functions as F
+
+    within = F.monotonically_increasing_id().bitwiseAND(_ROW_IN_PARTITION)
+    return df.filter(within < n).collect()[:n]

@@ -402,12 +402,13 @@ _q(
 
 
 def _run_minhash_bands(spark, sf_dir):
+    """The band keys of docs 0-39, read from the persisted MinHash-LSH
+    index (dd.minhash_index_views) rather than hashed again."""
     register_sf_tables(spark, sf_dir)
-    sig = spark.sql(dd.spark_minhash_sig_sql("documents", "doc_id < 40"))
-    sig.createOrReplaceTempView("__mh_sig_b")
+    _sig, bands = dd.minhash_index_views(spark, sf_dir)
     return spark.sql(
         f"SELECT doc_id, CAST(band_id AS BIGINT) AS band_id, band_key "
-        f"FROM ({dd.band_unions('spark', '__mh_sig_b')}) ORDER BY doc_id, band_id"
+        f"FROM {bands} WHERE doc_id < 40 ORDER BY doc_id, band_id"
     )
 
 

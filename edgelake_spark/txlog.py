@@ -23,14 +23,25 @@ provides the durability semantics over plain parquet:
   manifest without the matching files — nothing is rewritten, and the
   prior version still reads the dropped data (this is what backs
   ``drop partition`` with time travel).
+- **Deletion vectors** (merge-on-read point DML, the Delta 2.3+
+  design): a manifest may carry ``"deleted": {<file>: [row positions]}``
+  — the parquet row indexes of that file's dead rows. A DELETE, UPDATE
+  or MERGE matching at most ``DV_MAX_ROWS`` rows records their
+  positions instead of rewriting their files (UPDATE/MERGE also stage
+  the replacement rows as one append stage); above the cap it rewrites
+  the touched files (copy-on-write). Every path that turns manifest
+  entries into rows (``frame``) drops the dead rows, and every
+  manifest keeps its DV keys a subset of its ``files``, so a restage
+  (compact, fold, rewrite, ``remove_files``) drops the vectors of the
+  files it replaces.
 
 Reference counterpart: EdgeLake tracks ingested-file provenance in TSD
 tables (edge_lake/dbms/tsd_info.py) and updates SQLite/Postgres in
 place; snapshot isolation over immutable parquet is the Spark-native
 re-expression (single atomic rename/link, no table server).
 
-At scale the manifest is KBs per version (file paths only); data files
-never move. The complete-file-list choice bounds reader work at one
+At scale the manifest is KBs per version (file paths, plus at most a
+few DV_MAX_ROWS of row positions); data files never move. The complete-file-list choice bounds reader work at one
 JSON read regardless of history length, at the cost of O(files) bytes
 per manifest — the right trade below ~100k files/table, and the
 vacuum/expire pair keeps history bounded.
@@ -43,14 +54,36 @@ import os
 import shutil
 import uuid
 from datetime import datetime, timezone
+from functools import reduce
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 from edgelake_spark.checkpoint import materialize as _materialize
-from edgelake_spark.localframe import local_frame
+from edgelake_spark.localframe import collect_head, local_frame
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
+
+#: deletion-vector cap: a DML statement matching at most this many rows
+#: records their positions in the manifest; one matching more rewrites
+#: the files holding them. The engine also folds a table whose manifest
+#: carries more dead rows than this, so vectors stay bounded
+DV_MAX_ROWS = 1024
+
+
+def deleted_rows(manifest: dict) -> int:
+    """Row positions the manifest's deletion vectors hold."""
+    return sum(len(rows) for rows in manifest.get("deleted", {}).values())
+
+
+def changed_files(old: dict, new: dict) -> set[str]:
+    """Files of manifest ``old`` that manifest ``new`` dropped or
+    deleted more rows of: empty when ``new`` only appended."""
+    old_dv, new_dv = old.get("deleted", {}), new.get("deleted", {})
+    live = set(new["files"])
+    return {f for f in old.get("files", []) if f not in live or old_dv.get(f) != new_dv.get(f)}
 
 
 class TxConflict(RuntimeError):
@@ -59,7 +92,16 @@ class TxConflict(RuntimeError):
 
 
 class TxTable:
-    """One versioned parquet table rooted at ``path``."""
+    """One versioned parquet table rooted at ``path``.
+
+    A manifest (``_txlog/v<N>.json``) holds ``files`` (relative paths),
+    ``schema``, ``partition_by``, ``op``, ``meta`` and ``deleted``: the
+    deletion vectors, ``{<file>: [sorted parquet row indexes]}``, whose
+    keys are always a subset of ``files``. Point DML (at most
+    ``DV_MAX_ROWS`` matching rows) adds positions there and rewrites no
+    file (UPDATE and MERGE append one stage of replacement rows); bulk
+    DML, ``compact`` and ``compact_small`` rewrite files, and the
+    rewritten files' vectors go with them."""
 
     #: optimistic-concurrency retries before giving up
     MAX_RETRIES = 20
@@ -68,6 +110,7 @@ class TxTable:
         self.path = os.path.abspath(path)
         self.log_dir = os.path.join(self.path, _LOG_DIR)
         self.data_dir = os.path.join(self.path, _DATA_DIR)
+        self._uri_paths: dict[str, str] = {}  # rel file -> escaped URI path
         os.makedirs(self.log_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
 
@@ -133,9 +176,12 @@ class TxTable:
 
     def _publish(self, build, op: str, schema_json: str | None, meta: dict | None,
                  expected_base: int | None = None,
-                 partition_by=_INHERIT) -> int:
+                 partition_by=_INHERIT, deleted: dict | None = None) -> int:
         """Optimistic-concurrency commit loop. ``build(prev_manifest)``
         returns the complete relative file list for the new version.
+        The previous version's deletion vectors carry over for the files
+        the new list keeps; ``deleted`` ({file: [row positions]}) adds
+        positions to them.
 
         ``expected_base`` pins the version the staged data was computed
         FROM: ops whose staged files are only valid against one snapshot
@@ -163,14 +209,20 @@ class TxTable:
                 if partition_by is self._INHERIT
                 else partition_by
             )
+            files = build(prev)
+            live = set(files)
+            dv = {f: rows for f, rows in (prev or {}).get("deleted", {}).items() if f in live}
+            for f, rows in (deleted or {}).items():
+                dv[f] = sorted(set(dv.get(f, ())).union(rows))
             manifest = {
                 "version": base + 1,
                 "op": op,
                 "timestamp": datetime.now(timezone.utc).isoformat(),
-                "files": build(prev),
+                "files": files,
                 "schema": schema_json or (prev or {}).get("schema"),
                 "partition_by": pb,
                 "meta": meta or {},
+                "deleted": dict(sorted(dv.items())),
             }
             tmp = os.path.join(self.log_dir, f"_tmp.{uuid.uuid4().hex}.json")
             with open(tmp, "w") as fh:
@@ -267,30 +319,76 @@ class TxTable:
 
     def read(self, spark: SparkSession, version: int | None = None,
              timestamp: str | None = None) -> DataFrame:
-        """Snapshot read. The stored schema is passed to the reader
-        explicitly, so partition-directory columns keep their committed
-        types and an empty version still has its schema.
+        """Snapshot read: the rows of one version, deletion vectors
+        applied (see ``frame``)."""
+        return self.frame(spark, self.manifest(self._resolve_version(version, timestamp)))
 
-        Files are read per commit-stage directory (each stage is its own
-        basePath — partition dirs live INSIDE stages, so one global
-        basePath would see conflicting structures), then unioned by
-        name. Long append chains therefore deepen the scan union —
-        compact() folds them back to one stage."""
-        m = self.manifest(self._resolve_version(version, timestamp))
+    def _uri_path(self, spark: SparkSession, rel: str) -> str:
+        """The absolute path of file ``rel`` as ``_metadata.file_path``
+        spells it (URI-escaped, by Hadoop's ``Path``)."""
+        p = self._uri_paths.get(rel)
+        if p is None:
+            jpath = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(self.path, rel))
+            p = self._uri_paths[rel] = jpath.toUri().getRawPath()
+        return p
+
+    def _at(self, spark: SparkSession, positions: dict, file_col: Column,
+            row_col: Column) -> Column:
+        """TRUE for the rows at ``positions`` ({file: [row indexes]})."""
+        return reduce(lambda a, b: a | b, [
+            file_col.endswith(self._uri_path(spark, f)) & row_col.isin(rows)
+            for f, rows in sorted(positions.items())
+        ])
+
+    def frame(self, spark: SparkSession, m: dict, files: list[str] | None = None,
+              positions: bool = False) -> DataFrame:
+        """The live rows of manifest ``m`` (or of its ``files`` subset):
+        the one place manifest entries become a DataFrame. The stored
+        schema is passed to the reader explicitly, so partition-directory
+        columns keep their committed types and an empty version still
+        has its schema.
+
+        Files stored directly in their stage directory are read as ONE
+        scan. A stage with partition directories is a scan of its own
+        with the stage as basePath (partition dirs live INSIDE stages,
+        so one global basePath would see conflicting structures); the
+        scans are unioned by name, so long partitioned append chains
+        deepen the scan union — compact() folds them back to one stage.
+        A scan holding files with deletion vectors filters on
+        ``_metadata.file_path``/``_metadata.row_index``; ``positions``
+        adds both as ``__file``/``__row`` columns (the discovery scan of
+        the DML paths)."""
         schema = StructType.fromJson(json.loads(m["schema"]))
-        if not m["files"]:
+        files = m["files"] if files is None else files
+        if not files:
+            if positions:
+                schema = StructType(schema.fields + [
+                    StructField("__file", StringType()), StructField("__row", LongType()),
+                ])
             return local_frame(spark, [], schema)
+        deleted = m.get("deleted", {})
         groups: dict[str, list[str]] = {}
-        for f in m["files"]:
-            stage = f.split("/", 2)[1]  # data/<stage>/...
-            groups.setdefault(stage, []).append(os.path.join(self.path, f))
+        for f in files:
+            # data/<stage>/<file>: the flat group "";
+            # data/<stage>/<col>=<v>/.../<file>: the stage's own group
+            groups.setdefault(f.split("/", 2)[1] if f.count("/") > 2 else "", []).append(f)
         out = None
         for stage in sorted(groups):
-            part = (
-                spark.read.schema(schema)
-                .option("basePath", os.path.join(self.data_dir, stage))
-                .parquet(*groups[stage])
-            )
+            reader = spark.read.schema(schema)
+            if stage:
+                reader = reader.option("basePath", os.path.join(self.data_dir, stage))
+            part = reader.parquet(*[os.path.join(self.path, f) for f in groups[stage]])
+            dead = {f: deleted[f] for f in groups[stage] if f in deleted}
+            if dead:
+                part = part.filter(~self._at(
+                    spark, dead, F.col("_metadata.file_path"), F.col("_metadata.row_index")
+                ))
+            if positions:
+                part = part.select(
+                    "*",
+                    F.col("_metadata.file_path").alias("__file"),
+                    F.col("_metadata.row_index").alias("__row"),
+                )
             out = part if out is None else out.unionByName(part)
         return out
 
@@ -325,97 +423,99 @@ class TxTable:
     def compact_small(self, spark: SparkSession, small_bytes: int = 32 << 20) -> int:
         """Bin-pack ONLY the small commit stages (< ``small_bytes`` of
         data each) into one stage, leaving large stages untouched — the
-        Delta OPTIMIZE shape. This is what the engine's append paths
-        call for plan-depth insurance: cost is proportional to the
+        Delta OPTIMIZE shape. This is what the engine's append and DML
+        paths call for plan-depth insurance: cost is proportional to the
         small-file data folded, never the table, so an INSERT chain
-        stays O(rows inserted) amortized."""
+        stays O(rows inserted) amortized. Once the manifest's deletion
+        vectors hold more than ``DV_MAX_ROWS`` positions, every stage
+        with dead rows is folded too, whatever its size, and the fold
+        drops those vectors."""
 
         def attempt():
             base = self.latest_version()
             if not base:
                 return base
             m = self.manifest(base)
+            deleted = m.get("deleted", {})
+            purge = deleted_rows(m) > DV_MAX_ROWS
             stages: dict[str, list[str]] = {}
             for f in m["files"]:
                 stages.setdefault(f.split("/", 2)[1], []).append(f)
-            small = [
+            fold = [
                 s
                 for s, fs in stages.items()
-                if sum(os.path.getsize(os.path.join(self.path, f)) for f in fs)
-                < small_bytes
+                if (purge and any(f in deleted for f in fs))
+                or sum(os.path.getsize(os.path.join(self.path, f)) for f in fs) < small_bytes
             ]
-            if len(small) <= 1:
+            folded = {f for s in fold for f in stages[s]}
+            if len(fold) <= 1 and not folded & deleted.keys():
                 return base  # nothing worth folding
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            parts = None
-            for s in small:
-                p = (
-                    spark.read.schema(schema)
-                    .option("basePath", os.path.join(self.data_dir, s))
-                    .parquet(*[os.path.join(self.path, f) for f in stages[s]])
-                )
-                parts = p if parts is None else parts.unionByName(p)
-            pb = m.get("partition_by")
-            new_files, schema_json = self._stage(parts.coalesce(1), pb)
-            folded = {f for s in small for f in stages[s]}
+            new_files, schema_json = self._stage(
+                self.frame(spark, m, sorted(folded)).coalesce(1), m.get("partition_by")
+            )
 
             def build(prev):
                 kept = [f for f in (prev or {}).get("files", []) if f not in folded]
                 return sorted(kept + new_files)
 
             return self._publish(
-                build, "compact", schema_json, {"folded_stages": len(small)},
+                build, "compact", schema_json, {"folded_stages": len(fold)},
                 expected_base=base,
             )
 
         return self._retry_conflicts(attempt)
 
-    # ------------------------------------------- file-granular DML
+    # ------------------------------------------------------------- DML
 
     def _rel_of_uri(self, uri: str) -> str:
-        return uri.split(self.path + "/", 1)[-1]
+        return unquote(uri).split(self.path + "/", 1)[-1]
 
-    def _touched_files(self, spark: SparkSession, condition: str, base: int) -> list[str]:
-        """Relative paths of version-``base`` files containing ≥1 row
-        where ``condition`` is TRUE. The discovery scan carries the
-        predicate, so Catalyst prunes via parquet row-group stats —
-        files that provably cannot match are skipped without reading
-        rows."""
-        from pyspark.sql import functions as F
-
-        uris = (
-            self.read(spark, version=base)
-            .filter(f"coalesce(({condition}), false)")
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
+    def _match_positions(self, spark: SparkSession, m: dict, matched) -> dict | None:
+        """{file: [row positions]} of the manifest-``m`` rows that
+        ``matched(df)`` keeps, from ONE bounded scan (``collect_head``:
+        one Spark job); None when more than ``DV_MAX_ROWS`` match."""
+        hits = collect_head(
+            matched(self.frame(spark, m, positions=True)).select("__file", "__row"),
+            DV_MAX_ROWS + 1,
         )
-        return [self._rel_of_uri(r.f) for r in uris]
+        if len(hits) > DV_MAX_ROWS:
+            return None
+        out: dict[str, list[int]] = {}
+        for uri, row in hits:
+            out.setdefault(self._rel_of_uri(uri), []).append(row)
+        unknown = out.keys() - set(m["files"])
+        if unknown:
+            raise RuntimeError(f"DML matched rows in files outside v{m['version']}: {sorted(unknown)}")
+        return out
+
+    def _touched_files(self, spark: SparkSession, matched, base: int) -> list[str]:
+        """Relative paths of version-``base`` files holding ≥1 row that
+        ``matched(df)`` keeps. A filter in ``matched`` reaches the scan,
+        so Catalyst prunes via parquet row-group stats — files that
+        provably cannot match are skipped without reading rows."""
+        uris = (
+            matched(self.frame(spark, self.manifest(base), positions=True))
+            .select("__file").distinct().collect()
+        )
+        return [self._rel_of_uri(r[0]) for r in uris]
 
     def _rewrite_files(self, spark: SparkSession, touched: list[str],
                        transform, op: str, base: int) -> int:
-        """Copy-on-write at FILE granularity (the Delta-style contract):
-        rewrite only the files holding matching rows; every other file
-        is carried into the new manifest untouched. A DELETE of one
-        day's rows from a year-sized table moves one day of data, not
-        the table. ``transform(df_of_touched_rows) -> replacement df``.
-        Version-pinned against ``base``: the publish raises TxConflict
-        if another writer committed first (the caller's retry loop
-        re-reads and re-stages). (File membership tests use a
-        broadcastable set; at very large file counts swap the isin for
-        a broadcast join on file name.)"""
-        from pyspark.sql import functions as F
-
+        """Copy-on-write at FILE granularity (the Delta-style contract,
+        taken by DML above ``DV_MAX_ROWS`` matching rows): rewrite only
+        the files holding matching rows; every other file is carried
+        into the new manifest untouched. A DELETE of one day's rows from
+        a year-sized table moves one day of data, not the table.
+        ``transform(df_of_touched_rows) -> replacement df``; the touched
+        files are read with their deletion vectors applied, and the
+        vectors go with them. Version-pinned against ``base``: the
+        publish raises TxConflict if another writer committed first (the
+        caller's retry loop re-reads and re-stages)."""
+        m = self.manifest(base)
         touched_set = set(touched)
-        df = self.read(spark, version=base)
-        # relative path = whatever follows "<table root>/" in the file
-        # URI — scheme-agnostic (file://, hdfs://, s3://) and JVM-side
-        rel = F.expr(f"substring_index(input_file_name(), '{self.path}/', -1)")
-        replaced = transform(
-            df.withColumn("__rel", rel).filter(F.col("__rel").isin(touched)).drop("__rel")
+        new_files, schema = self._stage(
+            transform(self.frame(spark, m, touched)), m.get("partition_by")
         )
-        pb = self.manifest(base).get("partition_by")
-        new_files, schema = self._stage(replaced, pb)
 
         def build(prev):
             kept = [f for f in (prev or {}).get("files", []) if f not in touched_set]
@@ -425,23 +525,51 @@ class TxTable:
             build, op, schema, {"rewrote": len(touched)}, expected_base=base
         )
 
+    def _dml(self, spark: SparkSession, op: str, base: int, matched, transform,
+             replacement=None) -> int | None:
+        """Commit DML ``op`` against version ``base``; the rows that
+        ``matched(df)`` keeps are the ones it deletes or replaces. Up to
+        ``DV_MAX_ROWS`` of them: merge-on-read — record their positions
+        as deleted and, for UPDATE/MERGE, append
+        ``replacement(manifest, positions)`` as one new stage; no data
+        file is rewritten. More: ``_rewrite_files`` with ``transform``.
+        Both commits are version-pinned to ``base``. None when nothing
+        matched (no commit)."""
+        m = self.manifest(base)
+        positions = self._match_positions(spark, m, matched)
+        if positions is None:
+            return self._rewrite_files(
+                spark, self._touched_files(spark, matched, base), transform, op, base
+            )
+        if not positions:
+            return None
+        new_files: list[str] = []
+        if replacement is not None:
+            new_files, _schema = self._stage(replacement(m, positions), m.get("partition_by"))
+        return self._publish(
+            lambda prev: sorted(prev["files"] + new_files), op, None,
+            {"deleted_rows": sum(map(len, positions.values()))},
+            expected_base=base, deleted=positions,
+        )
+
     def delete_where(self, spark: SparkSession, condition: str | None) -> int:
         """SQL DELETE semantics (only rows where the predicate is TRUE
-        die); commit is proportional to touched files."""
+        die). Up to ``DV_MAX_ROWS`` matching rows: one scan finds their
+        positions and the commit records them as a deletion vector (one
+        Spark job, no data file written). More: the touched files are
+        rewritten without them."""
         if condition is None:
             v, _removed = self.remove_files(lambda f: True, op="delete")
             return v
+        matched = lambda df: df.filter(f"coalesce(({condition}), false)")  # noqa: E731
 
         def attempt():
-            base = self.latest_version()
-            touched = self._touched_files(spark, condition, base)
-            if not touched:
-                return base  # no-op: nothing matched
-            return self._rewrite_files(
-                spark, touched,
+            base = self._resolve_version(None, None)  # raises on an empty table
+            v = self._dml(
+                spark, "delete", base, matched,
                 lambda rows: rows.filter(f"NOT coalesce(({condition}), false)"),
-                "delete", base,
             )
+            return base if v is None else v  # no match: no commit
 
         return self._retry_conflicts(attempt)
 
@@ -449,59 +577,59 @@ class TxTable:
                      key_cols: list[str]) -> int:
         """Full-row upsert (the CDC special case of Delta MERGE): rows
         whose key matches a source row are replaced by it; unmatched
-        source rows are inserted. File-granular: only files containing
-        matched keys are rewritten — the discovery scan is a semi join
-        against the (broadcast) source keys — and the commit stages
-        (touched rows minus matched keys) + all source rows. An upsert
-        of one device's day into a 100 TB table moves that device's
-        files plus the new rows, nothing else."""
-        from pyspark.sql import functions as F
-
-        # localCheckpoint: the key set must not remain a FILE source —
-        # input_file_name() (the discovery scan) rejects plans with a
-        # second file source, and the keys are broadcast-sized anyway
+        source rows are inserted. The discovery scan is a semi join
+        against the (broadcast) source keys. Up to ``DV_MAX_ROWS``
+        matched rows: their positions become a deletion vector and the
+        source rows one append stage. More: only the files holding
+        matched keys are rewritten, as (touched rows minus matched keys)
+        + all source rows. Either way an upsert of one device's day
+        into a 100 TB table moves that device's rows (or files) plus the
+        new rows, nothing else."""
+        # localCheckpoint: the key set is broadcast into the discovery
+        # scan and the rewrite, and is broadcast-sized anyway
         keys = source.select(*key_cols).distinct().transform(_materialize)
+        matched = lambda df: df.join(F.broadcast(keys), key_cols, "semi")  # noqa: E731
 
         def replace(rows):
             survivors = rows.join(F.broadcast(keys), key_cols, "anti")
             return survivors.unionByName(source)
 
+        def conformed(m, _positions):
+            schema = StructType.fromJson(json.loads(m["schema"]))
+            extra = set(source.columns) - set(schema.names)
+            if extra:
+                raise ValueError(f"MERGE source columns {sorted(extra)} are not in the table")
+            return source.select(*[F.col(f.name).cast(f.dataType) for f in schema])
+
         def attempt():
             base = self.latest_version()
             if not base:
                 return self.append(source)
-            touched = [
-                self._rel_of_uri(r.f)
-                for r in (
-                    self.read(spark, version=base)
-                    .join(F.broadcast(keys), key_cols, "semi")
-                    .select(F.input_file_name().alias("f"))
-                    .distinct()
-                    .collect()
-                )
-            ]
-            if not touched:
-                # pure insert: nothing matched, append the source rows
-                return self.append(source)
-            return self._rewrite_files(spark, touched, replace, "merge", base)
+            v = self._dml(spark, "merge", base, matched, replace, conformed)
+            # no match: a pure insert, append the source rows
+            return self.append(source) if v is None else v
 
         return self._retry_conflicts(attempt)
 
     def update_where(self, spark: SparkSession, assignments: dict[str, str],
                      condition: str | None) -> int:
         """SQL UPDATE: every RHS reads the pre-update row (build all
-        assignment expressions before applying); rewrite touched files
-        only."""
-        from pyspark.sql import functions as F
+        assignment expressions before applying) and is stored as its
+        column's type. Up to ``DV_MAX_ROWS`` matching rows: their
+        positions become a deletion vector and their updated copies one
+        append stage (two Spark jobs: the discovery scan and the stage
+        write, which reads only the touched files). More: the touched
+        files are rewritten."""
 
-        def apply_set(rows):
+        def apply_set(rows, guarded=True):
             projected = []
-            for name in rows.columns:
+            for field in rows.schema:
+                name = field.name
                 if name in assignments:
                     e = F.expr(assignments[name])
-                    if condition:
+                    if condition and guarded:
                         e = F.when(F.expr(condition), e).otherwise(F.col(name))
-                    projected.append(e.alias(name))
+                    projected.append(e.cast(field.dataType).alias(name))
                 else:
                     projected.append(F.col(name))
             return rows.select(*projected)
@@ -511,13 +639,18 @@ class TxTable:
                 apply_set(self.read(spark)), op="update",
                 partition_by=self.partition_by(),
             )
+        matched = lambda df: df.filter(f"coalesce(({condition}), false)")  # noqa: E731
+
+        def updated(m, positions):
+            # only the touched files are read, and of them only the hits
+            hit = self.frame(spark, m, sorted(positions), positions=True)
+            hit = hit.filter(self._at(spark, positions, F.col("__file"), F.col("__row")))
+            return apply_set(hit.drop("__file", "__row"), guarded=False)
 
         def attempt():
-            base = self.latest_version()
-            touched = self._touched_files(spark, condition, base)
-            if not touched:
-                return base
-            return self._rewrite_files(spark, touched, apply_set, "update", base)
+            base = self._resolve_version(None, None)  # raises on an empty table
+            v = self._dml(spark, "update", base, matched, apply_set, updated)
+            return base if v is None else v
 
         return self._retry_conflicts(attempt)
 

@@ -115,6 +115,19 @@ def test_pair_plan_runs_once_and_stats_hold(spark, threshold):
         assert stats["branch"] == "distributed" and stats["rounds"] >= 1
 
 
+def test_branch_choice_is_one_job_on_four_partitions(spark, edge_df):
+    """The driver/distributed choice over a 4-partition input costs the
+    barrier plus ONE bounded collect (``collect_head``), not a limit
+    collect's rounds."""
+    from tests.conftest import spark_jobs
+
+    pairs = edge_df.repartition(4).localCheckpoint()
+    assert pairs.rdd.getNumPartitions() == 4
+    stats: dict = {}
+    _, jobs = spark_jobs(spark, lambda: connected_components(pairs, stats=stats))
+    assert stats["branch"] == "driver" and jobs == 2
+
+
 def test_distributed_branch_on_real_lsh_pairs(spark):
     """The sf0.001 LSH candidate pairs through the distributed branch
     must agree with the driver branch (the gate path)."""

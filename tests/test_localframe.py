@@ -158,3 +158,18 @@ def test_no_list_based_create_dataframe_outside_the_helper():
     assert ("localframe.py", "local_frame") in calls
     stray = calls - {("localframe.py", "local_frame")}
     assert not stray, f"build driver-side rows with localframe.local_frame: {sorted(stray)}"
+
+
+def test_collect_head_one_job_on_four_partitions(spark):
+    """collect_head reads a bounded head in ONE Spark job at any
+    partition count; ``limit(n).collect()`` scans partitions in rounds."""
+    from edgelake_spark.localframe import collect_head
+    from tests.conftest import spark_jobs
+
+    df = spark.range(0, 1000, 1, 4).filter("id % 100 = 7")  # 10 rows, all 4 partitions
+    rows, jobs = spark_jobs(spark, lambda: collect_head(df, 11))
+    assert jobs == 1 and [r.id for r in rows] == list(range(7, 1000, 100))
+    rows, jobs = spark_jobs(spark, lambda: collect_head(df, 3))
+    assert jobs == 1 and [r.id for r in rows] == [7, 107, 207]
+    _, jobs = spark_jobs(spark, lambda: df.limit(11).collect())
+    assert jobs > 1

@@ -355,33 +355,38 @@ def test_random_op_sequences_match_model(spark, tmp_path):
 
 
 def test_delete_rewrites_only_touched_files(spark, tmp_path):
-    """File-granular copy-on-write: a DELETE matching rows in one file
-    leaves every other file byte-identical in the manifest — the
-    100 TB contract (a one-partition delete moves one partition)."""
+    """Point DML is merge-on-read: a DELETE matching rows in one file
+    removes no data file — every file carries over in the manifest, and
+    the dead rows' positions become that file's deletion vector (the
+    100 TB contract: a point delete costs its rows, not its file)."""
     t = TxTable(str(tmp_path / "t"))
     # three separate commits, one file each (coalesce pins the layout)
     t.overwrite(_df(spark, [(1, "a"), (2, "a")]).coalesce(1))
     t.append(_df(spark, [(10, "b"), (11, "b")]).coalesce(1))
     t.append(_df(spark, [(20, "c"), (21, "c")]).coalesce(1))
     before = t.manifest(t.latest_version())["files"]
+    (file_b,) = set(t.manifest(2)["files"]) - set(t.manifest(1)["files"])
+    (file_c,) = set(before) - set(t.manifest(2)["files"])
 
     v = t.delete_where(spark, "k = 10")
     m = t.manifest(v)
-    assert m["op"] == "delete" and m["meta"]["rewrote"] == 1
-    untouched_survivors = set(before) & set(m["files"])
-    # exactly one original file replaced; the other two carried over
-    assert len(set(before) - set(m["files"])) == 1
-    assert len(untouched_survivors) == len(before) - 1
+    assert m["op"] == "delete" and m["meta"]["deleted_rows"] == 1
+    assert m["files"] == before  # no file removed, none written
+    assert m["deleted"] == {file_b: [0]}
     assert sorted(r.k for r in t.read(spark).collect()) == [1, 2, 11, 20, 21]
 
     # no-match delete is a no-op: no new version
     assert t.delete_where(spark, "k = 999") == v
     assert t.latest_version() == v
 
-    # update same contract; NULL-condition rows untouched (3VL)
+    # update same contract: the old copies die by position, the new
+    # ones land as one appended stage; NULL-condition rows untouched (3VL)
     v2 = t.update_where(spark, {"v": "'upd'"}, "k >= 20")
     m2 = t.manifest(v2)
-    assert m2["meta"]["rewrote"] == 1
+    assert m2["meta"]["deleted_rows"] == 2
+    assert set(before) < set(m2["files"])
+    assert len({f.split("/", 2)[1] for f in set(m2["files"]) - set(before)}) == 1
+    assert m2["deleted"] == {file_b: [0], file_c: [0, 1]}
     vals = {r.k: r.v for r in t.read(spark).collect()}
     assert vals == {1: "a", 2: "a", 11: "b", 20: "upd", 21: "upd"}
     # time travel still sees the pre-DML rows
@@ -389,16 +394,19 @@ def test_delete_rewrites_only_touched_files(spark, tmp_path):
 
 
 def test_merge_upsert_file_granular(spark, tmp_path):
+    """A point MERGE removes no data file: matched rows die by position
+    and the source rows land as one appended stage."""
     t = TxTable(str(tmp_path / "t"))
     t.overwrite(_df(spark, [(1, "a"), (2, "a")]).coalesce(1))
     t.append(_df(spark, [(10, "b")]).coalesce(1))
     before = set(t.manifest(t.latest_version())["files"])
 
-    # matched key 10 → that file rewrites; key 99 → inserted
+    # matched key 10 → its row is deleted by position; key 99 → inserted
     v = t.merge_upsert(spark, _df(spark, [(10, "NEW"), (99, "ins")]), ["k"])
     m = t.manifest(v)
-    assert m["op"] == "merge" and m["meta"]["rewrote"] == 1
-    assert len(before - set(m["files"])) == 1  # only the k=10 file replaced
+    assert m["op"] == "merge" and m["meta"]["deleted_rows"] == 1
+    assert before < set(m["files"])  # untouched files carried, one stage added
+    assert list(m["deleted"]) == sorted(before - set(t.manifest(1)["files"]))
     vals = {r.k: r.v for r in t.read(spark).collect()}
     assert vals == {1: "a", 2: "a", 10: "NEW", 99: "ins"}
 
@@ -408,6 +416,9 @@ def test_merge_upsert_file_granular(spark, tmp_path):
     assert set(m["files"]) <= set(t.manifest(v2)["files"])
     # time travel across both merges
     assert sorted(r.k for r in t.read(spark, version=2).collect()) == [1, 2, 10]
+    # a source column the table lacks is an error, not silently dropped
+    with pytest.raises(ValueError, match="not in the table"):
+        t.merge_upsert(spark, spark.createDataFrame([(1, "z", 5)], "k int, v string, x int"), ["k"])
 
 
 def test_compact_does_not_drop_concurrent_append(spark, tmp_path):
@@ -552,3 +563,212 @@ def test_append_partition_sentinel(spark, tmp_path):
     later = [f for f in m2["files"] if f not in m["files"]]
     assert later and all("_par_bucket=" in f for f in later)
     assert sorted(r.k for r in t.read(spark).collect()) == [1, 3, 4]
+
+
+# ------------------------------------------------------ deletion vectors
+
+
+def _dv_subset_of_files(t):
+    return all(set(m.get("deleted", {})) <= set(m["files"]) for m in t.history())
+
+
+def _data_files(t):
+    return {
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(t.data_dir)
+        for n in names if n.endswith(".parquet")
+    }
+
+
+def test_point_dml_job_counts(spark, tmp_path):
+    """A point DELETE is one Spark job (the bounded discovery scan) and
+    writes no data file; a point UPDATE is two (discovery + the write of
+    its one replacement stage)."""
+    from tests.conftest import spark_jobs
+
+    t = TxTable(str(tmp_path / "t"))
+    t.overwrite(spark.range(1000).selectExpr("cast(id as int) as k", "'v' as v").repartition(4))
+    files = _data_files(t)
+    _, jobs = spark_jobs(spark, lambda: t.delete_where(spark, "k = 7"))
+    assert jobs == 1 and _data_files(t) == files
+    _, jobs = spark_jobs(spark, lambda: t.update_where(spark, {"v": "'u'"}, "k = 8"))
+    assert jobs == 2
+    rows = {r.k: r.v for r in t.read(spark).collect()}
+    assert len(rows) == 999 and 7 not in rows and rows[8] == "u" and rows[9] == "v"
+
+
+def test_dv_survives_compact_small_and_compact(spark, tmp_path):
+    """Folding stages that carry deletion vectors does not bring the
+    dead rows back; the fold drops the vectors of the files it rewrote."""
+    t = TxTable(str(tmp_path / "t"))
+    t.overwrite(_df(spark, [(k, "a") for k in range(10)]).coalesce(1))
+    for k in (10, 11, 12):
+        t.append(_df(spark, [(k, "b")]).coalesce(1))
+    t.delete_where(spark, "k in (3, 11)")
+    t.update_where(spark, {"v": "'u'"}, "k = 4")
+    want = {k: ("u" if k == 4 else "a" if k < 10 else "b")
+            for k in range(13) if k not in (3, 11)}
+    assert len(t.manifest(t.latest_version())["deleted"]) == 2
+
+    v = t.compact_small(spark)
+    m = t.manifest(v)
+    assert m["op"] == "compact" and m["deleted"] == {}
+    assert {r.k: r.v for r in t.read(spark).collect()} == want
+
+    t.delete_where(spark, "k = 0")
+    del want[0]
+    assert t.manifest(t.latest_version())["deleted"]
+    v = t.compact(spark)
+    assert t.manifest(v)["deleted"] == {}
+    assert {r.k: r.v for r in t.read(spark).collect()} == want
+    assert _dv_subset_of_files(t)
+
+
+def test_dv_time_travel(spark, tmp_path):
+    """``version=`` reads before a point DELETE see the row, reads after
+    it do not, and a later UPDATE's replacement rows stay version-bound."""
+    t = TxTable(str(tmp_path / "t"))
+    v1 = t.overwrite(_df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1))
+    v2 = t.delete_where(spark, "k = 2")
+    v3 = t.update_where(spark, {"v": "'z'"}, "k = 3")
+    assert sorted(r.k for r in t.read(spark, version=v1).collect()) == [1, 2, 3]
+    assert sorted(r.k for r in t.read(spark, version=v2).collect()) == [1, 3]
+    assert {r.k: r.v for r in t.read(spark, version=v2).collect()} == {1: "a", 3: "c"}
+    assert {r.k: r.v for r in t.read(spark, version=v3).collect()} == {1: "a", 3: "z"}
+    ts = t.manifest(v2)["timestamp"]
+    assert sorted(r.k for r in t.read(spark, timestamp=ts).collect()) == [1, 3]
+
+
+def test_dv_on_partitioned_table(spark, tmp_path):
+    """Deletion vectors on a ``_par_bucket=`` partitioned table: keys are
+    the partition files, the UPDATE stage keeps the path embedding, and
+    a metadata-only partition drop takes the dropped files' vectors."""
+    from edgelake_spark.ingest.partitions import tx_partitions
+
+    t = TxTable(str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame(
+        [(1, "2024-01-01"), (2, "2024-01-01"), (3, "2024-02-01"), (4, "2024-02-01")],
+        "k int, _par_bucket string",
+    ), partition_by="_par_bucket")
+    before = t.manifest(t.latest_version())["files"]
+    t.delete_where(spark, "k = 1")
+    v = t.update_where(spark, {"k": "k + 10"}, "k = 3")
+    m = t.manifest(v)
+    assert set(before) < set(m["files"])
+    assert all("_par_bucket=" in f for f in m["files"])
+    assert all("_par_bucket=" in f for f in m["deleted"])
+    assert {f.split("_par_bucket=")[1].split("/")[0] for f in m["deleted"]} == {
+        "2024-01-01", "2024-02-01",
+    }
+    got = sorted((r.k, r._par_bucket) for r in t.read(spark).collect())
+    assert got == [(2, "2024-01-01"), (4, "2024-02-01"), (13, "2024-02-01")]
+    assert tx_partitions(t) == ["2024-01-01", "2024-02-01"]
+
+    t.remove_files(lambda f: "_par_bucket=2024-01-01" in f, op="drop partition")
+    m = t.manifest(t.latest_version())
+    assert all("2024-02-01" in f for f in m["deleted"])
+    assert sorted(r.k for r in t.read(spark).collect()) == [4, 13]
+    assert _dv_subset_of_files(t)
+
+
+def test_bulk_delete_over_cap_rewrites(spark, tmp_path):
+    """Up to DV_MAX_ROWS matching rows a DELETE records positions; one
+    more and it rewrites the touched files, dropping their vectors."""
+    from edgelake_spark.txlog import DV_MAX_ROWS
+
+    t = TxTable(str(tmp_path / "t"))
+    n = DV_MAX_ROWS + 10
+    t.overwrite(spark.range(n).selectExpr("cast(id as int) as k", "'v' as v").coalesce(1))
+    v = t.delete_where(spark, f"k < {DV_MAX_ROWS}")
+    m = t.manifest(v)
+    assert m["meta"] == {"deleted_rows": DV_MAX_ROWS}
+    assert sum(len(rows) for rows in m["deleted"].values()) == DV_MAX_ROWS
+
+    t.overwrite(spark.range(n).selectExpr("cast(id as int) as k", "'v' as v").coalesce(1))
+    v = t.delete_where(spark, f"k <= {DV_MAX_ROWS}")
+    m = t.manifest(v)
+    assert m["meta"] == {"rewrote": 1} and m["deleted"] == {}
+    assert sorted(r.k for r in t.read(spark).collect()) == list(range(DV_MAX_ROWS + 1, n))
+
+
+def test_compact_small_purges_vectors_over_cap(spark, tmp_path):
+    """Past DV_MAX_ROWS dead rows compact_small folds every stage that
+    carries them, even one too large to count as small."""
+    from edgelake_spark.txlog import DV_MAX_ROWS
+
+    t = TxTable(str(tmp_path / "t"))
+    n = 2 * DV_MAX_ROWS
+    t.overwrite(spark.range(n).selectExpr("cast(id as int) as k", "'v' as v").coalesce(1))
+    t.delete_where(spark, f"k < {DV_MAX_ROWS // 2}")
+    assert t.compact_small(spark, small_bytes=1) == t.latest_version()  # under the cap
+    t.delete_where(spark, f"k >= {n - DV_MAX_ROWS // 2 - 1}")
+    v = t.compact_small(spark, small_bytes=1)
+    m = t.manifest(v)
+    assert m["op"] == "compact" and m["deleted"] == {}
+    assert sorted(r.k for r in t.read(spark).collect()) == list(
+        range(DV_MAX_ROWS // 2, n - DV_MAX_ROWS // 2 - 1)
+    )
+
+
+def test_delete_races_appending_process(spark, tmp_path):
+    """Two processes: this one runs point DELETEs while another appends
+    through the os.link publish. Every append survives, every deleted
+    row stays deleted, and every manifest keeps its vector keys inside
+    its file list."""
+    import subprocess
+    import sys as _sys
+    import textwrap
+
+    path = str(tmp_path / "race")
+    t = TxTable(path)
+    t.overwrite(_df(spark, [(k, "base") for k in range(12)]).coalesce(1))
+    schema_json = t.manifest(1)["schema"]
+    writer_src = textwrap.dedent(
+        """
+        import os, sys, time
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from edgelake_spark.txlog import TxTable
+
+        path, schema_json, n = sys.argv[1], sys.argv[2], int(sys.argv[3])
+        t = TxTable(path)
+        while not os.path.exists(os.path.join(path, "_GO")):
+            time.sleep(0.002)
+        for i in range(n):
+            rel = os.path.join("data", f"app{i:03d}", "part-0.parquet")
+            os.makedirs(os.path.dirname(os.path.join(path, rel)), exist_ok=True)
+            pq.write_table(
+                pa.table({"k": pa.array([1000 + i], pa.int32()), "v": ["app"]}),
+                os.path.join(path, rel),
+            )
+            t._publish(lambda prev, rel=rel: sorted(prev["files"] + [rel]),
+                       "append", schema_json, {"i": i})
+            time.sleep(0.03)
+        print("OK")
+        """
+    )
+    n_app = 40
+    proc = subprocess.Popen(
+        [_sys.executable, "-c", writer_src, path, schema_json, str(n_app)],
+        cwd=REPO_ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+    import time as _time
+
+    _time.sleep(1.0)  # let the writer import and reach the barrier
+    (tmp_path / "race" / "_GO").write_text("go")
+    scans = []
+    real_match = t._match_positions
+    t._match_positions = lambda *a: scans.append(1) or real_match(*a)
+    deleted = [0, 2, 4, 6, 8, 10]
+    for k in deleted:
+        t.delete_where(spark, f"k = {k}")
+    out = proc.communicate(timeout=120)
+    assert proc.returncode == 0, out
+
+    ops = [m["op"] for m in t.history()]
+    assert ops.count("append") == n_app and ops.count("delete") == len(deleted)
+    # a delete lost the publish race and re-ran against the new head
+    assert len(scans) > len(deleted)
+    want = [k for k in range(12) if k not in deleted] + [1000 + i for i in range(n_app)]
+    assert sorted(r.k for r in t.read(spark).collect()) == want
+    assert _dv_subset_of_files(t)

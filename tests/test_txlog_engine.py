@@ -385,3 +385,91 @@ def test_appends_fold_small_stages(spark, tmp_path, monkeypatch):
     assert sorted((o.source_name, (dest / o.source_name).read_bytes()) for o in out) == [
         (f"f{i}.bin", f"blob {i}".encode()) for i in range(6)
     ]
+
+
+def test_point_delete_vector_survives_restart_and_time_travel(spark, tmp_path):
+    """A point DELETE commits a deletion vector (the snapshot's files
+    carry over unchanged). A restarted engine on the same work_dir
+    (``_attach_tables``) still hides the row, and ``version =`` reaches
+    both sides of the delete."""
+    wd = str(tmp_path / "node")
+    eng1 = EdgeLakeEngine(spark, SF, now=NOW, work_dir=wd)
+    orig = eng1.query("select count(*) as n from events").collect()[0].n
+    k = eng1.query("select min(event_id) as k from events").collect()[0].k
+    eng1.run(f'sql d "delete from events where event_id = {k}"')
+    tx = eng1.tx_tables["dml/events"]
+    m = tx.manifest(2)
+    assert m["op"] == "delete" and m["meta"] == {"deleted_rows": 1}
+    assert m["files"] == tx.manifest(1)["files"] and len(m["deleted"]) == 1
+
+    eng2 = EdgeLakeEngine(spark, SF, now=NOW, work_dir=wd)
+    hit = f"select count(*) as n from events where event_id = {k}"
+    assert eng2.query(hit).collect()[0].n == 0
+    assert eng2.query("select count(*) as n from events").collect()[0].n == orig - 1
+    assert eng2.query(hit, version=1).collect()[0].n == 1
+    assert eng2.query(hit, version=2).collect()[0].n == 0
+    shell = eng2.run(f'sql d version = 1 "{hit}"').collect()
+    assert shell[0].n == 1
+
+
+def test_dml_publishes_view_once_per_commit(spark, tmp_path, monkeypatch):
+    """Each DML that commits registers its table's view once (after the
+    commit); one that commits nothing registers none."""
+    eng = EdgeLakeEngine(spark, SF, now=NOW, work_dir=str(tmp_path))
+    eng.run('sql d "delete from events where value < 0"')  # snapshot
+    calls = []
+    real = EdgeLakeEngine._publish
+
+    def counted(self, kind, key):
+        calls.append(key)
+        return real(self, kind, key)
+
+    monkeypatch.setattr(EdgeLakeEngine, "_publish", counted)
+    k = eng.query("select min(event_id) as k from events").collect()[0].k
+    eng.run(f'sql d "delete from events where event_id = {k}"')
+    assert calls == ["events"]
+    eng.run('sql d "delete from events where event_id < 0"')  # matches nothing
+    assert calls == ["events"]
+    eng.run(f'sql d "update events set value = 1.0 where event_id = {k + 1}"')
+    eng.run(
+        'sql d "insert into events (event_id, user_id, event_type, value, ts)'
+        " values (999999, 1, 'click', 5.0, '2024-01-05 00:00:00')\""
+    )
+    assert calls == ["events"] * 3
+    assert eng.query(f"select value from events where event_id = {k + 1}").collect()[0].value == 1.0
+
+
+def test_insert_conforms_to_head_schema(spark, tmp_path):
+    """INSERT checks its row against the head manifest's schema, not a
+    view this engine published earlier: a column another engine on the
+    same work_dir added since stays in the table."""
+    wd = str(tmp_path / "node")
+    eng1 = EdgeLakeEngine(spark, work_dir=wd)
+    eng1.run('sql d "insert into gauges (k) values (1)"')
+    eng2 = EdgeLakeEngine(spark, work_dir=wd)
+    eng2.run("sql d \"insert into gauges (k, unit) values (2, 'c')\"")  # widens
+    eng1.run('sql d "insert into gauges (k) values (3)"')
+    tx = eng1.tx_tables["dml/gauges"]
+    assert tx.manifest(tx.latest_version())["op"] == "append"
+    got = sorted((r.k, r.unit) for r in eng1.query("select k, unit from gauges").collect())
+    assert got == [(1, None), (2, "c"), (3, None)]
+
+
+def test_dml_folds_when_dead_rows_pass_cap(spark, tmp_path):
+    """Once a table's deletion vectors hold more than DV_MAX_ROWS dead
+    rows, the DML commit folds them away."""
+    from edgelake_spark.txlog import DV_MAX_ROWS
+
+    eng = EdgeLakeEngine(spark, SF, now=NOW, work_dir=str(tmp_path))
+    raw = EdgeLakeEngine(spark, SF, now=NOW)
+    keep = "not (o_orderkey % 2 = 0 or o_orderkey % 4 = 1)"
+    want = raw.query(f"select count(*) as n from orders where {keep}").collect()[0].n
+    eng.run('sql d "delete from orders where o_orderkey % 2 = 0"')
+    tx = eng.tx_tables["dml/orders"]
+    first = tx.manifest(tx.latest_version())
+    assert first["op"] == "delete" and 0 < first["meta"]["deleted_rows"] <= DV_MAX_ROWS
+    eng.run('sql d "delete from orders where o_orderkey % 4 = 1"')
+    m = tx.manifest(tx.latest_version())
+    assert [h["op"] for h in tx.history()][-2:] == ["delete", "compact"]
+    assert m["deleted"] == {}
+    assert eng.query("select count(*) as n from orders").collect()[0].n == want
