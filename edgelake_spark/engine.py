@@ -2084,8 +2084,9 @@ class EdgeLakeEngine:
         """Fold the small stages (``compact_small``) once the head
         manifest spans more than FOLD_STAGES stages or its deletion
         vectors hold more than ``txlog.DV_MAX_ROWS`` dead rows. The fold
-        rewrites only small or dead-row-carrying files, never the whole
-        table, so a commit stays O(rows changed) amortized."""
+        rewrites the small stages and, past that cap, the files that
+        carry dead rows; the other files of a large stage stay, so a
+        commit stays O(files changed) amortized."""
         m = tx.manifest(tx.latest_version())
         if (len({f.split("/", 2)[1] for f in m["files"]}) > self.FOLD_STAGES
                 or deleted_rows(m) > DV_MAX_ROWS):

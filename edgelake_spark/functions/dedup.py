@@ -26,7 +26,7 @@ import os
 from edgelake_spark import artifacts
 from edgelake_spark.functions.text import duck_tokens, spark_tokens
 from edgelake_spark.checkpoint import materialize as _materialize
-from edgelake_spark.localframe import collect_head, local_frame
+from edgelake_spark.localframe import local_frame
 
 NUM_HASHES = 16
 BANDS = 4
@@ -424,16 +424,20 @@ def connected_components(pairs, driver_threshold: int = DRIVER_CC_THRESHOLD, max
 
     ``pairs`` may be any plan: it is materialized here, once, and both
     branches read that barrier, so the pair plan runs exactly once. One
-    bounded collect of ``driver_threshold + 1`` rows over the barrier
-    (``collect_head``: one Spark job at any partition count) picks the
-    branch and is the driver branch's input; only the distributed
-    branch counts its edges.
+    collect of at most ``driver_threshold + 1`` rows over the barrier
+    picks the branch and is the driver branch's input; only the
+    distributed branch counts its edges. That collect is one Spark job at
+    any partition count: a single task reads the barrier's partitions in
+    turn and stops at ``driver_threshold + 1`` rows, so no more than that
+    reaches the driver (``limit(n).collect()`` would scan partitions in
+    rounds, one job each; ``collect_head`` would send up to n rows per
+    partition).
     """
     from pyspark.sql import functions as F
 
     spark = pairs.sparkSession
     pairs = _materialize(pairs)
-    head = collect_head(pairs, driver_threshold + 1)
+    head = pairs.coalesce(1).limit(driver_threshold + 1).collect()
     on_driver = len(head) <= driver_threshold
     if stats is not None:
         stats["n_edges"] = len(head) if on_driver else pairs.count()

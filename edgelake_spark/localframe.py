@@ -64,7 +64,10 @@ def collect_head(df: DataFrame, n: int) -> list:
     so a short result over P partitions costs 1 + ⌈log4 P⌉ jobs. Here
     every partition keeps at most its first ``n`` rows and one collect
     reads them all; like a single round over all partitions, up to
-    P·n rows reach the driver, which keeps the first ``n``."""
+    P·n rows reach the driver, which keeps the first ``n``. Meant for a
+    small ``n`` over a scan that must stay parallel; a large head of a
+    materialized frame is ``coalesce(1).limit(n)`` instead (one task,
+    at most ``n`` rows to the driver)."""
     from pyspark.sql import functions as F
 
     within = F.monotonically_increasing_id().bitwiseAND(_ROW_IN_PARTITION)

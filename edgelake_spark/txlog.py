@@ -332,11 +332,16 @@ class TxTable:
             p = self._uri_paths[rel] = jpath.toUri().getRawPath()
         return p
 
-    def _at(self, spark: SparkSession, positions: dict, file_col: Column,
-            row_col: Column) -> Column:
-        """TRUE for the rows at ``positions`` ({file: [row indexes]})."""
+    def _at(self, spark: SparkSession, positions: dict, file_col: str,
+            row_col: str) -> Column:
+        """TRUE for the rows at ``positions`` ({file: [row indexes]}) by
+        the columns named ``file_col``/``row_col``. Each row list is one
+        SQL ``IN`` text, parsed in one call; ``Column.isin`` would make
+        one gateway round trip per position (about a second per
+        thousand) on every read."""
         return reduce(lambda a, b: a | b, [
-            file_col.endswith(self._uri_path(spark, f)) & row_col.isin(rows)
+            F.col(file_col).endswith(self._uri_path(spark, f))
+            & F.expr(f"{row_col} IN ({', '.join(map(str, rows))})")
             for f, rows in sorted(positions.items())
         ])
 
@@ -381,7 +386,7 @@ class TxTable:
             dead = {f: deleted[f] for f in groups[stage] if f in deleted}
             if dead:
                 part = part.filter(~self._at(
-                    spark, dead, F.col("_metadata.file_path"), F.col("_metadata.row_index")
+                    spark, dead, "_metadata.file_path", "_metadata.row_index"
                 ))
             if positions:
                 part = part.select(
@@ -427,9 +432,11 @@ class TxTable:
         paths call for plan-depth insurance: cost is proportional to the
         small-file data folded, never the table, so an INSERT chain
         stays O(rows inserted) amortized. Once the manifest's deletion
-        vectors hold more than ``DV_MAX_ROWS`` positions, every stage
-        with dead rows is folded too, whatever its size, and the fold
-        drops those vectors."""
+        vectors hold more than ``DV_MAX_ROWS`` positions, the files that
+        carry them are purged too, whatever their stage's size: each is
+        rewritten without its dead rows (in parallel, not packed into
+        the small stages' one file) and its vector is dropped; the other
+        files of its stage stay."""
 
         def attempt():
             base = self.latest_version()
@@ -437,29 +444,36 @@ class TxTable:
                 return base
             m = self.manifest(base)
             deleted = m.get("deleted", {})
-            purge = deleted_rows(m) > DV_MAX_ROWS
             stages: dict[str, list[str]] = {}
             for f in m["files"]:
                 stages.setdefault(f.split("/", 2)[1], []).append(f)
-            fold = [
-                s
-                for s, fs in stages.items()
-                if (purge and any(f in deleted for f in fs))
-                or sum(os.path.getsize(os.path.join(self.path, f)) for f in fs) < small_bytes
+            small = [
+                s for s, fs in stages.items()
+                if sum(os.path.getsize(os.path.join(self.path, f)) for f in fs) < small_bytes
             ]
-            folded = {f for s in fold for f in stages[s]}
-            if len(fold) <= 1 and not folded & deleted.keys():
+            packed = {f for s in small for f in stages[s]}
+            if len(small) <= 1 and not packed & deleted.keys():
+                packed = set()  # one clean small stage: nothing to pack
+            purged = deleted.keys() - packed if deleted_rows(m) > DV_MAX_ROWS else set()
+            if not packed and not purged:
                 return base  # nothing worth folding
+            parts = []
+            if packed:
+                parts.append(self.frame(spark, m, sorted(packed)).coalesce(1))
+            if purged:
+                parts.append(self.frame(spark, m, sorted(purged)))
             new_files, schema_json = self._stage(
-                self.frame(spark, m, sorted(folded)).coalesce(1), m.get("partition_by")
+                reduce(DataFrame.unionByName, parts), m.get("partition_by")
             )
+            folded = packed | purged
 
             def build(prev):
                 kept = [f for f in (prev or {}).get("files", []) if f not in folded]
                 return sorted(kept + new_files)
 
             return self._publish(
-                build, "compact", schema_json, {"folded_stages": len(fold)},
+                build, "compact", schema_json,
+                {"folded_stages": len(small) if packed else 0, "purged_files": len(purged)},
                 expected_base=base,
             )
 
@@ -532,9 +546,10 @@ class TxTable:
         ``DV_MAX_ROWS`` of them: merge-on-read — record their positions
         as deleted and, for UPDATE/MERGE, append
         ``replacement(manifest, positions)`` as one new stage; no data
-        file is rewritten. More: ``_rewrite_files`` with ``transform``.
-        Both commits are version-pinned to ``base``. None when nothing
-        matched (no commit)."""
+        file is rewritten. More: ``_rewrite_files`` with ``transform``,
+        after a second scan for the touched files (the bounded position
+        scan cannot name them all). Both commits are version-pinned to
+        ``base``. None when nothing matched (no commit)."""
         m = self.manifest(base)
         positions = self._match_positions(spark, m, matched)
         if positions is None:
@@ -644,7 +659,7 @@ class TxTable:
         def updated(m, positions):
             # only the touched files are read, and of them only the hits
             hit = self.frame(spark, m, sorted(positions), positions=True)
-            hit = hit.filter(self._at(spark, positions, F.col("__file"), F.col("__row")))
+            hit = hit.filter(self._at(spark, positions, "__file", "__row"))
             return apply_set(hit.drop("__file", "__row"), guarded=False)
 
         def attempt():

@@ -117,8 +117,7 @@ def test_pair_plan_runs_once_and_stats_hold(spark, threshold):
 
 def test_branch_choice_is_one_job_on_four_partitions(spark, edge_df):
     """The driver/distributed choice over a 4-partition input costs the
-    barrier plus ONE bounded collect (``collect_head``), not a limit
-    collect's rounds."""
+    barrier plus ONE bounded collect, not a limit collect's rounds."""
     from tests.conftest import spark_jobs
 
     pairs = edge_df.repartition(4).localCheckpoint()
@@ -126,6 +125,35 @@ def test_branch_choice_is_one_job_on_four_partitions(spark, edge_df):
     stats: dict = {}
     _, jobs = spark_jobs(spark, lambda: connected_components(pairs, stats=stats))
     assert stats["branch"] == "driver" and jobs == 2
+
+
+def test_branch_choice_sends_at_most_threshold_plus_one_rows(spark, monkeypatch):
+    """Over P partitions holding more than ``driver_threshold`` edges
+    each, the branch choice brings at most ``driver_threshold + 1``
+    rows to the driver, not P·(threshold + 1)."""
+    from pyspark.sql import functions as F
+
+    pairs = (
+        spark.range(0, 80, 1, 4)  # a star: 20 edges in each partition
+        .select(F.lit(0).cast("long").alias("id1"), (F.col("id") + 1).alias("id2"))
+        .localCheckpoint()
+    )
+    assert pairs.rdd.getNumPartitions() == 4
+    sizes = []
+    real_collect = type(pairs).collect
+
+    def counted(df):
+        rows = real_collect(df)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(pairs), "collect", counted)
+    stats: dict = {}
+    out = connected_components(pairs, driver_threshold=10, stats=stats)
+    monkeypatch.undo()
+    assert stats["branch"] == "distributed" and stats["n_edges"] == 80
+    assert sizes and max(sizes) <= 11
+    assert {r.component_id for r in out.collect()} == {0}
 
 
 def test_distributed_branch_on_real_lsh_pairs(spark):

@@ -692,22 +692,35 @@ def test_bulk_delete_over_cap_rewrites(spark, tmp_path):
 
 
 def test_compact_small_purges_vectors_over_cap(spark, tmp_path):
-    """Past DV_MAX_ROWS dead rows compact_small folds every stage that
-    carries them, even one too large to count as small."""
+    """Past DV_MAX_ROWS dead rows compact_small rewrites the files that
+    carry them, even in a stage too large to count as small; the other
+    files of that stage carry over, and the purged files are not packed
+    into one."""
     from edgelake_spark.txlog import DV_MAX_ROWS
 
     t = TxTable(str(tmp_path / "t"))
     n = 2 * DV_MAX_ROWS
-    t.overwrite(spark.range(n).selectExpr("cast(id as int) as k", "'v' as v").coalesce(1))
-    t.delete_where(spark, f"k < {DV_MAX_ROWS // 2}")
+    # four files of contiguous k ranges, one stage
+    t.overwrite(spark.range(0, n, 1, 4).selectExpr("cast(id as int) as k", "'v' as v"))
+    files = t.manifest(1)["files"]
+    assert len(files) == 4
+    t.delete_where(spark, f"k < {DV_MAX_ROWS // 2}")  # all of the first file
     assert t.compact_small(spark, small_bytes=1) == t.latest_version()  # under the cap
-    t.delete_where(spark, f"k >= {n - DV_MAX_ROWS // 2 - 1}")
+    t.delete_where(spark, f"k >= {n - DV_MAX_ROWS // 2 - 1}")  # the last file, one row of the third
+    dv_files = set(t.manifest(t.latest_version())["deleted"])
+    assert len(dv_files) == 3
     v = t.compact_small(spark, small_bytes=1)
     m = t.manifest(v)
     assert m["op"] == "compact" and m["deleted"] == {}
+    assert m["meta"] == {"folded_stages": 0, "purged_files": 3}
+    kept = set(files) - dv_files
+    assert kept < set(m["files"])
+    new = set(m["files"]) - kept
+    assert not new & set(files) and len(new) > 1
     assert sorted(r.k for r in t.read(spark).collect()) == list(
         range(DV_MAX_ROWS // 2, n - DV_MAX_ROWS // 2 - 1)
     )
+    assert _dv_subset_of_files(t)
 
 
 def test_delete_races_appending_process(spark, tmp_path):
@@ -754,11 +767,22 @@ def test_delete_races_appending_process(spark, tmp_path):
     )
     import time as _time
 
-    _time.sleep(1.0)  # let the writer import and reach the barrier
     (tmp_path / "race" / "_GO").write_text("go")
     scans = []
     real_match = t._match_positions
-    t._match_positions = lambda *a: scans.append(1) or real_match(*a)
+
+    def match_then_wait(spark_, m, matched):
+        # the first delete holds its positions until the writer has
+        # published, so its own publish must lose the race
+        out = real_match(spark_, m, matched)
+        if not scans:
+            deadline = _time.monotonic() + 120
+            while t.latest_version() == m["version"] and _time.monotonic() < deadline:
+                _time.sleep(0.01)
+        scans.append(1)
+        return out
+
+    t._match_positions = match_then_wait
     deleted = [0, 2, 4, 6, 8, 10]
     for k in deleted:
         t.delete_where(spark, f"k = {k}")
@@ -767,7 +791,7 @@ def test_delete_races_appending_process(spark, tmp_path):
 
     ops = [m["op"] for m in t.history()]
     assert ops.count("append") == n_app and ops.count("delete") == len(deleted)
-    # a delete lost the publish race and re-ran against the new head
+    # the first delete lost the publish race and re-ran against the new head
     assert len(scans) > len(deleted)
     want = [k for k in range(12) if k not in deleted] + [1000 + i for i in range(n_app)]
     assert sorted(r.k for r in t.read(spark).collect()) == want
